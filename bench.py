@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
 from tablite_spark import get_spark
+from tablite_spark.config import host_cpus
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -967,8 +968,7 @@ def main() -> None:
     # the valves' existing env knobs (explicit user settings win).
     # The full-core bench keeps the twins: their cost is the real
     # engine cost at this size class.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    if cpus.isdigit() and int(cpus) < (os.cpu_count() or 1):
+    if host_cpus() < len(os.sched_getaffinity(0)):
         for knob in ("SPARK_GRAFT_GRAPH_DRIVER_EDGES",
                      "SPARK_GRAFT_CC_DRIVER_EDGES",
                      "SPARK_GRAFT_KMEANS_DRIVER_CELLS"):

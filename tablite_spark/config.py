@@ -15,10 +15,17 @@ from __future__ import annotations
 import os
 
 
+def host_cpus() -> int:
+    """Cores the local engine runs on: ``SPARK_GRAFT_CPUS`` if set,
+    else the cores this process may run on (its CPU affinity)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 class Config:
     # Default shuffle parallelism for local runs; on a real cluster this
     # should be ~2-3x total executor cores, and AQE coalesces down.
-    SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    SHUFFLE_PARTITIONS = host_cpus()
 
     # Rows below this threshold are considered "small" → broadcast joins
     # and driver-side algorithms (e.g. transpose) are allowed.

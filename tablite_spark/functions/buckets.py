@@ -73,19 +73,6 @@ def bucket_expr(key: str, bounds: list) -> Column:
     return tree(0, len(bounds))
 
 
-def pin_census(cens: DataFrame) -> DataFrame:
-    """Eagerly pin a census frame the census-prefix engine evaluates
-    at least THREE times (the range-bound pass, the |buckets|-row
-    offset collect, and the caller's final aggregate): one
-    ``localCheckpoint`` so the corpus scan + census shuffle run once
-    and the later jobs read checkpoint blocks. The pinned frame is
-    the POST-aggregate census — sized by distinct keys, never corpus
-    rows — so the materialization is the same size class the offsets
-    job already shuffles. Results are byte-identical by construction
-    (a checkpoint stores the rows it was given)."""
-    return cens.localCheckpoint()
-
-
 def with_range_bucket(df: DataFrame, key: str, pid_col: str,
                       n_buckets: int | None = None) -> DataFrame:
     """Attach a deterministic range-bucket column ``pid_col`` (0-based,

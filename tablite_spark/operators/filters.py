@@ -27,6 +27,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin
+
 _OPS = {">", ">=", "==", "<", "<=", "!=", "in", "not in"}
 
 
@@ -174,7 +176,7 @@ def filter_pass_fail(df: DataFrame, expressions: list[dict] | str,
     else:
         mask = mask_from_expressions(df, expressions, filter_type)
     if single_pass:
-        df = df.persist()
+        df = pin(df, eager=False)
     # null mask (e.g. comparison against NULL) goes to the fail side,
     # matching the reference where a non-True evaluation fails the row.
     return df.filter(mask), df.filter(~F.coalesce(mask, F.lit(False)))

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from tablite_spark.plans.lifecycle import pin, pinned
+
 
 def heavy_hitters(df: DataFrame, col: str, phi: float,
                   capacity: int | None = None) -> DataFrame:
@@ -89,17 +91,13 @@ def heavy_hitters(df: DataFrame, col: str, phi: float,
         out["is_total"] = [False] * (len(out) - 1) + [True]
         yield out[["value", "is_total", "cnt"]]
 
-    from pyspark import StorageLevel
-    pass1 = (df.select(col).mapInPandas(mg, schema)
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
+    with pinned(df.select(col).mapInPandas(mg, schema),
+                eager=False) as pass1:
         n = (pass1.filter(F.col("is_total"))
              .agg(F.sum("cnt").alias("n_")).collect()[0]["n_"]) or 0
         cand_rows = (pass1.filter(~F.col("is_total"))
                      .select(F.col("value").alias(col)).distinct()
                      .collect())
-    finally:
-        pass1.unpersist()
     spark = df.sparkSession
     cands = spark.createDataFrame(
         cand_rows, StructType([StructField(col, vtype)]))
@@ -167,7 +165,7 @@ def association_rules(df: DataFrame, basket_col: str, item_col: str,
     # 4); persist fills the cache inside the first job that needs
     # the frame, keeps the at-scale pin, and leaves the lineage
     # visible to the plan audit (the q2 discipline).
-    base = base.persist()
+    base = pin(base, eager=False)
     supp = base.groupBy(F.col("__i__").alias("item")).agg(
         F.count(F.lit(1)).alias("s"))
     nb = base.agg(F.countDistinct("__b__").alias("n_baskets"))
@@ -234,7 +232,7 @@ def item_cosine(df: DataFrame, basket_col: str, item_col: str,
                  .select("__b__"))
         base = base.join(small, "__b__", "left_semi")
     # pinned (lazily) for the same reason as association_rules above
-    base = base.persist()
+    base = pin(base, eager=False)
     supp = base.groupBy(F.col("__i__").alias("item")).agg(
         F.count(F.lit(1)).alias("s"))
     l = base.select("__b__", F.col("__i__").alias("a"))

@@ -25,6 +25,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin
+
 
 def carry_forward(df: DataFrame, targets: list[str], order_by: list[str]) -> DataFrame:
     """Forward-fill in global ``order_by`` order — scale-safe two-pass.
@@ -104,8 +106,8 @@ def nearest_neighbour(df: DataFrame, targets: list[str],
     ]).first()
 
     rid = "__nn_rid__"
-    base = df.withColumn(rid, F.monotonically_increasing_id()) \
-        .localCheckpoint(eager=True)  # pin ids: nulls/donors/join-back
+    base = pin(df.withColumn(rid, F.monotonically_increasing_id()),
+               eager=True)  # pin ids: nulls/donors/join-back
     # branches below each re-reference base; un-pinned, a task retry
     # could re-evaluate the id assignment differently per branch
     out = base
@@ -184,8 +186,8 @@ def nearest_neighbour_lsh(df: DataFrame, targets: list[str],
         return cols
 
     rid = "__nn_rid__"
-    base = df.withColumn(rid, F.monotonically_increasing_id()) \
-        .localCheckpoint(eager=True)  # pin ids: nulls/donors/join-back
+    base = pin(df.withColumn(rid, F.monotonically_increasing_id()),
+               eager=True)  # pin ids: nulls/donors/join-back
     # branches below each re-reference base; un-pinned, a task retry
     # could re-evaluate the id assignment differently per branch
     out = base

@@ -28,6 +28,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin
+
 _KINDS = {"inner": "inner", "left": "left", "outer": "full", "full": "full",
           "cross": "cross"}
 
@@ -195,8 +197,8 @@ def match(left: DataFrame, right: DataFrame, keys: list[tuple[str, str]],
     # evaluations silently drops/duplicates rows. localCheckpoint
     # materializes the (small, lookup-side) tagged frame once so both
     # branches read identical ids.
-    tagged = right.withColumn(
-        rid, F.monotonically_increasing_id()).localCheckpoint(eager=True)
+    tagged = pin(right.withColumn(rid, F.monotonically_increasing_id()),
+                 eager=True)
     first = tagged.groupBy(*rkeys).agg(F.min(rid).alias(rid))
     r1 = tagged.join(first.select(rid), on=rid, how="left_semi").drop(rid)
     L, R = left.alias("__l__"), r1.alias("__r__")

@@ -29,9 +29,8 @@ import sys
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tablite_spark.functions.buckets import (
-    pin_census, with_range_bucket,
-)
+from tablite_spark.functions.buckets import with_range_bucket
+from tablite_spark.plans.lifecycle import pin
 
 
 def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
@@ -42,7 +41,7 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
                     & F.col(y_col).isNotNull())
     cen = (pts.groupBy(x_col)
            .agg(F.min(y_col).alias(y_col)))
-    cen = pin_census(cen)
+    cen = pin(cen, eager=True)
     cen = with_range_bucket(cen, x_col, "__pid__")
     # carry-in: min(y) over all STRICTLY EARLIER buckets (bucket
     # boundaries are monotone in x, ties never split) — the

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin
+
 SORT_MODES = ("excel", "unix", "alphanumeric")
 
 
@@ -350,8 +352,7 @@ def unique_index(df: DataFrame, keys: list[str],
     duplicating winners). The materialization cost is the price of a
     deterministic first-occurrence answer."""
     idx = "__uidx__"
-    ranked = with_row_index(df, idx, order_by=order_by) \
-        .localCheckpoint(eager=True)
+    ranked = pin(with_row_index(df, idx, order_by=order_by), eager=True)
     winners = ranked.groupBy(*keys).agg(F.min(idx).alias(idx))
     return (ranked.join(winners.select(idx), on=idx, how="left_semi")
             .drop(idx))

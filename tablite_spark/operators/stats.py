@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import is_expensive, pin, release
+
 
 _TEMPORAL = {"date", "timestamp", "timestamp_ntz"}
 
@@ -596,37 +598,27 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from pyspark import StorageLevel
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     base = df.select(*cols).filter(
         reduce(lambda a, b: a & b,
                [F.col(c).isNotNull() for c in cols]))
+
     # one upstream computation for k censuses + the final rank join —
-    # but only when the upstream is actually expensive to recompute:
-    # for a plain (pruned, pushed-down) file scan the k+1 re-scans
-    # are cheaper than a cache fill, so persisting there only adds
-    # memory pressure and fill latency (measured: +8 s first call on
-    # a 6M-row lineitem scan for zero steady-state gain)
-    # r15: analyzed() not optimizedPlan() — same tag decision, but
-    # without running the optimizer just for this probe (see
-    # pack_sequences; r14 VERDICT item 6)
-    opt = base._jdf.queryExecution().analyzed().toString()
-    expensive = any(t in opt for t in (
-        "Join", "Aggregate", "Window", "Generate", "Expand",
-        "Union", "MapInPandas", "FlatMapGroupsInPandas",
-        "MapGroups", "PythonUDF"))
-    if expensive:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # but a plain pruned file scan re-scans cheaper than it fills a
+    # cache (measured: +8 s first call on a 6M-row lineitem scan for
+    # zero steady-state gain)
+    pins = [pin(base, eager=False)] if is_expensive(base) else []
+    base = pins[0] if pins else base
 
     def avg_ranks(c):
         vc = (base.groupBy(F.col(c).alias("__v__"))
               .agg(F.count(F.lit(1)).alias("__c__")))
         # the census feeds three jobs (bounds, offsets, rank join) —
         # pin it so the corpus scan + census shuffle run once
-        vc = pin_census(vc)
+        vc = pin(vc, eager=True)
+        pins.append(vc)
         vc = with_range_bucket(vc, "__v__", "__p__")
         w = (Window.partitionBy("__p__").orderBy("__v__")
              .rowsBetween(Window.unboundedPreceding,
@@ -646,44 +638,42 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
                           rank.alias(f"__r_{c}__")), ndistinct)
 
     pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
-    try:
-        # r14 optimization round (guide §2.2): each column's rank
-        # derivation runs two driver-blocking jobs (the range-bound
-        # pass + the |buckets|-row offset collect) — k columns paid
-        # them SEQUENTIALLY. Spark job submission is thread-safe and
-        # the per-column work shares only the pinned base frame, so
-        # the k chains submit concurrently: wall-clock ≈ the slowest
-        # column instead of the sum. Bounds/offsets are pure
-        # functions of the data (deterministic range buckets), so
-        # results are unchanged by construction.
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=len(cols)) as ex:
-            per_col = list(ex.map(avg_ranks, cols))
-        ranked = base
-        for c, (ranks, ndistinct) in zip(cols, per_col):
-            # per-column join strategy from the DRIVER-KNOWN census
-            # size (free with the offsets collect): a low-cardinality
-            # column's (value, rank) map broadcasts — no corpus
-            # shuffle at all for that column; only genuinely
-            # corpus-scale rank frames (~all-distinct measures) pay
-            # the merge-hinted sort-merge join
-            if ndistinct <= 200_000:
-                ranked = ranked.join(F.broadcast(ranks), c)
-            else:
-                ranked = ranked.hint("merge").join(
-                    ranks.hint("merge"), c)
-        aggs = []
-        for a, b in pairs:
-            ra, rb = F.col(f"__r_{a}__"), F.col(f"__r_{b}__")
-            cov = F.covar_samp(ra, rb)
-            va, vb = F.var_samp(ra), F.var_samp(rb)
-            rho = F.when((va > 0) & (vb > 0), cov / F.sqrt(va * vb))
-            aggs.append(rho.alias(f"c__{a}__{b}"))
-        aggs.append(F.count(F.lit(1)).alias("__n__"))
-        row = ranked.agg(*aggs).collect()[0]   # exactly ONE row
-    finally:
-        if expensive:
-            base.unpersist()
+    # r14 optimization round (guide §2.2): each column's rank
+    # derivation runs two driver-blocking jobs (the range-bound
+    # pass + the |buckets|-row offset collect) — k columns paid
+    # them SEQUENTIALLY. Spark job submission is thread-safe and
+    # the per-column work shares only the pinned base frame, so
+    # the k chains submit concurrently: wall-clock ≈ the slowest
+    # column instead of the sum. Bounds/offsets are pure
+    # functions of the data (deterministic range buckets), so
+    # results are unchanged by construction.
+    from concurrent.futures import ThreadPoolExecutor
+    with ThreadPoolExecutor(max_workers=len(cols)) as ex:
+        per_col = list(ex.map(avg_ranks, cols))
+    ranked = base
+    for c, (ranks, ndistinct) in zip(cols, per_col):
+        # per-column join strategy from the DRIVER-KNOWN census
+        # size (free with the offsets collect): a low-cardinality
+        # column's (value, rank) map broadcasts — no corpus
+        # shuffle at all for that column; only genuinely
+        # corpus-scale rank frames (~all-distinct measures) pay
+        # the merge-hinted sort-merge join
+        if ndistinct <= 200_000:
+            ranked = ranked.join(F.broadcast(ranks), c)
+        else:
+            ranked = ranked.hint("merge").join(
+                ranks.hint("merge"), c)
+    aggs = []
+    for a, b in pairs:
+        ra, rb = F.col(f"__r_{a}__"), F.col(f"__r_{b}__")
+        cov = F.covar_samp(ra, rb)
+        va, vb = F.var_samp(ra), F.var_samp(rb)
+        rho = F.when((va > 0) & (vb > 0), cov / F.sqrt(va * vb))
+        aggs.append(rho.alias(f"c__{a}__{b}"))
+    aggs.append(F.count(F.lit(1)).alias("__n__"))
+    row = ranked.agg(*aggs).collect()[0]   # exactly ONE row
+    for p in pins:
+        release(p)
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType,
     )
@@ -725,7 +715,7 @@ def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     g, v = F.col(group_col), F.col(val_col)
     base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -734,7 +724,7 @@ def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
                  .alias("__ca__"),
                  F.count(F.when(g == F.lit(group_b), 1))
                  .alias("__cb__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__v__", "__p__")
     w = (Window.partitionBy("__p__").orderBy("__v__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -949,7 +939,7 @@ def km_curve(df: DataFrame, duration_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -958,7 +948,7 @@ def km_curve(df: DataFrame, duration_col: str,
             .groupBy(t.alias("__t__"))
             .agg(F.count(F.when(obs, 1)).alias("__d__"),
                  F.count(F.when(~obs, 1)).alias("__c__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1015,7 +1005,7 @@ def nelson_aalen(df: DataFrame, duration_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -1024,7 +1014,7 @@ def nelson_aalen(df: DataFrame, duration_col: str,
             .groupBy(t.alias("__t__"))
             .agg(F.count(F.when(obs, 1)).alias("__d__"),
                  F.count(F.when(~obs, 1)).alias("__c__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1068,7 +1058,7 @@ def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     v = F.col(col).cast("double")
     bad = df.filter(v < 0).limit(1).collect()
@@ -1078,7 +1068,7 @@ def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
     cens = (df.filter(v.isNotNull())
             .groupBy(v.alias("__v__"))
             .agg(F.count(F.lit(1)).alias("__c__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__v__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__v__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1132,7 +1122,7 @@ def weighted_quantiles(df: DataFrame, val_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     if not qs:
         raise ValueError("weighted_quantiles requires at least one q")
@@ -1144,7 +1134,7 @@ def weighted_quantiles(df: DataFrame, val_col: str,
     cens = (df.filter(v.isNotNull() & w.isNotNull() & (w > 0))
             .groupBy(v.alias("__v__"))
             .agg(F.sum(w).alias("__w__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__v__", "__b__")
     win = (Window.partitionBy("__b__").orderBy("__v__")
            .rowsBetween(Window.unboundedPreceding,
@@ -1258,7 +1248,7 @@ def logrank_test(df: DataFrame, duration_col: str, observed_col,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -1277,7 +1267,7 @@ def logrank_test(df: DataFrame, duration_col: str, observed_col,
                  F.count(F.when(obs & ~is_a, 1)).alias("__db__"),
                  F.count(F.when(is_a, 1)).alias("__na__"),
                  F.count(F.when(~is_a, 1)).alias("__nb__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1515,7 +1505,7 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     g, v = F.col(group_col), F.col(val_col)
     base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -1525,7 +1515,7 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
                  F.count(F.when(g == F.lit(group_b), 1))
                  .alias("__cb__")))
     cens = cens.withColumn("__ct__", F.col("__ca__") + F.col("__cb__"))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__v__", "__p__")
     w = (Window.partitionBy("__p__").orderBy("__v__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

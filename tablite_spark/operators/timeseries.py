@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin, release
+
 __all__ = ["ohlc_resample", "funnel", "retention_cohorts",
            "interpolate_at", "ema_smooth", "rolling_agg",
            "state_intervals", "path_ngrams", "markov_transitions",
@@ -107,13 +109,13 @@ def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
     scans; pass ``single_scan=True`` to project+filter
     ``type IN steps → (user, type, ts)`` once into a spilled cache
     and feed every step from it — one scan of the relation total.
-    That path is EAGER (the chain materializes via localCheckpoint so
-    the cache can be released deterministically before returning; the
-    pinned result is one narrow row per step-0 user — release it with
-    :func:`tablite_spark.plans.lifecycle.unpersist_local_checkpoint`
-    when done). With ``_materialize=False`` the returned lazy chain
-    carries ``funnel_base`` / ``funnel_unpersist()`` attributes so
-    the caller can release the pinned base directly.
+    That path is EAGER: the chain is pinned eagerly so the cache can
+    be released before returning, and the returned frame is that
+    pin (one narrow row per step-0 user) — free it with
+    :func:`tablite_spark.plans.lifecycle.release` when done. With
+    ``_materialize=False`` the lazy chain is returned still reading
+    the cached base; run it inside
+    :func:`tablite_spark.plans.lifecycle.scope` to free the base.
     """
     if len(steps) < 1:
         raise ValueError("funnel needs at least one step")
@@ -121,12 +123,10 @@ def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
     cols = [f"t_{s}" for s in steps]
     base = None
     if single_scan and len(steps) > 1:
-        from pyspark import StorageLevel
-        base = (events.filter(F.col(type_col).isin(list(steps)))
-                .select(u.alias("user_id_"),
-                        F.col(type_col).alias("type_"),
-                        ts.alias("ts_"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
+        base = pin(events.filter(F.col(type_col).isin(list(steps)))
+                   .select(u.alias("user_id_"),
+                           F.col(type_col).alias("type_"),
+                           ts.alias("ts_")), eager=False)
 
         def step_events(s):
             return base.filter(F.col("type_") == s) \
@@ -158,16 +158,8 @@ def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
         cur = cur.join(nxt, "user_id_", "left")
     cur = cur.withColumnRenamed("user_id_", user_col)
     if base is not None and _materialize:
-        cur = cur.localCheckpoint()
-        base.unpersist()
-    elif base is not None:
-        # _materialize=False is the plan-gate hook: returns the lazy
-        # cache-fed chain. The caller owns releasing the pinned base
-        # — hand them the handle (``result.funnel_unpersist()``)
-        # so they never have to clearCache() the whole catalog.
-        cur.funnel_base = base
-        cur.funnel_unpersist = lambda blocking=False: \
-            base.unpersist(blocking)
+        cur = pin(cur, eager=True)
+        release(base)
     return cur
 
 
@@ -853,14 +845,14 @@ def cusum_changepoint(df: DataFrame, order_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t, x = F.col(order_col), F.col(val_col)
     cens = (df.filter(t.isNotNull() & x.isNotNull())
             .groupBy(t.alias("__t__"))
             .agg(F.sum(x).alias("__x__"),
                  F.count(F.lit(1)).alias("__n__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

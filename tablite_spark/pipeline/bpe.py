@@ -49,6 +49,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin, release
+
+
 @lru_cache(maxsize=None)
 def _char_class(prefix: str) -> str:
     """Regex character-class body matching every codepoint whose
@@ -346,8 +349,6 @@ def train_bpe_distributed(df: DataFrame, text_col: str, n_merges: int,
     ``min_word_freq`` prunes the word-table tail (hapaxes can't win
     merges over a real corpus but can triple the table size).
     """
-    from tablite_spark.plans.lifecycle import unpersist_local_checkpoint
-
     b2u = bytes_to_unicode()
 
     @F.pandas_udf("array<string>")
@@ -367,8 +368,7 @@ def train_bpe_distributed(df: DataFrame, text_col: str, n_merges: int,
         F.transform(
             F.sequence(F.lit(1), F.length("w")),
             lambda i: F.col("w").substr(i, F.lit(1))).alias("sym"))
-    words = words.localCheckpoint()
-    prev = words
+    words = pin(words, eager=True)
 
     merges: list[tuple[int, str, str, int]] = []
     for r in range(1, n_merges + 1):
@@ -400,10 +400,10 @@ def train_bpe_distributed(df: DataFrame, text_col: str, n_merges: int,
                 F.concat(F.slice(acc, 1, F.size(acc) - 1),
                          F.array(F.lit(ab)))
             ).otherwise(F.concat(acc, F.array(x))))
-        words = words.select("freq", fold.alias("sym")).localCheckpoint()
-        unpersist_local_checkpoint(prev)
-        prev = words
-    unpersist_local_checkpoint(prev)
+        nxt = pin(words.select("freq", fold.alias("sym")), eager=True)
+        release(words)
+        words = nxt
+    release(words)
     spark = df.sparkSession
     return spark.createDataFrame(
         merges, "merge_rank int, mleft string, mright string, "

@@ -34,6 +34,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pinned
+
 
 def _sigmoid(z: Column) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
@@ -134,12 +136,9 @@ def train_quality_classifier(docs: DataFrame, text_col: str,
     """Feature-extract + train in one call; returns (weights,
     feature_cols) for :func:`logreg_predict` on any corpus."""
     feats = ["f_words", "f_lines", "f_chars", "f_vocab"]
-    fdf = doc_quality_features(docs, text_col).select(
-        *feats, label_col).cache()
-    try:
+    with pinned(doc_quality_features(docs, text_col).select(
+            *feats, label_col), eager=False) as fdf:
         wts = logreg_train(fdf, feats, label_col, lr=lr, iters=iters)
-    finally:
-        fdf.unpersist()
     return wts, feats
 
 

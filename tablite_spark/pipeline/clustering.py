@@ -60,7 +60,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tablite_spark.plans.lifecycle import unpersist_local_checkpoint
+from tablite_spark.plans.lifecycle import pin, pinned
 
 __all__ = ["DEFAULT_SCALE", "quantize_vectors", "kmeans_fit",
            "kmeans_assign", "kmeans_cells"]
@@ -163,8 +163,7 @@ def kmeans_fit(df: DataFrame, vec_col: str, id_col: str,
         F.col(id_col).alias("__id__"), "qv")
     # pin BEFORE the seed collect: the seed job and every iteration
     # read the one quantize pass (was: seeds quantized a second time)
-    q = q.localCheckpoint()
-    try:
+    with pinned(q, eager=True) as q:
         seed_rows = (q.orderBy(F.md5(F.col("__id__").cast("string")),
                                "__id__")
                      .limit(k).select("qv").collect())
@@ -198,10 +197,6 @@ def kmeans_fit(df: DataFrame, vec_col: str, id_col: str,
                  for i in range(dim)]
                 if j in by_cell else centroids[j]  # empty cell carries
                 for j in range(len(centroids))]
-    finally:
-        # DataFrame.unpersist is a no-op on checkpointed frames —
-        # release the quantized-vector blocks deterministically
-        unpersist_local_checkpoint(q)
     return centroids
 
 
@@ -330,13 +325,12 @@ def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
     # shape re-ran the 9-cell self-join three times and carried
     # x/y/dist_sq it never read again); the core set / labels are
     # point-bounded with counted sizes, so their joins broadcast
-    nb = (grid_radius_join(p, p, eps)
-          .select("pid_l", "pid_r").persist())
-    try:
+    with pinned(grid_radius_join(p, p, eps).select("pid_l", "pid_r"),
+                eager=False) as nb:
         cnt = (nb.groupBy(F.col("pid_l").alias("pid"))
                .agg(F.count(F.lit(1)).alias("n_nb")))
-        cores = (cnt.filter(F.col("n_nb") >= min_pts).select("pid")
-                 .localCheckpoint())
+        cores = pin(cnt.filter(F.col("n_nb") >= min_pts).select("pid"),
+                    eager=True)
         n_cores = cores.count()
         core_pairs = (nb
                       .join(maybe_broadcast(
@@ -365,12 +359,10 @@ def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
                         "pid_r")
                   .groupBy(F.col("pid_l").alias("pid"))
                   .agg(F.min("cluster").cast("long").alias("cluster")))
-        labeled = (core_lab.withColumn("role", F.lit("core"))
-                   .unionByName(border.withColumn("role",
-                                                  F.lit("border")))
-                   .localCheckpoint())  # point-bounded; frees nb
-    finally:
-        nb.unpersist()
+        labeled = pin(core_lab.withColumn("role", F.lit("core"))
+                      .unionByName(border.withColumn("role",
+                                                     F.lit("border"))),
+                      eager=True)  # point-bounded; frees nb
     return (p.select("pid")
             .join(labeled, "pid", "left")
             .select(F.col("pid").alias(id_col),

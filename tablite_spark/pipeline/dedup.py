@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tablite_spark.config import Config
-from tablite_spark.plans.lifecycle import unpersist_local_checkpoint
+from tablite_spark.plans.lifecycle import pin, release
 
 
 def exact_dedup(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
@@ -249,7 +249,7 @@ def minhash_dedup(df: DataFrame, text_col: str, id_col: str,
     # Signatures are num_perm longs/doc (~1 KB) — ~0.1% of corpus
     # size, safe to pin at any scale; the lineage-recovery loss is the
     # same accepted trade as the match/unique_index pins.
-    sig = shingle_minhash(df, text_col, id_col).localCheckpoint()
+    sig = pin(shingle_minhash(df, text_col, id_col), eager=True)
     pairs = minhash_lsh_candidates(sig, id_col)
     scored = minhash_jaccard(sig, pairs, id_col).filter(F.col("est_jaccard") >= threshold)
     losers = scored.select(F.col("id_b").alias(id_col)).distinct()
@@ -399,18 +399,15 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = e.union(e.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst"))).distinct()
-    edges = edges.persist()
+    edges = pin(edges, eager=False)
     driver_valve = int(_os.environ.get(
         "SPARK_GRAFT_CC_DRIVER_EDGES", str(1_000_000)))
-    n_edges = edges.count()
-    if n_edges <= driver_valve:
-        try:
-            return _cc_driver_union_find(edges)
-        finally:
-            edges.unpersist()
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("component", F.col("id")))
-    labels = labels.localCheckpoint(eager=True)
+    if edges.count() <= driver_valve:
+        labels = _cc_driver_union_find(edges)
+        release(edges)
+        return labels
+    labels = pin(edges.select(F.col("src").alias("id")).distinct()
+                 .withColumn("component", F.col("id")), eager=True)
     labels_ckpt = labels  # the checkpoint backing the label view
     n_labels = labels.count()
     changed = 1
@@ -427,22 +424,21 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
                  .select(F.col("dst").alias("id"), "component"))
         merged = (neigh.unionByName(labels)
                   .groupBy("id").agg(F.min("component").alias("component")))
-        new_labels = (merged.join(
+        new_labels = pin(merged.join(
             maybe_broadcast(labels.select(F.col("id"),
                                           F.col("component")
                                           .alias("__old__")),
                             n_labels, 24), "id")
             .select("id", "component",
                     (F.col("component") != F.col("__old__"))
-                    .alias("__moved__"))
-            .localCheckpoint(eager=True))
+                    .alias("__moved__")), eager=True)
         changed = new_labels.filter(F.col("__moved__")).limit(1).count()
         # the superseded round's label blocks are dead once the new
         # checkpoint holds — release them now, or the loop pins one
         # (id, label) copy per round until the ContextCleaner happens
-        # to notice (plans.lifecycle). Lifecycle tracks the CHECKPOINT
-        # frame — the (id, component) view would be a no-op there.
-        unpersist_local_checkpoint(labels_ckpt)
+        # to notice. Release the CHECKPOINT frame: the (id, component)
+        # view holds no pin of its own.
+        release(labels_ckpt)
         labels_ckpt = new_labels
         labels = new_labels.select("id", "component")
         # n_labels is the node count — invariant across rounds (every
@@ -450,7 +446,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
         # set fixed); the count is NOT re-run per round
         if changed == 0:
             break
-    edges.unpersist()
+    release(edges)
     if changed != 0:
         # returning partially-propagated labels would silently
         # under-merge clusters (and under-delete in cluster_dedup)
@@ -588,21 +584,18 @@ def minhash_save_index(sig: DataFrame, id_col: str, path: str,
     #   append side is batch-bounded by contract, so pinning it is
     #   cheap.
     sig_proj = sig.select(F.col(id_col).alias("id"), "minhash")
-    ckpt = None
     if mode == "append":
-        ckpt = sig_once = sig_proj.localCheckpoint()
+        sig_once = pin(sig_proj, eager=True)
         sig_once.write.mode(mode).parquet(f"{path}/signatures")
     else:
         sig_proj.write.mode(mode).parquet(f"{path}/signatures")
         sig_once = sig.sparkSession.read.parquet(f"{path}/signatures")
-    try:
-        (minhash_bands(sig_once, "id", bands, num_perm)
-         .select("id", "band", "bh")
-         .sortWithinPartitions("band", "bh")
-         .write.mode(mode).parquet(f"{path}/bands"))
-    finally:
-        if ckpt is not None:
-            unpersist_local_checkpoint(ckpt)
+    (minhash_bands(sig_once, "id", bands, num_perm)
+     .select("id", "band", "bh")
+     .sortWithinPartitions("band", "bh")
+     .write.mode(mode).parquet(f"{path}/bands"))
+    if mode == "append":
+        release(sig_once)
     if mode == "overwrite":
         _write_index_meta(spark, path, int(num_perm), int(bands))
 
@@ -674,8 +667,8 @@ def incremental_minhash_dedup(new_df: DataFrame, text_col: str,
     spark = new_df.sparkSession
     _, corpus_bands, meta = minhash_load_index(spark, index_path)
     corpus_sig = spark.read.parquet(f"{index_path}/signatures")
-    new_sig = shingle_minhash(new_df, text_col, id_col,
-                              num_perm=meta["num_perm"]).localCheckpoint()
+    new_sig = pin(shingle_minhash(new_df, text_col, id_col,
+                                  num_perm=meta["num_perm"]), eager=True)
     new_bands = minhash_bands(new_sig, id_col, bands=meta["bands"],
                               num_perm=meta["num_perm"])
     # self-matches excluded: a REPLAYED batch (streaming retry, rerun
@@ -708,21 +701,20 @@ def incremental_minhash_dedup(new_df: DataFrame, text_col: str,
     # whole corpus-probe chain above inside keep_ids' one eager
     # checkpoint (guide §1.2). Pin it once; it is batch-bounded by
     # contract (the new batch, minus corpus dups).
-    fresh_sig = new_sig.join(dup_vs_corpus, id_col, "left_anti") \
-        .localCheckpoint()
+    fresh_sig = pin(new_sig.join(dup_vs_corpus, id_col, "left_anti"),
+                    eager=True)
     in_batch = minhash_lsh_candidates(fresh_sig, id_col,
                                       bands=meta["bands"],
                                       num_perm=meta["num_perm"])
     in_batch_losers = (minhash_jaccard(fresh_sig, in_batch, id_col)
                        .filter(F.col("est_jaccard") >= threshold)
                        .select(F.col("id_b").alias(id_col)).distinct())
-    keep_ids = (fresh_sig.join(in_batch_losers, id_col, "left_anti")
-                .localCheckpoint())  # pin BEFORE the index mutates
+    keep_ids = pin(fresh_sig.join(in_batch_losers, id_col, "left_anti"),
+                   eager=True)  # pin BEFORE the index mutates
     # keep_ids is materialized; fresh_sig (and new_sig behind it) are
-    # dead weight from here — free them rather than waiting for the
-    # ContextCleaner (plans.lifecycle)
-    unpersist_local_checkpoint(fresh_sig)
-    unpersist_local_checkpoint(new_sig)
+    # dead weight from here
+    release(fresh_sig)
+    release(new_sig)
     survivors = new_df.join(keep_ids.select(id_col), id_col, "left_semi")
     if update_index:
         minhash_save_index(keep_ids, id_col, index_path,
@@ -1048,9 +1040,9 @@ def winnow_matches(df: DataFrame, text_col: str, id_col: str,
     # fingerprint kernel (4 MapInPandas branches in the before plan).
     # Materialize it once; its size class (~2/(window+1) of all
     # grams) is exactly what the joins below shuffle anyway.
-    fps = winnow_fingerprints(df, text_col, id_col, k, window) \
-        .select(F.col(id_col).alias("__id__"), "fp").distinct() \
-        .localCheckpoint()
+    fps = pin(winnow_fingerprints(df, text_col, id_col, k, window)
+              .select(F.col(id_col).alias("__id__"), "fp").distinct(),
+              eager=True)
     censu = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("__dfc__"))
     keep = censu.filter(F.col("__dfc__") <= max_df).select("fp")
     pruned = fps.hint("merge").join(keep, "fp")

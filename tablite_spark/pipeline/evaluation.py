@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin
+
 
 def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
     """EXACT ROC-AUC of a binary classifier over scored rows, via the
@@ -40,7 +42,7 @@ def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     s = F.col(score_col).cast("double")
     y = (F.col(label_col) if isinstance(label_col, str)
@@ -49,7 +51,7 @@ def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
             .groupBy(s.alias("__s__"))
             .agg(F.count(F.lit(1)).alias("__c__"),
                  F.count(F.when(y, 1)).alias("__p__")))
-    cens = pin_census(cens)
+    cens = pin(cens, eager=True)
     cens = with_range_bucket(cens, "__s__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__s__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

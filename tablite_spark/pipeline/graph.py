@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tablite_spark.plans.hints import maybe_broadcast as _maybe_broadcast
-from tablite_spark.plans.lifecycle import unpersist_local_checkpoint
+from tablite_spark.plans.lifecycle import pin, pinned, release
 
 __all__ = ["pagerank", "triangle_count", "bfs_hops", "k_core",
            "hyperball", "temporal_bfs",
@@ -220,18 +220,17 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
     # contribs join per iteration) — pin it once instead of replaying
     # its upstream build (which for the registry callers is a multi-
     # shuffle derivation from the corpus) every scan
-    e = edges.select(F.col(src_col).alias("src"),
-                     F.col(dst_col).alias("dst")).persist()
-    try:
+    with pinned(edges.select(F.col(src_col).alias("src"),
+                             F.col(dst_col).alias("dst")),
+                eager=False) as e:
         nodes = (e.select(F.col("src").alias("node"))
                  .unionByName(e.select(F.col("dst").alias("node")))
                  .distinct())
         outdeg = e.groupBy(F.col("src").alias("node")) \
                   .agg(F.count(F.lit(1)).alias("outdeg"))
-        base_nodes = (nodes.join(outdeg, "node", "left")
-                      .select("node", F.coalesce("outdeg", F.lit(0))
-                              .alias("outdeg"))
-                      .localCheckpoint())
+        base_nodes = pin(nodes.join(outdeg, "node", "left")
+                         .select("node", F.coalesce("outdeg", F.lit(0))
+                                 .alias("outdeg")), eager=True)
         n = base_nodes.count()
         if n == 0:
             return base_nodes.select("node", F.lit(0).alias("rank"))
@@ -255,32 +254,27 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
                                "src")
                         .groupBy(F.col("dst").alias("node"))
                         .agg(F.sum("c").alias("s")))
-            ranks = (base_nodes.join(
+            ranks = pin(base_nodes.join(
                 _maybe_broadcast(contribs, n, 24), "node", "left")
                 .select("node", "outdeg",
                         (F.lit(base + dang_share)
                          + F.floor(F.lit(d)
                                    * F.coalesce(F.col("s"), F.lit(0))
                                    .cast("double")).cast("long"))
-                        .alias("rank"))
-                .localCheckpoint())  # eager: materialized here
+                        .alias("rank")), eager=True)
             # the new checkpoint no longer references the previous
-            # one's blocks — free them DETERMINISTICALLY, or one copy
-            # of the rank state stays pinned in executor storage per
-            # iteration (DataFrame.unpersist is a silent no-op on
-            # checkpointed frames; see plans.lifecycle)
+            # one's blocks — free them now, or one copy of the rank
+            # state stays pinned in executor storage per iteration
             if prev_ckpt is not None:
-                unpersist_local_checkpoint(prev_ckpt)
+                release(prev_ckpt)
             prev_ckpt = ranks
         if iters > 0:
             # the final ranks checkpoint is self-contained;
             # base_nodes' blocks are no longer reachable from it
             # (iters=0 returns the initial frame, which still reads
             # base_nodes' blocks)
-            unpersist_local_checkpoint(base_nodes)
+            release(base_nodes)
         return ranks.select("node", "rank")
-    finally:
-        e.unpersist()
 
 
 def triangle_count(edges: DataFrame, src_col: str,
@@ -307,72 +301,65 @@ def triangle_count(edges: DataFrame, src_col: str,
     # triangle probe) and ori 3x (both wedge legs + probe) — pin each
     # once; |E| is counted anyway (it is an output column), and that
     # real number drives every broadcast decision below
-    und = (edges.filter(a.isNotNull() & b.isNotNull() & (a != b))
-           .select(F.least(a, b).alias("u"),
-                   F.greatest(a, b).alias("v"))
-           .distinct().persist())
-    deg = None
-    try:
-        n_edges = und.count()
-        # the degree census feeds the orientation join AND the wedge
-        # total — pin it so its union+groupBy pass runs once
-        deg = (und.select(F.col("u").alias("n"))
-               .unionAll(und.select(F.col("v").alias("n")))
-               .groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-               .persist())
-        # orient each edge low-(degree, id) -> high-(degree, id);
-        # deg is node-bounded (<= 2|E| rows): broadcast it into both
-        # endpoint joins so und is never shuffled
-        du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-        dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-        e = (und.join(_maybe_broadcast(du, 2 * n_edges, 24), "u")
-             .join(_maybe_broadcast(dv, 2 * n_edges, 24), "v"))
-        lo_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        ori = e.select(
-            F.when(lo_first, F.col("u")).otherwise(F.col("v"))
-            .alias("s"),
-            F.when(lo_first, F.col("v")).otherwise(F.col("u"))
-            .alias("t")).persist()
-        # wedges at the low endpoint: (s -> t1), (s -> t2), t1 < t2;
-        # a triangle exists iff {t1, t2} is an edge. Because wedges
-        # carry t1 < t2 and und is canonical (u < v), the closing-
-        # edge probe is und ITSELF — the old probe unioned BOTH
-        # orientations of ori (2|E| rows) to reach the same matches.
-        # Wedge leg and probe are |E|-bounded: broadcast them so the
-        # wedge fan-out streams through one stage with zero shuffles
-        # (the fallback keeps the shuffled joins for graphs past the
-        # budget)
-        w1 = ori.select(F.col("s"), F.col("t").alias("t1"))
-        w2 = ori.select(F.col("s"), F.col("t").alias("t2"))
-        wedges = (w1.join(_maybe_broadcast(w2, n_edges, 16), "s")
-                  .filter(F.col("t1") < F.col("t2")))
-        probe = und.select(F.col("u").alias("t1"),
-                           F.col("v").alias("t2"))
-        tri = (wedges.join(_maybe_broadcast(probe, n_edges, 16),
-                           ["t1", "t2"])
-               .agg(F.count(F.lit(1)).alias("n_triangles")))
-        stats = (deg.agg(F.count(F.lit(1)).alias("n_nodes"),
-                         F.sum(F.col("d") * (F.col("d") - 1) / 2)
-                         .cast("long").alias("n_wedges")))
-        nedges = und.agg(F.count(F.lit(1)).alias("n_edges"))
-        return (stats.crossJoin(F.broadcast(nedges))
-                .crossJoin(F.broadcast(tri))
-                .select("n_nodes", "n_edges", "n_triangles",
-                        "n_wedges",
-                        F.when(F.col("n_wedges") > 0,
-                               3.0 * F.col("n_triangles")
-                               / F.col("n_wedges"))
-                        .alias("clustering"))
-                .localCheckpoint())  # 1 row; lets the pins release
-    finally:
-        try:
-            ori.unpersist()
-        except NameError:  # counted 0 edges before ori was built
-            pass
-        if deg is not None:
-            deg.unpersist()
-        und.unpersist()
+    und = pin(edges.filter(a.isNotNull() & b.isNotNull() & (a != b))
+              .select(F.least(a, b).alias("u"),
+                      F.greatest(a, b).alias("v"))
+              .distinct(), eager=False)
+    n_edges = und.count()
+    # the degree census feeds the orientation join AND the wedge
+    # total — pin it so its union+groupBy pass runs once
+    deg = pin(und.select(F.col("u").alias("n"))
+              .unionAll(und.select(F.col("v").alias("n")))
+              .groupBy("n").agg(F.count(F.lit(1)).alias("d")),
+              eager=False)
+    # orient each edge low-(degree, id) -> high-(degree, id);
+    # deg is node-bounded (<= 2|E| rows): broadcast it into both
+    # endpoint joins so und is never shuffled
+    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
+    e = (und.join(_maybe_broadcast(du, 2 * n_edges, 24), "u")
+         .join(_maybe_broadcast(dv, 2 * n_edges, 24), "v"))
+    lo_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
+    ori = pin(e.select(
+        F.when(lo_first, F.col("u")).otherwise(F.col("v"))
+        .alias("s"),
+        F.when(lo_first, F.col("v")).otherwise(F.col("u"))
+        .alias("t")), eager=False)
+    # wedges at the low endpoint: (s -> t1), (s -> t2), t1 < t2;
+    # a triangle exists iff {t1, t2} is an edge. Because wedges
+    # carry t1 < t2 and und is canonical (u < v), the closing-
+    # edge probe is und ITSELF — the old probe unioned BOTH
+    # orientations of ori (2|E| rows) to reach the same matches.
+    # Wedge leg and probe are |E|-bounded: broadcast them so the
+    # wedge fan-out streams through one stage with zero shuffles
+    # (the fallback keeps the shuffled joins for graphs past the
+    # budget)
+    w1 = ori.select(F.col("s"), F.col("t").alias("t1"))
+    w2 = ori.select(F.col("s"), F.col("t").alias("t2"))
+    wedges = (w1.join(_maybe_broadcast(w2, n_edges, 16), "s")
+              .filter(F.col("t1") < F.col("t2")))
+    probe = und.select(F.col("u").alias("t1"),
+                       F.col("v").alias("t2"))
+    tri = (wedges.join(_maybe_broadcast(probe, n_edges, 16),
+                       ["t1", "t2"])
+           .agg(F.count(F.lit(1)).alias("n_triangles")))
+    stats = (deg.agg(F.count(F.lit(1)).alias("n_nodes"),
+                     F.sum(F.col("d") * (F.col("d") - 1) / 2)
+                     .cast("long").alias("n_wedges")))
+    nedges = und.agg(F.count(F.lit(1)).alias("n_edges"))
+    out = pin(stats.crossJoin(F.broadcast(nedges))
+              .crossJoin(F.broadcast(tri))
+              .select("n_nodes", "n_edges", "n_triangles",
+                      "n_wedges",
+                      F.when(F.col("n_wedges") > 0,
+                             3.0 * F.col("n_triangles")
+                             / F.col("n_wedges"))
+                      .alias("clustering")),
+              eager=True)  # 1 row; lets the pins release
+    for df in (ori, deg, und):
+        release(df)
+    return out
 
 
 def bfs_hops(edges: DataFrame, seeds: DataFrame, src_col: str,
@@ -395,17 +382,15 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, src_col: str,
     """
     # the undirected edge frame is scanned once per round — pin it
     # (before this round it was re-derived from the corpus each hop)
-    und = (edges.select(F.col(src_col).alias("a"),
-                        F.col(dst_col).alias("b"))
-           .unionByName(edges.select(F.col(dst_col).alias("a"),
-                                     F.col(src_col).alias("b")))
-           .distinct().persist())
-    try:
+    with pinned(edges.select(F.col(src_col).alias("a"),
+                             F.col(dst_col).alias("b"))
+                .unionByName(edges.select(F.col(dst_col).alias("a"),
+                                          F.col(src_col).alias("b")))
+                .distinct(), eager=False) as und:
         if und.count() <= _driver_edge_valve():
             return _bfs_hops_driver(und, seeds, node_col, max_hops)
-        dist = (seeds.select(F.col(node_col).alias("node")).distinct()
-                .withColumn("hops", F.lit(0))
-                .localCheckpoint())
+        dist = pin(seeds.select(F.col(node_col).alias("node")).distinct()
+                   .withColumn("hops", F.lit(0)), eager=True)
         n_frontier = dist.count()  # replaces round-1 isEmpty probe
         n_dist = n_frontier
         frontier = dist
@@ -416,29 +401,26 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, src_col: str,
             # counts in hand: broadcast them so und never shuffles —
             # the frontier side into the expansion join, the settled
             # side into the anti-join
-            nxt = (und.join(_maybe_broadcast(
-                       frontier.select(F.col("node").alias("a")),
-                       n_frontier, 16), "a")
-                   .select(F.col("b").alias("node")).distinct()
-                   .join(_maybe_broadcast(dist.select("node"),
-                                          n_dist, 16),
-                         "node", "left_anti")
-                   .withColumn("hops", F.lit(h))
-                   .localCheckpoint())
+            nxt = pin(und.join(_maybe_broadcast(
+                          frontier.select(F.col("node").alias("a")),
+                          n_frontier, 16), "a")
+                      .select(F.col("b").alias("node")).distinct()
+                      .join(_maybe_broadcast(dist.select("node"),
+                                             n_dist, 16),
+                            "node", "left_anti")
+                      .withColumn("hops", F.lit(h)), eager=True)
             n_frontier = nxt.count()  # doubles as the isEmpty probe
             if n_frontier == 0:
                 break
             n_dist += n_frontier
             prev = dist
-            dist = dist.unionByName(nxt).localCheckpoint()
-            unpersist_local_checkpoint(prev)
+            dist = pin(dist.unionByName(nxt), eager=True)
+            release(prev)
             if frontier is not prev:  # round 1: frontier IS the seeds
-                unpersist_local_checkpoint(frontier)
+                release(frontier)
             frontier = nxt
         return dist.select("node", F.col("hops").cast("long")
                            .alias("hops"))
-    finally:
-        und.unpersist()
 
 
 def k_core(edges: DataFrame, src_col: str, dst_col: str, k: int,
@@ -462,21 +444,17 @@ def k_core(edges: DataFrame, src_col: str, dst_col: str, k: int,
     Returns the SAME relation the last degree recomputation produced,
     so ``core_degree`` is each node's degree inside the final core.
     """
-    und = (edges.select(F.col(src_col).alias("a"),
-                        F.col(dst_col).alias("b"))
-           .unionByName(edges.select(F.col(dst_col).alias("a"),
-                                     F.col(src_col).alias("b")))
-           .distinct().persist())
-    if und.count() <= _driver_edge_valve():
-        try:
+    with pinned(edges.select(F.col(src_col).alias("a"),
+                             F.col(dst_col).alias("b"))
+                .unionByName(edges.select(F.col(dst_col).alias("a"),
+                                          F.col(src_col).alias("b")))
+                .distinct(), eager=False) as und:
+        if und.count() <= _driver_edge_valve():
             return _k_core_driver(und, k, max_rounds)
-        finally:
-            und.unpersist()
-    alive = (und.select(F.col("a").alias("node")).distinct()
-             .localCheckpoint())
-    alive_ckpt = alive  # the checkpoint backing the survivor view
-    n_alive = alive.count()
-    try:
+        alive = pin(und.select(F.col("a").alias("node")).distinct(),
+                    eager=True)
+        alive_ckpt = alive  # the checkpoint backing the survivor view
+        n_alive = alive.count()
         for _ in range(max_rounds):
             # the survivor set is node-bounded and its count is in
             # hand from the convergence check: broadcast both
@@ -497,22 +475,17 @@ def k_core(edges: DataFrame, src_col: str, dst_col: str, k: int,
             # count-then-checkpoint order evaluated the whole round
             # TWICE (localCheckpoint is eager — it re-ran the joins
             # the count had just run)
-            keep = deg.filter(F.col("core_degree") >= k) \
-                      .localCheckpoint()
+            keep = pin(deg.filter(F.col("core_degree") >= k), eager=True)
             n_keep = keep.count()
             if n_keep == n_alive or n_keep == 0:
-                # already materialized — safe past the finally-block
+                # already materialized — safe past the edge release
                 return keep
-            prev = alive_ckpt
+            release(alive_ckpt)  # the CHECKPOINT, not the view on it
             alive = keep.select("node")  # view on keep's blocks
-            alive_ckpt = keep  # lifecycle tracks the CHECKPOINT —
-            # unpersist_local_checkpoint is a no-op on derived views
-            unpersist_local_checkpoint(prev)
+            alive_ckpt = keep
             n_alive = n_keep
         raise RuntimeError(
             f"k_core did not converge in {max_rounds} rounds")
-    finally:
-        und.unpersist()
 
 
 def hyperball(edges: DataFrame, src_col: str, dst_col: str,
@@ -544,11 +517,11 @@ def hyperball(edges: DataFrame, src_col: str, dst_col: str,
         m, 0.7213 / (1.0 + 1.079 / m))
     numer = alpha * m * m * float(q)
 
-    und = (edges.select(F.col(src_col).alias("a"),
-                        F.col(dst_col).alias("b"))
-           .unionByName(edges.select(F.col(dst_col).alias("a"),
-                                     F.col(src_col).alias("b")))
-           .distinct().persist())
+    und = pin(edges.select(F.col(src_col).alias("a"),
+                           F.col(dst_col).alias("b"))
+              .unionByName(edges.select(F.col(dst_col).alias("a"),
+                                        F.col(src_col).alias("b")))
+              .distinct(), eager=False)
     h = F.conv(F.substring(F.md5(F.col("node").cast("string")),
                            1, 15), 16, 10).cast("long")
     # State is PACKED: one row per node holding all m registers as an
@@ -560,20 +533,20 @@ def hyperball(edges: DataFrame, src_col: str, dst_col: str,
     # shuffles <= |V| partial rows of m register maxes. The register
     # math (hash, rho, element-wise max, the HLL estimator) is
     # expression-for-expression the one the oracle replays.
-    state = (und.select(F.col("a").alias("node")).distinct()
-             .select("node",
-                     F.shiftright(h, rho_bits).cast("int")
-                     .alias("register"),
-                     h.bitwiseAND(F.lit(w_mask)).alias("__w__"))
-             .select("node", "register",
-                     F.when(F.col("__w__") == 0, F.lit(rho_max))
-                     .otherwise(F.lit(rho_max)
-                                - F.length(F.expr("bin(__w__)")))
-                     .cast("int").alias("rho"))
-             .select("node", F.expr(
-                 f"transform(sequence(0, {m - 1}), "
-                 f"i -> IF(i = register, rho, 0))").alias("rhos"))
-             .localCheckpoint())
+    state = pin(und.select(F.col("a").alias("node")).distinct()
+                .select("node",
+                        F.shiftright(h, rho_bits).cast("int")
+                        .alias("register"),
+                        h.bitwiseAND(F.lit(w_mask)).alias("__w__"))
+                .select("node", "register",
+                        F.when(F.col("__w__") == 0, F.lit(rho_max))
+                        .otherwise(F.lit(rho_max)
+                                   - F.length(F.expr("bin(__w__)")))
+                        .cast("int").alias("rho"))
+                .select("node", F.expr(
+                    f"transform(sequence(0, {m - 1}), "
+                    f"i -> IF(i = register, rho, 0))").alias("rhos")),
+                eager=True)
     n_nodes = state.count()
 
     def nf_micro(st: DataFrame) -> int:
@@ -601,23 +574,21 @@ def hyperball(edges: DataFrame, src_col: str, dst_col: str,
     reg_max = [F.max(F.element_at(F.col("rhos"), i + 1))
                .alias(f"__r{i}__") for i in range(m)]
     repack = F.array(*[F.col(f"__r{i}__") for i in range(m)])
-    try:
-        for hh in range(1, max_h + 1):
-            contrib = (und.join(
-                _maybe_broadcast(
-                    state.select(F.col("node").alias("b"), "rhos"),
-                    n_nodes, 4 * m + 48), "b")
-                .select(F.col("a").alias("node"), "rhos"))
-            prev = state
-            state = (contrib.unionByName(state)
-                     .groupBy("node").agg(*reg_max)
-                     .select("node", repack.alias("rhos"))
-                     .localCheckpoint())
-            unpersist_local_checkpoint(prev)
-            out.append((hh, nf_micro(state)))
-        return out
-    finally:
-        und.unpersist()
+    for hh in range(1, max_h + 1):
+        contrib = (und.join(
+            _maybe_broadcast(
+                state.select(F.col("node").alias("b"), "rhos"),
+                n_nodes, 4 * m + 48), "b")
+            .select(F.col("a").alias("node"), "rhos"))
+        prev = state
+        state = pin(contrib.unionByName(state)
+                    .groupBy("node").agg(*reg_max)
+                    .select("node", repack.alias("rhos")), eager=True)
+        release(prev)
+        out.append((hh, nf_micro(state)))
+    release(state)
+    release(und)
+    return out
 
 
 def temporal_bfs(edges: DataFrame, seeds: DataFrame, src_col: str,
@@ -649,9 +620,9 @@ def temporal_bfs(edges: DataFrame, seeds: DataFrame, src_col: str,
               .groupBy("node").agg(F.min("arrival").alias("arrival")))
     # the (timestamped) edge frame is scanned every round — pin it
     # once instead of replaying its corpus-side derivation per hop
-    e = edges.select(F.col(src_col).alias("node"),
-                     F.col(dst_col).alias("__dst__"),
-                     F.col(ts_col).alias("__ts__")).persist()
+    e = pin(edges.select(F.col(src_col).alias("node"),
+                         F.col(dst_col).alias("__dst__"),
+                         F.col(ts_col).alias("__ts__")), eager=False)
     if max_hops >= 1 and e.count() <= _driver_edge_valve():
         # output dtypes after round 1 = the union's coerced schema
         # (seed-ts vs edge-ts types may widen) — derive it from the
@@ -661,33 +632,28 @@ def temporal_bfs(edges: DataFrame, seeds: DataFrame, src_col: str,
                      F.col("__ts__").alias("arrival")))
             .groupBy("node").agg(F.min("arrival").alias("arrival"))
             .schema)
-        try:
-            return _temporal_bfs_driver(e, state0, out_schema,
-                                        max_hops)
-        finally:
-            e.unpersist()
-    state = state0.localCheckpoint()
-    n_state = state.count()
-    try:
-        for _ in range(max_hops):
-            # arrival state is node-bounded with a real count:
-            # broadcast it so the edge table never shuffles; the
-            # min-merge groupBy collapses map-side to <= |V| partials
-            relax = (e.join(_maybe_broadcast(state, n_state, 24),
-                            "node")
-                     .filter(F.col("__ts__") >= F.col("arrival"))
-                     .select(F.col("__dst__").alias("node"),
-                             F.col("__ts__").alias("arrival")))
-            prev = state
-            state = (state.unionByName(relax)
-                     .groupBy("node").agg(F.min("arrival")
-                                          .alias("arrival"))
-                     .localCheckpoint())
-            n_state = state.count()
-            unpersist_local_checkpoint(prev)
+        state = _temporal_bfs_driver(e, state0, out_schema, max_hops)
+        release(e)
         return state
-    finally:
-        e.unpersist()
+    state = pin(state0, eager=True)
+    n_state = state.count()
+    for _ in range(max_hops):
+        # arrival state is node-bounded with a real count:
+        # broadcast it so the edge table never shuffles; the
+        # min-merge groupBy collapses map-side to <= |V| partials
+        relax = (e.join(_maybe_broadcast(state, n_state, 24),
+                        "node")
+                 .filter(F.col("__ts__") >= F.col("arrival"))
+                 .select(F.col("__dst__").alias("node"),
+                         F.col("__ts__").alias("arrival")))
+        prev = state
+        state = pin(state.unionByName(relax)
+                    .groupBy("node").agg(F.min("arrival")
+                                         .alias("arrival")), eager=True)
+        n_state = state.count()
+        release(prev)
+    release(e)
+    return state
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
@@ -708,24 +674,23 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     hold rank 0 forever (the semantic point of personalization)."""
     # same scan-pinning + count-driven broadcast discipline as
     # ``pagerank`` (see there for the rationale)
-    e = edges.select(F.col(src_col).alias("src"),
-                     F.col(dst_col).alias("dst")).persist()
-    try:
+    with pinned(edges.select(F.col(src_col).alias("src"),
+                             F.col(dst_col).alias("dst")),
+                eager=False) as e:
         nodes = (e.select(F.col("src").alias("node"))
                  .unionByName(e.select(F.col("dst").alias("node")))
                  .distinct())
         outdeg = e.groupBy(F.col("src").alias("node")) \
                   .agg(F.count(F.lit(1)).alias("outdeg"))
         sd = seeds.select(F.col(node_col).alias("node")).distinct()
-        base_nodes = (nodes.join(outdeg, "node", "left")
-                      .join(sd.withColumn("__is_seed__", F.lit(1)),
-                            "node", "left")
-                      .select("node",
-                              F.coalesce("outdeg", F.lit(0))
-                              .alias("outdeg"),
-                              F.coalesce("__is_seed__", F.lit(0))
-                              .alias("is_seed"))
-                      .localCheckpoint())
+        base_nodes = pin(nodes.join(outdeg, "node", "left")
+                         .join(sd.withColumn("__is_seed__", F.lit(1)),
+                               "node", "left")
+                         .select("node",
+                                 F.coalesce("outdeg", F.lit(0))
+                                 .alias("outdeg"),
+                                 F.coalesce("__is_seed__", F.lit(0))
+                                 .alias("is_seed")), eager=True)
         n = base_nodes.count()
         ns = base_nodes.filter(F.col("is_seed") == 1).count()
         if ns == 0:
@@ -750,7 +715,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                                "src")
                         .groupBy(F.col("dst").alias("node"))
                         .agg(F.sum("c").alias("s")))
-            ranks = (base_nodes.join(
+            ranks = pin(base_nodes.join(
                 _maybe_broadcast(contribs, n, 24), "node", "left")
                 .select("node", "outdeg", "is_seed",
                         (F.when(F.col("is_seed") == 1,
@@ -760,13 +725,10 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                                    * F.coalesce(F.col("s"),
                                                 F.lit(0))
                                    .cast("double")).cast("long"))
-                        .alias("rank"))
-                .localCheckpoint())
+                        .alias("rank")), eager=True)
             if prev_ckpt is not None:
-                unpersist_local_checkpoint(prev_ckpt)
+                release(prev_ckpt)
             prev_ckpt = ranks
         if iters > 0:
-            unpersist_local_checkpoint(base_nodes)
+            release(base_nodes)
         return ranks.select("node", "rank")
-    finally:
-        e.unpersist()

@@ -26,6 +26,8 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin
+
 _TOKEN_SPLIT = r"[^a-z0-9]+"
 
 
@@ -77,8 +79,7 @@ def bm25_search(docs: DataFrame | None, queries: DataFrame,
         # join — an internally-built index re-tokenized the corpus
         # per reference. Pin it once (a caller-supplied postings
         # frame is already amortized — typically parquet-backed).
-        postings = build_postings(docs, text_col, id_col) \
-            .localCheckpoint()
+        postings = pin(build_postings(docs, text_col, id_col), eager=True)
     stats = postings.groupBy(id_col).agg(F.first("dl").alias("dl"))
     consts = stats.agg(
         F.count(F.lit(1)).alias("n"),

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import pin
+
 __all__ = ["dsir_weights", "dsir_select"]
 
 
@@ -106,11 +108,10 @@ def dsir_weights(raw: DataFrame, target: DataFrame, text_col: str,
     # integers either way (n_grams = Σ_b c). The census pins once
     # (≤ |docs|·buckets narrow rows — the lightweight proxy, 10-100×
     # smaller than the exploded gram rows it replaces).
-    cens = (_gram_rows(raw, text_col, [id_col])
-            .select(id_col, _bucket(F.col("g"), buckets).alias("b"))
-            .groupBy(id_col, "b")
-            .agg(F.count(F.lit(1)).alias("__c__"))
-            .localCheckpoint())
+    cens = pin(_gram_rows(raw, text_col, [id_col])
+               .select(id_col, _bucket(F.col("g"), buckets).alias("b"))
+               .groupBy(id_col, "b")
+               .agg(F.count(F.lit(1)).alias("__c__")), eager=True)
     rc = {r["b"]: r["c"] for r in
           cens.groupBy("b").agg(F.sum("__c__").alias("c")).collect()}
     tc = {r["b"]: r["c"] for r in

@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.lifecycle import is_expensive, pin
+
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 # tiny per-language stopword lists for the n-gram/stopword language
@@ -842,10 +844,9 @@ def contamination_check(df: DataFrame, probes: DataFrame, text_col: str,
     # the size table AND the exploded postings broadcast — unpinned,
     # each reference re-scanned the text-heavy probe source and
     # re-tokenized. One pin of the (probe suite)-bounded grams.
-    probe_grams = probes.select(
+    probe_grams = pin(probes.select(
         F.col(probe_id_col).alias("probe_id_"),
-        _gram_hashes(F.col(probe_text_col), n).alias("gs")) \
-        .localCheckpoint()
+        _gram_hashes(F.col(probe_text_col), n).alias("gs")), eager=True)
     return _confirm_overlap(doc_g, probe_grams, id_col, probe_id_col,
                             broadcast_probes)
 
@@ -933,10 +934,9 @@ def bloom_decontaminate(df: DataFrame, probes: DataFrame, text_col: str,
     # pinned once (see contamination_check): the grams feed the Bloom
     # gset collect, the size table and the postings broadcast — three
     # text re-scans without the pin
-    probe_grams = probes.select(
+    probe_grams = pin(probes.select(
         F.col(probe_id_col).alias("probe_id_"),
-        _gram_hashes(F.col(probe_text_col), n).alias("gs")) \
-        .localCheckpoint()
+        _gram_hashes(F.col(probe_text_col), n).alias("gs")), eager=True)
     gset = (probe_grams.select(F.explode("gs").alias("g")).distinct()
             .toPandas()["g"].to_numpy())
     m = 64
@@ -1080,19 +1080,9 @@ def pack_sequences(df: DataFrame, ids_col: str, id_col: str,
     # join chain, measured as ~2/3 of the query). Pin it once when
     # that upstream is actually expensive to recompute; a plain
     # pruned file scan skips the pin — re-scanning is cheaper than a
-    # cache fill (the spearman_corr discipline, same tag list).
-    # r15: probe the ANALYZED plan, not the optimized one — analysis
-    # already ran eagerly when the DataFrame was built, so this is a
-    # toString of an in-hand tree, while optimizedPlan() ran the
-    # whole optimizer just to make this yes/no call (~0.3 s toll on
-    # the plain-scan twin, r14 VERDICT item 6). The tags are logical
-    # operators that appear identically in both trees.
-    opt = base._jdf.queryExecution().analyzed().toString()
-    if any(t in opt for t in (
-            "Join", "Aggregate", "Window", "Generate", "Expand",
-            "Union", "MapInPandas", "FlatMapGroupsInPandas",
-            "MapGroups", "PythonUDF")):
-        base = base.localCheckpoint()
+    # cache fill (the spearman_corr discipline).
+    if is_expensive(base):
+        base = pin(base, eager=True)
     tagged = with_range_bucket(base, id_col, "__pid__").withColumn(
         "__nt__", F.size(ids_col))
     sums = (tagged.groupBy("__pid__")
@@ -1244,15 +1234,12 @@ def perplexity_score(df: DataFrame, text_col: str,
     ``model`` is None; pass a ``char_ngram_model`` of a clean sample
     for the real CCNet recipe. Unseen grams/prefixes degrade smoothly
     via the same add-alpha formula."""
-    if model is None:
-        # pin the (bounded-size) model so the corpus is scanned once
-        # for training: the vocab aggregate below and the broadcast
-        # join both read the materialized counts, not a re-run
-        model = char_ngram_model(df, text_col, n).localCheckpoint()
-    else:
-        # pin a user-passed model too: row-count gate + vocab
-        # aggregate + join would otherwise re-run its plan 3x
-        model = model.localCheckpoint()
+    # pin the (bounded-size) model so the corpus is scanned once for
+    # training: the row-count gate, the vocab aggregate and the join
+    # all read the materialized counts, not a re-run (a user-passed
+    # model too, whose plan would otherwise re-run 3x)
+    model = pin(char_ngram_model(df, text_col, n) if model is None
+                else model, eager=True)
     n_model_rows = model.count()
     if vocab_size is None:
         vocab_size = lm_vocab_size(model)
@@ -1315,7 +1302,7 @@ def vocab_divergence(df_a: DataFrame, df_b: DataFrame, text_col: str,
     # pin: the scalar pass and the term sum both read the joined
     # vocabulary table (bounded by vocab size) instead of re-running
     # the two corpus scans
-    joined = joined.localCheckpoint()
+    joined = pin(joined, eager=True)
     tot = joined.agg(
         F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
         F.sum((F.col("ca") > 0).cast("long")).alias("va"),

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from tablite_spark.plans.lifecycle import pin
 from tablite_spark.registry._base import SF_SMOKE, _cents, _t  # noqa: F401
 
 
@@ -802,7 +803,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
     # class the min-join shuffles anyway. persist (not checkpoint)
     # keeps the lineage in the plan, so the pushdown/broadcast audit
     # of the pre-pin phase stays visible (test_plans).
-    oe = oe.persist()
+    oe = pin(oe, eager=False)
     mn = oe.groupBy(F.col("p_partkey").alias("mk")).agg(
         F.min("unit_cost").alias("mn_cost"))
     out = oe.join(F.broadcast(mn),

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from tablite_spark.plans.lifecycle import pinned
 from tablite_spark.registry._base import SF_SMOKE, _cents, _t  # noqa: F401
 
 
@@ -1510,18 +1511,15 @@ def quality_classifier_docs(spark: SparkSession, sf: str) -> DataFrame:
     )
     d = _t(spark, sf, "documents")
     feats = ["f_words", "f_lines", "f_chars", "f_vocab"]
-    fdf = (doc_quality_features(d, "text")
-           .withColumn("y", (F.col("n_chars") > 250).cast("int"))
-           .select("doc_id", *feats, "y").cache())
-    try:
+    with pinned(doc_quality_features(d, "text")
+                .withColumn("y", (F.col("n_chars") > 250).cast("int"))
+                .select("doc_id", *feats, "y"), eager=False) as fdf:
         w = logreg_train(fdf, feats, "y", lr=4.0, iters=30)
         out = logreg_predict(fdf, feats, w)
         return out.select(
             "doc_id", F.round("prob", 4).alias("prob_r"),
             F.col("pred").cast("int").alias("pred"),
             (F.col("pred") == F.col("y")).cast("int").alias("correct"))
-    finally:
-        fdf.unpersist()
 
 
 def _logreg_oracle(lr: float = 4.0, iters: int = 30,

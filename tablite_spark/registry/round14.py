@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tablite_spark.plans.hints import maybe_broadcast
+from tablite_spark.plans.lifecycle import pin, pinned, release
 from tablite_spark.registry._base import _t
 from tablite_spark.streaming.fixtures import (
     stage_stream_batches, stream_shuffle_partitions)
@@ -353,12 +354,12 @@ def rfm_segments_orders(spark: SparkSession, sf: str) -> DataFrame:
     # (custkey, rank) slivers join back on custkey. Ranks are
     # bit-identical to the chained form: a rank depends only on its
     # own order columns and the row set, never on the other ranks.
-    cen = cen.localCheckpoint()
+    cen = pin(cen, eager=True)
     from concurrent.futures import ThreadPoolExecutor
 
     def _rank(metric: str, out: str):
         r, n = distributed_row_number(cen, [metric, "custkey"], out)
-        return r.select("custkey", out).localCheckpoint(), n
+        return pin(r.select("custkey", out), eager=True), n
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_r = pool.submit(_rank, "recency_days", "__rr__")
@@ -490,7 +491,7 @@ def revenue_concentration_orders(spark: SparkSession,
            .withColumn("__neg__", -F.col("__mc__")))
     # pinned: the row-number engine evaluates its input three times
     # (bounds, offsets, output) — see rfm_segments_orders
-    cen = cen.localCheckpoint()
+    cen = pin(cen, eager=True)
     ranked, n = distributed_row_number(
         cen, ["__neg__", "custkey"], "__rank__")
     dec = (ranked
@@ -1170,15 +1171,13 @@ def bfs_hops_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     # an intermediate distinct would just add a 4th shuffle. The
     # pair frame is scanned by BOTH the seed derivation and the
     # traversal's und build, so pin it for the (eager) call
-    edges = _co_order_pairs(li).select("src", "dst").persist()
-    try:
+    with pinned(_co_order_pairs(li).select("src", "dst"),
+                eager=False) as edges:
         nodes = (edges.select(F.col("src").alias("node"))
                  .unionByName(edges.select(F.col("dst").alias("node")))
                  .distinct())
         seeds = nodes.filter(F.col("node") % 13 == 0)
         out = bfs_hops(edges, seeds, "src", "dst", max_hops=3)
-    finally:
-        edges.unpersist()
     return out.select(F.col("node").cast("long").alias("node"),
                       "hops")
 
@@ -1428,16 +1427,16 @@ def assortativity_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     # count-driven broadcast of the node-bounded degree census so the
     # edge frame is never shuffled (shuffle-join fallback past the
     # budget — the 100 TB-safe path).
-    edges = (_co_order_pairs(li).select("src", "dst").distinct()
-             .persist())
+    edges = pin(_co_order_pairs(li).select("src", "dst").distinct(),
+                eager=False)
     n_edges = edges.count()
     und = (edges.select(F.col("src").alias("a"),
                         F.col("dst").alias("b"))
            .unionByName(edges.select(F.col("dst").alias("a"),
                                      F.col("src").alias("b"))))
-    deg = (und.groupBy(F.col("a").alias("n"))
-           .agg(F.count(F.lit(1)).cast("long").alias("d"))
-           .persist())
+    deg = pin(und.groupBy(F.col("a").alias("n"))
+              .agg(F.count(F.lit(1)).cast("long").alias("d")),
+              eager=False)
     j = (und.join(maybe_broadcast(
              deg.select(F.col("n").alias("a"),
                         F.col("d").alias("da")), 2 * n_edges, 24),
@@ -1878,9 +1877,9 @@ def temporal_reach_lineitem(spark: SparkSession,
                                        .cast("date"))
                             .cast("long").alias("d")), "bk")
              .select(F.col("src").alias("u"),
-                     F.col("dst").alias("v"), "d").distinct()
-             .persist())  # scanned by seeds AND the relax rounds
-    try:
+                     F.col("dst").alias("v"), "d").distinct())
+    # pinned: scanned by seeds AND the relax rounds
+    with pinned(dated, eager=False) as dated:
         und = (dated.select(F.col("u").alias("src"),
                             F.col("v").alias("dst"), "d")
                .unionByName(dated.select(F.col("v").alias("src"),
@@ -1893,8 +1892,6 @@ def temporal_reach_lineitem(spark: SparkSession,
         # pin can release as soon as it returns
         out = temporal_bfs(und, seeds, "src", "dst", "d",
                            max_hops=3)
-    finally:
-        dated.unpersist()
     return out.select(
         F.col("node").cast("long").alias("node"),
         F.expr("cast(date_add(DATE '1970-01-01', "
@@ -2136,7 +2133,7 @@ def theil_sen_orders(spark: SparkSession, sf: str) -> DataFrame:
     # and spread the pair fan-out across the cores — the percentile
     # buffers then fill in parallel and only the final merge sees
     # the full multiset (order-free, bit-identical median).
-    s = s.localCheckpoint()
+    s = pin(s, eager=True)
     wide = s.repartition(spark.sparkContext.defaultParallelism)
     pairs = (wide.alias("a").join(
         F.broadcast(s).alias("b"), F.col("a.k") < F.col("b.k"))
@@ -2151,9 +2148,10 @@ def theil_sen_orders(spark: SparkSession, sf: str) -> DataFrame:
     # statistics, bit-identical — see its test); the ROUND of the
     # same double stays in Spark so the rounding mode is unchanged.
     from tablite_spark.operators.stats import exact_percentiles
-    pairs = pairs.localCheckpoint()
+    pairs = pin(pairs, eager=True)
     n_pairs = pairs.count()
     med = exact_percentiles(pairs, {"slope": [0.5]})["slope"]
+    release(pairs)
     agg = spark.range(1).select(
         F.lit(n_pairs).cast("long").alias("n_pairs"),
         (F.round(F.lit(med[0] if med else None).cast("double"), 6)

@@ -12,12 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-from tablite_spark.config import Config
+from tablite_spark.config import Config, host_cpus
 
 
 def get_spark(app_name: str = "tablite_spark", master: str | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{host_cpus()}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

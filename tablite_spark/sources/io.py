@@ -517,8 +517,8 @@ def save_sharded(df: DataFrame, path: str, target_mb: int = 512,
     compression factor tracks within 2× in practice, which is enough
     to land files inside the 100 MB–1 GB sweet spot). The write uses
     ``maxRecordsPerFile`` (per-task file rolling, no extra shuffle)
-    plus a coalesce when the frame has far more partitions than
-    target files (coalesce is shuffle-FREE).
+    plus a coalesce when the frame has more partitions than target
+    files (coalesce is shuffle-FREE).
 
     Returns {"rows_per_file": n, "n_files": k} for observability.
     """
@@ -535,7 +535,7 @@ def save_sharded(df: DataFrame, path: str, target_mb: int = 512,
     n_rows = df.count()
     n_files = max(math.ceil(n_rows / rows_per_file), 1)
     out = df
-    if df.rdd.getNumPartitions() > 4 * n_files:
+    if df.rdd.getNumPartitions() > n_files:
         out = df.coalesce(n_files)
     (out.write.mode("overwrite")
         .option("compression", compression)

@@ -113,18 +113,18 @@ def test_bucket_expr_no_interpreted_aggregate_in_plan(spark):
     assert "lambdafunction" not in plan.lower(), plan
 
 
-def test_pin_census_identical_rows_and_single_source_eval(spark):
-    """pin_census returns byte-identical rows, and the census-prefix
+def test_eager_pin_identical_rows_and_single_source_eval(spark):
+    """An eager census pin returns byte-identical rows, and the census-prefix
     operators' FINAL plan reads the checkpoint instead of replaying
     the corpus scan (the r14 optimization: bounds pass + offsets
     collect + final aggregate each re-evaluated the census — the pin
     makes the corpus aggregation run exactly once)."""
-    from tablite_spark.functions.buckets import pin_census
+    from tablite_spark.plans.lifecycle import pin
     df = spark.range(10_000).select(
         (F.col("id") % 997).alias("v"))
     cens = df.groupBy("v").agg(F.count(F.lit(1)).alias("c"))
     expect = {(r["v"], r["c"]) for r in cens.collect()}
-    pinned = pin_census(cens)
+    pinned = pin(cens, eager=True)
     got = {(r["v"], r["c"]) for r in pinned.collect()}
     assert got == expect
     # the pinned plan must not re-derive the aggregation

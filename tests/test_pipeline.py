@@ -1131,8 +1131,10 @@ def test_token_count_bpe_spark_matches_driver(spark):
     """token_count(mode='bpe') on the documents table matches the
     driver-side tokenizer row for row, and is partition-invariant."""
     from tablite_spark.pipeline.bpe import BPETokenizer, train_bpe
+    from tablite_spark.plans.lifecycle import pin
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text").limit(50).cache())
+            .select("doc_id", "text").limit(50))
+    docs = pin(docs, eager=False)
     sample = [r["text"] for r in docs.limit(10).collect()]
     vocab, merges = train_bpe(sample, vocab_size=400)
     tok = BPETokenizer(vocab, merges)
@@ -2684,29 +2686,6 @@ def test_pagerank_dangling_mass_redistributed(spark):
     total = sum(got.values())
     assert abs(total - 10 ** 12) < 10 * 2 * 4  # iters*N*(floors per rank)
     assert got[2] > got[1]  # the sink receives 1's mass plus its share
-
-
-def test_unpersist_local_checkpoint_releases_blocks(spark):
-    """DataFrame.unpersist is a silent no-op on localCheckpointed
-    frames (RDD-level persistence, not CacheManager) — the lifecycle
-    helper must release the blocks deterministically, and a frame
-    derived from a LIVE checkpoint must still compute after an OLD
-    checkpoint is released."""
-    from tablite_spark.plans.lifecycle import unpersist_local_checkpoint
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    a = spark.range(100).localCheckpoint()
-    b = a.selectExpr("id * 2 AS id").localCheckpoint()
-    assert jsc.getPersistentRDDs().size() == before + 2
-    # the documented no-op, pinned so a Spark behavior change surfaces
-    a.unpersist()
-    assert jsc.getPersistentRDDs().size() == before + 2
-    assert unpersist_local_checkpoint(a) is True
-    assert jsc.getPersistentRDDs().size() == before + 1
-    assert b.count() == 100  # b's checkpoint is self-contained
-    assert unpersist_local_checkpoint(b) is True
-    assert jsc.getPersistentRDDs().size() == before
-    assert unpersist_local_checkpoint(spark.range(3)) is False
 
 
 def test_pagerank_checkpoint_blocks_bounded(spark):

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tablite_spark.operators.timeseries import funnel, ohlc_resample
+from tablite_spark.plans.lifecycle import scope
 
 
 def _ts(m, s=0, us=0):
@@ -254,20 +255,19 @@ def test_funnel_single_scan_matches_and_plan(spark, tmp_path):
     eager = sorted(map(tuple, funnel(ev, steps, single_scan=True).collect()))
     assert eager == lazy
 
-    chain = funnel(ev, steps, single_scan=True, _materialize=False)
-    plan = chain._jdf.queryExecution().executedPlan().toString()
-    try:
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with scope():
+        chain = funnel(ev, steps, single_scan=True, _materialize=False)
+        plan = chain._jdf.queryExecution().executedPlan().toString()
         # every source scan is the cached relation's child (the plan
         # string inlines it once per InMemoryTableScan) — no bare scan
         assert plan.count("InMemoryTableScan") > 0
         assert plan.count("Scan parquet") == plan.count("InMemoryRelation")
         assert sorted(map(tuple, chain.collect())) == lazy
-    finally:
-        # ADVICE r9: the lazy chain carries its own release handle so
-        # callers never have to clearCache() unrelated caches
-        assert chain.funnel_base.storageLevel.useMemory
-        chain.funnel_unpersist(blocking=True)
-        assert not chain.funnel_base.storageLevel.useMemory
+        assert not cache.isEmpty()
+    # the lazy chain's pinned base is released by the caller's scope,
+    # never by clearCache() of unrelated caches
+    assert cache.isEmpty()
 
 
 def test_interpolate_at_out_col_guard(spark):

@@ -18,7 +18,13 @@ surviving to a driver round.
 ``--json`` writes the per-query verdicts as a committed artifact
 (SWEEP_r0N.json) so a full-registry sweep is auditable, not prose:
 {"_sweep": {sf_dir, n_pass, n_fail, n_rows_only},
- "<query>": {"status": "pass|fail|rows_only", "rows": N, "err": ...}}
+ "<query>": {"status": "pass|fail|rows_only", "rows": N, "err": ...,
+             "pins_left": N}}
+
+Each query and its collect run inside ``plans.lifecycle.scope()``;
+``pins_left`` counts the persistent RDDs (and a non-empty
+CacheManager) still held afterwards that were not held before. A
+nonzero count fails the query.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ import pandas as pd
 
 import __spark_entry__ as entry_mod
 from tablite_spark import get_spark
+from tablite_spark.plans.lifecycle import scope
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -159,6 +166,15 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame,
     return problems
 
 
+def held_blocks(spark) -> set:
+    """Ids of the persistent RDDs, plus -1 while the CacheManager holds
+    any frame."""
+    held = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        held.add(-1)
+    return held
+
+
 def main():
     argv = list(sys.argv[1:])
     json_out = None
@@ -179,14 +195,23 @@ def main():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     passed, failed, rows_only = [], [], []
+    pins_left = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        held0 = held_blocks(spark)
         try:
-            sdf = fn(spark, sf_dir)
-            spark_pdf = sdf.toPandas()
+            with scope():  # a query's pins must not outlive its collect
+                sdf = fn(spark, sf_dir)
+                spark_pdf = sdf.toPandas()
         except Exception:
             failed.append((name, "SPARK ERROR:\n" + traceback.format_exc(limit=6)))
+            continue
+        finally:
+            pins_left[name] = len(held_blocks(spark) - held0)
+        if pins_left[name]:
+            failed.append((name, f"PINS LEFT: {pins_left[name]} cached "
+                                 f"RDDs/frames after scope()"))
             continue
         if name not in oracles:
             rows_only.append((name, len(spark_pdf)))
@@ -229,6 +254,8 @@ def main():
             rec[name] = {"status": "rows_only", "rows": n}
         for name, msg in failed:
             rec[name] = {"status": "fail", "err": msg[:400]}
+        for name, n in pins_left.items():
+            rec[name]["pins_left"] = n
         with open(json_out, "w") as fh:
             json.dump(rec, fh, indent=1, sort_keys=True)
             fh.write("\n")
