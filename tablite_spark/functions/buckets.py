@@ -17,9 +17,9 @@ reproduced mis-stitched windows under the RangePartitioner (README
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType
+from pyspark.sql.types import ArrayType, NumericType
 
 
 def range_bucket_bounds(df: DataFrame, key: str,
@@ -27,7 +27,9 @@ def range_bucket_bounds(df: DataFrame, key: str,
     """Driver-computed ascending split points for ``key`` (one
     approxQuantile pass for numeric keys, a seeded sample otherwise).
     Duplicates collapse — heavy hitters simply merge buckets, which
-    costs balance, never correctness."""
+    costs balance, never correctness. One bucket needs no bounds."""
+    if n_buckets < 2:
+        return []
     if isinstance(df.schema[key].dataType, NumericType):
         qs = [i / n_buckets for i in range(1, n_buckets)]
         bounds = df.stat.approxQuantile(key, qs, 0.01)
@@ -86,35 +88,44 @@ def with_range_bucket(df: DataFrame, key: str, pid_col: str,
     return df.withColumn(pid_col, bucket_expr(key, bounds))
 
 
-def bucket_prefix_offsets(cens: DataFrame, bucket_col: str,
-                          sums: dict) -> tuple[dict, dict]:
-    """The distributed-prefix-sum offset step shared by every
-    census-ranking operator (spearman / KS / AUC / Kaplan-Meier /
-    Gini): collect ONE |buckets|-row aggregate of the given
-    ``{name: column}`` sums, fold each into ascending-bucket running
-    offsets, and return (``{name: map-literal Column}`` mapping
-    bucket id -> offset of everything in EARLIER buckets,
-    ``{name: grand total}``). Offsets keep their native type (int
-    counts stay exact int64 literals; float sums — e.g. log-domain
-    survival terms — stay doubles), so downstream arithmetic loses
-    nothing. One driver collect, bounded by the bucket count, serves
-    every requested sum at once.
+def prefix_sums(bucketed: DataFrame, bucket_col: str,
+                order_cols: list, sums: dict) -> tuple[DataFrame, dict]:
+    """The census-prefix step shared by every distributed running sum:
+    over a frame already bucketed by :func:`with_range_bucket` on the
+    first of ``order_cols``, add one column per ``{name: column}`` in
+    ``sums`` holding its exact GLOBAL inclusive running sum in
+    ``order_cols`` order. Returns (frame, ``{name: grand total}``).
+
+    Each column is a per-bucket ``rowsBetween(unboundedPreceding,
+    currentRow)`` window (rows/bucket ≈ N/|buckets|, never the global
+    order on one task) plus the offset of everything in earlier
+    buckets. ONE driver collect of the |buckets|-row per-bucket totals
+    serves every requested sum. Offsets are a dense array literal
+    indexed by bucket id (ids are dense, 0..|bounds|), typed from the
+    sum column: int counts stay exact int64, float sums (log-domain
+    survival terms) stay doubles, and an empty census still analyzes.
+    Exclusive sums are the caller's "inclusive minus own term".
     """
-    aggs = [F.sum(c).alias(n) for n, c in sums.items()]
-    rows = cens.groupBy(bucket_col).agg(*aggs).collect()
-    rows.sort(key=lambda r: r[bucket_col])
-    maps, totals = {}, {}
-    for n in sums:
-        off, run = {}, 0
-        for r in rows:
-            off[r[bucket_col]] = run
-            run = run + r[n]
-        if isinstance(run, float):   # float sums: homogeneous map
-            off = {b: float(o) for b, o in off.items()}
-        maps[n] = F.create_map(*[x for b, o in off.items()
-                                 for x in (F.lit(b), F.lit(o))])
+    per_bucket = bucketed.groupBy(bucket_col).agg(
+        *[F.sum(c).alias(n) for n, c in sums.items()])
+    types = {f.name: f.dataType for f in per_bucket.schema.fields}
+    rows = {r[bucket_col]: r for r in per_bucket.collect()}
+    win = (Window.partitionBy(bucket_col).orderBy(*order_cols)
+           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cols, totals = {}, {}
+    for n, c in sums.items():
+        offsets, run = [], 0
+        for b in range(max(rows, default=-1) + 1):
+            offsets.append(F.lit(run))
+            if b in rows:
+                run = run + rows[b][n]
+        # get(), not [], so an empty census's constant index folds to
+        # null instead of failing analysis
+        offset = F.get(F.array(*offsets).cast(ArrayType(types[n])),
+                       F.col(bucket_col))
+        cols[n] = offset + F.sum(c).over(win)
         totals[n] = run
-    return maps, totals
+    return bucketed.withColumns(cols), totals
 
 
 def distributed_row_number(df: DataFrame, order_cols: list[str],
@@ -123,33 +134,17 @@ def distributed_row_number(df: DataFrame, order_cols: list[str],
                            ) -> tuple[DataFrame, int]:
     """Global 1-based ``row_number`` over ``order_cols`` WITHOUT a
     single-task global sort: deterministic range buckets on the FIRST
-    order column (monotone, so bucket order == key order), a
-    per-bucket ``row_number`` window, and ONE |buckets|-row offset
-    collect via :func:`bucket_prefix_offsets` — the spearman/KS/KM
-    census-prefix discipline generalized to whole-row ranking.
+    order column (monotone, so bucket order == key order) and a
+    :func:`prefix_sums` running count.
 
     ``order_cols`` are column NAMES, ascending; make the combination
     unique (append a key column) or ties break arbitrarily within a
     bucket. For descending order materialize a negated column first
     (exact for integer keys). Returns ``(df + out_col, total_rows)``.
-
-    Scale shape: one approxQuantile pass for bounds, one window
-    bounded per bucket (rows/bucket ≈ N/shuffle.partitions), one
-    driver collect of |buckets| longs. No stage sees the global
-    order.
     """
-    from pyspark.sql import Window
-
     if not order_cols:
         raise ValueError("distributed_row_number needs order columns")
     b = with_range_bucket(df, order_cols[0], "__rnb__", n_buckets)
-    win = (Window.partitionBy("__rnb__")
-           .orderBy(*[F.col(c) for c in order_cols]))
-    b = b.withColumn("__rnw__", F.row_number().over(win))
-    maps, totals = bucket_prefix_offsets(
-        b.groupBy("__rnb__").agg(F.count(F.lit(1)).alias("__n__")),
-        "__rnb__", {"n": F.col("__n__")})
-    rank = (F.coalesce(maps["n"][F.col("__rnb__")], F.lit(0))
-            + F.col("__rnw__"))
-    return (b.withColumn(out_col, rank).drop("__rnb__", "__rnw__"),
-            int(totals["n"]))
+    b, totals = prefix_sums(b, "__rnb__", order_cols,
+                            {out_col: F.lit(1)})
+    return b.drop("__rnb__"), int(totals[out_col])

@@ -45,7 +45,7 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     cen = with_range_bucket(cen, x_col, "__pid__")
     # carry-in: min(y) over all STRICTLY EARLIER buckets (bucket
     # boundaries are monotone in x, ties never split) — the
-    # running-MIN variant of ``bucket_prefix_offsets``
+    # running-MIN variant of ``prefix_sums``
     carry = _min_offsets(cen, "__pid__", y_col)
     w = (Window.partitionBy("__pid__").orderBy(x_col)
          .rowsBetween(Window.unboundedPreceding, -1))
@@ -62,8 +62,9 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
 def _min_offsets(cen: DataFrame, bucket_col: str, y_col: str):
     """Map-literal column: bucket id -> min(y) over every EARLIER
     bucket (None-safe; buckets with no predecessor map to null).
-    ``bucket_prefix_offsets`` folds sums, so the running-MIN variant
-    lives here: one |buckets|-row collect, same discipline."""
+    :func:`~tablite_spark.functions.buckets.prefix_sums` folds sums,
+    so the running-MIN variant lives here: one |buckets|-row collect,
+    same discipline."""
     rows = (cen.groupBy(bucket_col)
             .agg(F.min(y_col).alias("m")).collect())
     rows.sort(key=lambda r: r[bucket_col])

@@ -51,10 +51,9 @@ def exact_percentiles(df: DataFrame,
 
     Three jobs per column, all whole-stage-codegen row-local
     arithmetic (the deterministic range id is ``floor((v−min)/w)``
-    of driver constants — O(1) per row, unlike the O(|bounds|)
-    interpreted array-aggregate of ``bucket_expr``): the min/max/n
-    pass, one combinable ≤4097-row range-count collect, and one
-    probe that shuffles ONLY the ranges holding a requested index.
+    of driver constants — O(1) per row): the min/max/n pass, one
+    combinable ≤4097-row range-count collect, and one probe that
+    shuffles ONLY the ranges holding a requested index.
     Skew note: a pathological outlier can pile most rows into one
     range, in which case the probe's in-range window degrades to the
     single-task sort Percentile always paid — never worse, usually
@@ -567,13 +566,10 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
     Scale shape — the textbook trap here is ranking via a GLOBAL
     ``Window.orderBy`` (serializes the corpus through one task).
     Instead, per column: a combinable distinct-value count groupBy,
-    then a DISTRIBUTED prefix sum over the value-ordered counts —
-    deterministic driver-computed range buckets
-    (``functions/buckets.py``, the carry_forward discipline), an
-    in-bucket running sum window, and a |buckets|-row driver collect
-    whose offsets broadcast back as a map literal. Average ranks
-    join back value-keyed (merge-hinted — the rank frame scales with
-    DISTINCT values), and the Pearson-on-ranks reduction is ONE
+    then the census prefix (``buckets.prefix_sums``) over the
+    value-ordered counts. Average ranks join back value-keyed
+    (merge-hinted — the rank frame scales with DISTINCT values), and
+    the Pearson-on-ranks reduction is ONE
     combinable aggregation with the same guarded co-moments as
     pairwise_corr. No row-level data ever converges on one task.
 
@@ -596,10 +592,8 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
         raise ValueError("spearman_corr needs at least two columns")
     from functools import reduce
 
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     base = df.select(*cols).filter(
         reduce(lambda a, b: a & b,
@@ -619,23 +613,15 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
         # pin it so the corpus scan + census shuffle run once
         vc = pin(vc, eager=True)
         pins.append(vc)
-        vc = with_range_bucket(vc, "__v__", "__p__")
-        w = (Window.partitionBy("__p__").orderBy("__v__")
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.currentRow))
-        vc = vc.withColumn("__cum__", F.sum("__c__").over(w))
-        maps, totals = bucket_prefix_offsets(
-            vc, "__p__", {"__t__": F.col("__c__"),
-                          "__nd__": F.lit(1)})
-        omap = maps["__t__"]
-        ndistinct = totals["__nd__"]
-        # strictly-smaller count = offset + cum - c; average rank of
-        # a tie group of size c starting at min_rank is
-        # min_rank + (c - 1)/2
-        rank = (omap[F.col("__p__")] + F.col("__cum__")
-                - F.col("__c__") + (F.col("__c__") + 1) / 2.0)
+        vc, totals = prefix_sums(
+            with_range_bucket(vc, "__v__", "__p__"), "__p__",
+            ["__v__"], {"__cum__": F.col("__c__"), "__nd__": F.lit(1)})
+        # strictly-smaller count = cum - c; average rank of a tie
+        # group of size c starting at min_rank is min_rank + (c - 1)/2
+        rank = (F.col("__cum__") - F.col("__c__")
+                + (F.col("__c__") + 1) / 2.0)
         return (vc.select(F.col("__v__").alias(c),
-                          rank.alias(f"__r_{c}__")), ndistinct)
+                          rank.alias(f"__r_{c}__")), totals["__nd__"])
 
     pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
     # r14 optimization round (guide §2.2): each column's rank
@@ -704,18 +690,15 @@ def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
     Scale shape — the textbook trap is a GLOBAL ``Window.orderBy``
     cumulative count (serializes the corpus through one task). Like
     :func:`spearman_corr`: one combinable per-value census groupBy,
-    then a DISTRIBUTED prefix sum over value order (deterministic
-    driver range buckets + in-bucket running sums + a |buckets|-row
-    offset collect that also yields n_a/n_b for free), and the sup
-    is ONE combinable max. ECDF differences are formed directly in
+    then the census prefix (``buckets.prefix_sums``, whose totals
+    are n_a/n_b) over value order, and the sup is ONE combinable
+    max. ECDF differences are formed directly in
     double (each cum/n is exact-rounded IEEE, values in [0,1]) —
     never as a cum_a·n_b - cum_b·n_a integer product, which would
     ARITHMETIC_OVERFLOW under ANSI once n_a·n_b exceeds 2^63.
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     g, v = F.col(group_col), F.col(val_col)
     base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -724,23 +707,17 @@ def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
                  .alias("__ca__"),
                  F.count(F.when(g == F.lit(group_b), 1))
                  .alias("__cb__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__v__", "__p__")
-    w = (Window.partitionBy("__p__").orderBy("__v__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cens = (cens.withColumn("__cuma__", F.sum("__ca__").over(w))
-                .withColumn("__cumb__", F.sum("__cb__").over(w)))
-    maps, totals = bucket_prefix_offsets(
-        cens, "__p__", {"__a__": F.col("__ca__"),
-                        "__b__": F.col("__cb__")})
-    na, nb = totals["__a__"], totals["__b__"]
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__v__", "__p__"),
+        "__p__", ["__v__"], {"__cuma__": F.col("__ca__"),
+                             "__cumb__": F.col("__cb__")})
+    na, nb = totals["__cuma__"], totals["__cumb__"]
     if na == 0 or nb == 0:
         raise ValueError(
             f"ks_test_2sample: group {'a' if na == 0 else 'b'} has "
             f"no non-null values")
-    oma, omb = maps["__a__"], maps["__b__"]
-    fa = (oma[F.col("__p__")] + F.col("__cuma__")) / F.lit(float(na))
-    fb = (omb[F.col("__p__")] + F.col("__cumb__")) / F.lit(float(nb))
+    fa = F.col("__cuma__") / F.lit(float(na))
+    fb = F.col("__cumb__") / F.lit(float(nb))
     one = cens.agg(F.max(F.abs(fa - fb)).alias("__d__"))
     lam = (F.col("__d__")
            * F.sqrt(F.lit(float(na)) * F.lit(float(nb))
@@ -927,19 +904,16 @@ def km_curve(df: DataFrame, duration_col: str,
     windows (cumulative counts for n_at_risk, cumulative product for
     S), both corpus-serializing. Here the corpus collapses in ONE
     combinable per-duration census groupBy; both prefixes run
-    DISTRIBUTED over the census (the spearman discipline:
-    deterministic driver range buckets + in-bucket running sums +
-    two |buckets|-row offset collects — counts first, then the log
-    terms they determine), and the product is carried in log domain
+    DISTRIBUTED over the census (``buckets.prefix_sums`` twice over
+    one bucketing — counts first, then the log terms they
+    determine), and the product is carried in log domain
     (exp of the prefix log-sum, ``ln(1 - d/n)`` spelled identically
     to the SQL oracle). No row-level data ever converges on one
     task; survival values round at the oracle boundary (float
     addition groups differ across engines by construction).
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -948,18 +922,12 @@ def km_curve(df: DataFrame, duration_col: str,
             .groupBy(t.alias("__t__"))
             .agg(F.count(F.when(obs, 1)).alias("__d__"),
                  F.count(F.when(~obs, 1)).alias("__c__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__t__", "__b__")
-    w = (Window.partitionBy("__b__").orderBy("__t__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    # one bounds pass serves both prefixes below
+    cens = with_range_bucket(pin(cens, eager=True), "__t__", "__b__")
     both = F.col("__d__") + F.col("__c__")
-    cens = cens.withColumn("__cum__", F.sum(both).over(w))
-    maps, totals = bucket_prefix_offsets(cens, "__b__",
-                                         {"__t2__": both})
-    n_total = totals["__t2__"]
-    omap = maps["__t2__"]
-    n_risk = (F.lit(n_total) - (omap[F.col("__b__")]
-                                + F.col("__cum__")) + both)
+    cens, totals = prefix_sums(cens, "__b__", ["__t__"],
+                               {"__cum__": both})
+    n_risk = F.lit(totals["__cum__"]) - F.col("__cum__") + both
     # d == n_risk (everyone remaining dies at the last event time)
     # would be ln(0): Spark's log yields NULL, DuckDB ERRORS — both
     # sides use a finite sentinel whose exp is exactly 0.0 instead
@@ -970,12 +938,9 @@ def km_curve(df: DataFrame, duration_col: str,
                    F.log(1.0 - d_ / n_risk.cast("double")))
             .when(d_ > 0, F.lit(-1.0e6))
             .otherwise(0.0))
-    cens = (cens.withColumn("__nr__", n_risk)
-            .withColumn("__lcum__", F.sum(term).over(w)))
-    lmaps, _ = bucket_prefix_offsets(cens, "__b__",
-                                     {"__lt__": term})
-    lmap = lmaps["__lt__"]
-    surv = F.exp(lmap[F.col("__b__")] + F.col("__lcum__"))
+    cens, _ = prefix_sums(cens.withColumn("__nr__", n_risk), "__b__",
+                          ["__t__"], {"__lcum__": term})
+    surv = F.exp(F.col("__lcum__"))
     return (cens.filter(F.col("__d__") > 0)
             .select(F.col("__t__").alias("duration"),
                     F.col("__nr__").cast("long").alias("n_at_risk"),
@@ -994,18 +959,16 @@ def nelson_aalen(df: DataFrame, duration_col: str,
     excluded.
 
     Scale shape — identical to km_curve's: ONE combinable
-    per-duration census groupBy, then the distributed prefix
-    (deterministic driver range buckets + in-bucket running sums +
-    one |buckets|-row offset collect) carries the hazard sum — no
-    global-order window, no corpus on one task. The hazard is a
-    plain sum (no log domain needed: d/n is finite for n ≥ d ≥ 0),
+    per-duration census groupBy, then the census prefix
+    (``buckets.prefix_sums``) carries the at-risk count and the
+    hazard sum — no global-order window, no corpus on one task. The
+    hazard is a plain sum (no log domain needed: d/n is finite for
+    n ≥ d ≥ 0),
     so the only cross-engine float drift is summation grouping —
     round at the oracle boundary.
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -1014,27 +977,20 @@ def nelson_aalen(df: DataFrame, duration_col: str,
             .groupBy(t.alias("__t__"))
             .agg(F.count(F.when(obs, 1)).alias("__d__"),
                  F.count(F.when(~obs, 1)).alias("__c__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__t__", "__b__")
-    w = (Window.partitionBy("__b__").orderBy("__t__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    # one bounds pass serves both prefixes below
+    cens = with_range_bucket(pin(cens, eager=True), "__t__", "__b__")
     both = F.col("__d__") + F.col("__c__")
-    cens = cens.withColumn("__cum__", F.sum(both).over(w))
-    maps, totals = bucket_prefix_offsets(cens, "__b__",
-                                         {"__t2__": both})
-    n_risk = (F.lit(totals["__t2__"])
-              - (maps["__t2__"][F.col("__b__")] + F.col("__cum__"))
-              + both)
+    cens, totals = prefix_sums(cens, "__b__", ["__t__"],
+                               {"__cum__": both})
+    n_risk = F.lit(totals["__cum__"]) - F.col("__cum__") + both
     term = F.col("__d__") / n_risk.cast("double")
-    cens = (cens.withColumn("__nr__", n_risk)
-            .withColumn("__hcum__", F.sum(term).over(w)))
-    hmaps, _ = bucket_prefix_offsets(cens, "__b__", {"__ht__": term})
-    cumhaz = hmaps["__ht__"][F.col("__b__")] + F.col("__hcum__")
+    cens, _ = prefix_sums(cens.withColumn("__nr__", n_risk), "__b__",
+                          ["__t__"], {"__hcum__": term})
     return (cens.filter(F.col("__d__") > 0)
             .select(F.col("__t__").alias("duration"),
                     F.col("__nr__").cast("long").alias("n_at_risk"),
                     F.col("__d__").alias("n_events"),
-                    cumhaz.alias("cumhaz")))
+                    F.col("__hcum__").alias("cumhaz")))
 
 
 def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
@@ -1055,10 +1011,8 @@ def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
     aggregate (Σ c·v·ln v per distinct value) — the corpus is
     scanned exactly once.
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     v = F.col(col).cast("double")
     bad = df.filter(v < 0).limit(1).collect()
@@ -1068,19 +1022,14 @@ def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
     cens = (df.filter(v.isNotNull())
             .groupBy(v.alias("__v__"))
             .agg(F.count(F.lit(1)).alias("__c__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__v__", "__b__")
-    w = (Window.partitionBy("__b__").orderBy("__v__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cens = cens.withColumn("__cum__", F.sum("__c__").over(w))
-    maps, totals = bucket_prefix_offsets(cens, "__b__",
-                                         {"__t__": F.col("__c__")})
-    n = totals["__t__"]
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__v__", "__b__"),
+        "__b__", ["__v__"], {"__cum__": F.col("__c__")})
+    n = totals["__cum__"]
     if n == 0:
         raise ValueError("inequality_metrics: no non-null values")
-    omap = maps["__t__"]
-    avg_rank = (omap[F.col("__b__")] + F.col("__cum__")
-                - F.col("__c__") + (F.col("__c__") + 1) / 2.0)
+    avg_rank = (F.col("__cum__") - F.col("__c__")
+                + (F.col("__c__") + 1) / 2.0)
     c = F.col("__c__")
     xlnx = F.when(F.col("__v__") > 0,
                   F.col("__v__") * F.log("__v__")).otherwise(0.0)
@@ -1112,17 +1061,14 @@ def weighted_quantiles(df: DataFrame, val_col: str,
 
     Scale shape — the census discipline: ONE combinable
     groupBy(value) weight census, a DISTRIBUTED cumulative weight
-    (range buckets + in-bucket running sums + ONE |buckets|-row
-    offset collect via :func:`bucket_prefix_offsets`), then each q
+    (``buckets.prefix_sums``), then each q
     selects min(value | cw >= q·W) in ONE explode+filter aggregate
     over the census — never a global-order window, never all qs as
     separate jobs. With integer weights every comparison is exact
     cross-engine (integer cumulative sums).
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     if not qs:
         raise ValueError("weighted_quantiles requires at least one q")
@@ -1134,19 +1080,12 @@ def weighted_quantiles(df: DataFrame, val_col: str,
     cens = (df.filter(v.isNotNull() & w.isNotNull() & (w > 0))
             .groupBy(v.alias("__v__"))
             .agg(F.sum(w).alias("__w__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__v__", "__b__")
-    win = (Window.partitionBy("__b__").orderBy("__v__")
-           .rowsBetween(Window.unboundedPreceding,
-                        Window.currentRow))
-    cens = cens.withColumn("__cw__", F.sum("__w__").over(win))
-    maps, totals = bucket_prefix_offsets(cens, "__b__",
-                                         {"w": F.col("__w__")})
-    total = totals["w"]
-    cw = maps["w"][F.col("__b__")] + F.col("__cw__")
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__v__", "__b__"),
+        "__b__", ["__v__"], {"__gcw__": F.col("__w__")})
+    total = totals["__gcw__"]
     qarr = F.array(*[F.lit(float(q)) for q in sorted(set(qs))])
-    return (cens.withColumn("__gcw__", cw)
-            .select("__v__", "__gcw__",
+    return (cens.select("__v__", "__gcw__",
                     F.explode(qarr).alias("q"))
             .filter(F.col("__gcw__") >= F.col("q") * F.lit(total))
             .groupBy("q")
@@ -1240,15 +1179,12 @@ def logrank_test(df: DataFrame, duration_col: str, observed_col,
 
     Scale shape — the km_curve census discipline: ONE combinable
     per-(duration) census carrying per-group event/censor counts,
-    at-risk counts via the SAME distributed prefix sums (range
-    buckets + in-bucket windows + one |buckets|-row offset collect
-    per group), then one scalar aggregate over the census. Never a
-    global-order window.
+    at-risk counts via the SAME census prefix
+    (``buckets.prefix_sums``, one collect for both groups), then one
+    scalar aggregate over the census. Never a global-order window.
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -1267,20 +1203,13 @@ def logrank_test(df: DataFrame, duration_col: str, observed_col,
                  F.count(F.when(obs & ~is_a, 1)).alias("__db__"),
                  F.count(F.when(is_a, 1)).alias("__na__"),
                  F.count(F.when(~is_a, 1)).alias("__nb__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__t__", "__b__")
-    w = (Window.partitionBy("__b__").orderBy("__t__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cens = (cens.withColumn("__ca__", F.sum("__na__").over(w))
-            .withColumn("__cb__", F.sum("__nb__").over(w)))
-    maps, totals = bucket_prefix_offsets(
-        cens, "__b__", {"a": F.col("__na__"), "b": F.col("__nb__")})
-    b = F.col("__b__")
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__t__", "__b__"),
+        "__b__", ["__t__"], {"__ca__": F.col("__na__"),
+                             "__cb__": F.col("__nb__")})
     # at-risk = everyone with duration >= t, per group
-    ra = (F.lit(totals["a"]) - (maps["a"][b] + F.col("__ca__"))
-          + F.col("__na__"))
-    rb = (F.lit(totals["b"]) - (maps["b"][b] + F.col("__cb__"))
-          + F.col("__nb__"))
+    ra = F.lit(totals["__ca__"]) - F.col("__ca__") + F.col("__na__")
+    rb = F.lit(totals["__cb__"]) - F.col("__cb__") + F.col("__nb__")
     d = F.col("__da__") + F.col("__db__")
     n = ra + rb
     e_a = ra.cast("double") * d / n
@@ -1291,8 +1220,8 @@ def logrank_test(df: DataFrame, duration_col: str, observed_col,
         F.sum(F.col("__da__") - e_a).alias("__o_e__"),
         F.sum(v).alias("__v__"))
     return ev.select(
-        F.lit(int(totals["a"])).alias("n_a"),
-        F.lit(int(totals["b"])).alias("n_b"),
+        F.lit(int(totals["__ca__"])).alias("n_a"),
+        F.lit(int(totals["__cb__"])).alias("n_b"),
         F.when(F.col("__v__") > 0,
                F.col("__o_e__") * F.col("__o_e__") / F.col("__v__"))
         .alias("chi2"))
@@ -1491,9 +1420,9 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
     Scale shape — the rank-sum trap is a global ``Window.orderBy``
     rank over row-level data; like :func:`ks_test_2sample` this runs
     on ONE combinable per-value census groupBy, a DISTRIBUTED
-    exclusive prefix count over value order (driver range buckets +
-    in-bucket running sums + one |buckets|-row offset collect), and
-    two scalar aggregates. avg_rank(v) = less(v) + (t(v)+1)/2, so
+    exclusive prefix count over value order
+    (``buckets.prefix_sums`` minus the own count), and two scalar
+    aggregates. avg_rank(v) = less(v) + (t(v)+1)/2, so
     2·R_a = Σ c_a(v)·(2·less(v) + t(v) + 1) — exact int64 until the
     corpus nears 2^63 rank-units (~3e9 rows), and Σ(t³−t) accumulates
     in decimal(38,0) so heavy ties can't overflow.
@@ -1502,10 +1431,8 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
     tests); the distribution-shift screen an ingest pipeline runs
     next to PSI/KS when the metric is ordinal.
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     g, v = F.col(group_col), F.col(val_col)
     base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -1515,24 +1442,19 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
                  F.count(F.when(g == F.lit(group_b), 1))
                  .alias("__cb__")))
     cens = cens.withColumn("__ct__", F.col("__ca__") + F.col("__cb__"))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__v__", "__p__")
-    w = (Window.partitionBy("__p__").orderBy("__v__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cens = cens.withColumn("__cumt__", F.sum("__ct__").over(w))
-    maps, totals = bucket_prefix_offsets(
-        cens, "__p__", {"__a__": F.col("__ca__"),
-                        "__b__": F.col("__cb__"),
-                        "__t__": F.col("__ct__")})
-    na, nb = int(totals["__a__"]), int(totals["__b__"])
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__v__", "__p__"),
+        "__p__", ["__v__"], {"__cuma__": F.col("__ca__"),
+                             "__cumb__": F.col("__cb__"),
+                             "__cumt__": F.col("__ct__")})
+    na, nb = int(totals["__cuma__"]), int(totals["__cumb__"])
     if na == 0 or nb == 0:
         raise ValueError(
             f"mann_whitney_u: group {'a' if na == 0 else 'b'} has "
             f"no non-null values")
     n = na + nb
     # exclusive prefix: pooled count strictly BELOW this value
-    less = (maps["__t__"][F.col("__p__")] + F.col("__cumt__")
-            - F.col("__ct__"))
+    less = F.col("__cumt__") - F.col("__ct__")
     r_a_x2 = F.sum(F.col("__ca__")
                    * (2 * less + F.col("__ct__") + 1))
     ties = F.sum((F.col("__ct__").cast("decimal(38,0)")

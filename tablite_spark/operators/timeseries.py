@@ -834,42 +834,35 @@ def cusum_changepoint(df: DataFrame, order_col: str,
 
     Scale shape — the spearman/KM census discipline: the corpus
     collapses in ONE combinable groupBy(order) census; the prefix
-    sums of (Σx, Σn) run DISTRIBUTED (deterministic range buckets +
-    in-bucket running windows + ONE |buckets|-row offset collect
-    serving both sums); the argmax is a single max(struct) aggregate
-    with the global row index as an exact-integer tiebreak (smallest
-    index wins a |S| tie) — never a global-order window, never a
-    driver-side series. Duplicate order keys merge into one census
-    point (their joint contribution lands at that position).
+    sums of (Σx, Σn) run DISTRIBUTED (``buckets.prefix_sums``, one
+    offset collect serving both sums); the argmax is a single
+    max(struct) aggregate with the global row index as an
+    exact-integer tiebreak (smallest index wins a |S| tie) — never a
+    global-order window, never a driver-side series. Duplicate order
+    keys merge into one census point (their joint contribution lands
+    at that position).
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     t, x = F.col(order_col), F.col(val_col)
     cens = (df.filter(t.isNotNull() & x.isNotNull())
             .groupBy(t.alias("__t__"))
             .agg(F.sum(x).alias("__x__"),
                  F.count(F.lit(1)).alias("__n__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__t__", "__b__")
-    w = (Window.partitionBy("__b__").orderBy("__t__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cens = (cens.withColumn("__cx__", F.sum("__x__").over(w))
-            .withColumn("__cn__", F.sum("__n__").over(w)))
-    maps, totals = bucket_prefix_offsets(
-        cens, "__b__", {"x": F.col("__x__"), "n": F.col("__n__")})
-    n_total, x_total = totals["n"], totals["x"]
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__t__", "__b__"),
+        "__b__", ["__t__"], {"__cx__": F.col("__x__"),
+                             "__cn__": F.col("__n__")})
+    n_total, x_total = totals["__cn__"], totals["__cx__"]
     if n_total == 0:
         return cens.sparkSession.createDataFrame(
             [], "n long, mean double, cp_index long, "
                 "cp_at " + dict(df.dtypes)[order_col]
                 + ", cusum double, cusum_abs double")
     mean = float(x_total) / float(n_total)
-    b = F.col("__b__")
-    i = maps["n"][b] + F.col("__cn__")          # exact global index
-    s = (maps["x"][b] + F.col("__cx__")) - F.lit(mean) * i
+    i = F.col("__cn__")          # exact global index
+    s = F.col("__cx__") - F.lit(mean) * i
     peak = cens.agg(F.max(F.struct(
         F.abs(s).alias("a"), (-i).alias("ni"), s.alias("s"),
         i.alias("i"), F.col("__t__").alias("t"))).alias("p"))

@@ -32,17 +32,14 @@ def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
     through one task. Like :func:`~tablite_spark.operators.stats.
     spearman_corr`: one combinable per-score census groupBy (count +
     positive count per distinct score), a DISTRIBUTED prefix sum
-    over score order (deterministic driver range buckets + in-bucket
-    running sums + a |buckets|-row offset collect that also yields
-    n_pos/n_neg for free), then the rank-sum is ONE aggregate over
-    the census. Average ranks are half-integers (exactly
-    representable), so the rank-sum is EXACT in double up to ~2^53
-    (≈9e15 — beyond that the sum rounds; note for 10T-row corpora).
+    over score order (``buckets.prefix_sums``, whose totals are
+    n_pos/n_neg), then the rank-sum is ONE aggregate over the
+    census. Average ranks are half-integers (exactly representable),
+    so the rank-sum is EXACT in double up to ~2^53 (≈9e15 — beyond
+    that the sum rounds; note for 10T-row corpora).
     """
-    from pyspark.sql import Window
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, with_range_bucket,
+        prefix_sums, with_range_bucket,
     )
     s = F.col(score_col).cast("double")
     y = (F.col(label_col) if isinstance(label_col, str)
@@ -51,22 +48,17 @@ def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
             .groupBy(s.alias("__s__"))
             .agg(F.count(F.lit(1)).alias("__c__"),
                  F.count(F.when(y, 1)).alias("__p__")))
-    cens = pin(cens, eager=True)
-    cens = with_range_bucket(cens, "__s__", "__b__")
-    w = (Window.partitionBy("__b__").orderBy("__s__")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cens = cens.withColumn("__cum__", F.sum("__c__").over(w))
-    maps, totals = bucket_prefix_offsets(
-        cens, "__b__", {"__t__": F.col("__c__"),
-                        "__tp__": F.col("__p__")})
-    n_pos = totals["__tp__"]
-    n_neg = totals["__t__"] - n_pos
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__s__", "__b__"),
+        "__b__", ["__s__"], {"__cum__": F.col("__c__"),
+                             "__cump__": F.col("__p__")})
+    n_pos = totals["__cump__"]
+    n_neg = totals["__cum__"] - n_pos
     if n_pos == 0 or n_neg == 0:
         raise ValueError("binary_auc needs both classes present "
                          f"(n_pos={n_pos}, n_neg={n_neg})")
-    omap = maps["__t__"]
-    avg_rank = (omap[F.col("__b__")] + F.col("__cum__")
-                - F.col("__c__") + (F.col("__c__") + 1) / 2.0)
+    avg_rank = (F.col("__cum__") - F.col("__c__")
+                + (F.col("__c__") + 1) / 2.0)
     spr = cens.agg(F.sum(avg_rank * F.col("__p__"))
                    .alias("__spr__"))
     # n_pos(n_pos+1)/2 in python ints (exact, no 64-bit overflow),

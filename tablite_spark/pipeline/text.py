@@ -1048,17 +1048,17 @@ def pack_sequences(df: DataFrame, ids_col: str, id_col: str,
     reproduced mis-stitched windows). Instead the driver computes
     range bounds once (one approxQuantile pass for numeric ids, a
     seeded sample otherwise), derives ``__pid__`` deterministically
-    from ``id_col``, and the per-bucket token totals (a tiny
-    |buckets|-row agg job) broadcast back as cumulative bases; a
-    window PARTITIONED BY the bucket (hash exchange — deterministic,
-    unlike range) supplies the within-bucket running sum. The only
+    from ``id_col``, and ``buckets.prefix_sums`` gives each document
+    its token-stream end: a window PARTITIONED BY the bucket (hash
+    exchange — deterministic, unlike range) plus per-bucket
+    cumulative bases from one |buckets|-row collect. The only
     token-volume exchanges are that bucket exchange and the output
     groupBy on dense sequence ids — both inherent. Assumes non-null,
     unique ``id_col`` (ties would make stream positions ambiguous —
     the same assumption any total order needs)."""
-    from pyspark.sql import Window
-
-    from tablite_spark.functions.buckets import with_range_bucket
+    from tablite_spark.functions.buckets import (
+        prefix_sums, with_range_bucket,
+    )
     spark = df.sparkSession
     cols = [F.col(id_col), F.col(ids_col)]
     if mask_col is not None:
@@ -1085,25 +1085,15 @@ def pack_sequences(df: DataFrame, ids_col: str, id_col: str,
         base = pin(base, eager=True)
     tagged = with_range_bucket(base, id_col, "__pid__").withColumn(
         "__nt__", F.size(ids_col))
-    sums = (tagged.groupBy("__pid__")
-            .agg(F.sum("__nt__").alias("__s__")).collect())
-    sums.sort(key=lambda r: r["__pid__"])
-    offsets, acc = [], 0
-    for r in sums:
-        offsets.append((int(r["__pid__"]), acc))
-        acc += int(r["__s__"])
-    total = acc
+    tagged, totals = prefix_sums(tagged, "__pid__", [id_col],
+                                 {"__end__": F.col("__nt__")})
+    total = totals["__end__"]
     out_schema = ("seq_id long, input_ids array<int>, n_docs long")
-    if not offsets or total == 0:
+    if total == 0:
         return spark.createDataFrame([], out_schema)
-    off_df = spark.createDataFrame(offsets, "__pid__ int, __off__ long")
-    w = (Window.partitionBy("__pid__").orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     pos = F.col("__start__") + F.col("__i__")
-    toks = (tagged.join(F.broadcast(off_df), "__pid__")
-            .withColumn("__cum__", F.sum("__nt__").over(w))
-            .withColumn("__start__", F.col("__off__")
-                        + F.col("__cum__") - F.col("__nt__"))
+    toks = (tagged.withColumn("__start__",
+                              F.col("__end__") - F.col("__nt__"))
             .select("__start__",
                     F.posexplode(
                         F.arrays_zip(F.col(ids_col), F.col(mask_col))

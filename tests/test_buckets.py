@@ -2,10 +2,14 @@
 cross-job-safe substitute for repartitionByRange that pack_sequences
 and carry_forward build on."""
 
+import math
+
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from tablite_spark.functions.buckets import (
-    bucket_expr, range_bucket_bounds, with_range_bucket,
+    bucket_expr, prefix_sums, range_bucket_bounds, with_range_bucket,
 )
 
 
@@ -163,3 +167,88 @@ def test_census_prefix_operator_plan_reads_checkpoint(spark, tmp_path):
     assert row["cp_index"] == best[1]
     assert row["cp_at"] == best[2]
     assert math.isclose(row["cusum"], best[3], rel_tol=0, abs_tol=1e-9)
+
+
+def jobs_submitted(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.mark.parametrize("n_buckets", [1, 3, 32])
+def test_prefix_sums_matches_global_window(spark, n_buckets):
+    """with_range_bucket + prefix_sums equals a global
+    ``Window.orderBy`` running sum row for row: a long count, a long
+    column and a double (log-domain) sum, over a two-column order on
+    a key with a heavy hitter (duplicate bounds merge buckets). The
+    bounds pass (none for one bucket) plus the one offset collect are
+    its only jobs: two each, because adaptive execution runs a pass's
+    shuffle as its own map-stage job."""
+    from tablite_spark.plans.lifecycle import pin
+    df = pin(spark.range(3_000).select(
+        F.when(F.col("id") % 3 == 0, 500)
+        .otherwise(F.col("id") * 7 % 1_000).alias("k"),
+        F.col("id"),
+        (F.col("id") % 11 + 1).alias("w")), eager=True)
+    sums = {"n": F.lit(1), "sw": F.col("w"),
+            "lw": F.log(F.col("w") / 12.0)}
+    jobs0 = jobs_submitted(spark)
+    out, totals = prefix_sums(with_range_bucket(df, "k", "b", n_buckets),
+                              "b", ["k", "id"], sums)
+    assert jobs_submitted(spark) - jobs0 == (2 if n_buckets == 1 else 4)
+    assert dict(out.dtypes)["n"] == "bigint"
+    assert dict(out.dtypes)["lw"] == "double"
+    w = (Window.orderBy("k", "id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    want = {r["id"]: r for r in df.select(
+        "id", *[F.sum(c).over(w).alias(n) for n, c in sums.items()])
+        .collect()}
+    got = out.collect()
+    assert len(got) == len(want) == 3_000
+    for r in got:
+        assert (r["n"], r["sw"]) == (want[r["id"]]["n"],
+                                     want[r["id"]]["sw"])
+        assert math.isclose(r["lw"], want[r["id"]]["lw"],
+                            rel_tol=1e-12, abs_tol=1e-9)
+    last = max(want.values(), key=lambda r: r["n"])
+    assert totals["n"] == 3_000 and totals["sw"] == last["sw"]
+    assert math.isclose(totals["lw"], last["lw"], rel_tol=1e-12)
+
+
+@pytest.mark.parametrize("all_null", [False, True],
+                         ids=["empty", "all_null"])
+@pytest.mark.parametrize("fn", ["km_curve", "nelson_aalen",
+                                "weighted_quantiles", "spearman_corr",
+                                "distributed_row_number"])
+def test_empty_census_keeps_schema(spark, fn, all_null):
+    """An empty input, or one whose keys are all null, makes an empty
+    census; each census-prefix operator returns its normal schema
+    instead of failing analysis on an untyped empty offset literal.
+    Row numbering still numbers null keys (they sort first)."""
+    from tablite_spark.functions.buckets import distributed_row_number
+    from tablite_spark.operators.stats import (
+        km_curve, nelson_aalen, spearman_corr, weighted_quantiles,
+    )
+    df = spark.createDataFrame([(None, None, None)] * 5 if all_null
+                               else [], "t double, o boolean, w long")
+    if fn == "distributed_row_number":
+        out, n = distributed_row_number(df, ["t"], "r")
+        assert out.columns == ["t", "o", "w", "r"]
+        assert dict(out.dtypes)["r"] == "bigint"
+        assert n == len(df.collect())
+        assert sorted(r["r"] for r in out.collect()) == list(
+            range(1, n + 1))
+        return
+    make, cols = {
+        "km_curve": (lambda: km_curve(df, "t", "o"),
+                     ["duration", "n_at_risk", "n_events", "survival"]),
+        "nelson_aalen": (lambda: nelson_aalen(df, "t", "o"),
+                         ["duration", "n_at_risk", "n_events", "cumhaz"]),
+        "weighted_quantiles": (
+            lambda: weighted_quantiles(df, "t", "w", [0.5, 1.0]),
+            ["q", "value"]),
+        "spearman_corr": (lambda: spearman_corr(df, ["t", "w"]),
+                          ["col_a", "col_b", "n", "rho"]),
+    }[fn]
+    out = make()
+    assert out.columns == cols
+    want = [("t", "w", 0, None)] if fn == "spearman_corr" else []
+    assert [tuple(r) for r in out.collect()] == want

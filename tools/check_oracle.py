@@ -19,20 +19,24 @@ surviving to a driver round.
 (SWEEP_r0N.json) so a full-registry sweep is auditable, not prose:
 {"_sweep": {sf_dir, n_pass, n_fail, n_rows_only},
  "<query>": {"status": "pass|fail|rows_only", "rows": N, "err": ...,
-             "pins_left": N}}
+             "pins_left": N, "n_jobs": N}}
 
 Each query and its collect run inside ``plans.lifecycle.scope()``;
 ``pins_left`` counts the persistent RDDs (and a non-empty
 CacheManager) still held afterwards that were not held before. A
-nonzero count fails the query.
+nonzero count fails the query. ``n_jobs`` is the number of Spark jobs
+the query and its collect submitted (the scheduler's next job id
+before and after), so two sweeps show whether a change moved any
+query's job count.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np
@@ -175,6 +179,11 @@ def held_blocks(spark) -> set:
     return held
 
 
+def jobs_submitted(spark) -> int:
+    """Jobs submitted to the scheduler since the context started."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
 def main():
     argv = list(sys.argv[1:])
     json_out = None
@@ -195,11 +204,12 @@ def main():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     passed, failed, rows_only = [], [], []
-    pins_left = {}
+    pins_left, n_jobs = {}, {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
         held0 = held_blocks(spark)
+        jobs0 = jobs_submitted(spark)
         try:
             with scope():  # a query's pins must not outlive its collect
                 sdf = fn(spark, sf_dir)
@@ -208,6 +218,7 @@ def main():
             failed.append((name, "SPARK ERROR:\n" + traceback.format_exc(limit=6)))
             continue
         finally:
+            n_jobs[name] = jobs_submitted(spark) - jobs0
             pins_left[name] = len(held_blocks(spark) - held0)
         if pins_left[name]:
             failed.append((name, f"PINS LEFT: {pins_left[name]} cached "
@@ -238,7 +249,6 @@ def main():
         print(f"  {name}: {msg[:600]}")
     if json_out:
         import json
-        import os
         import time
         rec = {"_sweep": {
             "sf_dir": sf_dir,
@@ -256,6 +266,7 @@ def main():
             rec[name] = {"status": "fail", "err": msg[:400]}
         for name, n in pins_left.items():
             rec[name]["pins_left"] = n
+            rec[name]["n_jobs"] = n_jobs[name]
         with open(json_out, "w") as fh:
             json.dump(rec, fh, indent=1, sort_keys=True)
             fh.write("\n")
