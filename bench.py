@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {...}, "sf": ...}.
+ONE JSON line: {"metric": ..., "value": N, "unit": "sec", "sf": ...,
+"queries": {...}} (see ``printed_line``). Every row, with its runs and
+loadavg stamps, goes to BENCH_META.json ($SPARK_GRAFT_BENCH_META).
 
 Each query is forced end-to-end with a noop sink (full computation, no
 driver collect — the honest distributed cost).
@@ -50,27 +51,20 @@ BENCH_QUERIES = [
     "chunk_docs",
     "contamination_docs",
     "pack_chunks_docs",
-    # round-4 additions (excluded from r2_comparable_total)
     "perplexity_docs",
     "line_dedup_docs",
     "semantic_dedup_embeddings",
-    # round-5 operators, benched from round 6 (excluded from
-    # r2_comparable_total): the newest, least-burned-in code gets a
-    # tracked cost so regressions are visible
     "substring_dedup_docs",
     "gopher_quality_docs",
     "pretrain_filter_docs",
     "pq_topk_embeddings",
     "ivfpq_topk_embeddings",
-    # round-6 operators
     "zorder_events",
     "pack_sequences_docs",
     "bm25_search_docs",
     "bucketed_join_revenue",
     "quality_classifier_docs",
     "pretrain_e2e_docs",
-    # round-7 operators (excluded from r2_comparable_total): the
-    # newest, least-burned-in code gets a tracked cost
     "incremental_minhash_dedup_docs",
     "cluster_dedup_keep_best_docs",
     "kmeans_embeddings",
@@ -81,33 +75,21 @@ BENCH_QUERIES = [
     "snapshot_diff_docs",
     "gopher_repetition_docs",
     "gopher_dup_ngrams_docs",
-    # round-8 operators (excluded from r2_comparable_total): the
-    # newest, least-burned-in code gets a tracked cost
     "ohlc_resample_events",
     "funnel_events",
     "phrase_search_docs",
     "bloom_contamination_docs",
     "batched_topk_embeddings",
-    # round-8 tail, promoted from meta-only stamps to the compact
-    # line in round 9 (VERDICT r8 item 3; excluded from
-    # r2_comparable_total). trigram_substring_docs joins them from
-    # probe_benchmarks (probe-only against a pre-built index).
     "retention_cohorts_events",
     "bpe_train_docs",
     "interpolate_events",
     "fuzzy_join_diverse_110k",
-    # round-9 operators (excluded from r2_comparable_total): the
-    # newest, least-burned-in code gets a tracked cost
     "ema_events",
     "dsir_weights_docs",
     "pca_covariance_embeddings",
     "ab_welch_events",
     "tfidf_keywords_docs",
     "winnow_matches_docs",
-    # round-10: the r9 tail promoted (winnow fingerprint-only steady
-    # state, distinct from the match stage; dsir top-k selection,
-    # expected to inherit the weights row's cost model) plus the five
-    # round-10 operators (excluded from r2_comparable_total)
     "winnow_fps_docs",
     "dsir_select_docs",
     "corr_matrix_lineitem",
@@ -119,8 +101,6 @@ BENCH_QUERIES = [
     "jaccard_join_docs",
     "path_ngrams_events",
     "spearman_corr_lineitem",
-    # round-11 operators (excluded from r2_comparable_total): the
-    # newest, least-burned-in code gets a tracked cost
     "ks_test_events",
     "chi2_docs",
     "equidepth_hist_events",
@@ -179,10 +159,6 @@ BENCH_QUERIES = [
     "active_users_events",
     "category_index_orders",
     "quantile_discretize_lineitem",
-    # round-12 additions (excluded from r2_comparable_total): the
-    # three new execution paths (ungrouped halo-bucket rolling,
-    # interval active-user engine, hot-basket valve) and the eighth
-    # wave (CDC upsert, multi-touch credit, join-skew census)
     "rolling_global_events",
     "active_users_interval_events",
     "association_rules_capped_lineitem",
@@ -191,9 +167,6 @@ BENCH_QUERIES = [
     "skew_report_lineitem",
     "stream_upsert_events",
     "top_k_per_group_lineitem",
-    # round-13 additions (excluded from r2_comparable_total): TWAP
-    # exact-decimal accumulation, Nelson-Aalen census prefix,
-    # per-doc code-point entropy, conversion lag
     "time_weighted_avg_events",
     "nelson_aalen_events",
     "char_entropy_docs",
@@ -204,7 +177,6 @@ BENCH_QUERIES = [
     "fit_apply_scale_events",
     "item_cosine_lineitem",
     "stream_interval_join_events",
-    # round-14 wave
     "stream_interval_join_outer_events",
     "exactly_once_sink_events",
     "stream_dedup_watermark_events",
@@ -218,290 +190,27 @@ BENCH_QUERIES = [
     "stream_session_timeout_events",
     "triangle_count_lineitem",
     "stream_matview_events",
-    # round-14 fourteenth wave
     "hll_distinct_events",
     "skyline_orders",
     "spatial_pairs_customers",
     "bfs_hops_lineitem",
-    # round-14 fifteenth wave
     "kmv_jaccard_events",
     "bloom_semi_join_lineitem",
     "assortativity_lineitem",
-    # round-14 sixteenth wave
     "kcore_lineitem",
     "dbscan_customers",
-    # round-14 seventeenth wave
     "cms_tokens_docs",
     "hyperball_lineitem",
-    # round-14 eighteenth wave
     "temporal_reach_lineitem",
-    # round-14 nineteenth wave
     "ppr_lineitem",
-    # round-14 twentieth wave
     "script_mix_docs",
     "theil_sen_orders",
     "stream_static_join_events",
 ]
 
 
-# Post-round-2 additions, by round — every BENCH_QUERIES entry
-# registered after round 2 MUST appear in exactly one of these sets
-# or it silently inflates r2_comparable_total (happened in r6 and
-# again in r13; test_layout.py now guards the invariant).
-new_in_r3 = {"dedup_clusters", "chunk_docs", "contamination_docs",
-             "pack_chunks_docs"}
-new_in_r4 = {"perplexity_docs", "line_dedup_docs",
-             "semantic_dedup_embeddings"}
-new_in_r6 = {"substring_dedup_docs", "gopher_quality_docs",
-             "pretrain_filter_docs", "pq_topk_embeddings",
-             "ivfpq_topk_embeddings", "zorder_events",
-             # these five were benched from r6 but missing from
-             # the exclusion set, quietly inflating
-             # r2_comparable_total — fixed in r7 (the r6/r7
-             # records' r2 subtotals are therefore not directly
-             # comparable; per-query rows are)
-             "pack_sequences_docs", "bm25_search_docs",
-             "bucketed_join_revenue", "quality_classifier_docs",
-             "pretrain_e2e_docs"}
-new_in_r7 = {"incremental_minhash_dedup_docs",
-             "cluster_dedup_keep_best_docs", "kmeans_embeddings",
-             "preference_pairs_docs", "hybrid_search_docs",
-             "hard_negatives_embeddings", "pagerank_lineitem",
-             "snapshot_diff_docs"}
-new_in_r8 = {"ohlc_resample_events", "funnel_events",
-             "phrase_search_docs", "bloom_contamination_docs",
-             "batched_topk_embeddings"}
-new_in_r9 = {"retention_cohorts_events", "bpe_train_docs",
-             "interpolate_events", "fuzzy_join_diverse_110k",
-             "ema_events", "dsir_weights_docs",
-             "pca_covariance_embeddings", "ab_welch_events",
-             "tfidf_keywords_docs", "winnow_matches_docs"}
-new_in_r10 = {"winnow_fps_docs", "dsir_select_docs",
-              "corr_matrix_lineitem", "group_quantiles_events",
-              "mutual_info_docs", "rolling_avg_events",
-              "state_intervals_events", "outliers_events",
-              "jaccard_join_docs", "path_ngrams_events",
-              "spearman_corr_lineitem"}
-new_in_r11 = {"ks_test_events", "chi2_docs",
-              "equidepth_hist_events", "heavy_hitters_docs",
-              "markov_events", "target_encode_orders",
-              "outliers_mad_events", "benford_orders",
-              "acf_events", "attribution_events",
-              "auc_events", "calibration_events",
-              "confusion_events", "ols_lineitem",
-              "km_survival_events", "q7_volume_shipping",
-              "q8_market_share", "q10_returned_items",
-              "q13_customer_distribution", "q15_top_supplier",
-              "gini_orders", "q2_min_cost_supplier",
-              "q9_product_profit", "q11_important_parts",
-              "q12_late_shipments", "q16_supplier_part_counts",
-              "q17_small_qty_revenue", "q20_promo_suppliers",
-              "q21_waiting_suppliers", "q22_dormant_customers",
-              "cusum_events", "expectations_orders",
-              "feature_scale_lineitem",
-              "weighted_quantiles_lineitem",
-              "seasonal_anomalies_events",
-              "winsorize_lineitem", "zipf_alpha_docs",
-              "bigram_lm_docs", "stream_zscore_events",
-              "isotonic_calibration_events",
-              "referential_audit_orders", "json_props_events",
-              "ranking_metrics_docs", "logrank_events",
-              "psi_orders_drift", "gains_table_events",
-              "group_cusum_events", "column_entropy_docs",
-              "pmi_collocations_docs", "session_summary_events",
-              "association_rules_lineitem",
-              "funnel_window_events",
-              "additive_seasonal_events", "interarrival_events",
-              "bootstrap_ci_orders", "active_users_events",
-              "category_index_orders",
-              "quantile_discretize_lineitem"}
-new_in_r12 = {"rolling_global_events",
-              "active_users_interval_events",
-              "association_rules_capped_lineitem",
-              "merge_upsert_orders", "multi_touch_events",
-              "skew_report_lineitem", "stream_upsert_events",
-              "top_k_per_group_lineitem"}
-new_in_r13 = {"time_weighted_avg_events", "nelson_aalen_events",
-              "char_entropy_docs", "conversion_lag_events",
-              "stream_session_events", "mom_growth_orders",
-              "hist2d_events", "fit_apply_scale_events",
-              "item_cosine_lineitem", "stream_interval_join_events"}
-new_in_r14 = {"stream_interval_join_outer_events",
-              "exactly_once_sink_events",
-              "stream_dedup_watermark_events",
-              "rfm_segments_orders", "mann_whitney_events",
-              "revenue_concentration_orders", "kfold_splits_docs",
-              "grouped_weighted_median_lineitem", "bollinger_events",
-              "tokenizer_fertility_docs",
-              "stream_session_timeout_events",
-              "triangle_count_lineitem", "stream_matview_events",
-              "hll_distinct_events", "skyline_orders",
-              "spatial_pairs_customers", "bfs_hops_lineitem",
-              "kmv_jaccard_events", "bloom_semi_join_lineitem",
-              "assortativity_lineitem", "kcore_lineitem",
-              "dbscan_customers", "cms_tokens_docs",
-              "hyperball_lineitem", "temporal_reach_lineitem",
-              "ppr_lineitem", "script_mix_docs", "theil_sen_orders",
-              "stream_static_join_events"}
-POST_R2_SETS = (new_in_r3 | new_in_r4 | new_in_r6 | new_in_r7
-               | new_in_r8 | new_in_r9 | new_in_r10 | new_in_r11
-               | new_in_r12 | new_in_r13 | new_in_r14)
-
-
-# Stable sub-second rows moved OUT of the printed compact line to make
-# room for the round-8/9 entries above (the driver parses only the
-# last 2000 stdout chars). They are still measured every round with
-# min-of-2 + loadavg stamps and recorded under ``queries`` in the
-# committed BENCH_META file — nothing stops being tracked, only the
-# driver-visible line is curated. Chosen for 3 rounds of flat history
-# (r7→r8 spread <0.3 s) and no VERDICT drift mention.
-COMPACT_LINE_SHED = {
-    "lookup_first_match", "doc_fingerprint", "groupby_rollup",
-    "embedding_topk", "language_id_docs", "multimodal_decode",
-    "filter_pass", "chunk_docs", "text_stats", "dedup_exact",
-    "sessionize_events", "contamination_docs", "pack_chunks_docs",
-    "snapshot_diff_docs",
-    # rotated out in round 10 to fit the round-10 rows (flat r7-r9
-    # history, spread < 0.2 s, no VERDICT drift mention; none are
-    # BASELINE.md comparison rows):
-    "gopher_quality_docs", "gopher_dup_ngrams_docs", "join_inner",
-    "join_left", "preference_pairs_docs", "window_running_sum",
-    "slice_step", "q6_forecast_revenue", "q14_promo_revenue",
-    "zorder_events", "line_dedup_docs", "dedup_clusters",
-    "hard_negatives_embeddings",
-    # rotated out in round 11 to fit the round-11 rows (3-round flat
-    # history r8-r10: ohlc 0.53/0.48/0.48, funnel 0.59/0.55/0.54,
-    # phrase 0.57/0.51/0.47, batched 0.42/0.59/0.45; ab_welch
-    # 0.33/0.35 over its 2 rounds; none are BASELINE.md rows):
-    "ohlc_resample_events", "funnel_events", "phrase_search_docs",
-    "batched_topk_embeddings", "ab_welch_events",
-    # round-11 curation: the full TPC-H suite + the r10/r11 stat rows
-    # pushed the printed line past the 2000-char window and the
-    # last-resort truncation started dropping BASELINE-comparable rows
-    # (synth_order_1m_save/load) arbitrarily. These rows are all flat
-    # sub-0.6 s shapes whose full min-of-2 + loadavg stamps live in the
-    # committed BENCH_META file every round; the printed line keeps the
-    # baseline-comparable io/synth rows, every multi-second row, and
-    # the newest never-benched entries.
-    "confusion_events", "calibration_events", "benford_orders",
-    "ols_lineitem", "chi2_docs", "mutual_info_docs",
-    "attribution_events", "group_quantiles_events",
-    "equidepth_hist_events", "markov_events", "path_ngrams_events",
-    "target_encode_orders", "corr_matrix_lineitem",
-    "retention_cohorts_events", "trigram_substring_docs",
-    "winnow_fps_docs", "acf_events", "outliers_mad_events",
-    "q12_late_shipments", "q13_customer_distribution",
-    "q15_top_supplier", "q17_small_qty_revenue",
-    "q22_dormant_customers", "q9_product_profit",
-    "q11_important_parts", "q16_supplier_part_counts",
-    "q20_promo_suppliers", "q10_returned_items",
-    "q7_volume_shipping", "q8_market_share", "expectations_orders",
-    "ks_test_events", "heavy_hitters_docs", "gini_orders",
-    "auc_events", "km_survival_events",
-    # second r11 curation pass: the fourth-wave sub-second rows (all
-    # in META + SWEEP every round) — the line keeps every
-    # baseline-comparable io/synth row, the multi-second rows, and a
-    # representative slice of the newest ops
-    "column_entropy_docs", "zipf_alpha_docs", "outliers_events",
-    "pca_covariance_embeddings", "ranking_metrics_docs",
-    "referential_audit_orders", "gains_table_events",
-    "isotonic_calibration_events",
-    # third curation pass (the sixth-wave rows joined the line):
-    # multi-round-flat sub-1.2s rows, all still in META + SWEEP
-    "state_intervals_events", "ema_events", "near_dup_embeddings",
-    "pivot_wide", "interpolate_events", "gopher_repetition_docs",
-    "groupby_accumulators", "bucketed_join_revenue",
-    # fourth curation pass (seventh-wave rows joined the line)
-    "seasonal_anomalies_events", "interarrival_events",
-    "funnel_window_events", "pmi_collocations_docs",
-    # round-12 curation: make room for the six r12 rows WITHOUT
-    # shedding the r2_comparable_total anchor — these six are flat
-    # sub-second r11 rows (0.33-0.77 s, spread < 0.2 s over their
-    # two rounds), still stamped in META + SWEEP every round
-    "category_index_orders", "json_props_events",
-    "session_summary_events", "additive_seasonal_events",
-    "group_cusum_events", "psi_orders_drift",
-    # round-14 curation (VERDICT r13 task 4): the r13 line truncated
-    # and the fastest-first fallback shed BASELINE-comparable rows
-    # (io_json_read / io_parquet_read). Make room for the seven r14
-    # rows AND the restored baseline rows by shedding these flat
-    # sub-second 2-round-stable rows (r12/r13 spreads < 0.25 s, none
-    # BASELINE-comparable, all still in META + SWEEP every round):
-    "active_users_interval_events", "merge_upsert_orders",
-    "multi_touch_events", "rolling_global_events",
-    "top_k_per_group_lineitem", "q18_large_orders",
-    "q19_disjunctive_filter", "logrank_events", "bigram_lm_docs",
-    # second r14 pass: the first quiet run still truncated 9 rows and
-    # the r2_comparable_total anchor off the line. These are all
-    # multi-round-flat 0.6-1.7 s rows (spreads < 0.3 s across
-    # r12/r13/r14), none BASELINE-comparable, all in META + SWEEP:
-    "char_entropy_docs", "nelson_aalen_events",
-    "tfidf_keywords_docs", "q2_min_cost_supplier",
-    "q5_nation_revenue", "q3_shipping_revenue",
-    "active_users_events", "q21_waiting_suppliers",
-    "perplexity_docs", "semantic_dedup_embeddings",
-    "jaccard_join_docs",
-    # room for the eleventh-wave rows (write twins are not
-    # BASELINE.md mappings — the baseline compares READ throughput;
-    # both are flat across r12/r13 and stay in META + SWEEP):
-    "io_csv_write", "io_json_write", "bootstrap_ci_orders",
-    # room for the wave-12/13 rows: the r13 additions have now
-    # printed for two rounds with flat sub-0.6 s values (all in
-    # META + SWEEP; none BASELINE-comparable):
-    "fit_apply_scale_events", "conversion_lag_events",
-    "skew_report_lineitem", "mom_growth_orders",
-    "rolling_avg_events", "time_weighted_avg_events",
-    # room for the fourteenth-wave rows (hll/skyline/spatial/bfs):
-    # hist2d is 2-round flat at 0.24/0.28 s; q1 is 3-round flat at
-    # 0.62/0.61/0.71 s and doubles as the warm-up query, so its
-    # steady-state cost is pinned every round regardless. Neither is
-    # BASELINE-comparable; both stay in META + SWEEP:
-    "hist2d_events", "q1_pricing_summary",
-    # room for the fifteenth-wave rows (kmv/bloom/assortativity):
-    # io_parquet_write joins the earlier write-twin sheds (the
-    # BASELINE mapping compares READ throughput; 1.03/0.91/1.31 s
-    # over 3 rounds). winsorize / feature_scale have 3-round
-    # MONOTONE-IMPROVING histories (2.56->2.10->1.73 and
-    # 2.38->1.92->1.74) — the improvements are already on the r12/r13
-    # record, neither is BASELINE-comparable, both stay in META+SWEEP:
-    "io_parquet_write", "winsorize_lineitem", "feature_scale_lineitem",
-    # room for the sixteenth-wave rows (kcore/dbscan, both
-    # multi-second and new — they take the line slots): bpe_train /
-    # cluster_dedup_keep_best have 3-round histories inside a
-    # 1.5-2.3 s band (1.75/1.95/1.48 and 1.89/2.25/1.73), never a
-    # VERDICT drift mention, not BASELINE-comparable, in META+SWEEP:
-    "bpe_train_docs", "cluster_dedup_keep_best_docs",
-    # room for the seventeenth-wave rows (cms/hyperball): kfold is a
-    # 0.18 s scan-only hash aggregation — the least informative line
-    # row (its cost IS the corpus scan) — shed before its first
-    # driver print to keep ~30 chars of line headroom; min-of-2 +
-    # loadavg stamps in META + SWEEP every round like everything
-    # else here:
-    "kfold_splits_docs",
-    # room for the eighteenth-wave row (temporal_reach, 11 s):
-    # tokenizer_fertility joins kfold in the shed-before-first-print
-    # class — a 0.27 s scan+regex census whose line row is the least
-    # informative kind; stamps in META + SWEEP every round:
-    "tokenizer_fertility_docs",
-    # room for the nineteenth-wave row (ppr, multi-second): bollinger
-    # joins the shed-before-first-print class (0.49 s census-window
-    # row); stamps in META + SWEEP every round:
-    "bollinger_events",
-    # final r14 allocation: 16 rows joined the registry this round
-    # and the 2000-char line cannot carry them all. The line keeps
-    # every multi-second new row (bfs/kcore/dbscan/hyperball/
-    # temporal/theil_sen/kmv/assort/cms/skyline/stream_static) and
-    # these sub-1.6 s rows ship META+SWEEP-only from birth (the
-    # sketch family stays represented on the line by kmv + cms; the
-    # spatial join is exercised inside dbscan's line row):
-    "hll_distinct_events", "spatial_pairs_customers",
-    "bloom_semi_join_lineitem", "script_mix_docs",
-}
-
-
-# BASELINE.md-comparable rows must ALWAYS reach the driver-parsed
-# stdout line (VERDICT r13 task 4: two fell off via the last-resort
-# fastest-first truncation in r13). The truncation loop skips these.
+# BASELINE.md-comparable rows: printed_line places them before any
+# other row.
 BASELINE_LINE_PROTECT = {
     "synth_order_1m_save", "synth_order_1m_load",
     "synth_order_50m_save", "synth_order_50m_load",
@@ -636,6 +345,36 @@ BENCH_OVERRIDES = {
 }
 
 
+# Readers of the bench json-parse the last line of the last 2000 stdout
+# chars; 1995 + newline fits (Spark logs go to stderr).
+LINE_MAX = 1995
+
+
+def printed_line(payload: dict) -> str:
+    """The one stdout line: ``metric``, ``value``, ``unit``, ``sf`` and
+    a ``queries`` map of 2-decimal seconds, at most ``LINE_MAX`` chars.
+    Rows join greedily: each BASELINE_LINE_PROTECT row that fits, then,
+    if all of them fit, every other row slowest-first up to the first
+    one that does not. Every row stays in the META file either way.
+    """
+    times = payload["queries"]
+    line = {k: payload[k] for k in ("metric", "value", "unit", "sf")}
+    rows = line["queries"] = {}
+    text, missed = json.dumps(line, separators=(",", ":")), False
+    for name in sorted(times, key=lambda k: (k not in BASELINE_LINE_PROTECT,
+                                             -times[k])):
+        if missed and name not in BASELINE_LINE_PROTECT:
+            break
+        rows[name] = round(times[name], 2)
+        candidate = json.dumps(line, separators=(",", ":"))
+        if len(candidate) <= LINE_MAX:
+            text = candidate
+        else:
+            del rows[name]
+            missed = True
+    return text
+
+
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -681,7 +420,9 @@ def io_benchmarks(spark, sf_dir: str, timings: dict, rows_out: dict) -> None:
     """BASELINE.md mappings: tpz save/load ↔ parquet write/read,
     CSV read throughput, stepped slice. Timings land in the shared
     queries dict (seconds); row counts go to ``rows_out`` so rows/s is
-    reproducible."""
+    reproducible. The json_columnar diagnostics (its cold first call
+    and its stage breakdown) are not headline rows and go to
+    ``rows_out["bench_meta"]``."""
     import shutil
     import tempfile
     import time
@@ -775,11 +516,12 @@ def io_benchmarks(spark, sf_dir: str, timings: dict, rows_out: dict) -> None:
         # pa.array build / createDataFrame) is recorded so the e2e
         # number is explainable: decode dominates and is heap-state
         # sensitive (~1-2.5 s run to run), the Spark side is ~0.6 s.
+        load = round(os.getloadavg()[0], 2)
         t0 = time.perf_counter()
         read_json_columnar(spark, payload).write.format("noop") \
             .mode("overwrite").save()
-        timings["json_columnar_1m_read_cold"] = round(
-            time.perf_counter() - t0, 3)
+        meta["json_columnar_1m_read_cold"] = {
+            "runs": [round(time.perf_counter() - t0, 3)], "loadavg": [load]}
         # steady = best of two runs: the decode is single-threaded and
         # highly sensitive to host contention (observed 0.85-5.2 s for
         # the same work); min-of-2 is the least-contended observation
@@ -803,7 +545,7 @@ def io_benchmarks(spark, sf_dir: str, timings: dict, rows_out: dict) -> None:
                 f"{loads}: ambient contention — min kept as the "
                 f"least-contended observation")
         for k, v in best_stages.items():
-            timings[f"json_columnar_1m_{k}"] = round(v, 3)
+            meta[f"json_columnar_1m_{k}"] = {"stage_s": round(v, 3)}
         rows_out["synth_rows"] = 1_000_000
         synth.unpersist()
 
@@ -997,10 +739,6 @@ def main() -> None:
     # cross-round totals stay comparable in meaning (steady-state
     # per-query cost) while shedding contention noise
     total = round(sum(timings[q] for q in BENCH_QUERIES), 3)
-    # additions after round 2 inflate the headline total; publish the
-    # subtotal over the round-2 query list so the trend stays readable
-    r2_basis = round(sum(v for k, v in timings.items()
-                         if k not in POST_R2_SETS), 3)
 
     io_benchmarks(spark, sf_dir, timings, extra)
     probe_benchmarks(spark, sf_dir, timings, extra)
@@ -1013,74 +751,22 @@ def main() -> None:
         "timing_mode": "min_of_2_per_query",
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "queries": timings,
-        "r2_comparable_total": r2_basis,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         **extra,
     }
-    # The driver captures only the LAST 2000 chars of stdout and
-    # json-parses the final line: round 6's per-query ``bench_meta``
-    # (runs + loadavg stamps) grew the line to ~6.4 KB and the official
-    # BENCH_r06 record came back ``parsed: null``. The full record
-    # (including bench_meta) now goes to a committed side file; the
-    # printed line carries the headline set only and is compact-encoded
-    # with a hard length guard so the driver can always parse it.
+    # the full record (every row, runs + loadavg stamps) goes to a side
+    # file; stdout carries only the line printed_line builds from it
     meta_path = os.environ.get(
         "SPARK_GRAFT_BENCH_META",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_META_r15.json"))
+                     "BENCH_META.json"))
     try:
         with open(meta_path, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
             fh.write("\n")
     except OSError:
         pass  # read-only checkout: the printed line still stands alone
-    compact = dict(payload)
-    compact.pop("bench_meta", None)
-    # recorded in the meta file; shed here so the full headline set
-    # fits the driver's 2000-char stdout window without truncation
-    compact.pop("timing_mode", None)
-    compact.pop("loadavg_end", None)
-    # constant shape descriptors (row counts of the synthetic/io/50M
-    # sections) — meta file only; the 68 chars they cost are needed
-    # for the round-8 query rows to fit untruncated
-    for k in ("io_rows", "matched_scale_rows", "synth_rows"):
-        compact.pop(k, None)
-    # stage breakdowns (json_columnar_1m_decode/arrow_build/...) and
-    # the cold-JVM json_columnar first-call artifact are diagnostics,
-    # not headline timings — meta file only (VERDICT r7 item 7: the
-    # cold row once pushed the line over 1900 chars and the truncation
-    # fallback shed REAL timings)
-    compact["queries"] = {
-        k: v for k, v in compact["queries"].items()
-        if not (k.startswith("json_columnar_1m_")
-                and k != "json_columnar_1m_read")}
-    # curated shed set (see COMPACT_LINE_SHED) — still measured and
-    # recorded in the meta file's full ``queries`` every round
-    compact["queries"] = {k: v for k, v in compact["queries"].items()
-                          if k not in COMPACT_LINE_SHED}
-    # 2-decimal rounding up front: at 60+ headline rows the 3rd
-    # decimal is what used to overflow the driver's 1900-char window
-    compact["queries"] = {k: round(v, 2)
-                          for k, v in compact["queries"].items()}
-    # 1995 + newline fits the driver's last-2000-chars stdout window
-    # (nothing prints after this line; Spark logs go to stderr)
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1995:
-        # shed the DERIVED subtotal before any real timing — it stays
-        # in the committed meta file
-        compact.pop("r2_comparable_total", None)
-        line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > 1995 and compact["queries"]:
-        # last resort: drop the fastest NON-BASELINE entries first —
-        # BASELINE.md-comparable rows must survive truncation
-        droppable = [k for k in compact["queries"]
-                     if k not in BASELINE_LINE_PROTECT]
-        pool = droppable or list(compact["queries"])
-        drop = min(pool, key=compact["queries"].get)
-        del compact["queries"][drop]
-        compact["queries_truncated"] = True
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(printed_line(payload))
     spark.stop()
 
 

@@ -27,10 +27,6 @@ class Config:
     # should be ~2-3x total executor cores, and AQE coalesces down.
     SHUFFLE_PARTITIONS = host_cpus()
 
-    # Rows below this threshold are considered "small" → broadcast joins
-    # and driver-side algorithms (e.g. transpose) are allowed.
-    BROADCAST_ROW_LIMIT = 10_000_000
-
     # Target partition input size; tuned so a partition fits comfortably
     # in executor memory at 100 TB scale (128 MB parquet ≈ ~1 GB decoded).
     MAX_PARTITION_BYTES = "128m"

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, NumericType
+from pyspark.sql.types import ArrayType, DataType, NumericType
 
 
 def range_bucket_bounds(df: DataFrame, key: str,
@@ -88,6 +88,17 @@ def with_range_bucket(df: DataFrame, key: str, pid_col: str,
     return df.withColumn(pid_col, bucket_expr(key, bounds))
 
 
+def bucket_lookup(values: list, dtype: DataType,
+                  bucket_col: str) -> Column:
+    """``values[bucket_col]`` for per-bucket Python values: a dense
+    array literal indexed by bucket id (ids are dense, 0..|bounds|),
+    typed ``dtype`` so an empty list still analyzes, and read with
+    ``get()`` so an out-of-range id — or any id of an empty census —
+    is null instead of an error. O(1) per row."""
+    arr = F.array(*[F.lit(v) for v in values]).cast(ArrayType(dtype))
+    return F.get(arr, F.col(bucket_col))
+
+
 def prefix_sums(bucketed: DataFrame, bucket_col: str,
                 order_cols: list, sums: dict) -> tuple[DataFrame, dict]:
     """The census-prefix step shared by every distributed running sum:
@@ -100,10 +111,10 @@ def prefix_sums(bucketed: DataFrame, bucket_col: str,
     currentRow)`` window (rows/bucket ≈ N/|buckets|, never the global
     order on one task) plus the offset of everything in earlier
     buckets. ONE driver collect of the |buckets|-row per-bucket totals
-    serves every requested sum. Offsets are a dense array literal
-    indexed by bucket id (ids are dense, 0..|bounds|), typed from the
-    sum column: int counts stay exact int64, float sums (log-domain
-    survival terms) stay doubles, and an empty census still analyzes.
+    serves every requested sum. Offsets are a :func:`bucket_lookup`
+    typed from the sum column: int counts stay exact int64, float sums
+    (log-domain survival terms) stay doubles, and an empty census
+    still analyzes.
     Exclusive sums are the caller's "inclusive minus own term".
     """
     per_bucket = bucketed.groupBy(bucket_col).agg(
@@ -116,14 +127,11 @@ def prefix_sums(bucketed: DataFrame, bucket_col: str,
     for n, c in sums.items():
         offsets, run = [], 0
         for b in range(max(rows, default=-1) + 1):
-            offsets.append(F.lit(run))
+            offsets.append(run)
             if b in rows:
                 run = run + rows[b][n]
-        # get(), not [], so an empty census's constant index folds to
-        # null instead of failing analysis
-        offset = F.get(F.array(*offsets).cast(ArrayType(types[n])),
-                       F.col(bucket_col))
-        cols[n] = offset + F.sum(c).over(win)
+        cols[n] = (bucket_lookup(offsets, types[n], bucket_col)
+                   + F.sum(c).over(win))
         totals[n] = run
     return bucketed.withColumns(cols), totals
 

@@ -29,7 +29,7 @@ import sys
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tablite_spark.functions.buckets import with_range_bucket
+from tablite_spark.functions.buckets import bucket_lookup, with_range_bucket
 from tablite_spark.plans.lifecycle import pin
 
 
@@ -60,20 +60,18 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
 
 
 def _min_offsets(cen: DataFrame, bucket_col: str, y_col: str):
-    """Map-literal column: bucket id -> min(y) over every EARLIER
-    bucket (None-safe; buckets with no predecessor map to null).
+    """Column: min(y) over every EARLIER bucket, null for the first
+    bucket and on an empty census.
     :func:`~tablite_spark.functions.buckets.prefix_sums` folds sums,
-    so the running-MIN variant lives here: one |buckets|-row collect,
-    same discipline."""
-    rows = (cen.groupBy(bucket_col)
-            .agg(F.min(y_col).alias("m")).collect())
-    rows.sort(key=lambda r: r[bucket_col])
-    entries, run = [], None
-    for r in rows:
-        # sys.maxsize sentinel for "no earlier bucket" keeps the
-        # map value type homogeneous; callers encode axes as cents /
-        # epoch days, far below it
-        entries.extend([F.lit(r[bucket_col]),
-                        F.lit(sys.maxsize if run is None else run)])
-        run = r["m"] if run is None else min(run, r["m"])
-    return F.create_map(*entries)[F.col(bucket_col)]
+    so the running-MIN variant lives here: one |buckets|-row collect
+    read back through the same
+    :func:`~tablite_spark.functions.buckets.bucket_lookup`."""
+    per_bucket = cen.groupBy(bucket_col).agg(F.min(y_col).alias("m"))
+    rows = {r[bucket_col]: r["m"] for r in per_bucket.collect()}
+    offsets, run = [], None
+    for b in range(max(rows, default=-1) + 1):
+        offsets.append(run)
+        if b in rows:
+            run = rows[b] if run is None else min(run, rows[b])
+    return bucket_lookup(offsets, per_bucket.schema["m"].dataType,
+                         bucket_col)

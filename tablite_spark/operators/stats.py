@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import is_expensive, pin, release
 
 
@@ -1366,9 +1367,7 @@ def bootstrap_ci(df: DataFrame, val_col: str, id_col: str,
     # (12 s for 15M exploded rows at sf0.1 — caught by the bench).
     # Fan out to the session's parallelism first; at real corpus
     # scale the source is already wide and this branch never fires.
-    para = df.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < para:
-        base = base.repartition(para)
+    base = respread(base)
     b = F.explode(F.sequence(F.lit(0),
                              F.lit(n_resamples - 1))).alias("__b__")
     rows = base.select(x.alias("__x__"),

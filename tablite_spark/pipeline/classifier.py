@@ -34,6 +34,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import pinned
 
 
@@ -113,10 +114,8 @@ def doc_quality_features(df: DataFrame, text_col: str) -> DataFrame:
     # the expensive part of this operator — ran single-task (measured
     # 5 s of the 8 s classifier query at sf0.1). Spread under-
     # partitioned input across the cores; at corpus scale the scan is
-    # already wide and this no-ops (the shingle_minhash pattern).
-    spark = df.sparkSession
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
+    # already wide and this no-ops.
+    df = respread(df)
     c = F.col(text_col)
     words = F.filter(F.split(F.trim(c), r"\s+"),
                      lambda wd: wd != F.lit(""))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tablite_spark.config import Config
+from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import pin, release
 
 
@@ -69,11 +70,7 @@ def shingle_minhash(df: DataFrame, text_col: str, id_col: str,
     """
     num_perm = num_perm or Config.MINHASH_PERMUTATIONS
     k = shingle_size or Config.SHINGLE_SIZE
-    # spread docs across cores when the source arrives under-partitioned
-    # (small files); at scale the scan is already wide and this no-ops
-    spark = df.sparkSession
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
+    df = respread(df)
     tokens = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
     n_sh = F.greatest(F.size(tokens) - F.lit(k - 1), F.lit(1))
     # k-gram windows WITHOUT per-shingle array slicing: zip k shifted
@@ -840,13 +837,9 @@ def substring_dedup(df: DataFrame, text_col: str, id_col: str,
     one combinable per-doc groupBy rebuilds the text. No windows
     (analytic), no driver collection, no all-pairs anything.
     """
-    # spread docs across cores when the source arrives under-partitioned
-    # (single-row-group files): the k-slice zip + posexplode window
-    # build below runs pre-shuffle and otherwise lands in ONE task; at
-    # scale the scan is already wide and this no-ops
-    spark = df.sparkSession
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
+    # the k-slice zip + posexplode window build below runs pre-shuffle
+    # and would otherwise land in ONE task on a single-row-group file
+    df = respread(df)
     # filter('' ...) drops the [''] that split() yields for empty /
     # whitespace-only docs, so they count as 0 tokens, not 1
     toks = F.filter(F.split(F.trim(F.regexp_replace(
@@ -959,13 +952,9 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
     """
     if k < 1 or window < 1:
         raise ValueError("k and window must be >= 1")
-    # spread docs across cores when the source arrives under-partitioned
-    # (single-row-group files): the md5-per-gram kernel below is the
-    # cost of this operator and otherwise runs in ONE task; at scale
-    # the scan is already wide and this no-ops (shingle_minhash pattern)
-    spark = df.sparkSession
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
+    # the md5-per-gram kernel below is the cost of this operator and
+    # would otherwise run in ONE task on a single-row-group file
+    df = respread(df)
     norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     # 15 hex chars = 60 bits: a 32-bit (8-hex) fp space measured ~2.2M
     # birthday-collision pairs at 5M docs (75M selected fps); 60 bits

@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import is_expensive, pin
 
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
@@ -837,7 +838,7 @@ def contamination_check(df: DataFrame, probes: DataFrame, text_col: str,
     (64-bit gram hashing: collisions at ~n_grams²/2⁶⁴ — immaterial
     against real contamination, which shares hundreds of grams.)
     """
-    doc_g = _respread(df).select(
+    doc_g = respread(df).select(
         F.col(id_col).alias("doc_id_"),
         F.explode(_gram_hashes(F.col(text_col), n)).alias("g"))
     # r14 optimization round (guide §2.1): the probe-gram frame feeds
@@ -866,16 +867,6 @@ def _gram_hashes(c, n: int):
     windows = F.slice(F.arrays_zip(*parts), 1, cnt)
     return F.array_distinct(F.transform(
         windows, lambda w: F.xxhash64(*[w[f"t{i}"] for i in range(n)])))
-
-
-def _respread(df: DataFrame) -> DataFrame:
-    """Spread docs across cores when the source arrives
-    under-partitioned (small files); at scale the scan is already
-    wide and this no-ops."""
-    spark = df.sparkSession
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
 
 
 def _confirm_overlap(doc_g: DataFrame, probe_grams: DataFrame,
@@ -975,7 +966,7 @@ def bloom_decontaminate(df: DataFrame, probes: DataFrame, text_col: str,
         return pd.Series([flat_signed[offs[j]:offs[j + 1]][
             keep[offs[j]:offs[j + 1]]].tolist() for j in range(len(lens))])
 
-    doc_g = _respread(df).select(
+    doc_g = respread(df).select(
         F.col(id_col).alias("doc_id_"),
         F.explode(_bloom_keep(_gram_hashes(F.col(text_col), n))).alias("g"))
     return _confirm_overlap(doc_g, probe_grams, id_col, probe_id_col,

@@ -43,7 +43,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tablite_spark.plans.hints import maybe_broadcast
+from tablite_spark.plans.hints import maybe_broadcast, respread
 from tablite_spark.plans.lifecycle import pin, pinned, release
 from tablite_spark.registry._base import _t
 from tablite_spark.streaming.fixtures import (
@@ -74,11 +74,9 @@ def _co_order_pairs(li: DataFrame, cap: int = 5) -> DataFrame:
     shuffle) fills the machine instead of one task; the pair set is
     order-free (x < y expansion), so the result is partition- and
     set-order-invariant. No-op at corpus scale."""
-    spark = li.sparkSession
-    if li.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        li = li.repartition(spark.sparkContext.defaultParallelism)
-    return (li.filter(F.col("l_orderkey").isNotNull()
-                      & F.col("l_partkey").isNotNull())
+    return (respread(li)
+            .filter(F.col("l_orderkey").isNotNull()
+                    & F.col("l_partkey").isNotNull())
             .groupBy(F.col("l_orderkey").alias("bk"))
             .agg(F.collect_set("l_partkey").alias("__items__"))
             .filter(F.size("__items__") <= cap)
@@ -87,17 +85,6 @@ def _co_order_pairs(li: DataFrame, cap: int = 5) -> DataFrame:
                 "transform(filter(__items__, y -> y > x), "
                 "y -> struct(x AS src, y AS dst))))")).alias("p"))
             .select("bk", "p.src", "p.dst"))
-
-
-def _stage_batches(root: str, name: str, parts: list[DataFrame],
-                   base_mtime: int = 1_700_000_000) -> str:
-    """Stage each part as one mtime-pinned parquet file under
-    ``root/name`` so a file-source readStream with
-    ``maxFilesPerTrigger=1`` replays them as ordered micro-batches
-    (the r13 fixture discipline). Since the r14 optimization round
-    the staging is one Arrow transfer per part instead of a
-    ``coalesce(1)`` Spark write — see ``streaming/fixtures.py``."""
-    return stage_stream_batches(root, name, parts, base_mtime)
 
 
 # --------------------------------------------------------------------
@@ -144,7 +131,7 @@ def stream_interval_join_outer_events(spark: SparkSession,
     streams = {}
     for name, etype in (("l", "purchase"), ("r", "view")):
         side = ev.filter(F.col("event_type") == etype).drop("event_type")
-        src = _stage_batches(root, name, [
+        src = stage_stream_batches(root, name, [
             side.filter(us <= F.lit(int(cut))),
             side.filter(us > F.lit(int(cut))),
             sent[0], sent[1]])
@@ -221,7 +208,7 @@ def exactly_once_sink_events(spark: SparkSession, sf: str) -> DataFrame:
     parts = [ev.filter(us <= F.lit(int(cut))),
              ev.filter(us > F.lit(int(cut)))]
     # stage ONLY batch 0; batch 1 arrives after the forced crash
-    src = _stage_batches(root, "src", parts[:1])
+    src = stage_stream_batches(root, "src", parts[:1])
     schema = "event_id long, user_id long, ts timestamp, value double"
 
     def run():
@@ -242,8 +229,8 @@ def exactly_once_sink_events(spark: SparkSession, sf: str) -> DataFrame:
     crc = f"{root}/ckpt/commits/.0.crc"
     if os.path.exists(crc):
         os.remove(crc)
-    _stage_batches(root, "src", parts)      # batch 1's file lands
-    run()                                   # replays 0, processes 1
+    stage_stream_batches(root, "src", parts)  # batch 1's file lands
+    run()                                     # replays 0, processes 1
     return (spark.read.parquet(f"{root}/out")
             .select("event_id", "user_id", "ts", "value"))
 
@@ -284,7 +271,7 @@ def stream_dedup_watermark_events(spark: SparkSession,
     cut = ev.agg(F.percentile(us, F.lit(0.5))
                  .alias("m")).collect()[0]["m"]
     root = tempfile.mkdtemp(prefix="dedup_wm_")
-    src = _stage_batches(root, "src", [
+    src = stage_stream_batches(root, "src", [
         ev.filter(us <= F.lit(int(cut))),        # copy A, first half
         ev.filter(us > F.lit(int(cut))),         # copy A, second half
         ev,                                      # copy B (all dupes)
@@ -806,7 +793,7 @@ def stream_session_timeout_events(spark: SparkSession,
         "user_id": [-1],
         "ts": [hi + datetime.timedelta(days=30 * (i + 1))],
         "event_type": ["view"]}) for i in range(2)]
-    src = _stage_batches(root, "src", [
+    src = stage_stream_batches(root, "src", [
         ev.filter(us <= F.lit(int(cut))),
         ev.filter(us > F.lit(int(cut))),
         sent[0], sent[1]])
@@ -940,7 +927,7 @@ def stream_matview_events(spark: SparkSession, sf: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="matview_")
     parts = [ev.filter(us <= F.lit(int(cut))),
              ev.filter(us > F.lit(int(cut)))]
-    src = _stage_batches(root, "src", parts[:1])
+    src = stage_stream_batches(root, "src", parts[:1])
     schema = "event_type string, day timestamp, vc long"
 
     def run():
@@ -958,7 +945,7 @@ def stream_matview_events(spark: SparkSession, sf: str) -> DataFrame:
     crc = f"{root}/ckpt/commits/.0.crc"
     if os.path.exists(crc):
         os.remove(crc)
-    _stage_batches(root, "src", parts)
+    stage_stream_batches(root, "src", parts)
     run()
     mv = spark.read.parquet(f"{root}/mv/serve")
     return mv.select("event_type", "day",
@@ -1688,8 +1675,7 @@ def cms_tokens_docs(spark: SparkSession, sf: str) -> DataFrame:
     # explode (run twice: exact census + sketch census, both
     # combinable groupBys — partition-invariant exact integers)
     # fills all cores; no-op at corpus scale (r14 optimization round)
-    if d.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        d = d.repartition(spark.sparkContext.defaultParallelism)
+    d = respread(d)
     toks = (d.select(F.explode(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("tok"))
@@ -2227,7 +2213,7 @@ def stream_static_join_events(spark: SparkSession,
     cut = ev.agg(F.percentile(us, F.lit(0.5))
                  .alias("m")).collect()[0]["m"]
     root = tempfile.mkdtemp(prefix="stream_static_")
-    src = _stage_batches(root, "src", [
+    src = stage_stream_batches(root, "src", [
         ev.filter(us <= F.lit(int(cut))),
         ev.filter(us > F.lit(int(cut))),
     ])

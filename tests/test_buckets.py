@@ -217,13 +217,14 @@ def test_prefix_sums_matches_global_window(spark, n_buckets):
                          ids=["empty", "all_null"])
 @pytest.mark.parametrize("fn", ["km_curve", "nelson_aalen",
                                 "weighted_quantiles", "spearman_corr",
-                                "distributed_row_number"])
+                                "distributed_row_number", "skyline_2d"])
 def test_empty_census_keeps_schema(spark, fn, all_null):
     """An empty input, or one whose keys are all null, makes an empty
     census; each census-prefix operator returns its normal schema
     instead of failing analysis on an untyped empty offset literal.
     Row numbering still numbers null keys (they sort first)."""
     from tablite_spark.functions.buckets import distributed_row_number
+    from tablite_spark.operators.skyline import skyline_2d
     from tablite_spark.operators.stats import (
         km_curve, nelson_aalen, spearman_corr, weighted_quantiles,
     )
@@ -247,6 +248,7 @@ def test_empty_census_keeps_schema(spark, fn, all_null):
             ["q", "value"]),
         "spearman_corr": (lambda: spearman_corr(df, ["t", "w"]),
                           ["col_a", "col_b", "n", "rho"]),
+        "skyline_2d": (lambda: skyline_2d(df, "t", "w"), ["t", "w"]),
     }[fn]
     out = make()
     assert out.columns == cols

