@@ -7,11 +7,10 @@ equivalent. Column names are aliased identically on both sides; money
 aggregates are ROUND()ed on both sides so float summation order can't
 flip the value-hash.
 
-The query callables and their DuckDB oracles live in per-wave
-modules under ``tablite_spark/registry/`` (split in round 12 — zero
-behavior change); this module star-imports them and keeps the driver
-contract: ``entry`` / ``queries`` / ``oracle_sql`` plus the
-verification-window ordering.
+The query callables and their DuckDB oracles live in topic modules
+under ``tablite_spark/registry/``; this module star-imports them and
+keeps the driver contract: ``entry`` / ``queries`` / ``oracle_sql``
+plus the verification-window ordering.
 """
 
 from __future__ import annotations
@@ -30,29 +29,11 @@ from tablite_spark.registry.pipeline_scale import (  # noqa: F401
 from tablite_spark.registry.oracles import (  # noqa: F401
     _PCA_COMPS_SF001, _ann_overlap_oracle, _gopher_sql,
     _oracle_sql_base, _pca_project_oracle, _zorder_oracle)
-from tablite_spark.registry.round12 import (  # noqa: F401
-    ROUND12_ORACLES, active_users_interval_events,
-    association_rules_capped_lineitem, merge_upsert_orders,
-    multi_touch_events, rolling_global_events, skew_report_lineitem,
-    stream_upsert_events, top_k_per_group_lineitem)
-from tablite_spark.registry.round13 import (  # noqa: F401
-    ROUND13_ORACLES, char_entropy_docs, conversion_lag_events,
-    fit_apply_scale_events, hist2d_events, item_cosine_lineitem,
-    mom_growth_orders, nelson_aalen_events, stream_interval_join_events,
-    stream_session_events, time_weighted_avg_events)
-from tablite_spark.registry.round14 import (  # noqa: F401
-    ROUND14_ORACLES, bollinger_events, exactly_once_sink_events,
-    grouped_weighted_median_lineitem, kfold_splits_docs,
-    mann_whitney_events, revenue_concentration_orders,
-    rfm_segments_orders, stream_dedup_watermark_events,
-    stream_interval_join_outer_events, stream_matview_events,
-    stream_session_timeout_events, tokenizer_fertility_docs,
-    triangle_count_lineitem, hll_distinct_events, skyline_orders,
-    spatial_pairs_customers, bfs_hops_lineitem, kmv_jaccard_events,
-    bloom_semi_join_lineitem, assortativity_lineitem, kcore_lineitem,
-    dbscan_customers, cms_tokens_docs, hyperball_lineitem,
-    temporal_reach_lineitem, ppr_lineitem, script_mix_docs,
-    theil_sen_orders, stream_static_join_events)
+from tablite_spark.registry import graph, sketches, stats, streaming
+from tablite_spark.registry.graph import *  # noqa: F401,F403
+from tablite_spark.registry.sketches import *  # noqa: F401,F403
+from tablite_spark.registry.stats import *  # noqa: F401,F403
+from tablite_spark.registry.streaming import *  # noqa: F401,F403
 
 
 # --------------------------------------------------------------------
@@ -68,21 +49,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # driver contract
 # --------------------------------------------------------------------
 
-# Round-14 verification window: the driver checks the FIRST 50
-# entries of queries(). This round finishes the driver-evidence
-# ledger (r13 VERDICT task 1): the TEN never-driver-verified rows
-# (the whole round-13 wave — all strict-green locally, three of them
-# re-verified after this round's ADVICE fixes re-dated the
-# fit_apply cutoff and re-classed the char_entropy census regex)
-# lead, then the THIRTY-THREE r8-stale rows (the merged
-# CORRECTNESS_r01-r13 record shows 33, not the verdict's quoted 34),
-# then the SEVEN oldest-registered r9-stale rows fill the remainder
-# to exactly 50. After this round every registry row has driver
-# evidence and the staleness floor moves r8 -> r9. ALL out-of-window
-# entries stay locally oracle-swept green in STRICT hash mode with
-# the dtype-class gate — committed as SWEEP_r14.json.
-_R14_WINDOW = [
-    # -- never driver-verified (the round-13 wave, registration order)
+# The driver verifies the FIRST 50 entries of queries(): these, in
+# this order. Every other entry follows in registration order.
+_WINDOW = [
     "time_weighted_avg_events",
     "nelson_aalen_events",
     "char_entropy_docs",
@@ -93,7 +62,6 @@ _R14_WINDOW = [
     "fit_apply_scale_events",
     "item_cosine_lineitem",
     "stream_interval_join_events",
-    # -- r8-stale (registration order)
     "batched_topk_embeddings",
     "retention_cohorts_events",
     "bpe_train_docs",
@@ -127,7 +95,6 @@ _R14_WINDOW = [
     "window_ntile",
     "count_value",
     "token_count_bpe",
-    # -- oldest r9-stale rows (registration order)
     "asof_join_events",
     "chunk_docs",
     "contamination_docs",
@@ -140,20 +107,19 @@ _R14_WINDOW = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict order matters: the driver verifies entries in order with a
-    bounded per-round window (50/round). ``_R14_WINDOW`` puts the
-    stalest-green queries first; everything else keeps its
-    registration order behind them."""
+    """Dict order matters: the driver verifies the first 50 entries,
+    ``_WINDOW``; everything else keeps its registration order behind
+    them."""
     d = _all_queries()
-    ordered = {k: d[k] for k in _R14_WINDOW if k in d}
+    ordered = {k: d[k] for k in _WINDOW if k in d}
     ordered.update((k, v) for k, v in d.items() if k not in ordered)
     return ordered
 
 
 def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # registration order: queries() moves the _WINDOW entries to the
+    # front and keeps this order for the rest
     return {
-        # --- round-2 additions, never inside the check window yet —
-        #     they MUST occupy the first slots this round
         "asof_join_events": asof_join_events,
         "range_join_prices": range_join_prices,
         "redact_pii_docs": redact_pii_docs,
@@ -165,12 +131,9 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_docs": repetition_docs,
         "vocab_top_ngrams": vocab_top_ngrams,
         "dedup_clusters": dedup_clusters,
-        # --- red in round 2 (HUGEINT oracle casts fixed this round)
         "sessionize_events": sessionize_events,
         "deterministic_sample_orders": deterministic_sample_orders,
         "stratified_sample_docs": stratified_sample_docs,
-        # --- ex-no_oracle rows, re-expressed with exact oracles
-        #     (dup-fixture invariants / deterministic recall floors)
         "minhash_dedup_docs": minhash_dedup_docs,
         "semantic_dedup_embeddings": semantic_dedup_embeddings,
         "perplexity_docs": perplexity_docs,
@@ -188,7 +151,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivf_topk_embeddings": ivf_topk_embeddings,
         "pq_topk_embeddings": pq_topk_embeddings,
         "ivfpq_topk_embeddings": ivfpq_topk_embeddings,
-        # --- new in round 3
         "quota_cap_docs": quota_cap_docs,
         "holdout_split_orders": holdout_split_orders,
         "shuffle_order_docs": shuffle_order_docs,
@@ -209,7 +171,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hdf5_roundtrip_agg": hdf5_roundtrip_agg,
         "xls_roundtrip_agg": xls_roundtrip_agg,
         "hdf5_chunked_roundtrip_agg": hdf5_chunked_roundtrip_agg,
-        # --- new in round 6
         "hdf5_vlen_roundtrip": hdf5_vlen_roundtrip,
         "salted_join_equivalence": salted_join_equivalence,
         "zorder_events": zorder_events,
@@ -220,9 +181,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences_docs": pack_sequences_docs,
         "pretrain_e2e_docs": pretrain_e2e_docs,
         "xls_dates_roundtrip": xls_dates_roundtrip,
-        # --- new in round 7
         "tpz_roundtrip_agg": tpz_roundtrip_agg,
-        # --- new in round 8
         "tpz_reference_read": tpz_reference_read,
         "stream_incremental_dedup_docs": stream_incremental_dedup_docs,
         "hdf5_foreign_read": hdf5_foreign_read,
@@ -236,7 +195,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fuzzy_join_customers": fuzzy_join_customers,
         "interpolate_events": interpolate_events,
         "trigram_substring_docs": trigram_substring_docs,
-        # --- round-9 additions
         "winnow_fps_docs": winnow_fps_docs,
         "winnow_matches_docs": winnow_matches_docs,
         "tfidf_keywords_docs": tfidf_keywords_docs,
@@ -246,7 +204,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_select_docs": dsir_select_docs,
         "pca_covariance_embeddings": pca_covariance_embeddings,
         "pca_project_embeddings": pca_project_embeddings,
-        # --- round-10 additions
         "corr_matrix_lineitem": corr_matrix_lineitem,
         "group_quantiles_events": group_quantiles_events,
         "mutual_info_docs": mutual_info_docs,
@@ -256,7 +213,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jaccard_join_docs": jaccard_join_docs,
         "path_ngrams_events": path_ngrams_events,
         "spearman_corr_lineitem": spearman_corr_lineitem,
-        # --- round-11 additions
         "ks_test_events": ks_test_events,
         "chi2_docs": chi2_docs,
         "equidepth_hist_events": equidepth_hist_events,
@@ -335,8 +291,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "get_headers_nation": get_headers_nation,
         "row_iteration_checksum": row_iteration_checksum,
         "construction_api_agg": construction_api_agg,
-        # --- green in round 2 (rotate forward of round-1 greens so the
-        #     50-window still re-exercises the most recent operators)
         "join_inner": join_inner,
         "join_left": join_left,
         "join_outer_merge_keys": join_outer_merge_keys,
@@ -379,7 +333,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "csv_roundtrip_agg": csv_roundtrip_agg,
         "pandas_roundtrip_agg": pandas_roundtrip_agg,
         "imputation_nn_lsh": imputation_nn_lsh,
-        # --- green in round 1 (rotated to the back)
         "q1_pricing_summary": q1_pricing_summary,
         "q3_shipping_revenue": q3_shipping_revenue,
         "q5_nation_revenue": q5_nation_revenue,
@@ -427,23 +380,15 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "language_id_docs": language_id_docs,
         "ngram_jaccard_pairs": ngram_jaccard_pairs,
         "near_dup_embeddings": near_dup_embeddings,
-        # --- round-12 additions (exercise the ungrouped-rolling halo
-        #     buckets, the interval active-user engine, and the
-        #     hot-basket valve; never driver-verified — queue for r13)
         "rolling_global_events": rolling_global_events,
         "active_users_interval_events": active_users_interval_events,
         "association_rules_capped_lineitem":
             association_rules_capped_lineitem,
-        # --- round-12 eighth wave (CDC upsert, multi-touch credit,
-        #     join-skew census)
         "merge_upsert_orders": merge_upsert_orders,
         "multi_touch_events": multi_touch_events,
         "skew_report_lineitem": skew_report_lineitem,
         "stream_upsert_events": stream_upsert_events,
         "top_k_per_group_lineitem": top_k_per_group_lineitem,
-        # --- round-13 wave (TWAP exact-decimal accumulation,
-        #     Nelson-Aalen census prefix, per-doc char entropy,
-        #     conversion lag; never driver-verified — queue for r14)
         "time_weighted_avg_events": time_weighted_avg_events,
         "nelson_aalen_events": nelson_aalen_events,
         "char_entropy_docs": char_entropy_docs,
@@ -454,11 +399,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fit_apply_scale_events": fit_apply_scale_events,
         "item_cosine_lineitem": item_cosine_lineitem,
         "stream_interval_join_events": stream_interval_join_events,
-        # --- round-14 wave (outer stream-stream join, forced-replay
-        #     exactly-once sink, dropDuplicatesWithinWatermark, RFM /
-        #     Mann-Whitney / Lorenz deciles / k-fold on the
-        #     distributed-rank + census-prefix engines; never
-        #     driver-verified -- queue for r15)
         "stream_interval_join_outer_events":
             stream_interval_join_outer_events,
         "exactly_once_sink_events": exactly_once_sink_events,
@@ -467,8 +407,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mann_whitney_events": mann_whitney_events,
         "revenue_concentration_orders": revenue_concentration_orders,
         "kfold_splits_docs": kfold_splits_docs,
-        # --- round-14 eleventh wave (grouped weighted quantiles,
-        #     census Bollinger bands, tokenizer fertility)
         "grouped_weighted_median_lineitem":
             grouped_weighted_median_lineitem,
         "bollinger_events": bollinger_events,
@@ -476,29 +414,19 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_session_timeout_events": stream_session_timeout_events,
         "triangle_count_lineitem": triangle_count_lineitem,
         "stream_matview_events": stream_matview_events,
-        # --- round-14 fourteenth wave (sketch / frontier / spatial /
-        #     graph-traversal shapes)
         "hll_distinct_events": hll_distinct_events,
         "skyline_orders": skyline_orders,
         "spatial_pairs_customers": spatial_pairs_customers,
         "bfs_hops_lineitem": bfs_hops_lineitem,
-        # --- round-14 fifteenth wave (KMV set-overlap sketch, Bloom
-        #     semi-join reduction, graph assortativity)
         "kmv_jaccard_events": kmv_jaccard_events,
         "bloom_semi_join_lineitem": bloom_semi_join_lineitem,
         "assortativity_lineitem": assortativity_lineitem,
-        # --- round-14 sixteenth wave (k-core fixpoint, grid DBSCAN)
         "kcore_lineitem": kcore_lineitem,
         "dbscan_customers": dbscan_customers,
-        # --- round-14 seventeenth wave (CMS sketch, HyperBall)
         "cms_tokens_docs": cms_tokens_docs,
         "hyperball_lineitem": hyperball_lineitem,
-        # --- round-14 eighteenth wave (temporal reachability)
         "temporal_reach_lineitem": temporal_reach_lineitem,
-        # --- round-14 nineteenth wave (personalized PageRank)
         "ppr_lineitem": ppr_lineitem,
-        # --- round-14 twentieth wave (script census, Theil-Sen,
-        #     stream-static enrichment)
         "script_mix_docs": script_mix_docs,
         "theil_sen_orders": theil_sen_orders,
         "stream_static_join_events": stream_static_join_events,
@@ -506,9 +434,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     d = _oracle_sql_base()
-    d.update(ROUND12_ORACLES)
-    d.update(ROUND13_ORACLES)
-    d.update(ROUND14_ORACLES)
+    for topic in (streaming, graph, stats, sketches):
+        d.update(topic.ORACLES)
     d["pca_project_embeddings"] = _pca_project_oracle()
     # pretrain_filter is the conjunction of three already-oracled
     # stages: compose their SQL verbatim so the oracle stays a single

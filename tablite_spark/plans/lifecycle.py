@@ -21,20 +21,29 @@ what an exception left pinned.
 derived from a pin holds no pin of its own; :func:`release` frees
 either kind of pin and raises on anything else, so a release never
 silently leaves blocks to the JVM's ContextCleaner.
+
+A query that writes files of its own (a round-trip through a format,
+a staged stream, its checkpoint) takes its directory from
+:func:`scratch`. The scope that records it removes the directory at
+exit, after freeing its pins, so the query's lazy result can read
+those files until its action has run inside the scope.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import threading
 from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 
-__all__ = ["pin", "release", "pinned", "scope", "is_expensive"]
+__all__ = ["pin", "release", "pinned", "scope", "scratch", "is_expensive"]
 
 _lock = threading.Lock()
-_scopes: list[list[DataFrame]] = []  # open scopes, innermost last
+# open scopes, innermost last: each holds its pins and its scratch dirs
+_scopes: list[tuple[list[DataFrame], list[str]]] = []
 
 # Logical operators (analyzed-plan tags) whose recomputation costs more
 # than re-reading the source: a plain pruned file scan has none of them.
@@ -51,8 +60,19 @@ def pin(df: DataFrame, eager: bool) -> DataFrame:
     out = df.localCheckpoint() if eager else df.persist()
     with _lock:
         if _scopes:
-            _scopes[-1].append(out)
+            _scopes[-1][0].append(out)
     return out
+
+
+def scratch(prefix: str) -> str:
+    """A fresh directory (``tempfile.mkdtemp``) for a query's own
+    files. The innermost open :func:`scope` records it and removes it
+    at exit; made outside any scope, it is left in place."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    with _lock:
+        if _scopes:
+            _scopes[-1][1].append(path)
+    return path
 
 
 def _checkpoint_rdd(df: DataFrame):
@@ -81,7 +101,7 @@ def release(df: DataFrame) -> None:
     ends at the checkpoint. Raises ``ValueError`` if ``df`` holds no
     pin (a derived view, or a pin already released)."""
     with _lock:
-        for held in _scopes:
+        for held, _ in _scopes:
             for i, x in enumerate(held):
                 if x is df:
                     del held[i]
@@ -104,22 +124,26 @@ def pinned(df: DataFrame, eager: bool) -> Iterator[DataFrame]:
 
 @contextmanager
 def scope() -> Iterator[None]:
-    """Record every :func:`pin` made while open, from any thread, and
-    release at exit whatever is still pinned. Scopes form one
-    process-wide stack (worker threads have no context of their own):
-    the innermost open scope records each pin. So open one around a
-    query and its action, never inside an operator, which could free
-    a pin another thread still reads."""
-    held: list[DataFrame] = []
+    """Record every :func:`pin` and :func:`scratch` dir made while
+    open, from any thread; at exit release whatever is still pinned,
+    then remove the dirs. Scopes form one process-wide stack (worker
+    threads have no context of their own): the innermost open scope
+    records each pin. So open one around a query and its action,
+    never inside an operator, which could free a pin another thread
+    still reads."""
+    rec: tuple[list[DataFrame], list[str]] = ([], [])
     with _lock:
-        _scopes.append(held)
+        _scopes.append(rec)
     try:
         yield
     finally:
         with _lock:
-            _scopes[:] = [s for s in _scopes if s is not held]
+            _scopes[:] = [s for s in _scopes if s is not rec]
+        held, dirs = rec
         for df in reversed(held):
             _free(df)  # a pin sharing a released plan is already free
+        for path in dirs:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def is_expensive(df: DataFrame) -> bool:

@@ -1,7 +1,6 @@
-"""Shared helpers for the query-registry wave modules (split out
-of ``__spark_entry__.py`` in round 12 — 9.5k lines of 260 queries +
-260 oracles in one module was a maintainability hazard; behavior is
-unchanged and the driver contract still lives in the entry module).
+"""Shared helpers for the query-registry topic modules. The driver
+contract (``entry`` / ``queries`` / ``oracle_sql``) lives in
+``__spark_entry__.py``, which imports every topic module.
 """
 from __future__ import annotations
 

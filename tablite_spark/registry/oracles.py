@@ -1019,16 +1019,6 @@ def _oracle_sql_base() -> dict[str, str]:
               ('grp/sub/h_nested', 3, '18')
             ) AS t(name, n, agg)
         """,
-        "stream_incremental_dedup_docs": """
-            -- survivors of the two-micro-batch streaming dedup loop:
-            -- batch1's fresh 'ntok' docs (+30M) and batch2's fresh
-            -- 'mtok' docs (+60M); corpus dups, in-batch dups, and
-            -- batch2's dups-of-batch1-survivors all drop (the last
-            -- only because the index append ran between batches)
-            SELECT doc_id + 30000000 AS doc_id FROM documents
-            UNION ALL
-            SELECT doc_id + 60000000 AS doc_id FROM documents
-        """,
         "ohlc_resample_events": """
             WITH e AS (
                 SELECT event_type, ts,
@@ -2910,24 +2900,6 @@ def _oracle_sql_base() -> dict[str, str]:
             JOIN uni ON big.w1 = uni.w, v
             GROUP BY 1
         """,
-        "stream_zscore_events": """
-            WITH w AS (
-                SELECT user_id, event_id, value AS v,
-                       count(value) OVER pre AS np,
-                       avg(value) OVER pre AS m,
-                       stddev_pop(value) OVER pre AS sd
-                FROM events
-                WHERE value IS NOT NULL
-                WINDOW pre AS (PARTITION BY user_id
-                               ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND 1 PRECEDING)
-            )
-            SELECT user_id, event_id, np AS n_prior,
-                   ROUND(CASE WHEN np >= 2 AND sd > 0
-                              THEN (v - m) / sd END, 4) + 0 AS z
-            FROM w
-        """,
         "isotonic_calibration_events": """
             WITH cens AS (
                 SELECT least(CAST(floor(least(value / 500.0, 1.0)
@@ -3622,21 +3594,6 @@ def _oracle_sql_base() -> dict[str, str]:
                         THEN 2.0 * prec * rec / (prec + rec)
                    END AS f1
             FROM m
-        """,
-        "stream_attribution_events": """
-            WITH c AS (
-                SELECT event_id, event_type AS t, value AS v,
-                       last_value(CASE WHEN event_type IN
-                           ('view', 'click', 'signup')
-                           THEN event_type END IGNORE NULLS)
-                       OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING) AS channel
-                FROM events
-            )
-            SELECT event_id, channel, ROUND(v, 4) + 0 AS value
-            FROM c WHERE t = 'purchase'
         """,
         "attribution_events": """
             WITH c AS (
@@ -4354,5 +4311,95 @@ def _oracle_sql_base() -> dict[str, str]:
             )
             SELECT source, COUNT(*) AS n, CAST(SUM(doc_id) AS BIGINT) AS id_sum
             FROM ranked WHERE rnk <= 15 GROUP BY source
+        """,
+        "char_entropy_docs": """
+            WITH ch AS (
+                SELECT doc_id, unnest(regexp_extract_all(text, '[^\n]')) AS c
+                FROM documents
+            ), cnt AS (
+                SELECT doc_id, c, count(*) AS n FROM ch GROUP BY 1, 2
+            ), per AS (
+                SELECT doc_id, sum(n) AS n, count(*) AS nd,
+                       sum(n * ln(CAST(n AS DOUBLE))) AS clc
+                FROM cnt GROUP BY 1
+            )
+            SELECT doc_id, CAST(n AS BIGINT) AS n_chars_counted,
+                   nd AS n_distinct_chars,
+                   ROUND(ln(CAST(n AS DOUBLE)) - clc / n, 6) + 0 AS entropy
+            FROM per
+        """,
+        "kfold_splits_docs": """
+            WITH f AS (
+                SELECT CAST(CAST(('0x' || substring(
+                           md5('cv' || CAST(doc_id AS VARCHAR)), 1, 15))
+                           AS UBIGINT) % 5 AS INT) AS fold,
+                       doc_id, length(text) AS chars
+                FROM documents
+            )
+            SELECT fold, count(*) AS n_docs,
+                   CAST(sum(doc_id) AS BIGINT) AS id_sum,
+                   CAST(sum(chars) AS BIGINT) AS char_sum
+            FROM f GROUP BY 1
+        """,
+        "tokenizer_fertility_docs": """
+            WITH f AS (
+                SELECT lang,
+                       len(regexp_extract_all(text,
+                           '[A-Za-z]+|[0-9]+|[^ \t\n' || chr(11) ||
+                           chr(12) || chr(13) || 'A-Za-z0-9]')) AS toks,
+                       length(text) AS chars
+                FROM documents
+            )
+            SELECT lang, count(*) AS n_docs,
+                   CAST(sum(toks) AS BIGINT) AS n_tokens,
+                   CAST(sum(chars) AS BIGINT) AS n_chars,
+                   ROUND(CAST(sum(toks) AS DOUBLE) / sum(chars), 6) + 0
+                       AS fertility
+            FROM f GROUP BY 1
+        """,
+        "script_mix_docs": """
+            WITH per AS (
+                SELECT lang, length(text) AS n,
+                       length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
+                           AS lat,
+                       length(regexp_replace(text, '[^0-9]', '', 'g'))
+                           AS dig,
+                       length(regexp_replace(text,
+                           '[^ ' || chr(9) || chr(10) || chr(11) || chr(12)
+                           || chr(13) || ']', '', 'g')) AS wsp
+                FROM documents WHERE text IS NOT NULL
+            )
+            SELECT lang,
+                   CAST(count(*) AS BIGINT) AS n_docs,
+                   CAST(sum(n) AS BIGINT) AS chars_total,
+                   CAST(sum(lat) AS BIGINT) AS chars_latin,
+                   CAST(sum(dig) AS BIGINT) AS chars_digit,
+                   CAST(sum(wsp) AS BIGINT) AS chars_ws,
+                   CAST(sum(n) - sum(lat) - sum(dig) - sum(wsp) AS BIGINT)
+                       AS chars_other,
+                   ROUND(sum(lat) / CAST(sum(n) AS DOUBLE), 6) + 0
+                       AS latin_frac
+            FROM per GROUP BY 1
+        """,
+        "merge_upsert_orders": """
+            WITH kept AS (
+                SELECT o_orderkey, o_orderstatus, o_totalprice
+                FROM orders WHERE o_orderkey % 10 NOT IN (0, 1)
+            ), upd AS (
+                SELECT o_orderkey, 'X' AS o_orderstatus,
+                       o_totalprice + 1000 AS o_totalprice
+                FROM orders WHERE o_orderkey % 10 = 1
+            ), ins AS (
+                SELECT o_orderkey + 1000000000 AS o_orderkey,
+                       o_orderstatus, o_totalprice
+                FROM orders WHERE o_orderkey % 10 = 2
+            ), merged AS (
+                SELECT * FROM kept UNION ALL
+                SELECT * FROM upd UNION ALL
+                SELECT * FROM ins
+            )
+            SELECT o_orderstatus, count(*) AS n,
+                   SUM(ROUND(o_totalprice * 100, 0)) / 100 AS sum_price
+            FROM merged GROUP BY 1
         """,
     }

@@ -490,49 +490,6 @@ def attribution_events(spark: SparkSession, sf: str) -> DataFrame:
                       .alias("attributed_value"))
 
 
-def stream_attribution_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming twin of attribution_events, driver-oracled with a
-    REAL StreamingQuery: the events table splits at its median
-    timestamp into two mtime-pinned micro-batches (a global time
-    split preserves each user's order across batches — the
-    sequential-algebra ingestion contract), drains with availableNow
-    through applyInPandasWithState, and the per-user last-touch
-    carry CROSSES the batch boundary. Emits row-level attributed
-    conversions (event_id, channel, value) — the batch window
-    formula reproduces them exactly, which is the oracle."""
-    import tempfile
-
-    from tablite_spark.streaming.fixtures import (
-        stage_stream_batches, stream_shuffle_partitions)
-    from tablite_spark.streaming.ops import streaming_attribution
-    ev = _t(spark, sf, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value")
-    # ts is TIMESTAMP_NTZ; unix_micros needs TIMESTAMP (UTC session
-    # — the reinterpretation is monotone, the rolling_agg rule)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    cut = ev.agg(F.percentile(us, F.lit(0.5))
-                 .alias("m")).collect()[0]["m"]
-    root = tempfile.mkdtemp(prefix="attr_stream_")
-    src = stage_stream_batches(root, "src", [
-        ev.filter(us <= F.lit(int(cut))),
-        ev.filter(us > F.lit(int(cut)))])
-    stream = (spark.readStream
-              .schema("event_id long, ts timestamp, user_id long, "
-                      "event_type string, value double")
-              .option("maxFilesPerTrigger", 1)
-              .option("latestFirst", "false").parquet(src))
-    with stream_shuffle_partitions(spark, src):
-        q = (streaming_attribution(stream)
-             .writeStream.format("parquet")
-             .option("path", f"{root}/out")
-             .option("checkpointLocation", f"{root}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    out = spark.read.parquet(f"{root}/out")
-    return out.select("event_id", "channel",
-                      F.round(F.col("value"), 4).alias("value"))
-
-
 def auc_events(spark: SparkSession, sf: str) -> DataFrame:
     """EXACT ROC-AUC (tie-aware Mann-Whitney rank sum) of
     value/500 as a purchase score: per-score census + the
@@ -1168,45 +1125,6 @@ def bigram_lm_docs(spark: SparkSession, sf: str) -> DataFrame:
                       .alias("avg_logprob"))
 
 
-def stream_zscore_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming online z-score anomaly scoring, driver-oracled with
-    a REAL StreamingQuery: the events table splits at its median
-    timestamp into two mtime-pinned micro-batches, drains with
-    availableNow through applyInPandasWithState, and each event's
-    Welford (n, mean, M2) prior CROSSES the batch boundary — the
-    expanding-frame window formula in DuckDB reproduces every score,
-    which is the oracle."""
-    import tempfile
-
-    from tablite_spark.streaming.fixtures import (
-        stage_stream_batches, stream_shuffle_partitions)
-    from tablite_spark.streaming.ops import streaming_zscore
-    ev = _t(spark, sf, "events").select(
-        "event_id", "ts", "user_id", "value")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    cut = ev.agg(F.percentile(us, F.lit(0.5))
-                 .alias("m")).collect()[0]["m"]
-    root = tempfile.mkdtemp(prefix="zs_stream_")
-    src = stage_stream_batches(root, "src", [
-        ev.filter(us <= F.lit(int(cut))),
-        ev.filter(us > F.lit(int(cut)))])
-    stream = (spark.readStream
-              .schema("event_id long, ts timestamp, user_id long, "
-                      "value double")
-              .option("maxFilesPerTrigger", 1)
-              .option("latestFirst", "false").parquet(src))
-    with stream_shuffle_partitions(spark, src):
-        q = (streaming_zscore(stream)
-             .writeStream.format("parquet")
-             .option("path", f"{root}/out")
-             .option("checkpointLocation", f"{root}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    out = spark.read.parquet(f"{root}/out")
-    return out.select("user_id", "event_id", "n_prior",
-                      F.round(F.col("z"), 4).alias("z"))
-
-
 def isotonic_calibration_events(spark: SparkSession, sf: str) -> DataFrame:
     """Isotonic (PAV) recalibration of the clamped purchase score
     over 20 bins, evaluated through the minimax closed form
@@ -1694,3 +1612,99 @@ def media_features(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.element_at("features", 8).cast("double"), 4).alias("f7"))
 
 
+def char_entropy_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-document character-level Shannon entropy (nats) — the
+    gibberish/binary screen of a pretraining filter stack. Census by
+    code point via regex '[^\\n]' — the newline-excluding class JVM
+    regex and RE2 interpret identically (Java '.' also excludes
+    \\r/NEL/LS/PS while RE2 '.' excludes only \\n, so '.' diverges on
+    CRLF text); entropy rounds at the oracle boundary."""
+    from tablite_spark.pipeline.text import char_entropy
+    docs = _t(spark, sf, "documents")
+    out = char_entropy(docs, "text", "doc_id")
+    return out.select("doc_id", "n_chars_counted",
+                      "n_distinct_chars",
+                      (F.round(F.col("entropy"), 6) + 0)
+                      .alias("entropy"))
+
+
+def kfold_splits_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """Deterministic 5-fold cross-validation assignment over the
+    corpus (``pipeline/sampling.py:kfold_assign``: md5-mod-k, the
+    engine-portable integer-hash discipline — rerun-stable,
+    partitioning-independent, append-consistent), summarized per
+    fold: doc count, id checksum, character mass. The per-fold
+    balance of a hash split is itself the thing a training pipeline
+    audits before trusting the CV."""
+    from tablite_spark.pipeline.sampling import kfold_assign
+    docs = _t(spark, sf, "documents")
+    return (kfold_assign(docs, "doc_id", k=5, salt="cv")
+            .groupBy("fold")
+            .agg(F.count(F.lit(1)).alias("n_docs"),
+                 F.sum("doc_id").cast("long").alias("id_sum"),
+                 F.sum(F.length("text")).cast("long")
+                 .alias("char_sum")))
+
+
+def tokenizer_fertility_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """Tokenizer fertility census per language: BPE-ish piece count
+    (letter runs / digit runs / single punctuation — the cheap BPE
+    proxy) per character, the statistic that decides whether a
+    tokenizer under- or over-segments a language. The token regex
+    spells out its whitespace class EXPLICITLY
+    ('[^ \\t\\n\\x0B\\f\\rA-Za-z0-9]') because Java's '\\\\s' includes
+    \\x0B while RE2's does not — the char_entropy lesson applied
+    BEFORE the divergence bites. Pure combinable arithmetic: one
+    regexp count + one groupBy; fertility is a single division of
+    exact integers, rounded at the boundary."""
+    docs = _t(spark, sf, "documents")
+    toks = F.size(F.regexp_extract_all(
+        F.col("text"),
+        F.lit("[A-Za-z]+|[0-9]+|[^ \t\n\x0b\f\rA-Za-z0-9]"), 0))
+    out = (docs.groupBy("lang")
+           .agg(F.count(F.lit(1)).alias("n_docs"),
+                F.sum(toks).cast("long").alias("n_tokens"),
+                F.sum(F.length("text")).cast("long")
+                .alias("n_chars")))
+    return out.select(
+        "lang", "n_docs", "n_tokens", "n_chars",
+        (F.round(F.col("n_tokens").cast("double")
+                 / F.col("n_chars"), 6) + 0).alias("fertility"))
+
+
+def script_mix_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-language codepoint-class census over the corpus — the
+    multilingual curation signal ("is this 'en' shard actually
+    latin text?"): latin letters, digits, whitespace and other,
+    counted with EXPLICIT character classes on both engines (the
+    tokenizer_fertility discipline — named classes like \\s and
+    POSIX classes diverge between JVM regex and RE2, spelled-out
+    ranges do not). The four classes partition every codepoint, so
+    chars_total is also an integrity check. One combinable groupBy;
+    all counts exact BIGINT, one ratio rounds at the boundary."""
+    d = _t(spark, sf, "documents")
+
+    def nclass(cls: str):
+        return F.length(F.regexp_replace(
+            F.col("text"), f"[^{cls}]", ""))
+
+    ws = " \\t\\n\\x0B\\f\\r"
+    per = d.filter(F.col("text").isNotNull()).select(
+        "lang",
+        F.length("text").alias("n"),
+        nclass("A-Za-z").alias("lat"),
+        nclass("0-9").alias("dig"),
+        nclass(ws).alias("wsp"))
+    return (per.groupBy("lang")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
+                 F.sum("n").cast("long").alias("chars_total"),
+                 F.sum("lat").cast("long").alias("chars_latin"),
+                 F.sum("dig").cast("long").alias("chars_digit"),
+                 F.sum("wsp").cast("long").alias("chars_ws"))
+            .withColumn("chars_other",
+                        (F.col("chars_total") - F.col("chars_latin")
+                         - F.col("chars_digit") - F.col("chars_ws"))
+                        .cast("long"))
+            .withColumn("latin_frac",
+                        F.round(F.col("chars_latin")
+                                / F.col("chars_total"), 6) + 0))

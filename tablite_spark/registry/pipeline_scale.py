@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from tablite_spark.plans.lifecycle import pinned
+from tablite_spark.plans.lifecycle import pinned, scratch
 from tablite_spark.registry._base import SF_SMOKE, _cents, _t  # noqa: F401
 
 
@@ -235,13 +235,11 @@ def incremental_minhash_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     B, which DuckDB reproduces arithmetically. The index round-trips
     through parquet save/load inside the query, so the DURABLE path
     is what gets oracled."""
-    import tempfile
-
     from tablite_spark.pipeline.dedup import (
         incremental_minhash_dedup, minhash_save_index, shingle_minhash,
     )
     corpus = _dup_fixture(spark, sf).filter(F.col("doc_id") < 10_000_000)
-    idx = tempfile.mkdtemp(prefix="mh_idx_") + "/index"
+    idx = scratch("mh_idx_") + "/index"
     minhash_save_index(shingle_minhash(corpus, "text", "doc_id"),
                        "doc_id", idx)
 
@@ -269,80 +267,6 @@ def incremental_minhash_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     out = incremental_minhash_dedup(batch, "text", "doc_id", idx,
                                     threshold=0.8)
     return out.select("doc_id")
-
-
-def stream_incremental_dedup_docs(spark: SparkSession,
-                                  sf: str) -> DataFrame:
-    """The STREAMING ingestion-loop dedup entry point itself
-    (streaming.ops.stream_incremental_dedup), driver-oracled: a real
-    file-source stream drains with availableNow through foreachBatch,
-    one file per micro-batch in pinned mtime order. Derived-invariant
-    fixture across TWO batches:
-
-    - seed index = the pairwise-token-disjoint _dup_fixture corpus;
-    - batch 1: (A, +20M) exact dups of corpus docs where id%5==0 →
-      dropped by the corpus probe; (B, +30M) fresh docs in a disjoint
-      'ntok' namespace → kept; (C, +40M) in-batch dups of B where
-      id%6==0 → dropped, min id wins;
-    - batch 2: (D, +50M) exact dups of BATCH 1's survivors where
-      id%7==0 — droppable ONLY because batch 1's accepted signatures
-      were appended to the durable index between micro-batches (the
-      cross-batch property that distinguishes the streaming loop from
-      its batch twin); (E, +60M) fresh 'mtok' docs → kept.
-
-    Survivors are provably B ∪ E = every doc_id +30M and +60M, which
-    DuckDB reproduces arithmetically. Exactly-once shape: survivors
-    land in per-batch hive partitions (idempotent overwrite)."""
-    import tempfile
-
-    from tablite_spark.pipeline.dedup import (
-        minhash_save_index, shingle_minhash,
-    )
-    from tablite_spark.streaming.fixtures import (
-        stage_stream_batches, stream_shuffle_partitions)
-    from tablite_spark.streaming.ops import stream_incremental_dedup
-
-    corpus = _dup_fixture(spark, sf).filter(F.col("doc_id") < 10_000_000)
-    root = tempfile.mkdtemp(prefix="sid_")
-    idx = f"{root}/index"
-    minhash_save_index(shingle_minhash(corpus, "text", "doc_id"),
-                       "doc_id", idx)
-
-    base_ids = _t(spark, sf, "documents").select("doc_id")
-
-    def ns_text(prefix: str):
-        return F.concat_ws(" ", F.transform(
-            F.sequence(F.lit(1), F.lit(30)),
-            lambda j: F.concat(F.lit(prefix),
-                               (F.col("doc_id") * 1000 + j)
-                               .cast("string"))))
-
-    def shifted(df, text_col, shift):
-        return (df.select("doc_id", text_col.alias("text"))
-                .select((F.col("doc_id") + shift).alias("doc_id"),
-                        "text"))
-
-    a = shifted(base_ids.filter(F.col("doc_id") % 5 == 0),
-                ns_text("tok"), 20_000_000)
-    b = shifted(base_ids, ns_text("ntok"), 30_000_000)
-    c = shifted(base_ids.filter(F.col("doc_id") % 6 == 0),
-                ns_text("ntok"), 40_000_000)
-    d = shifted(base_ids.filter(F.col("doc_id") % 7 == 0),
-                ns_text("ntok"), 50_000_000)
-    e = shifted(base_ids, ns_text("mtok"), 60_000_000)
-    batch1 = a.unionByName(b).unionByName(c)
-    batch2 = d.unionByName(e)
-
-    src = stage_stream_batches(root, "src", [batch1, batch2])
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    with stream_shuffle_partitions(spark, src):
-        q = stream_incremental_dedup(
-            stream, "text", "doc_id", idx, out_path=f"{root}/out",
-            checkpoint=f"{root}/ckpt", threshold=0.8)
-        q.awaitTermination()
-    return spark.read.parquet(f"{root}/out").select("doc_id")
 
 
 def kmeans_embeddings(spark: SparkSession, sf: str) -> DataFrame:
@@ -1312,12 +1236,10 @@ def bucketed_join_revenue(spark: SparkSession, sf: str) -> DataFrame:
     directly (plan-gated in tests/test_bucketing.py). The revenue-
     by-segment values must equal DuckDB's plain join, proving
     co-location changes the PLAN, never the result."""
-    import tempfile
-
     from tablite_spark.operators.bucketing import (
         bucketed_join, save_bucketed,
     )
-    tmp = tempfile.mkdtemp(prefix="q_bkt_")
+    tmp = scratch("q_bkt_")
     save_bucketed(_t(spark, sf, "orders"), "q_bkt_orders",
                   ["o_custkey"], 4, path=f"{tmp}/orders")
     save_bucketed(_t(spark, sf, "customer"), "q_bkt_customer",
@@ -1644,11 +1566,9 @@ def hdf5_vlen_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     sources/hdf5lite.py) through to_hdf5(vlen_strings=True), read
     back, aggregated — including a name-length sum so the vlen
     payload bytes themselves are verified, not just the row count."""
-    import tempfile
-
     from tablite_spark.sources.io import read_hdf5, to_hdf5
     n = _t(spark, sf, "nation")
-    tmp = tempfile.mkdtemp(prefix="hdf5_vlen_")
+    tmp = scratch("hdf5_vlen_")
     path = f"{tmp}/nation.h5"
     to_hdf5(n, path, vlen_strings=True)
     back = read_hdf5(spark, path)

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from tablite_spark.plans.lifecycle import scratch
 from tablite_spark.registry._base import SF_SMOKE, _cents, _t  # noqa: F401
 
 
@@ -704,12 +705,10 @@ def csv_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     tablite/core.py:50-218): export lineitem columns to CSV, re-read
     with schema inference, aggregate — oracled against the parquet
     source data, so any reader/writer corruption breaks the value hash."""
-    import tempfile
-
     from tablite_spark.sources.io import read_csv
     li = _t(spark, sf, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    tmp = tempfile.mkdtemp(prefix="csv_rt_")
+    tmp = scratch("csv_rt_")
     path = f"{tmp}/li_csv"
     li.write.mode("overwrite").option("header", True).csv(path)
     back = read_csv(spark, path)
@@ -723,9 +722,8 @@ def json_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     """E2E JSON-lines writer→reader proof (tablite from_json/to_json,
     tablite/import_utils.py:112-122): export nation to JSON, re-read,
     aggregate against the parquet source."""
-    import tempfile
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    tmp = tempfile.mkdtemp(prefix="json_rt_")
+    tmp = scratch("json_rt_")
     path = f"{tmp}/nation_json"
     n.write.mode("overwrite").json(path)
     back = spark.read.json(path)
@@ -739,10 +737,9 @@ def json_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
 def parquet_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     """tpz-equivalent persistence proof (tablite/base.py:1350-1453):
     save→load→aggregate matches the source."""
-    import tempfile
     from tablite_spark.sources.io import load, save
     li = _t(spark, sf, "lineitem").select("l_orderkey", "l_quantity", "l_returnflag")
-    tmp = tempfile.mkdtemp(prefix="pq_rt_")
+    tmp = scratch("pq_rt_")
     save(li, f"{tmp}/li")
     back = load(spark, f"{tmp}/li")
     return (back.groupBy("l_returnflag")
@@ -754,12 +751,10 @@ def xlsx_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     """E2E xlsx writer→reader proof (stdlib SpreadsheetML,
     tablite/import_utils.py:180-368 analogue): export nation, re-read
     via from_file, aggregate against the parquet source."""
-    import tempfile
-
     from tablite_spark.sources.io import from_file
     from tablite_spark.sources.xlsx import to_xlsx
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    tmp = tempfile.mkdtemp(prefix="xlsx_rt_")
+    tmp = scratch("xlsx_rt_")
     path = f"{tmp}/nation.xlsx"
     to_xlsx(n, path)
     back = from_file(spark, path)
@@ -809,11 +804,9 @@ def get_headers_nation(spark: SparkSession, sf: str) -> DataFrame:
     """get_headers file peek (sources/io.py:get_headers, the
     reference's tools.py:32-36): header names of a written CSV, as
     (position, column_name) rows — pinned by a hard-assertion oracle."""
-    import tempfile
-
     from tablite_spark.sources.io import get_headers, to_csv
     n = _t(spark, sf, "nation")
-    tmp = tempfile.mkdtemp(prefix="hdr_")
+    tmp = scratch("hdr_")
     path = f"{tmp}/nation.csv"
     to_csv(n, path)
     headers = get_headers(spark, path, linecount=2)[0]
@@ -869,12 +862,10 @@ def ods_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     """E2E OpenDocument writer→reader proof (stdlib zip+XML,
     tablite/import_utils.py OpenDocument analogue): export nation,
     re-read via from_file, aggregate against the parquet source."""
-    import tempfile
-
     from tablite_spark.sources.io import from_file
     from tablite_spark.sources.ods import to_ods
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    tmp = tempfile.mkdtemp(prefix="ods_rt_")
+    tmp = scratch("ods_rt_")
     path = f"{tmp}/nation.ods"
     to_ods(n, path)
     back = from_file(spark, path)
@@ -891,8 +882,6 @@ def tpz_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     a float column (mixed page dtypes: long + '<U' unicode + pickled
     object-with-None + float64), re-read via from_file suffix
     dispatch, aggregate against the parquet source."""
-    import tempfile
-
     from tablite_spark.sources.io import from_file
     from tablite_spark.sources.tpz import save_tpz
     n = (_t(spark, sf, "nation")
@@ -900,7 +889,7 @@ def tpz_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
                  F.when(F.col("n_nationkey") % 3 != 0,
                         F.upper(F.col("n_name"))).alias("maybe_comment"),
                  (F.col("n_nationkey") * 1.5).alias("score")))
-    tmp = tempfile.mkdtemp(prefix="tpz_rt_")
+    tmp = scratch("tpz_rt_")
     path = save_tpz(n, f"{tmp}/nation.tpz", page_rows=7)
     back = from_file(spark, path, allow_pickle=True)  # trusted: we wrote it
     return (back.groupBy("n_regionkey")
@@ -982,8 +971,6 @@ def xls_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     write nation with the fixture writer, re-read through from_file
     (xlrd absent in this container → xlslite path), aggregate against
     the parquet source."""
-    import tempfile
-
     from tablite_spark.sources.io import from_file
     from tablite_spark.sources.xlslite import write_xls
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name",
@@ -991,7 +978,7 @@ def xls_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     rows = [["n_nationkey", "n_name", "n_regionkey"]]
     rows += [[float(r["n_nationkey"]), r["n_name"], float(r["n_regionkey"])]
              for r in n.collect()]
-    tmp = tempfile.mkdtemp(prefix="xls_rt_")
+    tmp = scratch("xls_rt_")
     path = f"{tmp}/nation.xls"
     write_xls(path, rows)
     back = from_file(spark, path)
@@ -1008,11 +995,9 @@ def hdf5_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     from the public spec, sources/hdf5lite.py) — reference layout is
     one root dataset per column with stringify fallback + re-guess
     (tablite/import_utils.py:72-109, export_utils.py:63-105)."""
-    import tempfile
-
     from tablite_spark.sources.io import from_file, to_hdf5
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    tmp = tempfile.mkdtemp(prefix="hdf5_rt_")
+    tmp = scratch("hdf5_rt_")
     path = f"{tmp}/nation.h5"
     to_hdf5(n, path)
     back = from_file(spark, path)
@@ -1028,14 +1013,12 @@ def hdf5_chunked_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     written with explicit chunk_rows so every dataset spans many
     chunks with a partial tail, compressed, re-read through the
     public reader, and aggregated against the parquet source."""
-    import tempfile
-
     from tablite_spark.sources import hdf5lite
     from tablite_spark.sources.io import read_hdf5
     o = _t(spark, sf, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice")
     pdf = o.toPandas()
-    path = tempfile.mkdtemp(prefix="hdf5_ck_") + "/orders.h5"
+    path = scratch("hdf5_ck_") + "/orders.h5"
     hdf5lite.write(path, {c: pdf[c].to_numpy() for c in pdf.columns},
                    chunk_rows=1024, compress=True)
     back = read_hdf5(spark, path)
@@ -1052,8 +1035,6 @@ def xls_dates_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     a guessed TIMESTAMP column (not floats), and aggregate per year
     against the parquet source."""
     import datetime as dt
-    import tempfile
-
     from tablite_spark.sources.io import from_file
     from tablite_spark.sources.xlslite import write_xls
     o = (_t(spark, sf, "orders")
@@ -1064,7 +1045,7 @@ def xls_dates_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
               dt.datetime(r["o_orderdate"].year, r["o_orderdate"].month,
                           r["o_orderdate"].day)]
              for r in o.collect()]
-    path = tempfile.mkdtemp(prefix="xls_dt_") + "/dates.xls"
+    path = scratch("xls_dt_") + "/dates.xls"
     write_xls(path, rows)
     back = from_file(spark, path)
     return (back.groupBy(F.year("odate").alias("yr"))
@@ -1077,11 +1058,9 @@ def xls_dates_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 def html_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     """E2E HTML writer→reader proof (stdlib html.parser scrape +
     type re-guess; tablite/export_utils.py:108-136 analogue)."""
-    import tempfile
-
     from tablite_spark.sources.io import read_html, to_html
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    tmp = tempfile.mkdtemp(prefix="html_rt_")
+    tmp = scratch("html_rt_")
     path = f"{tmp}/nation.html"
     to_html(n, path)
     back = read_html(spark, path)
@@ -1253,3 +1232,33 @@ def json_columnar_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
                  F.min("n_name").alias("first_name")))
 
 
+def merge_upsert_orders(spark: SparkSession, sf: str) -> DataFrame:
+    """CDC MERGE INTO over orders: keys ending in 0 are deleted,
+    keys ending in 1 get TWO updates (seq 1: +500; seq 2: +1000 and
+    status 'X' — the seq collapse must keep the later one), and a
+    synthetic insert feed adds keys+1e9 for keys ending in 2. The
+    per-status census of the merged table is the check; money rides
+    exact integer cents. Oracle: the final state stated directly in
+    SQL (the collapse itself is the Spark-side semantics under
+    test)."""
+    from tablite_spark.operators.merge import merge_upsert
+    o = _t(spark, sf, "orders")
+    k = F.col("o_orderkey")
+    dels = (o.filter(k % 10 == 0)
+            .select("*", F.lit("D").alias("op"), F.lit(1).alias("seq")))
+    upd1 = (o.filter(k % 10 == 1)
+            .withColumn("o_totalprice", F.col("o_totalprice") + 500)
+            .select("*", F.lit("U").alias("op"), F.lit(1).alias("seq")))
+    upd2 = (o.filter(k % 10 == 1)
+            .withColumn("o_totalprice", F.col("o_totalprice") + 1000)
+            .withColumn("o_orderstatus", F.lit("X"))
+            .select("*", F.lit("U").alias("op"), F.lit(2).alias("seq")))
+    ins = (o.filter(k % 10 == 2)
+           .withColumn("o_orderkey", k + 1_000_000_000)
+           .select("*", F.lit("U").alias("op"), F.lit(1).alias("seq")))
+    changes = dels.unionByName(upd1).unionByName(upd2).unionByName(ins)
+    merged = merge_upsert(o, changes, ["o_orderkey"], seq_col="seq")
+    return (merged.groupBy("o_orderstatus")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 (F.sum(F.round(F.col("o_totalprice") * 100, 0)) / 100)
+                 .alias("sum_price")))

@@ -1,16 +1,19 @@
 """plans.lifecycle: the one pin/release path, its leak guarantees and
 the shared expensive-upstream probe."""
 
+import os
 import pathlib
 import re
 import sys
+import tempfile
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from tablite_spark.plans import lifecycle
 from tablite_spark.plans.lifecycle import (
-    is_expensive, pin, pinned, release, scope,
+    is_expensive, pin, pinned, release, scope, scratch,
 )
 
 
@@ -71,14 +74,17 @@ def test_scope_releases_pin_made_in_worker_thread(spark):
 
 
 def test_scope_records_concurrent_pins(spark):
-    """More pinning threads than cores: the scope loses no pin."""
-    frames, lock = [], threading.Lock()
+    """More pinning threads than cores: the scope loses no pin and no
+    scratch dir."""
+    frames, dirs, lock = [], [], threading.Lock()
 
     def work(i):
         for j in range(4):
             p = pin(spark.range(i * 10 + j + 1), eager=False)
+            d = scratch("lc_thread_")
             with lock:
                 frames.append(p)
+                dirs.append(d)
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
@@ -96,6 +102,7 @@ def test_scope_records_concurrent_pins(spark):
         sys.setswitchinterval(old)
     assert not _cached(spark)
     assert not any(f.storageLevel.useMemory for f in frames)
+    assert len(dirs) == 48 and not any(map(os.path.exists, dirs))
 
 
 def test_release_raises_on_derived_view(spark):
@@ -107,6 +114,50 @@ def test_release_raises_on_derived_view(spark):
     release(base)
     with pytest.raises(ValueError, match="neither"):
         release(base)  # already released
+
+
+def test_scratch_dirs_removed_at_scope_exit(spark, tmp_path):
+    """A scope removes its scratch dirs at exit, after freeing its
+    pins, also when the body raises."""
+    with scope():
+        a = scratch("lc_a_")
+        pathlib.Path(a, "f.txt").write_text("x")
+        p = pin(spark.range(5), eager=True)
+    assert not os.path.exists(a)
+    with pytest.raises(ValueError, match="neither"):
+        release(p)  # freed by the scope before the dir went
+    with pytest.raises(RuntimeError, match="boom"):
+        with scope():
+            b = scratch("lc_b_")
+            raise RuntimeError("boom")
+    assert not os.path.exists(b)
+
+
+def test_scratch_outside_scope_is_left(monkeypatch):
+    """Made outside any scope (the bench calls queries that way), a
+    scratch dir stays: nothing records it."""
+    monkeypatch.setattr(lifecycle, "_scopes", [])
+    d = scratch("lc_out_")
+    try:
+        with scope():
+            pass
+        assert os.path.isdir(d)
+    finally:
+        os.rmdir(d)
+
+
+@pytest.mark.parametrize("name", ["csv_roundtrip_agg",
+                                  "stream_dedup_watermark_events"])
+def test_registry_query_leaves_no_dirs(spark, tmp_path, monkeypatch,
+                                       name):
+    """A registry query collected inside ``scope()`` leaves no file
+    behind in the temp dir: its round-trip files, staged batches,
+    stream output and checkpoint all live in scratch dirs."""
+    import __spark_entry__ as entry
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with scope():
+        assert entry.queries()[name](spark, entry.SF_SMOKE).collect()
+    assert list(tmp_path.iterdir()) == []
 
 
 @pytest.mark.parametrize("build, expensive", [

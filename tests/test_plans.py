@@ -464,7 +464,8 @@ def test_no_undocumented_sliding_window_frames():
             ok_running = start in ("Window.unboundedPreceding",
                                    "W.unboundedPreceding")
             if not ok_running:
-                offenders.append(f"{p.name} {start}")
+                offenders.append(
+                    f"{p.relative_to(pkg).as_posix()} {start}")
     # the allowed sliding frames: rolling_agg's documented
     # engine='window' opt-in, and bollinger_events' trailing-24
     # frame — which slides over the (type, hour) CENSUS (bounded at
@@ -472,8 +473,8 @@ def test_no_undocumented_sliding_window_frames():
     # O(rows x frame) rebuild cost is 24 x census, a constant
     # (matched by file+expression, not line number — additions
     # above them kept moving the line)
-    assert offenders == ["timeseries.py -span_us",
-                         "round14.py -23"], offenders
+    assert offenders == ["operators/timeseries.py -span_us",
+                         "registry/stats.py -23"], offenders
 
 
 def test_markov_transitions_shuffle_shape(spark):

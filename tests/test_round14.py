@@ -1232,7 +1232,7 @@ def test_script_mix_partitions_every_codepoint(spark):
     """The four classes must partition any text exactly (including
     the \\x0B vertical tab that named classes disagree on) — the
     chars_other derivation is only valid under that invariant."""
-    from tablite_spark.registry.round14 import script_mix_docs
+    from tablite_spark.registry.pipeline_docs import script_mix_docs
     rows = [(1, "Abc 12\t3\x0b!?\näöü", "xx", "s", 1)]
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, "

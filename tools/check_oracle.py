@@ -19,21 +19,25 @@ surviving to a driver round.
 (SWEEP_r0N.json) so a full-registry sweep is auditable, not prose:
 {"_sweep": {sf_dir, n_pass, n_fail, n_rows_only},
  "<query>": {"status": "pass|fail|rows_only", "rows": N, "err": ...,
-             "pins_left": N, "n_jobs": N}}
+             "pins_left": N, "dirs_left": N, "n_jobs": N}}
 
 Each query and its collect run inside ``plans.lifecycle.scope()``;
 ``pins_left`` counts the persistent RDDs (and a non-empty
-CacheManager) still held afterwards that were not held before. A
-nonzero count fails the query. ``n_jobs`` is the number of Spark jobs
-the query and its collect submitted (the scheduler's next job id
-before and after), so two sweeps show whether a change moved any
-query's job count.
+CacheManager) still held afterwards that were not held before, and
+``dirs_left`` the entries the query left in the temp dir (the sweep
+points ``tempfile.tempdir`` at a fresh directory of its own). A
+nonzero count of either fails the query. ``n_jobs`` is the number of
+Spark jobs the query and its collect submitted (the scheduler's next
+job id before and after), so two sweeps show whether a change moved
+any query's job count.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -197,6 +201,7 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     spark = get_spark("oracle_check")
+    tempfile.tempdir = tempfile.mkdtemp(prefix="check_oracle_")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -204,12 +209,13 @@ def main():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     passed, failed, rows_only = [], [], []
-    pins_left, n_jobs = {}, {}
+    pins_left, dirs_left, n_jobs = {}, {}, {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
         held0 = held_blocks(spark)
         jobs0 = jobs_submitted(spark)
+        dirs0 = set(os.listdir(tempfile.tempdir))
         try:
             with scope():  # a query's pins must not outlive its collect
                 sdf = fn(spark, sf_dir)
@@ -220,9 +226,14 @@ def main():
         finally:
             n_jobs[name] = jobs_submitted(spark) - jobs0
             pins_left[name] = len(held_blocks(spark) - held0)
+            dirs_left[name] = len(set(os.listdir(tempfile.tempdir)) - dirs0)
         if pins_left[name]:
             failed.append((name, f"PINS LEFT: {pins_left[name]} cached "
                                  f"RDDs/frames after scope()"))
+            continue
+        if dirs_left[name]:
+            failed.append((name, f"DIRS LEFT: {dirs_left[name]} temp-dir "
+                                 f"entries after scope()"))
             continue
         if name not in oracles:
             rows_only.append((name, len(spark_pdf)))
@@ -266,12 +277,14 @@ def main():
             rec[name] = {"status": "fail", "err": msg[:400]}
         for name, n in pins_left.items():
             rec[name]["pins_left"] = n
+            rec[name]["dirs_left"] = dirs_left[name]
             rec[name]["n_jobs"] = n_jobs[name]
         with open(json_out, "w") as fh:
             json.dump(rec, fh, indent=1, sort_keys=True)
             fh.write("\n")
         print(f"\nwrote {json_out}")
     spark.stop()
+    shutil.rmtree(tempfile.tempdir, ignore_errors=True)
     sys.exit(1 if failed else 0)
 
 
