@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tablite_spark.config import Config
+from tablite_spark.pipeline.graph import _factorized_edges
 from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import pin, release
 
@@ -324,9 +325,8 @@ def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
     schema = StructType([StructField("id", dt),
                          StructField("component", dt)])
     pdf = edges.toArrow().to_pandas()
-    both = pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
-    codes, uniq = pd.factorize(both)
-    n = len(uniq)
+    (a, b), ids = _factorized_edges(pdf["src"], pdf["dst"])
+    n = len(ids)
     if n == 0:
         return spark.createDataFrame([], schema)
     parent = np.arange(n)
@@ -337,15 +337,12 @@ def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    m = len(pdf)
-    a, b = codes[:m], codes[m:]
-    for i in range(m):
+    for i in range(len(a)):
         ra, rb = find(a[i]), find(b[i])
         if ra != rb:
             parent[rb] = ra
     roots = np.fromiter((find(i) for i in range(n)),
                         dtype=np.int64, count=n)
-    ids = pd.Series(uniq)
     comp = ids.groupby(roots).transform("min")
     return spark.createDataFrame(
         pd.DataFrame({"id": ids, "component": comp}), schema)

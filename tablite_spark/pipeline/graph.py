@@ -1,38 +1,26 @@
-"""Distributed PageRank — power iteration, Spark-first and exactly
-replayable (the ``kmeans``/``logreg`` determinism discipline applied
-to graphs).
+"""Graph operators over edge frames, exact and oracle-replayable:
+``pagerank`` and ``personalized_pagerank`` (one power-iteration loop,
+``_rank``), ``triangle_count``, ``bfs_hops``, ``k_core``,
+``hyperball`` and ``temporal_bfs``. Web-corpus curation uses
+link-graph structure as a document quality prior (public recipes:
+Common Crawl's harmonic-centrality host ranking, OpenWebText's karma
+thresholds).
 
-Why a training-data engine ships PageRank: web-corpus curation uses
-link-graph centrality as a document quality prior (public recipes:
-Common Crawl's harmonic-centrality host ranking, OpenWebText's
-karma thresholds) — "pages many pages point to" survive the gate,
-isolated spam islands don't.
+Broadcast rule: iterative state lives in localCheckpoint frames,
+whose stats Catalyst does not know, so a state ⋈ edges join would
+plan as a sort-merge join that shuffles the edge side every round.
+The state is node-bounded and each loop already counts it, so every
+loop passes those counts to ``plans.hints.maybe_broadcast``.
 
-Semantics (standard damped PageRank over a MULTIGRAPH — parallel
-edges each carry mass; ``outdeg`` = out-EDGE count):
-
-    r_{t+1}(v) = base + dang_share
-                 + floor(d · Σ_{u→v} floor(r_t(u) / outdeg(u)))
-
-with all ranks in integer micro-units of ``unit`` (initial rank
-``floor(unit / N)``), ``base = floor((1-d)·unit / N)`` and
-``dang_share = floor(d · Σ_{dangling} r_t / N)`` — dangling mass is
-redistributed uniformly, the textbook treatment. Every floor() is a
-plain IEEE-double op identical in any engine, every sum is an exact
-BIGINT sum, so the whole trajectory is bit-reproducible and the
-``pagerank_lineitem`` oracle replays all iterations as unrolled
-DuckDB CTEs. (Mass is not exactly conserved — each floor sheds
-< 1 micro-unit — which is the price of engine-neutral exactness and
-irrelevant at unit = 1e12.)
-
-Plan shape per iteration (the industry-standard PageRank shape):
-ONE edges ⋈ ranks join on src (edges can be pre-partitioned on src
-once and reused every iteration), ONE combinable groupBy(dst), one
-tiny scalar agg for dangling mass, and a ranks-rebuild join on the
-node frame. State = the (node, outdeg, rank) frame, never the
-corpus. Per-iteration results are localCheckpoint-pinned so the
-lineage does not grow with ``iters`` (the connected-components
-pattern).
+Driver-twin rule: a discrete fixpoint on a small graph pays rounds ×
+(join job + eager checkpoint + convergence job) of orchestration
+(~0.7 s/round measured on a 16 MB, 520k-edge graph). So the three
+integer-exact traversals (k-core, BFS hops, temporal BFS) run a
+driver twin — one Arrow collect + the same numpy fixpoint, same
+rows, dtypes and ``max_rounds`` guard — when the pinned edge frame
+holds at most ``SPARK_GRAFT_GRAPH_DRIVER_EDGES`` rows (default 2M).
+Float algorithms (pagerank's floor chain, hyperball's estimator) are
+not twinned: cross-runtime libm differences could break bit-parity.
 """
 
 from __future__ import annotations
@@ -50,29 +38,6 @@ __all__ = ["pagerank", "triangle_count", "bfs_hops", "k_core",
            "hyperball", "temporal_bfs",
            "personalized_pagerank"]
 
-# Iterative graph state lives in localCheckpoint frames, whose
-# LogicalRDD stats are UNKNOWN to Catalyst — every state ⋈ edges join
-# would plan as a sort-merge join that shuffles the BIG side once
-# per round (r14 optimization round, measured in the plan captures).
-# The state side is node-bounded and its row count is already
-# computed each round (the fixpoint/convergence checks), so every
-# loop below feeds those REAL counts to plans.hints.maybe_broadcast.
-#
-# r14 optimization round, second lever (guide §2.2 fixed per-round
-# cost): a DISCRETE fixpoint on a SMALL graph pays rounds ×
-# (join job + eager checkpoint + convergence job) of pure
-# orchestration — measured ~0.7 s/round on a 520k-edge graph whose
-# whole edge list is 16 MB. The three integer-exact traversals
-# (k-core peel, BFS hops, temporal earliest-arrival) therefore take
-# a count-gated driver twin when the pinned edge frame holds at most
-# ``SPARK_GRAFT_GRAPH_DRIVER_EDGES`` rows (default 2M ≈ 48 MB — the
-# broadcast-side size class; the connected_components /
-# ``diff``/``transpose`` valve discipline): ONE Arrow collect + the
-# identical numpy fixpoint, same rows, same dtypes, same
-# ``max_rounds`` guard. Float algorithms (pagerank's floor chain,
-# hyperball's estimator) are NOT twinned — cross-runtime libm
-# differences could break bit-parity — and corpus-scale graphs
-# exceed the valve and run the unchanged distributed loops.
 
 def _driver_edge_valve() -> int:
     # read per call so tests/deployments can steer the valve at
@@ -81,16 +46,26 @@ def _driver_edge_valve() -> int:
                               str(2_000_000)))
 
 
-def _factorized_edges(pdf, cols):
-    """Factorize the node values of ``pdf[cols]`` into one shared
-    code space: (per-col int64 code arrays, the unique values as a
-    pandas Series)."""
+def _factorized_edges(*cols):
+    """Factorize the values of the pandas Series ``cols`` into one
+    shared code space: (per-Series int64 code arrays, the unique
+    values as a pandas Series)."""
+    import numpy as np
     import pandas as pd
-    both = pd.concat([pdf[c] for c in cols], ignore_index=True)
-    codes, uniq = pd.factorize(both)
-    m = len(pdf)
-    return [codes[i * m:(i + 1) * m] for i in range(len(cols))], \
-        pd.Series(uniq)
+    codes, uniq = pd.factorize(pd.concat(cols, ignore_index=True))
+    cuts = np.cumsum([len(c) for c in cols])[:-1]
+    return np.split(codes, cuts), pd.Series(uniq)
+
+
+def _undirected(edges: DataFrame, src_col: str,
+                dst_col: str) -> DataFrame:
+    """The distinct (a, b) edge frame with both orientations of every
+    input edge."""
+    return (edges.select(F.col(src_col).alias("a"),
+                         F.col(dst_col).alias("b"))
+            .unionByName(edges.select(F.col(dst_col).alias("a"),
+                                      F.col(src_col).alias("b")))
+            .distinct())
 
 
 def _k_core_driver(und: DataFrame, k: int,
@@ -111,7 +86,7 @@ def _k_core_driver(und: DataFrame, k: int,
         # distributed frame — match it exactly
         StructField("core_degree", LongType(), False)])
     pdf = und.toArrow().to_pandas()
-    (a, b), uniq = _factorized_edges(pdf, ["a", "b"])
+    (a, b), uniq = _factorized_edges(pdf["a"], pdf["b"])
     n = len(uniq)
     if n == 0:
         return spark.createDataFrame([], schema)
@@ -152,12 +127,9 @@ def _bfs_hops_driver(und: DataFrame, seeds: DataFrame,
         StructField("hops", LongType(), False)])
     epdf = und.toArrow().to_pandas()
     spdf = sd.toArrow().to_pandas()
-    both = pd.concat([epdf["a"], epdf["b"], spdf["node"]],
-                     ignore_index=True)
-    codes, uniq = pd.factorize(both)
-    m = len(epdf)
-    a, b = codes[:m], codes[m:2 * m]
-    seed_codes = np.unique(codes[2 * m:])
+    (a, b, s), uniq = _factorized_edges(epdf["a"], epdf["b"],
+                                        spdf["node"])
+    seed_codes = np.unique(s)
     n = len(uniq)
     hops = np.full(n, -1, dtype=np.int64)
     if len(seed_codes):
@@ -170,7 +142,7 @@ def _bfs_hops_driver(und: DataFrame, seeds: DataFrame,
         hops[np.unique(cand)] = h
     mask = hops != -1
     out = pd.DataFrame({
-        "node": pd.Series(uniq)[mask].reset_index(drop=True),
+        "node": uniq[mask].reset_index(drop=True),
         "hops": hops[mask]})
     return spark.createDataFrame(out, schema)
 
@@ -188,12 +160,8 @@ def _temporal_bfs_driver(e: DataFrame, state0: DataFrame,
     spark = e.sparkSession
     epdf = e.toArrow().to_pandas()
     spdf = state0.toArrow().to_pandas()
-    both = pd.concat([epdf["node"], epdf["__dst__"], spdf["node"]],
-                     ignore_index=True)
-    codes, uniq = pd.factorize(both)
-    m = len(epdf)
-    src, dst = codes[:m], codes[m:2 * m]
-    scodes = codes[2 * m:]
+    (src, dst, scodes), uniq = _factorized_edges(
+        epdf["node"], epdf["__dst__"], spdf["node"])
     n = len(uniq)
     SENT = np.iinfo(np.int64).max
     arr = np.full(n, SENT, dtype=np.int64)
@@ -206,16 +174,17 @@ def _temporal_bfs_driver(e: DataFrame, state0: DataFrame,
         np.minimum.at(arr, dst[sel], ts[sel])
     mask = arr != SENT
     out = pd.DataFrame({
-        "node": pd.Series(uniq)[mask].reset_index(drop=True),
+        "node": uniq[mask].reset_index(drop=True),
         "arrival": arr[mask]})
     return spark.createDataFrame(out, out_schema)
 
 
-def pagerank(edges: DataFrame, src_col: str, dst_col: str,
-             iters: int = 5, damping: float = 0.85,
-             unit: int = 10 ** 12) -> DataFrame:
-    """Return (node, rank) in integer micro-units after ``iters``
-    damped power iterations. Nodes = distinct(src ∪ dst)."""
+def _rank(edges: DataFrame, src_col: str, dst_col: str, iters: int,
+          damping: float, unit: int, seeds: DataFrame | None = None,
+          node_col: str = "node") -> DataFrame:
+    """The damped power iteration behind ``pagerank`` (``seeds`` is
+    None: teleport, dangling mass and initial rank spread over every
+    node) and ``personalized_pagerank`` (spread over the seeds)."""
     # the edge frame is scanned 2 + iters times (nodes, outdeg, one
     # contribs join per iteration) — pin it once instead of replaying
     # its upstream build (which for the registry callers is a multi-
@@ -228,21 +197,42 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
                  .distinct())
         outdeg = e.groupBy(F.col("src").alias("node")) \
                   .agg(F.count(F.lit(1)).alias("outdeg"))
-        base_nodes = pin(nodes.join(outdeg, "node", "left")
-                         .select("node", F.coalesce("outdeg", F.lit(0))
-                                 .alias("outdeg")), eager=True)
+        base_nodes = nodes.join(outdeg, "node", "left")
+        cols = ["node", F.coalesce("outdeg", F.lit(0)).alias("outdeg")]
+        if seeds is not None:
+            sd = seeds.select(F.col(node_col).alias("node")).distinct()
+            base_nodes = base_nodes.join(
+                sd.withColumn("__is_seed__", F.lit(1)), "node", "left")
+            cols.append(F.coalesce("__is_seed__", F.lit(0))
+                        .alias("is_seed"))
+        base_nodes = pin(base_nodes.select(*cols), eager=True)
         n = base_nodes.count()
-        if n == 0:
-            return base_nodes.select("node", F.lit(0).alias("rank"))
+        if seeds is None:
+            if n == 0:
+                return base_nodes.select("node", F.lit(0).alias("rank"))
+            restart, n_restart = None, n
+        else:
+            restart = F.col("is_seed") == 1
+            n_restart = base_nodes.filter(restart).count()
+            if n_restart == 0:
+                raise ValueError("personalized_pagerank needs >= 1 seed "
+                                 "present in the graph")
+
+        def on_restart(v: int):
+            # v on every restart node, 0 on the others
+            return F.lit(v) if restart is None else \
+                F.when(restart, F.lit(v)).otherwise(F.lit(0))
+
         d = float(damping)
-        base = math.floor((1.0 - d) * unit / n)
+        base = math.floor((1.0 - d) * unit / n_restart)
         ranks = base_nodes.withColumn(
-            "rank", F.lit(int(math.floor(unit / n))).cast("long"))
+            "rank", on_restart(int(math.floor(unit / n_restart)))
+            .cast("long"))
         prev_ckpt: DataFrame | None = None  # last round's checkpoint
         for _ in range(iters):
             dang = ranks.filter(F.col("outdeg") == 0) \
                         .agg(F.sum("rank")).first()[0] or 0
-            dang_share = math.floor(d * dang / n)
+            dang_share = math.floor(d * dang / n_restart)
             per_edge = ranks.filter(F.col("outdeg") > 0).select(
                 F.col("node").alias("src"),
                 F.floor(F.col("rank") / F.col("outdeg")).cast("long")
@@ -256,8 +246,8 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
                         .agg(F.sum("c").alias("s")))
             ranks = pin(base_nodes.join(
                 _maybe_broadcast(contribs, n, 24), "node", "left")
-                .select("node", "outdeg",
-                        (F.lit(base + dang_share)
+                .select(*base_nodes.columns,
+                        (on_restart(base + dang_share)
                          + F.floor(F.lit(d)
                                    * F.coalesce(F.col("s"), F.lit(0))
                                    .cast("double")).cast("long"))
@@ -275,6 +265,40 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
             # base_nodes' blocks)
             release(base_nodes)
         return ranks.select("node", "rank")
+
+
+def pagerank(edges: DataFrame, src_col: str, dst_col: str,
+             iters: int = 5, damping: float = 0.85,
+             unit: int = 10 ** 12) -> DataFrame:
+    """Return (node, rank) in integer micro-units after ``iters``
+    damped power iterations. Nodes = distinct(src ∪ dst); an empty
+    graph gives an empty frame.
+
+    Semantics (standard damped PageRank over a MULTIGRAPH — parallel
+    edges each carry mass; ``outdeg`` = out-EDGE count):
+
+        r_{t+1}(v) = base + dang_share
+                     + floor(d · Σ_{u→v} floor(r_t(u) / outdeg(u)))
+
+    with all ranks in integer micro-units of ``unit`` (initial rank
+    ``floor(unit / N)``), ``base = floor((1-d)·unit / N)`` and
+    ``dang_share = floor(d · Σ_{dangling} r_t / N)`` — dangling mass
+    is redistributed uniformly, the textbook treatment. Every floor()
+    is a plain IEEE-double op identical in any engine, every sum is
+    an exact BIGINT sum, so the whole trajectory is bit-reproducible
+    and the ``pagerank_lineitem`` oracle replays all iterations as
+    unrolled DuckDB CTEs. (Mass is not exactly conserved — each floor
+    sheds < 1 micro-unit — which is the price of engine-neutral
+    exactness and irrelevant at unit = 1e12.)
+
+    Plan shape per iteration (the industry-standard PageRank shape):
+    ONE edges ⋈ ranks join on src, ONE combinable groupBy(dst), one
+    tiny scalar agg for dangling mass, and a ranks-rebuild join on
+    the node frame. State = the (node, outdeg, rank) frame, never the
+    corpus. Per-iteration results are localCheckpoint-pinned so the
+    lineage does not grow with ``iters``.
+    """
+    return _rank(edges, src_col, dst_col, iters, damping, unit)
 
 
 def triangle_count(edges: DataFrame, src_col: str,
@@ -381,12 +405,7 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, src_col: str,
     happens — ``max_hops`` bounds the round count, not correctness.
     """
     # the undirected edge frame is scanned once per round — pin it
-    # (before this round it was re-derived from the corpus each hop)
-    with pinned(edges.select(F.col(src_col).alias("a"),
-                             F.col(dst_col).alias("b"))
-                .unionByName(edges.select(F.col(dst_col).alias("a"),
-                                          F.col(src_col).alias("b")))
-                .distinct(), eager=False) as und:
+    with pinned(_undirected(edges, src_col, dst_col), eager=False) as und:
         if und.count() <= _driver_edge_valve():
             return _bfs_hops_driver(und, seeds, node_col, max_hops)
         dist = pin(seeds.select(F.col(node_col).alias("node")).distinct()
@@ -444,11 +463,7 @@ def k_core(edges: DataFrame, src_col: str, dst_col: str, k: int,
     Returns the SAME relation the last degree recomputation produced,
     so ``core_degree`` is each node's degree inside the final core.
     """
-    with pinned(edges.select(F.col(src_col).alias("a"),
-                             F.col(dst_col).alias("b"))
-                .unionByName(edges.select(F.col(dst_col).alias("a"),
-                                          F.col(src_col).alias("b")))
-                .distinct(), eager=False) as und:
+    with pinned(_undirected(edges, src_col, dst_col), eager=False) as und:
         if und.count() <= _driver_edge_valve():
             return _k_core_driver(und, k, max_rounds)
         alive = pin(und.select(F.col("a").alias("node")).distinct(),
@@ -517,11 +532,7 @@ def hyperball(edges: DataFrame, src_col: str, dst_col: str,
         m, 0.7213 / (1.0 + 1.079 / m))
     numer = alpha * m * m * float(q)
 
-    und = pin(edges.select(F.col(src_col).alias("a"),
-                           F.col(dst_col).alias("b"))
-              .unionByName(edges.select(F.col(dst_col).alias("a"),
-                                        F.col(src_col).alias("b")))
-              .distinct(), eager=False)
+    und = pin(_undirected(edges, src_col, dst_col), eager=False)
     h = F.conv(F.substring(F.md5(F.col("node").cast("string")),
                            1, 15), 16, 10).cast("long")
     # State is PACKED: one row per node holding all m registers as an
@@ -672,63 +683,5 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     same IEEE op in any engine, so the trajectory is bit-exact and
     oracle-replayable. Non-seed nodes unreachable from the seed set
     hold rank 0 forever (the semantic point of personalization)."""
-    # same scan-pinning + count-driven broadcast discipline as
-    # ``pagerank`` (see there for the rationale)
-    with pinned(edges.select(F.col(src_col).alias("src"),
-                             F.col(dst_col).alias("dst")),
-                eager=False) as e:
-        nodes = (e.select(F.col("src").alias("node"))
-                 .unionByName(e.select(F.col("dst").alias("node")))
-                 .distinct())
-        outdeg = e.groupBy(F.col("src").alias("node")) \
-                  .agg(F.count(F.lit(1)).alias("outdeg"))
-        sd = seeds.select(F.col(node_col).alias("node")).distinct()
-        base_nodes = pin(nodes.join(outdeg, "node", "left")
-                         .join(sd.withColumn("__is_seed__", F.lit(1)),
-                               "node", "left")
-                         .select("node",
-                                 F.coalesce("outdeg", F.lit(0))
-                                 .alias("outdeg"),
-                                 F.coalesce("__is_seed__", F.lit(0))
-                                 .alias("is_seed")), eager=True)
-        n = base_nodes.count()
-        ns = base_nodes.filter(F.col("is_seed") == 1).count()
-        if ns == 0:
-            raise ValueError("personalized_pagerank needs >= 1 seed "
-                             "present in the graph")
-        d = float(damping)
-        base = math.floor((1.0 - d) * unit / ns)
-        ranks = base_nodes.withColumn(
-            "rank", F.when(F.col("is_seed") == 1,
-                           F.lit(int(math.floor(unit / ns))))
-            .otherwise(F.lit(0)).cast("long"))
-        prev_ckpt: DataFrame | None = None
-        for _ in range(iters):
-            dang = ranks.filter(F.col("outdeg") == 0) \
-                        .agg(F.sum("rank")).first()[0] or 0
-            dang_share = math.floor(d * dang / ns)
-            per_edge = ranks.filter(F.col("outdeg") > 0).select(
-                F.col("node").alias("src"),
-                F.floor(F.col("rank") / F.col("outdeg")).cast("long")
-                .alias("c"))
-            contribs = (e.join(_maybe_broadcast(per_edge, n, 32),
-                               "src")
-                        .groupBy(F.col("dst").alias("node"))
-                        .agg(F.sum("c").alias("s")))
-            ranks = pin(base_nodes.join(
-                _maybe_broadcast(contribs, n, 24), "node", "left")
-                .select("node", "outdeg", "is_seed",
-                        (F.when(F.col("is_seed") == 1,
-                                F.lit(base + dang_share))
-                         .otherwise(F.lit(0))
-                         + F.floor(F.lit(d)
-                                   * F.coalesce(F.col("s"),
-                                                F.lit(0))
-                                   .cast("double")).cast("long"))
-                        .alias("rank")), eager=True)
-            if prev_ckpt is not None:
-                release(prev_ckpt)
-            prev_ckpt = ranks
-        if iters > 0:
-            release(base_nodes)
-        return ranks.select("node", "rank")
+    return _rank(edges, src_col, dst_col, iters, damping, unit,
+                 seeds=seeds, node_col=node_col)

@@ -429,15 +429,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int,
 
     q = queries.select(F.col(id_col).alias("qid"),
                        _as_double(F.col(vec_col)).alias("qv"))
-    # rank centroids per query by distance (computed as expressions over
-    # literal centroid arrays — no second k-means pass)
-    cells = []
-    for li, cvec in enumerate(centroids):
-        lit = F.array(*[F.lit(float(x)) for x in cvec])
-        d2 = F.aggregate(F.zip_with(F.col("qv"), lit, lambda a, b: (a - b) * (a - b)),
-                         F.lit(0.0), lambda acc, x: acc + x)
-        cells.append(F.struct(d2.alias("d2"), F.lit(li).alias("cell")))
-    probes = F.slice(F.array_sort(F.array(*cells)), 1, n_probe)
+    probes = F.slice(F.array_sort(_centroid_d2(F.col("qv"), centroids)),
+                     1, n_probe)
     qp = q.withColumn("ivf_list", F.explode(F.transform(probes, lambda s: s.getField("cell"))))
 
     cand = assigned.join(F.broadcast(qp), on="ivf_list") \
@@ -518,24 +511,11 @@ def embedding_near_dup_blocked(df: DataFrame, id_col: str, vec_col: str,
         score, schema="id_a long, id_b long, cos double")
 
 
-def _kmeans_sample_train(df: DataFrame, id_col: str, vec_col: str,
-                         k: int, seed: int = 42,
-                         sample_n: int = 65_536,
-                         iters: int = 15,
-                         normalize: bool = False) -> list[list[float]]:
-    """Seeded sample → driver-side numpy Lloyd's → centroid list.
-    The sample is the ``sample_n`` rows with the smallest
-    xxhash64(id, seed) — deterministic under any partitioning (one
-    TakeOrdered pass). This is the 100 TB division of labour stated
-    on ivf_index (train on a sample, assign the full corpus) made
-    explicit, and it sidesteps Spark ML's per-iteration job overhead
-    (measured 5.5 s → 0.6 s on 2k vectors at local scale).
-
-    ``normalize=True`` trains on L2-unit vectors — required when the
-    caller assigns unit vectors to the resulting centroids (as
-    semantic_dedup does): training raw but assigning normalized mixes
-    metric spaces, and varying-norm near-duplicates can land in
-    different cells and survive dedup."""
+def _train_sample(df: DataFrame, id_col: str, vec_col: str, seed: int,
+                  sample_n: int, normalize: bool, who: str):
+    """The ``sample_n`` rows with the smallest xxhash64(id, seed) as a
+    float64 matrix — deterministic under any partitioning (one
+    TakeOrdered pass). ``normalize`` L2-normalizes each row."""
     import numpy as np
     prep = _unit if normalize else _as_double
     rows = (df.select(prep(F.col(vec_col)).alias("v"))
@@ -543,9 +523,17 @@ def _kmeans_sample_train(df: DataFrame, id_col: str, vec_col: str,
             .limit(sample_n).collect())
     X = np.array([r["v"] for r in rows], dtype=np.float64)
     if len(X) == 0:
-        raise ValueError("kmeans needs a non-empty corpus")
-    k = min(k, len(X))
-    cents = X[:k].copy()  # hash order => deterministic seeding
+        raise ValueError(f"{who} needs a non-empty corpus")
+    return X
+
+
+def _lloyd(X, k: int, iters: int):
+    """Driver-side numpy Lloyd's over the rows of ``X``, seeded with
+    its first ``k`` rows (hash order => deterministic seeding; fewer
+    rows than ``k`` give one centroid per row). Returns the centroid
+    array."""
+    import numpy as np
+    cents = X[:k].copy()
     xn = (X * X).sum(axis=1)
     for _ in range(iters):
         # ||x-c||^2 = ||x||^2 + ||c||^2 - 2 x·c: one BLAS matmul per
@@ -559,24 +547,58 @@ def _kmeans_sample_train(df: DataFrame, id_col: str, vec_col: str,
         # masks (O(n log n) vs O(k·n)); bit-identical — the stable
         # order preserves each cluster's row sequence, so the
         # contiguous-slice mean reduces the same floats in the same
-        # pairwise tree as the masked copy (r14, micro-benched -30%)
+        # pairwise tree as the masked copy
         order = np.argsort(lab, kind="stable")
         sl = lab[order]
         starts = np.flatnonzero(np.r_[True, sl[1:] != sl[:-1]])
         ends = np.r_[starts[1:], len(sl)]
         Xs = X[order]
         for gi in range(len(starts)):
-            cents[sl[starts[gi]]] = \
-                Xs[starts[gi]:ends[gi]].mean(axis=0)
-    return [list(map(float, c)) for c in cents]
+            cents[sl[starts[gi]]] = Xs[starts[gi]:ends[gi]].mean(axis=0)
+    return cents
+
+
+def _kmeans_sample_train(df: DataFrame, id_col: str, vec_col: str,
+                         k: int, seed: int = 42,
+                         sample_n: int = 65_536,
+                         iters: int = 15,
+                         normalize: bool = False) -> list[list[float]]:
+    """Seeded sample (``_train_sample``) → driver-side numpy Lloyd's
+    (``_lloyd``) → centroid list. This is the 100 TB division of
+    labour stated on ivf_index (train on a sample, assign the full
+    corpus) made explicit, and it sidesteps Spark ML's per-iteration
+    job overhead (measured 5.5 s → 0.6 s on 2k vectors at local
+    scale).
+
+    ``normalize=True`` trains on L2-unit vectors — required when the
+    caller assigns unit vectors to the resulting centroids (as
+    semantic_dedup does): training raw but assigning normalized mixes
+    metric spaces, and varying-norm near-duplicates can land in
+    different cells and survive dedup."""
+    X = _train_sample(df, id_col, vec_col, seed, sample_n, normalize,
+                      "kmeans")
+    return [list(map(float, c)) for c in _lloyd(X, k, iters)]
+
+
+def _centroid_d2(v, centroids: list[list[float]]):
+    """array<struct<d2, cell>>: the squared L2 distance from the
+    array column ``v`` to each centroid, computed as expressions over
+    literal centroid arrays (whole-stage codegen, zero Python)."""
+    cells = []
+    for li, cvec in enumerate(centroids):
+        lit = F.array(*[F.lit(float(x)) for x in cvec])
+        d2 = F.aggregate(F.zip_with(v, lit, lambda a, b: (a - b) * (a - b)),
+                         F.lit(0.0), lambda acc, x: acc + x)
+        cells.append(F.struct(d2.alias("d2"), F.lit(li).alias("cell")))
+    return F.array(*cells)
 
 
 def assign_cells(df: DataFrame, vec_col: str,
                  centroids: list[list[float]],
                  out_col: str = "cell") -> DataFrame:
     """Nearest-centroid assignment — no shuffle either way. Small
-    codebooks (k·dim ≤ 2048) inline as literal-array expressions (the
-    ivf_topk probe trick, whole-stage codegen, zero Python); larger
+    codebooks (k·dim ≤ 2048) inline as literal-array expressions
+    (``_centroid_d2``, shared with ivf_topk's probe); larger
     ones switch to an Arrow-batched pandas UDF whose body is one BLAS
     matmul + argmax per batch — the expression form is interpreted
     per centroid and goes quadratic in k·dim."""
@@ -585,16 +607,8 @@ def assign_cells(df: DataFrame, vec_col: str,
 
     k, dim = len(centroids), len(centroids[0])
     if k * dim <= 2048:
-        v = _as_double(F.col(vec_col))
-        cells = []
-        for li, cvec in enumerate(centroids):
-            lit = F.array(*[F.lit(float(x)) for x in cvec])
-            d2 = F.aggregate(
-                F.zip_with(v, lit, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x)
-            cells.append(F.struct(d2.alias("d2"), F.lit(li).alias("cell")))
-        best = F.array_min(F.array(*cells)).getField("cell")
-        return df.withColumn(out_col, best)
+        d2 = _centroid_d2(_as_double(F.col(vec_col)), centroids)
+        return df.withColumn(out_col, F.array_min(d2).getField("cell"))
 
     C = np.array(centroids, dtype=np.float64)
     half_c2 = 0.5 * (C * C).sum(axis=1)
@@ -673,38 +687,14 @@ def pq_train(df: DataFrame, id_col: str, vec_col: str,
     m bytes per vector (m=8 → 8 bytes) instead of 4·dim — a 96-dim
     float corpus compresses 48×, so billions of codes fit where raw
     vectors never could; training stays a driver-side sample job."""
-    import numpy as np
-    rows = (df.select(_unit(F.col(vec_col)).alias("v"))
-            .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-            .limit(sample_n).collect())
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
-    if len(X) == 0:
-        raise ValueError("pq_train needs a non-empty corpus")
+    X = _train_sample(df, id_col, vec_col, seed, sample_n, True,
+                      "pq_train")
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    books = []
-    for j in range(m):
-        S = X[:, j * dsub:(j + 1) * dsub].copy()
-        k = min(n_codes, len(S))
-        cents = S[:k].copy()
-        sn = (S * S).sum(axis=1)
-        for _ in range(iters):
-            d2 = sn[:, None] + (cents * cents).sum(axis=1)[None, :] \
-                - 2.0 * (S @ cents.T)
-            lab = d2.argmin(axis=1)
-            # grouped means, bit-identical (see _kmeans_sample_train)
-            order = np.argsort(lab, kind="stable")
-            sl = lab[order]
-            starts = np.flatnonzero(np.r_[True, sl[1:] != sl[:-1]])
-            ends = np.r_[starts[1:], len(sl)]
-            Ss = S[order]
-            for gi in range(len(starts)):
-                cents[sl[starts[gi]]] = \
-                    Ss[starts[gi]:ends[gi]].mean(axis=0)
-        books.append(cents)
-    return books
+    return [_lloyd(X[:, j * dsub:(j + 1) * dsub].copy(), n_codes, iters)
+            for j in range(m)]
 
 
 def _pq_encoder_udf(codebooks: list):
@@ -739,6 +729,73 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str,
                      enc(_unit(F.col(vec_col))).alias(out_col))
 
 
+def _pq_queries(queries: DataFrame, id_col: str, vec_col: str,
+                books: list):
+    """Collect the (small) query set: (qids, unit-vector matrix Q,
+    ADC lookup table ``lut[q, j, c]`` = dot(q_subspace_j, centroid c
+    of book j)). An empty query set gives 0-row arrays."""
+    import numpy as np
+    qrows = (queries.select(F.col(id_col).alias("qid"),
+                            _unit(F.col(vec_col)).alias("qv"))
+             .collect())
+    m, dsub = len(books), books[0].shape[1]
+    qids = np.array([r["qid"] for r in qrows])
+    Q = np.array([r["qv"] for r in qrows],
+                 dtype=np.float64).reshape(len(qrows), m * dsub)
+    lut = np.stack([Q[:, j * dsub:(j + 1) * dsub] @ books[j].T
+                    for j in range(m)], axis=1)
+    return qids, Q, lut
+
+
+def _adc_scores(coded: DataFrame, qids, lut, probed=None) -> DataFrame:
+    """(qid, nid, cos) ADC scores of every (query, corpus row) pair
+    with qid != nid: m table lookups per pair over the row's
+    ``pq_code``, one Arrow batch at a time. ``probed`` (a
+    n_queries × n_cells bool array) keeps, per query, only the rows
+    whose ``cell`` it probes."""
+    import numpy as np
+    import pandas as pd
+    m = lut.shape[1]
+
+    def _adc(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            nid = pdf["nid"].to_numpy()
+            keep = qids[:, None] != nid[None, :]
+            if probed is not None:
+                keep &= probed[:, pdf["cell"].to_numpy()]
+            qi, ri = np.nonzero(keep)
+            if not len(qi):
+                continue
+            codes = np.stack(pdf["pq_code"].to_numpy())[ri]
+            cos = np.zeros(len(qi))
+            for j in range(m):
+                cos += lut[qi, j, codes[:, j]]
+            yield pd.DataFrame({"qid": qids[qi], "nid": nid[ri],
+                                "cos": cos})
+
+    return coded.mapInPandas(_adc, "qid long, nid long, cos double")
+
+
+def _pq_rank(scored: DataFrame, corpus: DataFrame, queries: DataFrame,
+             k: int, refine: int, id_col: str, vec_col: str) -> DataFrame:
+    """Top-k of the ADC scores; with ``refine`` the top ``refine·k``
+    candidates are re-scored by exact cosine first (a semi-join back
+    to the raw vectors — the standard IVF-PQ refine step)."""
+    if not refine:
+        return _topk_per_qid(scored, k)
+    cand = _topk_per_qid(scored, k * refine).select("qid", "nid")
+    c = corpus.select(F.col(id_col).alias("nid"),
+                      _unit(F.col(vec_col)).alias("cv"))
+    q = queries.select(F.col(id_col).alias("qid"),
+                       _unit(F.col(vec_col)).alias("qv"))
+    exact = (cand.join(c, "nid").join(F.broadcast(q), "qid")
+             .withColumn("cos", _dot(F.col("qv"), F.col("cv")))
+             .select("qid", "nid", "cos"))
+    return _topk_per_qid(exact, k)
+
+
 def pq_topk(corpus: DataFrame, queries: DataFrame, k: int,
             id_col: str = "id", vec_col: str = "vec",
             m: int = 8, n_codes: int = 256, seed: int = 42,
@@ -769,52 +826,14 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int,
     the exact re-rank to recover the true ordering (measured at 200k
     vectors / 100-member clusters: refine=4 → recall@10 ≈ 0.4,
     refine=12 → 1.0)."""
-    import numpy as np
-    import pandas as pd
-
     if books is None:
         books = pq_train(corpus, id_col, vec_col, m=m,
                          n_codes=n_codes, seed=seed)
     codes = (pq_encode(corpus, id_col, vec_col, books)
              .withColumnRenamed(id_col, "nid"))
-    qrows = (queries.select(F.col(id_col).alias("qid"),
-                            _unit(F.col(vec_col)).alias("qv"))
-             .collect())
-    qids = np.array([r["qid"] for r in qrows])
-    Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
-    dsub = books[0].shape[1]
-    # LUT[q, j, c] = dot(q_subspace_j, centroid_c_of_book_j)
-    lut = np.stack([Q[:, j * dsub:(j + 1) * dsub] @ books[j].T
-                    for j in range(m)], axis=1)
-
-    def _adc(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["pq_code"].to_numpy())  # (n, m)
-            n = len(C)
-            scores = np.zeros((len(qids), n))
-            for j in range(m):
-                scores += lut[:, j, C[:, j]]
-            nid = pdf["nid"].to_numpy()
-            out = pd.DataFrame({
-                "qid": np.repeat(qids, n),
-                "nid": np.tile(nid, len(qids)),
-                "cos": scores.ravel()})
-            yield out[out["qid"] != out["nid"]]
-
-    scored = codes.mapInPandas(_adc, "qid long, nid long, cos double")
-    if not refine:
-        return _topk_per_qid(scored, k)
-    cand = _topk_per_qid(scored, k * refine).select("qid", "nid")
-    c = corpus.select(F.col(id_col).alias("nid"),
-                      _unit(F.col(vec_col)).alias("cv"))
-    q = queries.select(F.col(id_col).alias("qid"),
-                       _unit(F.col(vec_col)).alias("qv"))
-    exact = (cand.join(c, "nid").join(F.broadcast(q), "qid")
-             .withColumn("cos", _dot(F.col("qv"), F.col("cv")))
-             .select("qid", "nid", "cos"))
-    return _topk_per_qid(exact, k)
+    qids, _, lut = _pq_queries(queries, id_col, vec_col, books)
+    return _pq_rank(_adc_scores(codes, qids, lut), corpus, queries, k,
+                    refine, id_col, vec_col)
 
 
 def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int,
@@ -842,7 +861,6 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int,
     centroids persisted the same way) to reuse a trained index.
     """
     import numpy as np
-    import pandas as pd
 
     if cents is None:
         cents = _kmeans_sample_train(corpus, id_col, vec_col,
@@ -857,54 +875,16 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int,
         "uv", cents, out_col="cell") \
         .select("nid", "cell", enc(F.col("uv")).alias("pq_code"))
 
-    qrows = (queries.select(F.col(id_col).alias("qid"),
-                            _unit(F.col(vec_col)).alias("qv"))
-             .collect())
-    qids = np.array([r["qid"] for r in qrows])
-    Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
+    qids, Q, lut = _pq_queries(queries, id_col, vec_col, books)
     C = np.array(cents, dtype=np.float64)
     # nearest cells per query (driver-side: n_queries × n_lists)
     d2 = ((Q * Q).sum(1)[:, None] + (C * C).sum(1)[None, :]
           - 2.0 * (Q @ C.T))
-    probe = np.argsort(d2, axis=1)[:, :n_probe]
-    dsub = books[0].shape[1]
-    lut = np.stack([Q[:, j * dsub:(j + 1) * dsub] @ books[j].T
-                    for j in range(m)], axis=1)
-
-    def _adc(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["pq_code"].to_numpy())
-            cell = pdf["cell"].to_numpy()
-            nid = pdf["nid"].to_numpy()
-            outs = []
-            for qi in range(len(qids)):
-                msk = np.isin(cell, probe[qi])
-                msk &= nid != qids[qi]
-                if not msk.any():
-                    continue
-                cc = codes[msk]
-                sc = np.zeros(int(msk.sum()))
-                for j in range(m):
-                    sc += lut[qi, j, cc[:, j]]
-                outs.append(pd.DataFrame({
-                    "qid": qids[qi], "nid": nid[msk], "cos": sc}))
-            if outs:
-                yield pd.concat(outs)
-
-    scored = coded.mapInPandas(_adc, "qid long, nid long, cos double")
-    if not refine:
-        return _topk_per_qid(scored, k)
-    cand = _topk_per_qid(scored, k * refine).select("qid", "nid")
-    c = corpus.select(F.col(id_col).alias("nid"),
-                      _unit(F.col(vec_col)).alias("cv"))
-    q = queries.select(F.col(id_col).alias("qid"),
-                       _unit(F.col(vec_col)).alias("qv"))
-    exact = (cand.join(c, "nid").join(F.broadcast(q), "qid")
-             .withColumn("cos", _dot(F.col("qv"), F.col("cv")))
-             .select("qid", "nid", "cos"))
-    return _topk_per_qid(exact, k)
+    probed = np.zeros((len(qids), len(C)), dtype=bool)
+    np.put_along_axis(probed, np.argsort(d2, axis=1)[:, :n_probe], True,
+                      axis=1)
+    return _pq_rank(_adc_scores(coded, qids, lut, probed), corpus,
+                    queries, k, refine, id_col, vec_col)
 
 
 def pq_save_index(spark, books: list, path: str) -> None:

@@ -612,16 +612,11 @@ def pretrain_filter(df: DataFrame, text_col: str,
         "dup_ngrams": lambda: _dup_ngram_passes_col(text_col),
         "repetition": lambda: _repetition_passes_col(text_col),
     }
-    wide: dict = {}
-    unknown = [s for s in stages if s not in narrow and s not in wide]
+    unknown = [s for s in stages if s not in narrow]
     if unknown:
         raise ValueError(f"unknown pretrain_filter stages: {unknown}")
     out = df.select(
-        id_col, *[narrow[s]().alias(f"__p_{s}__")
-                  for s in stages if s in narrow])
-    for s in stages:
-        if s in wide:
-            out = out.join(wide[s]().hint("merge"), id_col, "left")
+        id_col, *[narrow[s]().alias(f"__p_{s}__") for s in stages])
     keep = None
     reason = None
     for s in reversed(stages):

@@ -1582,6 +1582,50 @@ def test_ivfpq_topk_prunes_and_recalls(spark):
     assert all(rec_full.get(i, 0) >= rec.get(i, 0) for i in range(3))
 
 
+def _clustered_vectors(spark, seed):
+    """80 rows (id, vec): 10 well-separated 16-dim centers, 8 noisy
+    points each."""
+    import random
+    rng = random.Random(seed)
+    centers = [[rng.gauss(0, 1) * 5 for _ in range(16)] for _ in range(10)]
+    rows = [(c * 8 + j, [x + rng.gauss(0, 0.3) for x in centers[c]])
+            for c in range(10) for j in range(8)]
+    return spark.createDataFrame(rows, "id long, vec array<double>")
+
+
+@pytest.mark.parametrize("topk", ["brute_force_topk", "ivf_topk",
+                                  "pq_topk", "ivfpq_topk"])
+def test_topk_empty_query_frame(spark, topk):
+    """An empty query frame gives an empty (qid, nid, cos, rn) frame
+    on every top-k path, not a driver-side numpy crash."""
+    from tablite_spark.pipeline import similarity
+    df = _clustered_vectors(spark, 3)
+    kw = {"brute_force_topk": {},
+          "ivf_topk": {"n_lists": 5, "n_probe": 2},
+          "pq_topk": {"m": 4, "n_codes": 16, "refine": 2},
+          "ivfpq_topk": {"n_lists": 5, "n_probe": 2, "m": 4,
+                         "n_codes": 16}}[topk]
+    out = getattr(similarity, topk)(df, df.filter(F.lit(False)), k=5,
+                                    **kw)
+    assert out.columns == ["qid", "nid", "cos", "rn"]
+    assert out.collect() == []
+
+
+def test_pq_train_one_subspace_is_kmeans_sample_train(spark):
+    """With m=1 the single PQ codebook is the sample-trained k-means
+    of the unit vectors, bit for bit: one sample, one Lloyd's."""
+    import numpy as np
+
+    from tablite_spark.pipeline.similarity import (
+        _kmeans_sample_train, pq_train,
+    )
+    df = _clustered_vectors(spark, 3)
+    (book,) = pq_train(df, "id", "vec", m=1, n_codes=12)
+    cents = _kmeans_sample_train(df, "id", "vec", k=12, normalize=True)
+    assert book.shape == (12, 16)
+    assert book.tobytes() == np.array(cents, dtype=np.float64).tobytes()
+
+
 def test_optimal_lsh_params():
     """S-curve tuning: probability-mass minimization behaves as the
     theory says — higher thresholds push toward more rows per band
@@ -2686,6 +2730,21 @@ def test_pagerank_dangling_mass_redistributed(spark):
     total = sum(got.values())
     assert abs(total - 10 ** 12) < 10 * 2 * 4  # iters*N*(floors per rank)
     assert got[2] > got[1]  # the sink receives 1's mass plus its share
+
+
+def test_pagerank_is_ppr_seeded_with_every_node(spark):
+    """pagerank is personalized_pagerank restarting to all nodes: the
+    same rows, dangling node included."""
+    from tablite_spark.pipeline.graph import pagerank, personalized_pagerank
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (1, 4), (5, 1), (5, 1),
+             (2, 6)]  # 4 and 6 dangling, 5 has no in-edge
+    df = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(v,) for v in range(1, 7)],
+                                  "node long")
+    pr = pagerank(df, "src", "dst", iters=4)
+    ppr = personalized_pagerank(df, seeds, "src", "dst", iters=4)
+    assert pr.schema == ppr.schema
+    assert sorted(pr.collect()) == sorted(ppr.collect())
 
 
 def test_pagerank_checkpoint_blocks_bounded(spark):
