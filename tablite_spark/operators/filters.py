@@ -27,8 +27,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tablite_spark.plans.lifecycle import pin
-
 _OPS = {">", ">=", "==", "<", "<=", "!=", "in", "not in"}
 
 
@@ -158,16 +156,15 @@ def python_expression_mask(df: DataFrame, expression: str,
 
 
 def filter_pass_fail(df: DataFrame, expressions: list[dict] | str,
-                     filter_type: str = "all",
-                     single_pass: bool = False) -> tuple[DataFrame, DataFrame]:
+                     filter_type: str = "all") -> tuple[DataFrame, DataFrame]:
     """``Table.filter`` twin output (tablite/core.py:343-364).
 
-    Default: two filtered plans over the source — Catalyst pushes each
-    predicate into its own scan, and a parquet/cached source reads
-    twice but cheaply (column-pruned, predicate-paged). With
-    ``single_pass=True`` the input is persisted so the scan runs once
-    and both sides reuse it — right when the source is an expensive
-    upstream computation rather than a raw scan. (SURVEY §7 hard part
+    Two filtered plans over the source: Catalyst pushes each predicate
+    into its own scan, and a parquet/cached source reads twice but
+    cheaply (column-pruned, predicate-paged). Nothing is pinned, so no
+    call leaves cached blocks behind; a caller that reads both sides
+    of an expensive upstream pins it itself
+    (:func:`tablite_spark.plans.lifecycle.pin`). (SURVEY §7 hard part
     4: the reference writes both sides in one pass by construction;
     Spark's equivalent is plan reuse via persist, not a custom sink.)
     """
@@ -175,8 +172,6 @@ def filter_pass_fail(df: DataFrame, expressions: list[dict] | str,
         mask = mask_from_string(expressions, df)
     else:
         mask = mask_from_expressions(df, expressions, filter_type)
-    if single_pass:
-        df = pin(df, eager=False)
     # null mask (e.g. comparison against NULL) goes to the fail side,
     # matching the reference where a non-True evaluation fails the row.
     return df.filter(mask), df.filter(~F.coalesce(mask, F.lit(False)))

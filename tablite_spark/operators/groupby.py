@@ -165,11 +165,6 @@ def transpose(df: DataFrame) -> DataFrame:
     return spark.createDataFrame(out_rows, schema=[str(c) for c in new_cols])
 
 
-def histogram(df: DataFrame, column: str) -> DataFrame:
-    """Value→count for one column (tablite/base.py:981-1005)."""
-    return df.groupBy(column).agg(F.count(F.lit(1)).alias("count"))
-
-
 def top_k_per_group(df, keys: list[str], order_col: str, k: int,
                     ascending: bool = False,
                     tiebreak: list[str] | None = None,

@@ -222,6 +222,7 @@ def statistics_dict(df: DataFrame, column: str) -> dict:
 
 
 def histogram(df: DataFrame, column: str) -> DataFrame:
+    """Value→count for one column (tablite/base.py:981-1005)."""
     return df.groupBy(column).agg(F.count(F.lit(1)).alias("count"))
 
 

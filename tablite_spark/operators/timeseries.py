@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tablite_spark.plans.lifecycle import pin, release
+from tablite_spark.plans.lifecycle import pin
 
 __all__ = ["ohlc_resample", "funnel", "retention_cohorts",
            "interpolate_at", "ema_smooth", "rolling_agg",
@@ -83,9 +83,7 @@ def ohlc_resample(df: DataFrame, ts_col: str, val_col: str,
 def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
            user_col: str = "user_id",
            type_col: str = "event_type",
-           single_scan: bool = False,
-           within_seconds: int | None = None,
-           _materialize: bool = True) -> DataFrame:
+           within_seconds: int | None = None) -> DataFrame:
     """Ordered funnel: per user, the earliest time each successive
     step was completed STRICTLY AFTER the previous step's time
     (view -> click -> purchase). Returns one row per user who
@@ -101,40 +99,20 @@ def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
     (user, timestamp) pairs move, never the event payload or a
     per-user ordered window (which would serialize hot users).
 
-    Source-scan cost: the default lazy plan filters the events frame
-    once per step — each branch pushes ``type = step`` into the scan,
-    so on a type-partitioned (or dictionary-filtered parquet) source
-    every branch reads only its own step's rows and the total IO is
-    one logical pass. On an UNPARTITIONED source that is k physical
-    scans; pass ``single_scan=True`` to project+filter
-    ``type IN steps → (user, type, ts)`` once into a spilled cache
-    and feed every step from it — one scan of the relation total.
-    That path is EAGER: the chain is pinned eagerly so the cache can
-    be released before returning, and the returned frame is that
-    pin (one narrow row per step-0 user) — free it with
-    :func:`tablite_spark.plans.lifecycle.release` when done. With
-    ``_materialize=False`` the lazy chain is returned still reading
-    the cached base; run it inside
-    :func:`tablite_spark.plans.lifecycle.scope` to free the base.
+    Source-scan cost: the plan filters the events frame once per
+    step — each branch pushes ``type = step`` into the scan, so on a
+    type-partitioned (or dictionary-filtered parquet) source every
+    branch reads only its own step's rows and the total IO is one
+    logical pass.
     """
     if len(steps) < 1:
         raise ValueError("funnel needs at least one step")
     ts, u = F.col(ts_col), F.col(user_col)
     cols = [f"t_{s}" for s in steps]
-    base = None
-    if single_scan and len(steps) > 1:
-        base = pin(events.filter(F.col(type_col).isin(list(steps)))
-                   .select(u.alias("user_id_"),
-                           F.col(type_col).alias("type_"),
-                           ts.alias("ts_")), eager=False)
 
-        def step_events(s):
-            return base.filter(F.col("type_") == s) \
-                       .select("user_id_", "ts_")
-    else:
-        def step_events(s):
-            return (events.filter(F.col(type_col) == s)
-                    .select(u.alias("user_id_"), ts.alias("ts_")))
+    def step_events(s):
+        return (events.filter(F.col(type_col) == s)
+                .select(u.alias("user_id_"), ts.alias("ts_")))
 
     cur = (step_events(steps[0])
            .groupBy("user_id_")
@@ -156,11 +134,7 @@ def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
                .groupBy("user_id_")
                .agg(F.min("ts_").alias(cols[i])))
         cur = cur.join(nxt, "user_id_", "left")
-    cur = cur.withColumnRenamed("user_id_", user_col)
-    if base is not None and _materialize:
-        cur = pin(cur, eager=True)
-        release(base)
-    return cur
+    return cur.withColumnRenamed("user_id_", user_col)
 
 
 def retention_cohorts(events: DataFrame, ts_col: str = "ts",
@@ -400,8 +374,7 @@ def _halo_buckets(df: DataFrame, ts_col: str, span_us: int,
 def rolling_agg(df: DataFrame, ts_col: str, val_col: str,
                 by: list[str], window: str,
                 funcs: tuple[str, ...] = ("avg", "min", "max",
-                                          "count"),
-                engine: str = "kernel") -> DataFrame:
+                                          "count")) -> DataFrame:
     """Trailing time-range rolling aggregates: for every row, the
     aggregate of ``val_col`` over the rows of the same ``by`` group
     whose timestamp lies in ``[ts - window, ts]`` (inclusive both
@@ -416,23 +389,21 @@ def rolling_agg(df: DataFrame, ts_col: str, val_col: str,
     (aggregates have no retraction), so the expression form is
     O(rows x frame-width) per key — the r10 burn-in's hot key
     (4M rows, ~720k-row frames) is ~3e12 row-adds and never
-    finishes. The default ``engine='kernel'`` is ONE hash(by)
-    shuffle then one Arrow pass per co-located partition (the EMA
-    discipline): per key, rows collapse to per-TIMESTAMP partials
-    (peers aggregate once by construction), count rolls by exact
-    integer cumulative-sum differencing, sum/min/max by pandas'
-    time rolling (Kahan-compensated sum / monotonic-deque min-max)
-    — O(n log n) per key, independent of frame width. ``engine='window'`` keeps the pure-expression JVM form:
-    correct, zero-UDF, and fine when frames are guaranteed narrow
-    (tens of rows); both paths are tested equal.
+    finishes. This kernel is ONE hash(by) shuffle then one Arrow
+    pass per co-located partition (the EMA discipline): per key, rows
+    collapse to per-TIMESTAMP partials (peers aggregate once by
+    construction), count rolls by exact integer cumulative-sum
+    differencing, sum/min/max by pandas' time rolling
+    (Kahan-compensated sum / monotonic-deque min-max) — O(n log n)
+    per key, independent of frame width.
 
     NULL values never contribute; a frame whose values are all NULL
     yields NULL aggregates (count 0) — standard SQL frame semantics.
     A row with a NULL timestamp has no frame: all its rolling outputs
     are NULL and it never contributes to any other row's frame.
 
-    UNGROUPED series (``by=[]``) distribute too: both engines bucket
-    the time axis at 4× the frame span with a trailing-span halo
+    UNGROUPED series (``by=[]``) distribute too: the time axis is
+    bucketed at 4× the frame span with a trailing-span halo
     (``_halo_buckets``) — each bucket partition carries the preceding
     span's rows as discarded-output context, so no task ever holds
     more than one bucket of the corpus and parallelism scales with
@@ -451,47 +422,6 @@ def rolling_agg(df: DataFrame, ts_col: str, val_col: str,
     for f in funcs:
         if f not in makers:
             raise ValueError(f"unknown rolling func {f!r}")
-    if engine == "window":
-        from pyspark.sql import Window
-        src, parts = df, [F.col(k) for k in by]
-        if not by:
-            # UNGROUPED: an empty partitionBy is a global window —
-            # the whole series through ONE task. Bucket by time with
-            # a trailing halo instead: frames stay complete inside
-            # each bucket partition, halo rows' results are dropped.
-            src = _halo_buckets(df, ts_col, span_us)
-            parts = [F.col("__bkt__")]
-        ts = F.col(ts_col)
-        if dict(src.dtypes).get(ts_col) == "timestamp_ntz":
-            # unix_micros only accepts TIMESTAMP; reinterpreting NTZ
-            # in the session zone is monotone (UTC sessions)
-            ts = ts.cast("timestamp")
-        w = (Window.partitionBy(*parts)
-             .orderBy(F.unix_micros(ts))
-             .rangeBetween(-span_us, 0))
-        mk = {"avg": F.avg, "min": F.min, "max": F.max,
-              "sum": F.sum, "count": F.count}
-        v = F.col(val_col)
-        # one select -> ONE Window operator for all aggregates.
-        # NULL-ts rows form their own peer group under a range
-        # frame (they'd aggregate EACH OTHER) — mask their outputs
-        # to NULL to honor the no-frame contract. They can never
-        # appear in a non-NULL row's frame (NULL unix_micros is
-        # outside every finite range), so masking is sufficient;
-        # NULL values inside frames are already ignored by the
-        # aggregates themselves.
-        rolls = [F.when(F.col(ts_col).isNotNull(),
-                        mk[f](v).over(w)).alias(f"roll_{f}")
-                 for f in funcs]
-        out = src.select("*", *rolls)
-        if not by:
-            out = out.filter(F.col("__core__")).drop("__bkt__",
-                                                     "__core__")
-        return out
-    if engine != "kernel":
-        raise ValueError(f"engine must be 'kernel' or 'window', "
-                         f"got {engine!r}")
-
     from pyspark.sql.types import (
         DoubleType, LongType, StructField, StructType,
     )

@@ -7,10 +7,10 @@ work on the typed part while payloads stay opaque bytes.
 
 Decode / feature-extract run as Arrow-batched pandas functions via
 ``mapInPandas``. PNG (pipeline/png.py), baseline JPEG
-(pipeline/jpeg.py), WAV, and MJPEG-AVI video (pipeline/avi.py)
-decode for REAL — pure stdlib+numpy codecs, no imaging library
-needed. Other formats (WebP/GIF, temporally-compressed video)
-remain deterministic fakes / null-degrading fallbacks behind the
+(pipeline/jpeg.py), GIF (pipeline/gif.py), WAV, and MJPEG-AVI video
+(pipeline/avi.py) decode for REAL — pure stdlib+numpy codecs, no
+imaging library needed. Other formats (WebP, temporally-compressed
+video) remain deterministic fakes / null-degrading fallbacks behind the
 same tested Spark plumbing (schema, batching, partition shape);
 swapping in PIL/pyav later changes ONE function body.
 """

@@ -9,6 +9,9 @@ one narrow scan.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -171,8 +174,7 @@ def _gopher_columns(text_col: str, min_words: int,
 
 
 def gopher_repetition(df: DataFrame, text_col: str,
-                      id_col: str = "doc_id",
-                      impl: str = "arrow") -> DataFrame:
+                      id_col: str = "doc_id") -> DataFrame:
     """Gopher repetition-removal signals (Rae et al. 2021,
     arXiv:2112.11446 Appendix A1, public): within-document duplicate
     line / paragraph fractions (by count and by character mass) and
@@ -181,124 +183,24 @@ def gopher_repetition(df: DataFrame, text_col: str,
     0.30 / 0.20 / 0.20 / 0.20 / 0.18 / 0.16) — no float ratios, so an
     independent SQL engine replays every number bit-for-bit.
 
-    Plan shape: the line/paragraph census is pure array expressions
-    (no shuffle); the top-n-gram search tags each n and explodes once
-    → ONE combinable groupBy(doc, n, gram) + one groupBy(doc, n)
-    max-struct (deterministic tie-break: count, then gram length,
-    then binary gram order) + conditional aggregation back to one row
-    per doc. Two narrow shuffles total, no UDF, no window functions.
-    n-gram char mass uses ``count * len(gram)`` over a
-    ``length(text)`` denominator — the common public reading of the
-    paper's "fraction of characters contained within" phrasing.
-
-    ``impl``: the top-n-gram search is per-document-independent, so
-    the default ``"arrow"`` path computes it as a zero-shuffle
-    Arrow-batched struct column (same rationale, parity contract and
-    ASCII whitespace tokenization as ``gopher_dup_ngram_coverage``); the
-    line/paragraph census is narrow expressions in BOTH impls.
-    ``impl="expr"`` keeps the all-JVM explode + two-groupBy search.
-    The lexicographic (count, len, gram) tie-break reduces to
-    max-by-(count, len) for the returned product, so the two paths
-    agree exactly."""
-    c = F.col(text_col)
-    lines = F.split(c, "\n")
-    paras = F.split(c, "\n\n")
-    words = F.filter(F.split(F.trim(c), r"\s+"),
-                     lambda w: w != F.lit(""))
-
-    def _chars(arr):
-        return F.aggregate(arr, F.lit(0).cast("long"),
-                           lambda a, x: a + F.length(x))
-
-    base = df.select(
-        F.col(id_col), c.alias("__text__"), words.alias("__w__"),
-        F.size(lines).cast("long").alias("n_lines"),
-        F.size(F.array_distinct(lines)).cast("long").alias("n_uniq_lines"),
-        _chars(lines).alias("line_chars"),
-        _chars(F.array_distinct(lines)).alias("uniq_line_chars"),
-        F.size(paras).cast("long").alias("n_paras"),
-        F.size(F.array_distinct(paras)).cast("long").alias("n_uniq_paras"),
-        _chars(paras).alias("para_chars"),
-        _chars(F.array_distinct(paras)).alias("uniq_para_chars"),
-        F.length(c).cast("long").alias("n_chars"))
-
-    n_words = F.size("__w__")
-    grams = None
-    for n in (2, 3, 4):
-        g = F.when(
-            n_words >= n,
-            F.transform(F.sequence(F.lit(1), n_words - F.lit(n - 1)),
-                        lambda i: F.concat_ws(
-                            " ", F.slice(F.col("__w__"), i, n)))
-        ).otherwise(F.array().cast("array<string>"))
-        tagged = F.transform(g, lambda x: F.struct(
-            F.lit(n).alias("n"), x.alias("gram")))
-        grams = tagged if grams is None else F.concat(grams, tagged)
-    if impl == "arrow":
-        j = (base.withColumn("__t__", _top_ngram_census("__text__"))
-             .drop("__text__", "__w__")
-             .select("*", "__t__.*").drop("__t__"))
-        return _repetition_rules(j, id_col)
-    if impl != "expr":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    exploded = base.select(id_col, F.explode(grams).alias("__g__")) \
-        .select(id_col, F.col("__g__.n").alias("__n__"),
-                F.col("__g__.gram").alias("__gram__"))
-    counts = (exploded.groupBy(id_col, "__n__", "__gram__")
-              .agg(F.count(F.lit(1)).alias("__cnt__")))
-    tops = (counts.groupBy(id_col, "__n__")
-            .agg(F.max(F.struct(F.col("__cnt__").alias("c"),
-                                F.length("__gram__").alias("l"),
-                                F.col("__gram__").alias("g")))
-                 .alias("__top__"))
-            .groupBy(id_col)
-            .agg(*[F.max(F.when(F.col("__n__") == n,
-                                F.col("__top__.c").cast("long")
-                                * F.col("__top__.l").cast("long")))
-                   .alias(f"top{n}_chars") for n in (2, 3, 4)]))
-    # tops is one row per doc — corpus-scaling, never broadcastable;
-    # pin sort-merge (see gopher_dup_ngram_coverage on why estimates
-    # can get this wrong after explodes)
-    j = base.drop("__text__", "__w__") \
-        .join(tops.hint("merge"), id_col, "left") \
-        .na.fill({f"top{n}_chars": 0 for n in (2, 3, 4)})
-    return _repetition_rules(j, id_col)
+    Plan shape: one scan, zero shuffles. The line/paragraph census is
+    array expressions; the top-n-gram search is per-document
+    independent, so it runs as one Arrow-batched struct column (same
+    ASCII whitespace tokenization as ``gopher_dup_ngram_coverage``).
+    The top gram is the max by (count, gram length), the product the
+    lexicographic (count, len, gram) tie-break returns. n-gram char
+    mass uses ``count * len(gram)`` over a ``length(text)``
+    denominator — the common public reading of the paper's "fraction
+    of characters contained within" phrasing."""
+    cols = _repetition_columns(text_col)
+    return df.select(F.col(id_col),
+                     *[v.alias(k) for k, v in cols.items()])
 
 
-def _repetition_rules(j: DataFrame, id_col: str) -> DataFrame:
-    r = {
-        # dup_frac <= 0.30  <=>  10*(n - uniq) <= 3*n
-        "r_dup_lines": 10 * (F.col("n_lines") - F.col("n_uniq_lines"))
-        <= 3 * F.col("n_lines"),
-        "r_dup_paras": 10 * (F.col("n_paras") - F.col("n_uniq_paras"))
-        <= 3 * F.col("n_paras"),
-        # char_frac <= 0.20  <=>  5*(chars - uniq_chars) <= chars
-        "r_dup_line_chars": 5 * (F.col("line_chars")
-                                 - F.col("uniq_line_chars"))
-        <= F.col("line_chars"),
-        "r_dup_para_chars": 5 * (F.col("para_chars")
-                                 - F.col("uniq_para_chars"))
-        <= F.col("para_chars"),
-        # 0.20 / 0.18 / 0.16 over length(text)
-        "r_top2": 5 * F.col("top2_chars") <= F.col("n_chars"),
-        "r_top3": 50 * F.col("top3_chars") <= 9 * F.col("n_chars"),
-        "r_top4": 25 * F.col("top4_chars") <= 4 * F.col("n_chars"),
-    }
-    passes = None
-    for v in r.values():
-        passes = v if passes is None else (passes & v)
-    return j.select(id_col, "n_lines", "n_uniq_lines", "line_chars",
-                    "uniq_line_chars", "n_paras", "n_uniq_paras",
-                    "para_chars", "uniq_para_chars", "n_chars",
-                    "top2_chars", "top3_chars", "top4_chars",
-                    *[v.alias(k) for k, v in r.items()],
-                    passes.alias("passes"))
-
-
-def _repetition_passes_col(text_col: str):
-    """Gopher repetition `passes` as one narrow Column: line/para
-    census as array expressions + the arrow top-ngram census struct —
-    lets pretrain_filter inline the stage with zero joins/shuffles."""
+def _repetition_columns(text_col: str) -> dict:
+    """The Gopher repetition census and rule expressions as named
+    Columns (ordered dict) — shared by :func:`gopher_repetition` and
+    :func:`pretrain_filter`, which inlines ``passes``."""
     c = F.col(text_col)
     lines = F.split(c, "\n")
     paras = F.split(c, "\n\n")
@@ -307,37 +209,48 @@ def _repetition_passes_col(text_col: str):
         return F.aggregate(arr, F.lit(0).cast("long"),
                            lambda a, x: a + F.length(x))
 
-    n_lines = F.size(lines).cast("long")
-    n_uniq_lines = F.size(F.array_distinct(lines)).cast("long")
-    line_chars = _chars(lines)
-    uniq_line_chars = _chars(F.array_distinct(lines))
-    n_paras = F.size(paras).cast("long")
-    n_uniq_paras = F.size(F.array_distinct(paras)).cast("long")
-    para_chars = _chars(paras)
-    uniq_para_chars = _chars(F.array_distinct(paras))
-    n_chars = F.length(c).cast("long")
     tc = _top_ngram_census(text_col)
-    rules = [
-        10 * (n_lines - n_uniq_lines) <= 3 * n_lines,
-        10 * (n_paras - n_uniq_paras) <= 3 * n_paras,
-        5 * (line_chars - uniq_line_chars) <= line_chars,
-        5 * (para_chars - uniq_para_chars) <= para_chars,
-        5 * tc.getField("top2_chars") <= n_chars,
-        50 * tc.getField("top3_chars") <= 9 * n_chars,
-        25 * tc.getField("top4_chars") <= 4 * n_chars,
-    ]
-    passes = None
-    for r in rules:
-        passes = r if passes is None else (passes & r)
-    return passes
+    out = {
+        "n_lines": F.size(lines).cast("long"),
+        "n_uniq_lines": F.size(F.array_distinct(lines)).cast("long"),
+        "line_chars": _chars(lines),
+        "uniq_line_chars": _chars(F.array_distinct(lines)),
+        "n_paras": F.size(paras).cast("long"),
+        "n_uniq_paras": F.size(F.array_distinct(paras)).cast("long"),
+        "para_chars": _chars(paras),
+        "uniq_para_chars": _chars(F.array_distinct(paras)),
+        "n_chars": F.length(c).cast("long"),
+        **{f"top{n}_chars": tc.getField(f"top{n}_chars")
+           for n in (2, 3, 4)},
+    }
+    rules = {
+        # dup_frac <= 0.30  <=>  10*(n - uniq) <= 3*n
+        "r_dup_lines": 10 * (out["n_lines"] - out["n_uniq_lines"])
+        <= 3 * out["n_lines"],
+        "r_dup_paras": 10 * (out["n_paras"] - out["n_uniq_paras"])
+        <= 3 * out["n_paras"],
+        # char_frac <= 0.20  <=>  5*(chars - uniq_chars) <= chars
+        "r_dup_line_chars": 5 * (out["line_chars"]
+                                 - out["uniq_line_chars"])
+        <= out["line_chars"],
+        "r_dup_para_chars": 5 * (out["para_chars"]
+                                 - out["uniq_para_chars"])
+        <= out["para_chars"],
+        # 0.20 / 0.18 / 0.16 over length(text)
+        "r_top2": 5 * out["top2_chars"] <= out["n_chars"],
+        "r_top3": 50 * out["top3_chars"] <= 9 * out["n_chars"],
+        "r_top4": 25 * out["top4_chars"] <= 4 * out["n_chars"],
+    }
+    out.update(rules)
+    out["passes"] = reduce(operator.and_, rules.values())
+    return out
 
 
 def _top_ngram_census(text_col: str):
     """Arrow-batched per-document top word-{2,3,4}-gram char mass
     (count x gram length of the (count, len)-max gram) — scan-local,
-    zero shuffle; tokenizes on Java's ASCII \\s class for exact
-    expression-path/oracle parity. Null/short docs report 0, the
-    expression path's left-join + fill semantics."""
+    zero shuffle; tokenizes on Java's ASCII \\s class, the split the
+    DuckDB oracle uses. Null/short docs report 0."""
     import re
 
     ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
@@ -366,8 +279,8 @@ def _top_ngram_census(text_col: str):
 
 def gopher_dup_ngram_coverage(df: DataFrame, text_col: str,
                               id_col: str = "doc_id",
-                              n_values: tuple = (5, 6, 7, 8, 9, 10),
-                              impl: str = "arrow") -> DataFrame:
+                              n_values: tuple = (5, 6, 7, 8, 9, 10)
+                              ) -> DataFrame:
     """The other half of Gopher's repetition table (Rae et al. 2021
     Appendix A1): for each n in 5..10, the fraction of characters
     covered by word n-grams that occur MORE THAN ONCE within the same
@@ -376,125 +289,38 @@ def gopher_dup_ngram_coverage(df: DataFrame, text_col: str,
     counts once, exactly the mark-the-characters reading public
     implementations use — so the numerator is the char mass of
     covered word positions, an integer both engines compute
-    identically (inter-word whitespace excluded).
+    identically (inter-word whitespace excluded). Thresholds are
+    integer cross-multiplications.
 
-    Plan shape (the substring_dedup coverage machinery, per-doc):
-    tagged (n, start-position, gram-hash) explode → within-doc census
-    groupBy(doc, n, hash) → duplicated starts explode into covered
-    positions → distinct → join word lengths → one combinable groupBy
-    back to a row per doc. Gram identity uses xxhash64 of the joined
-    gram (collision odds ~n_grams²/2⁶⁴ per doc — irrelevant at
-    document scale). Thresholds again as integer
-    cross-multiplications.
-
-    ``impl``: the census is PER-DOCUMENT-independent work, and the
-    default ``"arrow"`` path computes it as a zero-shuffle
-    Arrow-batched pandas UDF over the text column — measured 7.7x
-    faster than the expression census at sf0.1 (0.85 s vs 6.5 s
-    steady) with bit-identical output on every document, and at
-    100 TB it moves NO data (the expression path shuffles ~6 tagged
-    rows per word through three doc-keyed exchanges).
-    ``impl="expr"`` keeps the all-JVM higher-order-expression census
-    (no Python in the row path); both paths are parity-tested."""
-    if impl == "arrow":
-        j = df.select(F.col(id_col),
-                      _dup_ngram_census(text_col, n_values)
-                      .alias("__c__")).select(id_col, "__c__.*")
-        return _dup_ngram_rules(j, id_col, n_values)
-    if impl != "expr":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    c = F.col(text_col)
-    words = F.filter(F.split(F.trim(c), r"\s+"),
-                     lambda w: w != F.lit(""))
-    base = df.select(F.col(id_col), words.alias("__w__"),
-                     F.aggregate(words, F.lit(0).cast("long"),
-                                 lambda a, w: a + F.length(w))
-                     .alias("word_chars"))
-    n_words = F.size("__w__")
-    tagged = None
-    for n in n_values:
-        g = F.when(
-            n_words >= n,
-            F.transform(F.sequence(F.lit(1), n_words - F.lit(n - 1)),
-                        lambda i: F.struct(
-                            F.lit(n).alias("n"),
-                            (i - 1).alias("j"),
-                            F.xxhash64(F.concat_ws(
-                                " ", F.slice(F.col("__w__"), i, n)))
-                            .alias("h")))
-        ).otherwise(F.array().cast(
-            "array<struct<n:int,j:int,h:bigint>>"))
-        tagged = g if tagged is None else F.concat(tagged, g)
-    grams = base.select(id_col, F.explode(tagged).alias("__g__")) \
-        .select(id_col, "__g__.n", "__g__.j", "__g__.h")
-    # every join side below carries doc_id and therefore scales WITH
-    # the corpus — none is ever safely broadcastable, but Catalyst's
-    # planning-time estimates don't account for explode fan-out and
-    # can pick a static broadcast that OOMs (reproduced at 200k docs
-    # under a default-memory driver). The merge hints pin sort-merge;
-    # AQE still handles skew within them.
-    dup_keys = (grams.groupBy(id_col, "n", "h")
-                .agg(F.count(F.lit(1)).alias("__cnt__"))
-                .filter(F.col("__cnt__") > 1)
-                .select(id_col, "n", "h"))
-    dup_starts = grams.join(dup_keys.hint("merge"),
-                            [id_col, "n", "h"], "left_semi") \
-        .select(id_col, "n", "j")
-    covered = (dup_starts
-               .select(id_col, "n",
-                       F.explode(F.sequence(
-                           F.col("j"), F.col("j") + F.col("n") - 1))
-                       .alias("p"))
-               .distinct())
-    toks = base.select(
-        id_col, F.posexplode("__w__").alias("p", "__tok__")) \
-        .select(id_col, "p", F.length("__tok__").alias("__len__"))
-    per_n = (covered.join(toks.hint("merge"), [id_col, "p"])
-             .groupBy(id_col)
-             .agg(*[F.sum(F.when(F.col("n") == n, F.col("__len__"))
-                          .otherwise(F.lit(0))).cast("long")
-                    .alias(f"dup{n}_chars") for n in n_values]))
-    out = base.select(id_col, "word_chars") \
-        .join(per_n.hint("merge"), id_col, "left") \
-        .na.fill({f"dup{n}_chars": 0 for n in n_values})
-    return _dup_ngram_rules(out, id_col, n_values)
+    Plan shape: the census is per-document independent, so it runs as
+    one Arrow-batched struct column over the text — one scan, zero
+    shuffles, and at 100 TB it moves no data."""
+    cols = _dup_ngram_columns(text_col, n_values)
+    return df.select(F.col(id_col),
+                     *[v.alias(k) for k, v in cols.items()])
 
 
-def _dup_ngram_rules(out: DataFrame, id_col: str,
-                     n_values: tuple) -> DataFrame:
+def _dup_ngram_columns(text_col: str,
+                       n_values: tuple = (5, 6, 7, 8, 9, 10)) -> dict:
+    """The dup-n-gram census and rule expressions as named Columns
+    (ordered dict) — shared by :func:`gopher_dup_ngram_coverage` and
+    :func:`pretrain_filter`, which inlines ``passes``."""
+    cc = _dup_ngram_census(text_col, n_values)
     # thresholds 0.15 .. 0.10: frac <= t  <=>  100*dup <= 100t*chars
     th = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
-    rules = {f"r_dup{n}": 100 * F.col(f"dup{n}_chars")
-             <= th[n] * F.col("word_chars") for n in n_values}
-    passes = None
-    for v in rules.values():
-        passes = v if passes is None else (passes & v)
-    return out.select(id_col, "word_chars",
-                      *[F.col(f"dup{n}_chars") for n in n_values],
-                      *[v.alias(k) for k, v in rules.items()],
-                      passes.alias("passes"))
-
-
-def _dup_ngram_passes_col(text_col: str,
-                          n_values: tuple = (5, 6, 7, 8, 9, 10)):
-    """`passes` as a single narrow Column over the arrow census
-    struct — lets pretrain_filter inline the dup-ngram gate with
-    zero joins/shuffles."""
-    cc = _dup_ngram_census(text_col, n_values)
-    th = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
-    passes = None
-    for n in n_values:
-        r = (100 * cc.getField(f"dup{n}_chars")
-             <= th[n] * cc.getField("word_chars"))
-        passes = r if passes is None else (passes & r)
-    return passes
+    out = {"word_chars": cc.getField("word_chars"),
+           **{f"dup{n}_chars": cc.getField(f"dup{n}_chars")
+              for n in n_values}}
+    rules = {f"r_dup{n}": 100 * out[f"dup{n}_chars"]
+             <= th[n] * out["word_chars"] for n in n_values}
+    out.update(rules)
+    out["passes"] = reduce(operator.and_, rules.values())
+    return out
 
 
 def _dup_ngram_census(text_col: str, n_values: tuple):
     """Arrow-batched per-document duplicated-n-gram census: returns a
-    struct column (word_chars, dup{n}_chars...) computed scan-local —
-    the per-doc independence of the census means NO shuffle is
-    inherent, only the expression path's encoding of it was."""
+    struct column (word_chars, dup{n}_chars...) computed scan-local."""
     fields = ", ".join(["word_chars: long"]
                        + [f"dup{n}_chars: long" for n in n_values])
     schema = "struct<" + fields.replace(": ", ":") + ">"
@@ -503,7 +329,7 @@ def _dup_ngram_census(text_col: str, n_values: tuple):
 
     # EXACTLY Java's \s class (ASCII) — python str.split() would
     # also split on unicode whitespace (NBSP etc.) and silently
-    # diverge from the expression path / the DuckDB oracle
+    # diverge from the DuckDB oracle
     ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
 
     @F.pandas_udf(schema)
@@ -512,8 +338,8 @@ def _dup_ngram_census(text_col: str, n_values: tuple):
                **{f"dup{n}_chars": [] for n in n_values}}
         for text in s:
             if text is None:
-                # expression-path parity: null text -> null word
-                # census (rules evaluate to null), dup counts 0
+                # null text -> null word census (rules evaluate to
+                # null), dup counts 0
                 out["word_chars"].append(None)
                 for n in n_values:
                     out[f"dup{n}_chars"].append(0)
@@ -595,8 +421,7 @@ def pretrain_filter(df: DataFrame, text_col: str,
     (null when kept) — the per-stage attrition report every
     data-pipeline dashboard wants.
 
-    Plan shape: since the arrow censuses, EVERY stage's passes
-    column is narrow — gopher and c4 as pure expressions, repetition
+    Plan shape: EVERY stage's passes column is narrow — gopher and c4 as pure expressions, repetition
     and dup_ngrams as zero-shuffle Arrow-batched struct columns — so
     the whole composed gate is ONE scan with zero joins and zero
     exchanges at any corpus size (plan-gated in
@@ -606,11 +431,8 @@ def pretrain_filter(df: DataFrame, text_col: str,
         "gopher": lambda: _gopher_columns(
             text_col, min_words, 100_000)["passes"],
         "c4": lambda: _c4_columns(text_col, 3)["keep_page"],
-        # the arrow censuses made the census stages scan-local too:
-        # passes computed inline from struct columns, no id-keyed
-        # joins — the whole default gate is ONE zero-shuffle scan
-        "dup_ngrams": lambda: _dup_ngram_passes_col(text_col),
-        "repetition": lambda: _repetition_passes_col(text_col),
+        "dup_ngrams": lambda: _dup_ngram_columns(text_col)["passes"],
+        "repetition": lambda: _repetition_columns(text_col)["passes"],
     }
     unknown = [s for s in stages if s not in narrow]
     if unknown:
@@ -814,8 +636,7 @@ def chunk_documents(df: DataFrame, text_col: str, id_col: str,
 
 def contamination_check(df: DataFrame, probes: DataFrame, text_col: str,
                         id_col: str, probe_text_col: str,
-                        probe_id_col: str, n: int = 8,
-                        broadcast_probes: bool = True) -> DataFrame:
+                        probe_id_col: str, n: int = 8) -> DataFrame:
     """Benchmark-decontamination scan: for each (document, probe) pair
     that shares at least one token n-gram, the fraction of the probe's
     n-grams contained in the document.
@@ -824,9 +645,8 @@ def contamination_check(df: DataFrame, probes: DataFrame, text_col: str,
     token window — postings are (long, id), never materialized 8-token
     strings — and meet in a hash join on the gram hash: candidate pairs
     only, never documents × probes. The probe side (a benchmark suite)
-    is small by construction, so its postings are BROADCAST
-    (``broadcast_probes=False`` opts out for huge probe sets): the doc
-    postings then never shuffle at all — the whole scan is one pass
+    is small by construction, so its postings are BROADCAST: the doc
+    postings never shuffle at all — the whole scan is one pass
     over the corpus plus a tiny aggregation of the rare hits. With long
     n-grams (n=8 default) shared grams are rare, so the join output
     stays near-linear; a contaminated pair surfaces with overlap ≈ 1.0.
@@ -843,8 +663,7 @@ def contamination_check(df: DataFrame, probes: DataFrame, text_col: str,
     probe_grams = pin(probes.select(
         F.col(probe_id_col).alias("probe_id_"),
         _gram_hashes(F.col(probe_text_col), n).alias("gs")), eager=True)
-    return _confirm_overlap(doc_g, probe_grams, id_col, probe_id_col,
-                            broadcast_probes)
+    return _confirm_overlap(doc_g, probe_grams, id_col, probe_id_col)
 
 
 def _gram_hashes(c, n: int):
@@ -865,15 +684,13 @@ def _gram_hashes(c, n: int):
 
 
 def _confirm_overlap(doc_g: DataFrame, probe_grams: DataFrame,
-                     id_col: str, probe_id_col: str,
-                     broadcast_probes: bool) -> DataFrame:
+                     id_col: str, probe_id_col: str) -> DataFrame:
     """Shared exact-confirm tail: join candidate doc grams against the
     probe postings, count shared grams, normalize by probe size."""
     probe_sizes = probe_grams.select("probe_id_",
                                      F.size("gs").alias("n_probe_grams"))
-    probe_g = probe_grams.select("probe_id_", F.explode("gs").alias("g"))
-    if broadcast_probes:
-        probe_g = F.broadcast(probe_g)
+    probe_g = F.broadcast(probe_grams.select(
+        "probe_id_", F.explode("gs").alias("g")))
     hits = (doc_g.join(probe_g, "g")
             .groupBy("doc_id_", "probe_id_")
             .agg(F.count(F.lit(1)).alias("shared_grams")))
@@ -888,8 +705,8 @@ def _confirm_overlap(doc_g: DataFrame, probe_grams: DataFrame,
 def bloom_decontaminate(df: DataFrame, probes: DataFrame, text_col: str,
                         id_col: str, probe_text_col: str,
                         probe_id_col: str, n: int = 8,
-                        bits_per_gram: int = 12, num_hashes: int = 7,
-                        broadcast_probes: bool = True) -> DataFrame:
+                        bits_per_gram: int = 12,
+                        num_hashes: int = 7) -> DataFrame:
     """``contamination_check`` with a broadcast **Bloom prefilter** —
     the output is IDENTICAL (exact): the Bloom filter only prunes,
     false positives are removed by the exact confirm join and false
@@ -964,8 +781,7 @@ def bloom_decontaminate(df: DataFrame, probes: DataFrame, text_col: str,
     doc_g = respread(df).select(
         F.col(id_col).alias("doc_id_"),
         F.explode(_bloom_keep(_gram_hashes(F.col(text_col), n))).alias("g"))
-    return _confirm_overlap(doc_g, probe_grams, id_col, probe_id_col,
-                            broadcast_probes)
+    return _confirm_overlap(doc_g, probe_grams, id_col, probe_id_col)
 
 
 def pack_chunks(chunks: DataFrame, tokens_col: str,

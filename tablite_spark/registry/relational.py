@@ -968,9 +968,8 @@ def xls_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     """E2E legacy-.xls proof via the stdlib xlslite codec (OLE2
     compound file + BIFF8 records, sources/xlslite.py — the
     reference's .xls dispatch is tablite/import_utils.py:633-648):
-    write nation with the fixture writer, re-read through from_file
-    (xlrd absent in this container → xlslite path), aggregate against
-    the parquet source."""
+    write nation with the fixture writer, re-read through from_file,
+    aggregate against the parquet source."""
     from tablite_spark.sources.io import from_file
     from tablite_spark.sources.xlslite import write_xls
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name",
@@ -990,9 +989,8 @@ def xls_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def hdf5_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """E2E HDF5 writer→reader proof. Uses h5py when installed, else
-    the stdlib hdf5lite codec (classic superblock-v0 format written
-    from the public spec, sources/hdf5lite.py) — reference layout is
+    """E2E HDF5 writer→reader proof through the stdlib hdf5lite codec
+    (classic superblock-v0 format written from the public spec, sources/hdf5lite.py) — reference layout is
     one root dataset per column with stringify fallback + re-guess
     (tablite/import_utils.py:72-109, export_utils.py:63-105)."""
     from tablite_spark.sources.io import from_file, to_hdf5

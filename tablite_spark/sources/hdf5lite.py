@@ -1,5 +1,5 @@
-"""Minimal pure-stdlib HDF5 codec (classic format) — the fallback
-behind ``read_hdf5`` / ``to_hdf5`` when h5py is absent.
+"""Minimal pure-stdlib HDF5 codec (classic format) — the codec
+behind ``read_hdf5`` / ``to_hdf5``.
 
 Implements the subset of the public HDF5 File Format Specification
 (https://docs.hdfgroup.org/hdf5/develop/_f_m_t3.html) that the
@@ -28,7 +28,7 @@ vlen WRITE, vlen sequences (non-string), nested groups, attributes,
 big-endian payloads, v2+ B-trees — at scale the path is convert-once
 to parquet, exactly like the reference's ``.tpz``.
 
-INTEROP CAVEAT: h5py is absent from this container, so files this
+INTEROP CAVEAT: h5py is not a dependency, so files this
 writer produces (including the chunked/deflated variant, whose
 rightmost B-tree key encodes (nchunks*chunk_rows, itemsize) offsets)
 are proven readable only by this module's own reader plus the

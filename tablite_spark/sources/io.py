@@ -13,8 +13,10 @@ tablite/import_utils.py:633-648 dispatch table; export_utils.py):
 - html: stdlib html.parser scrape (import_utils.py:125-174) + to_html
   writer; xlsx: stdlib zip+SpreadsheetML reader/writer (sources/
   xlsx.py); ods: stdlib zip+OpenDocument reader (sources/ods.py);
-  legacy .xls: gated behind import-try (no pandas excel engine in
-  this container); the dispatch raises a clear error.
+  legacy .xls: stdlib OLE2+BIFF8 reader (sources/xlslite.py); hdf5:
+  stdlib codec (sources/hdf5lite.py). The spreadsheet and html
+  readers share one grid-to-frame tail (header row, start/limit
+  window, column subset, type guessing).
 
 Scale notes: the CSV reader is a single distributed scan with schema
 inference on a sample; start/limit use ``offset``/``limit`` on the
@@ -245,17 +247,9 @@ def from_file(spark: SparkSession, path: str, **kwargs) -> DataFrame:
         from tablite_spark.sources.ods import read_ods
         return read_ods(spark, path, **kwargs)
     if suffix == ".xls":
-        try:  # full-fidelity engine when installed (xlrd handles XF
-            # date formats, BIFF5, exotic records)
-            import xlrd  # noqa: F401
-            import pandas as pd
-            pdf = pd.read_excel(path, sheet_name=kwargs.get("sheet", 0))
-            return spark.createDataFrame(pdf)
-        except ImportError:
-            return read_xls(spark, path, **kwargs)
+        return read_xls(spark, path, **kwargs)
     if suffix in (".html", ".htm"):
-        return read_html(spark, path,
-                         guess_datatypes=kwargs.get("guess_datatypes", True))
+        return read_html(spark, path, **kwargs)
     if suffix in (".h5", ".hdf5"):
         return read_hdf5(spark, path, **kwargs)
     if suffix == ".tpz":
@@ -268,26 +262,16 @@ def read_hdf5(spark: SparkSession, path: str,
               columns: list[str] | None = None) -> DataFrame:
     """Reference hdf5 import (tablite/import_utils.py:72-109): one
     dataset per column at the file root; byte/object columns are
-    decoded utf-8 and type-guessed. Uses h5py when installed (full
-    format coverage); otherwise the stdlib ``hdf5lite`` codec reads
-    the classic contiguous-dataset subset. hdf5 is a single-file
+    decoded utf-8 and type-guessed. The stdlib ``hdf5lite`` codec
+    reads the classic-format subset. hdf5 is a single-file
     driver-side format — for big data the path is convert-once to
     parquet (``save``)."""
     import pandas as pd
 
-    from tablite_spark.functions.inference import apply_guessed_types
+    from tablite_spark.sources import hdf5lite
     cols = {}
     needs_guess = []
-    try:
-        import h5py
-    except ImportError:
-        from tablite_spark.sources import hdf5lite
-        raw = hdf5lite.read(path, columns)
-    else:
-        raw = {}
-        with h5py.File(path, "r") as h5:
-            for name in columns or list(h5.keys()):
-                raw[name] = h5[name][:]
+    raw = hdf5lite.read(path, columns)
     sentinels = Config.NONE_SENTINELS
     for name, arr in raw.items():
         if arr.dtype.kind in ("S", "O"):
@@ -309,40 +293,20 @@ def to_hdf5(df: DataFrame, path: str, *,
             chunk_rows: int | None = None,
             compress: bool | int = False,
             vlen_strings: bool = False) -> None:
-    """Reference hdf5 export (tablite/export_utils.py:63-105): one
-    dataset per column; values h5py can't store natively are
-    stringified, like the reference's TypeError fallback. Uses h5py
-    when installed; otherwise the stdlib ``hdf5lite`` codec. Datasets
-    are contiguous by default; ``chunk_rows``/``compress`` switch to
-    chunked (deflated) storage on either backend.
-    ``vlen_strings=True`` stores string columns variable-length
-    (h5py's native default for str data; opt-in GCOL layout on the
-    stdlib codec). Collects to the driver — hdf5 has no distributed
-    writer; at scale export parquet instead."""
+    """Reference hdf5 export (tablite/export_utils.py:63-105)
+    through the stdlib ``hdf5lite`` codec: one dataset per column;
+    values with no native HDF5 type are stringified, like the
+    reference's TypeError fallback. Datasets are contiguous by
+    default; ``chunk_rows``/``compress`` switch to chunked (deflated)
+    storage. ``vlen_strings=True`` stores string columns
+    variable-length (the GCOL layout h5py writes for str data).
+    Collects to the driver — hdf5 has no distributed writer; at scale
+    export parquet instead."""
+    from tablite_spark.sources import hdf5lite
     pdf = df.toPandas()
-    try:
-        import h5py
-    except ImportError:
-        from tablite_spark.sources import hdf5lite
-        hdf5lite.write(path, {n: pdf[n].to_numpy() for n in pdf.columns},
-                       chunk_rows=chunk_rows, compress=compress,
-                       vlen_strings=vlen_strings)
-        return
-    kw = {}
-    if chunk_rows is not None:
-        kw["chunks"] = (chunk_rows,)
-    if compress:
-        kw["compression"] = "gzip"
-        if compress is not True:
-            kw["compression_opts"] = int(compress)
-    with h5py.File(path, "w") as f:
-        for name in pdf.columns:
-            vals = pdf[name]
-            try:
-                f.create_dataset(name, data=vals.to_numpy(), **kw)
-            except TypeError:
-                f.create_dataset(
-                    name, data=[str(v) for v in vals.tolist()], **kw)
+    hdf5lite.write(path, {n: pdf[n].to_numpy() for n in pdf.columns},
+                   chunk_rows=chunk_rows, compress=compress,
+                   vlen_strings=vlen_strings)
 
 
 class _TableScraper(HTMLParser):
@@ -391,55 +355,84 @@ class _TableScraper(HTMLParser):
             self._cell.append(data)
 
 
+def _grid_frame(spark: SparkSession, grid: list[list], *,
+                first_row_has_headers: bool, header_row_index: int,
+                columns: list[str] | None, start: int,
+                limit: int | None, guess_datatypes: bool) -> DataFrame:
+    """A driver-side cell grid (one list per sheet row, ``None`` for
+    an empty cell) as a frame: header row, ``start``/``limit`` row
+    window, column subset, then the CSV reader's type-guessing pass.
+    The tail every spreadsheet and html reader shares; each maps its
+    own cells into the grid first."""
+    width = max((len(r) for r in grid), default=0)
+    grid = [list(r) + [None] * (width - len(r)) for r in grid]
+    if first_row_has_headers:
+        header = grid[header_row_index] if grid else []
+        names = [str(h) if h not in (None, "") else f"c{i}"
+                 for i, h in enumerate(header)]
+        body = grid[header_row_index + 1:]
+    else:
+        names = [f"c{i}" for i in range(width)]
+        body = grid[header_row_index:]
+    body = body[start:(start + limit) if limit is not None else None]
+    rows = [tuple(None if v is None else str(v) for v in r) for r in body]
+    schema = ", ".join(f"`{n}` string" for n in names) or "`c0` string"
+    df = spark.createDataFrame(rows, schema=schema)
+    if columns:
+        df = df.select(*columns)
+    return apply_guessed_types(df) if guess_datatypes else df
+
+
 def read_xls(spark: SparkSession, path: str, *,
              sheet: str | int = 0,
-             guess_datatypes: bool = True, **_ignored) -> DataFrame:
-    """Legacy BIFF8 ``.xls`` ingest without xlrd: the stdlib
-    ``xlslite`` codec (OLE2 compound file walk + BIFF record parse,
-    reference dispatch tablite/import_utils.py:633-648) reads cell
-    values on the driver — .xls is a small-data format by
-    construction (65,536-row sheet cap) — then ``createDataFrame`` +
-    the CSV reader's type-guessing pass. Cells whose XF carries a
-    date format (builtin ifmt ranges or a ymdhs custom format) come
-    back as timestamps, like the xlrd path (which still takes
-    precedence when installed)."""
+             first_row_has_headers: bool = True,
+             header_row_index: int = 0,
+             columns: list[str] | None = None,
+             start: int = 0, limit: int | None = None,
+             guess_datatypes: bool = True) -> DataFrame:
+    """Legacy BIFF8 ``.xls`` ingest: the stdlib ``xlslite`` codec
+    (OLE2 compound file walk + BIFF record parse, reference dispatch
+    tablite/import_utils.py:633-648) reads cell values on the driver
+    — .xls is a small-data format by construction (65,536-row sheet
+    cap). Same window arguments as :func:`read_xlsx`. Cells whose XF
+    carries a date format (builtin ifmt ranges or a ymdhs custom
+    format) come back as timestamps."""
     from tablite_spark.sources.xlslite import read_xls as _read
     book = _read(path)
-    if isinstance(sheet, int):
-        name = list(book)[sheet]
-    else:
-        name = sheet
+    name = list(book)[sheet] if isinstance(sheet, int) else sheet
     rows = book[name]
     if not rows:
         raise ValueError(f"sheet {name!r} is empty")
-    header = [str(h) if h is not None else f"c{i}"
-              for i, h in enumerate(rows[0])]
-    width = len(header)
-    body = [tuple(
-        (None if i >= len(r) or r[i] is None else str(r[i]))
-        for i in range(width)) for r in rows[1:]]
-    df = spark.createDataFrame(
-        body, schema=", ".join(f"`{n}` string" for n in header))
-    return apply_guessed_types(df) if guess_datatypes else df
+    return _grid_frame(spark, rows,
+                       first_row_has_headers=first_row_has_headers,
+                       header_row_index=header_row_index,
+                       columns=columns, start=start, limit=limit,
+                       guess_datatypes=guess_datatypes)
 
 
 def read_html(spark: SparkSession, path: str, *,
+              first_row_has_headers: bool = True,
+              header_row_index: int = 0,
+              columns: list[str] | None = None,
+              start: int = 0, limit: int | None = None,
               guess_datatypes: bool = True) -> DataFrame:
     """HTML table ingest without pandas/lxml: stdlib ``html.parser``
-    scrape on the driver (HTML files are small-data by nature), then
-    ``createDataFrame`` + the same type-guessing pass the CSV reader
-    uses."""
+    scrape of the first ``<table>`` on the driver (HTML files are
+    small-data by nature). The ``<th>`` row is the header; a table
+    without one has no header row. Empty cells read as null. Same
+    window arguments as :func:`read_xlsx`."""
     p = _TableScraper()
     with open(path, encoding="utf-8") as fh:
         p.feed(fh.read())
-    if not p.header and p.rows:
-        p.header = [f"c{i}" for i in range(len(p.rows[0]))]
-    names = [h or f"c{i}" for i, h in enumerate(p.header)]
-    width = len(names)
-    rows = [tuple((r[i] if i < len(r) else None) or None for i in range(width))
-            for r in p.rows]
-    df = spark.createDataFrame(rows, schema=", ".join(f"`{n}` string" for n in names))
-    return apply_guessed_types(df) if guess_datatypes else df
+    grid = [[v or None for v in r] for r in p.rows]
+    if p.header:
+        grid.insert(0, p.header)
+    return _grid_frame(spark, grid,
+                       first_row_has_headers=(first_row_has_headers
+                                              and bool(p.header)),
+                       header_row_index=header_row_index,
+                       columns=columns, start=start, limit=limit,
+                       guess_datatypes=guess_datatypes)
 
 
 def to_html(df: DataFrame, path: str | None = None, limit: int = 10_000) -> str:

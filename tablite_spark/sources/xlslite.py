@@ -1,5 +1,5 @@
-"""Minimal legacy ``.xls`` codec (pure stdlib) — the fallback behind
-``from_file`` when no pandas xls engine (xlrd) is installed.
+"""Minimal legacy ``.xls`` codec (pure stdlib) — the ``.xls`` reader
+behind ``from_file``.
 
 Two public formats are involved (both Microsoft-published):
 

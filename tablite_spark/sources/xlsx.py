@@ -76,7 +76,7 @@ def read_xlsx(spark: SparkSession, path: str, *,
     """Reference signature parity (tablite/import_utils.py:180):
     sheet selection (default: first), header row index, column subset,
     start/limit row window."""
-    from tablite_spark.functions.inference import apply_guessed_types
+    from tablite_spark.sources.io import _grid_frame
 
     with zipfile.ZipFile(path) as zf:
         sheets = _sheet_names(zf)
@@ -113,23 +113,11 @@ def read_xlsx(spark: SparkSession, path: str, *,
                 row.append(v)
             grid.append(row)
 
-    width = max((len(r) for r in grid), default=0)
-    grid = [r + [None] * (width - len(r)) for r in grid]
-    if first_row_has_headers:
-        header = grid[header_row_index] if grid else []
-        names = [str(h) if h not in (None, "") else f"c{i}"
-                 for i, h in enumerate(header)]
-        body = grid[header_row_index + 1:]
-    else:
-        names = [f"c{i}" for i in range(width)]
-        body = grid[header_row_index:]
-    body = body[start:(start + limit) if limit is not None else None]
-    rows = [tuple(None if v is None else str(v) for v in r) for r in body]
-    schema = ", ".join(f"`{n}` string" for n in names) or "`c0` string"
-    df = spark.createDataFrame(rows, schema=schema)
-    if columns:
-        df = df.select(*columns)
-    return apply_guessed_types(df) if guess_datatypes else df
+    return _grid_frame(spark, grid,
+                       first_row_has_headers=first_row_has_headers,
+                       header_row_index=header_row_index,
+                       columns=columns, start=start, limit=limit,
+                       guess_datatypes=guess_datatypes)
 
 
 def excel_serial_to_timestamp(col):

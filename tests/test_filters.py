@@ -159,3 +159,25 @@ def test_replace_missing_values_points_at_imputation(spark):
     t = Table(spark.createDataFrame([(1,)], "k int"))
     with pytest.raises(AttributeError, match="imputation"):
         t.replace_missing_values(["k"])
+
+
+
+def test_filter_leaves_nothing_cached(spark):
+    """``Table.filter`` over an expensive upstream (a ``distinct()``)
+    pins nothing: after both sides are read the cache manager holds no
+    entry and no persistent RDD was added, so a caller outside any
+    ``scope()`` is left with no cached blocks it cannot free."""
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    dup = spark.createDataFrame([(i % 5, i % 5 * 10) for i in range(20)],
+                                "a int, b int")
+    rdds0 = jsc.getPersistentRDDs().size()
+    t, f = Table(dup.distinct()).filter(
+        [{"column1": "a", "criteria": ">=", "value2": 3}])
+    assert sorted(r["a"] for r in t.df.collect()) == [3, 4]
+    assert sorted(r["a"] for r in f.df.collect()) == [0, 1, 2]
+    assert all("InMemoryTableScan" not in
+               x.df._jdf.queryExecution().executedPlan().toString()
+               for x in (t, f))
+    assert cache.isEmpty()
+    assert jsc.getPersistentRDDs().size() == rdds0

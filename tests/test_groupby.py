@@ -8,8 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from tablite_spark.operators.groupby import (
-    GroupBy, groupby, histogram, melt, pivot, transpose,
+    GroupBy, groupby, melt, pivot, transpose,
 )
+from tablite_spark.operators.stats import histogram
 
 
 @pytest.fixture()

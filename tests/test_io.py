@@ -243,6 +243,29 @@ def test_xlsx_options(spark, tmp_path):
         read_xlsx(spark, path, sheet="Nope")
 
 
+@pytest.mark.parametrize("suffix", [".xlsx", ".xls", ".html"])
+def test_from_file_reader_window(spark, tmp_path, suffix):
+    """from_file forwards the row window and column subset to every
+    grid reader: the same rows written as .xlsx, .xls and .html read
+    back equal under start/limit/columns."""
+    from tablite_spark.sources.io import from_file, to_html
+    from tablite_spark.sources.xlslite import write_xls
+    from tablite_spark.sources.xlsx import to_xlsx
+    rows = [("a", 1.5, "x"), ("b", 2.5, "y"), ("c", 3.5, "z"),
+            ("d", 4.5, "w")]
+    path = str(tmp_path / f"t{suffix}")
+    df = spark.createDataFrame(rows, "name string, score double, city string")
+    if suffix == ".xlsx":
+        to_xlsx(df, path)
+    elif suffix == ".xls":
+        write_xls(path, [list(df.columns)] + [list(r) for r in rows])
+    else:
+        to_html(df, path)
+    got = from_file(spark, path, start=1, limit=2, columns=["city", "score"])
+    assert got.columns == ["city", "score"]
+    assert [tuple(r) for r in got.collect()] == [("y", 2.5), ("z", 3.5)]
+
+
 def test_excel_serial_to_timestamp(spark):
     from pyspark.sql import functions as F
 

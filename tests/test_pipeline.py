@@ -2110,54 +2110,64 @@ def test_pq_index_roundtrip(spark, tmp_path):
     assert c1 == c2
 
 
-def test_dup_ngram_arrow_expr_parity(spark):
-    """The zero-shuffle arrow census must equal the all-JVM
-    expression census field-for-field — including the hostile
-    cases: NBSP (Java \\s is ASCII-only; python str.split() would
-    diverge), null text (null census, rules null), empty text,
-    sub-n docs, and overlapping duplicated runs."""
+def _census_vs_oracle(spark, op, query, rows, null_row):
+    """``op`` over hand-built ``rows`` and over the sf0.001 corpus
+    equals the registry's DuckDB oracle for ``query`` row for row —
+    except the null-text doc (id 3), where Spark's census is null and
+    the oracle's is 0: that row must equal ``null_row``. The plan has
+    no shuffle."""
+    import pandas as pd
+    from duck_oracle import oracle
+
+    from tablite_spark.plans import plan_report
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    for df, pdf in ((docs, pd.DataFrame(rows, columns=["doc_id", "text"])),
+                    (real, real.select("doc_id", "text").toPandas())):
+        got = {r[0]: tuple(r[1:]) for r in op(df, "text", "doc_id").collect()}
+        want = oracle(query, documents=pdf)
+        want = {r[0]: tuple(r[1:]) for r in want.itertuples(index=False)}
+        assert set(got) == set(want)
+        if df is docs:
+            assert got.pop(3) == null_row
+            del want[3]
+        assert got == want
+    assert plan_report(op(real, "text", "doc_id"))["shuffles"] == 0
+
+
+def test_dup_ngram_census_matches_oracle(spark):
+    """The arrow census equals the DuckDB oracle field for field on
+    the hostile cases — NBSP (Java \\s is ASCII-only; python
+    str.split() would diverge), empty text, sub-n docs, overlapping
+    duplicated runs — and on the real corpus, in a zero-shuffle
+    plan. Null text gives a null word census and null rules."""
     from tablite_spark.pipeline.text import gopher_dup_ngram_coverage
     rows = [(0, "a b c d e a b c d e a b c d e"),
-            (1, "one two three four five six seven "
-                "one two three four five six seven"),
+            (1, "one two three four five six seven "
+                "one two three four five six seven"),
             (2, ""), (3, None), (4, "only four words here"),
             (5, "p q r s t u p q r s t u p q r s t u v w"),
-            (6, "x " * 30)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"]: tuple(r) for r in gopher_dup_ngram_coverage(
-        d, "text", "doc_id", impl="expr").collect()}
-    b = {r["doc_id"]: tuple(r) for r in gopher_dup_ngram_coverage(
-        d, "text", "doc_id", impl="arrow").collect()}
-    assert a == b
-    from tablite_spark.plans import plan_report
-    assert plan_report(gopher_dup_ngram_coverage(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-        "text", "doc_id"))["shuffles"] == 0
+            (6, "x " * 30), (7, "a\u00a0b c d e f a\u00a0b c d e f")]
+    _census_vs_oracle(spark, gopher_dup_ngram_coverage,
+                      "gopher_dup_ngrams_docs", rows,
+                      (None,) + (0,) * 6 + (None,) * 7)
 
 
-def test_repetition_arrow_expr_parity(spark):
-    """gopher_repetition arrow vs expr: field-for-field equality on
-    hostile docs (ties between grams, null/empty/one-word text,
-    duplicate lines/paras, long repeats) and on the real corpus."""
+def test_repetition_census_matches_oracle(spark):
+    """gopher_repetition equals the DuckDB oracle field for field on
+    hostile docs (ties between grams, empty/one-word text, duplicate
+    lines/paras, long repeats) and on the real corpus, in a
+    zero-shuffle plan. Null text gives a null line census, top-gram
+    masses 0 and null rules."""
     from tablite_spark.pipeline.text import gopher_repetition
     rows = [(0, "a b a b a b a b longer test gram gram gram"),
             (1, "one two three one two three one two four"),
             (2, ""), (3, None), (4, "w"),
             (5, "line1\nline1\nline2\n\npara\n\npara"),
             (6, "xy " * 40)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"]: tuple(r) for r in gopher_repetition(
-        d, "text", "doc_id", impl="expr").collect()}
-    b = {r["doc_id"]: tuple(r) for r in gopher_repetition(
-        d, "text", "doc_id", impl="arrow").collect()}
-    assert a == b
-    real = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet")
-    ra = {r["doc_id"]: tuple(r) for r in gopher_repetition(
-        real, "text", "doc_id", impl="expr").collect()}
-    rb = {r["doc_id"]: tuple(r) for r in gopher_repetition(
-        real, "text", "doc_id", impl="arrow").collect()}
-    assert ra == rb
+    _census_vs_oracle(spark, gopher_repetition, "gopher_repetition_docs",
+                      rows, (None,) * 9 + (0,) * 3 + (None,) * 8)
 
 
 def test_pq_topk_with_prebuilt_index(spark, tmp_path):

@@ -448,9 +448,9 @@ def test_no_undocumented_sliding_window_frames():
     rebuilds a SLIDING frame's aggregate buffer per row (no
     retraction), so any bounded-preceding frame is O(rows x frame)
     per key. Running frames (unboundedPreceding -> currentRow) are
-    incremental and fine. The ONLY sliding frame allowed in the
-    package is rolling_agg's documented narrow-frames-only
-    engine='window' opt-in."""
+    incremental and fine. No operator in the package uses a sliding
+    frame (rolling_agg runs its own kernel); the one allowed is a
+    registry query's frame over a bounded census."""
     import pathlib
     import re
     pkg = pathlib.Path(__file__).resolve().parents[1] / "tablite_spark"
@@ -466,15 +466,13 @@ def test_no_undocumented_sliding_window_frames():
             if not ok_running:
                 offenders.append(
                     f"{p.relative_to(pkg).as_posix()} {start}")
-    # the allowed sliding frames: rolling_agg's documented
-    # engine='window' opt-in, and bollinger_events' trailing-24
-    # frame — which slides over the (type, hour) CENSUS (bounded at
+    # the allowed sliding frame: bollinger_events' trailing-24 frame
+    # — which slides over the (type, hour) CENSUS (bounded at
     # |types| x |hours| rows, never the event stream), so the
     # O(rows x frame) rebuild cost is 24 x census, a constant
     # (matched by file+expression, not line number — additions
-    # above them kept moving the line)
-    assert offenders == ["operators/timeseries.py -span_us",
-                         "registry/stats.py -23"], offenders
+    # above it kept moving the line)
+    assert offenders == ["registry/stats.py -23"], offenders
 
 
 def test_markov_transitions_shuffle_shape(spark):

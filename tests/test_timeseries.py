@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tablite_spark.operators.timeseries import funnel, ohlc_resample
-from tablite_spark.plans.lifecycle import scope
 
 
 def _ts(m, s=0, us=0):
@@ -235,41 +234,6 @@ def test_bloom_decontaminate_empty_probes(spark):
     assert out.count() == 0
 
 
-def test_funnel_single_scan_matches_and_plan(spark, tmp_path):
-    """single_scan=True must (a) reproduce the lazy path byte-for-byte
-    and (b) feed every step from the spilled cache — each FileScan in
-    the lazy chain's plan must sit under an InMemoryRelation (cache
-    population), never as a bare per-step scan of the source."""
-    rows = [
-        (1, "view", _ts(1)), (1, "click", _ts(2)), (1, "purchase", _ts(3)),
-        (2, "view", _ts(1)), (2, "purchase", _ts(2)), (2, "click", _ts(5)),
-        (3, "other", _ts(1)), (3, "view", _ts(2)),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, event_type string, "
-                                     "ts timestamp")
-    p = str(tmp_path / "ev.parquet")
-    df.write.parquet(p)
-    ev = spark.read.parquet(p)
-    steps = ["view", "click", "purchase"]
-    lazy = sorted(map(tuple, funnel(ev, steps).collect()))
-    eager = sorted(map(tuple, funnel(ev, steps, single_scan=True).collect()))
-    assert eager == lazy
-
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    with scope():
-        chain = funnel(ev, steps, single_scan=True, _materialize=False)
-        plan = chain._jdf.queryExecution().executedPlan().toString()
-        # every source scan is the cached relation's child (the plan
-        # string inlines it once per InMemoryTableScan) — no bare scan
-        assert plan.count("InMemoryTableScan") > 0
-        assert plan.count("Scan parquet") == plan.count("InMemoryRelation")
-        assert sorted(map(tuple, chain.collect())) == lazy
-        assert not cache.isEmpty()
-    # the lazy chain's pinned base is released by the caller's scope,
-    # never by clearCache() of unrelated caches
-    assert cache.isEmpty()
-
-
 def test_interpolate_at_out_col_guard(spark):
     """ADVICE r8: interpolate_at must not silently overwrite a
     pre-existing 'value' column on targets — raise on collision,
@@ -403,35 +367,64 @@ def test_state_intervals_gaps_and_islands(spark):
     ]
 
 
-def test_rolling_agg_kernel_equals_window_engine(spark):
-    """The O(n) kernel (default) and the pure-expression window
-    engine must agree exactly — including null values, duplicate
-    timestamps, all-null frames, and a null group key."""
+_ROLL_FUNCS = ("avg", "min", "max", "sum", "count")
+
+
+def _duck_rolling(pdf, by, span):
+    """DuckDB's RANGE frame over ``pdf`` — the reference rolling_agg
+    must equal. A NULL-ts row has no frame (DuckDB would give the
+    NULL-ts rows a peer frame of each other)."""
+    from duck_oracle import duck
+    part = f"PARTITION BY {', '.join(by)}" if by else ""
+    aggs = ", ".join(
+        f"CASE WHEN ts IS NULL THEN NULL ELSE {f}(v) OVER w END AS roll_{f}"
+        for f in _ROLL_FUNCS)
+    got = duck(f"""SELECT rid, {aggs} FROM t
+                   WINDOW w AS ({part} ORDER BY ts RANGE BETWEEN
+                                INTERVAL {span} PRECEDING AND CURRENT ROW)""",
+               t=pdf)
+    return {r[0]: tuple(None if x != x else x for x in r[1:])
+            for r in got.astype(object).itertuples(index=False)}
+
+
+def _assert_rolls_equal(got, want):
+    assert set(got) == set(want)
+    for rid in want:
+        for x, y in zip(got[rid], want[rid]):
+            if x is None or y is None:
+                assert x == y, (rid, got[rid], want[rid])
+            else:
+                assert abs(x - y) < 1e-9, (rid, got[rid], want[rid])
+
+
+def _rolls(df, by, window):
+    from tablite_spark.operators.timeseries import rolling_agg
+    return {r["rid"]: tuple(r[f"roll_{f}"] for f in _ROLL_FUNCS)
+            for r in rolling_agg(df, "ts", "v", by, window,
+                                 funcs=_ROLL_FUNCS).collect()}
+
+
+def test_rolling_agg_kernel_equals_duckdb_window(spark):
+    """The kernel equals DuckDB's RANGE window (to 1e-9) — including
+    null values, duplicate timestamps, all-null frames, a null group
+    key and null-timestamp rows, grouped and ungrouped."""
     import random
 
-    from tablite_spark.operators.timeseries import rolling_agg
+    import pandas as pd
     rnd = random.Random(42)
     rows = []
     for i in range(400):
         k = rnd.choice([1, 2, 3, None])
         v = None if rnd.random() < 0.2 else round(rnd.uniform(-5, 5), 3)
         rows.append((i, k, _ts(rnd.randrange(2), rnd.randrange(60)), v))
+    rows += [(400, 1, None, 1.0), (401, None, None, 2.0)]
     df = spark.createDataFrame(
         rows, "rid int, k int, ts timestamp, v double").repartition(7)
-    funcs = ("avg", "min", "max", "sum", "count")
-    a = {r["rid"]: tuple(r[f"roll_{f}"] for f in funcs) for r in
-         rolling_agg(df, "ts", "v", ["k"], "30 seconds",
-                     funcs=funcs).collect()}
-    b = {r["rid"]: tuple(r[f"roll_{f}"] for f in funcs) for r in
-         rolling_agg(df, "ts", "v", ["k"], "30 seconds",
-                     funcs=funcs, engine="window").collect()}
-    assert set(a) == set(b) and len(a) == 400
-    for rid in a:
-        for x, y in zip(a[rid], b[rid]):
-            if x is None or y is None:
-                assert x == y, (rid, a[rid], b[rid])
-            else:
-                assert abs(x - y) < 1e-9, (rid, a[rid], b[rid])
+    pdf = pd.DataFrame(rows, columns=["rid", "k", "ts", "v"])
+    for by in (["k"], []):
+        got = _rolls(df, by, "30 seconds")
+        assert len(got) == 402
+        _assert_rolls_equal(got, _duck_rolling(pdf, by, "30 SECOND"))
 
 
 def test_path_ngrams_reference(spark):
@@ -491,12 +484,14 @@ def test_rolling_sum_immune_to_prefix_cancellation(spark):
 
 
 def test_rolling_agg_ungrouped_distributed(spark):
-    """by=[] must (a) match the single-group reference exactly on
-    both engines, (b) keep every input row exactly once (halo
-    duplicates discarded), and (c) NOT funnel the series through one
-    task — the plan buckets the time axis (__bkt__ halo shuffle)
-    instead of coalesce(1)/global window."""
+    """by=[] must (a) equal DuckDB's un-partitioned RANGE window,
+    (b) keep every input row exactly once (halo duplicates
+    discarded), and (c) NOT funnel the series through one task — the
+    plan buckets the time axis (__bkt__ halo shuffle) instead of
+    coalesce(1)/global window."""
     import random
+
+    import pandas as pd
 
     from tablite_spark.operators.timeseries import rolling_agg
     rnd = random.Random(11)
@@ -508,50 +503,32 @@ def test_rolling_agg_ungrouped_distributed(spark):
         rows.append((i, ts, v))
     df = spark.createDataFrame(
         rows, "rid int, ts timestamp, v double").repartition(5)
-    funcs = ("avg", "min", "max", "sum", "count")
-    ref = {r["rid"]: tuple(r[f"roll_{f}"] for f in funcs) for r in
-           rolling_agg(df.withColumn("one", F.lit(1)), "ts", "v",
-                       ["one"], "15 minutes", funcs=funcs,
-                       engine="window").collect()}
-    for eng in ("kernel", "window"):
-        got = {r["rid"]: tuple(r[f"roll_{f}"] for f in funcs) for r in
-               rolling_agg(df, "ts", "v", [], "15 minutes",
-                           funcs=funcs, engine=eng).collect()}
-        assert set(got) == set(ref) and len(got) == 500, eng
-        for rid in ref:
-            for x, y in zip(got[rid], ref[rid]):
-                if x is None or y is None:
-                    assert x == y, (eng, rid, got[rid], ref[rid])
-                else:
-                    assert abs(x - y) < 1e-9, (eng, rid)
-        plan = rolling_agg(df, "ts", "v", [], "15 minutes",
-                           engine=eng)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "__bkt__" in plan, eng
-        assert "Coalesce 1" not in plan, eng
+    got = _rolls(df, [], "15 minutes")
+    assert len(got) == 500
+    _assert_rolls_equal(got, _duck_rolling(
+        pd.DataFrame(rows, columns=["rid", "ts", "v"]), [], "15 MINUTE"))
+    plan = rolling_agg(df, "ts", "v", [], "15 minutes") \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "__bkt__" in plan
+    assert "Coalesce 1" not in plan
 
 
 def test_rolling_agg_null_timestamp_rows(spark):
     """A NULL-timestamp row has no frame: all rolling outputs NULL,
-    and it never contributes to any other row's frame."""
-    from tablite_spark.operators.timeseries import rolling_agg
+    and it never contributes to any other row's frame — grouped and
+    ungrouped (a RANGE window would give the NULL-ts rows a peer
+    frame of each other)."""
+    import pandas as pd
     rows = [(0, "k", _ts(0), 5.0), (1, "k", None, 100.0),
             (2, "k", _ts(0, 30), 7.0), (3, "k", None, 200.0)]
     df = spark.createDataFrame(rows, "rid int, k string, ts timestamp, v double")
-    # BOTH engines (r12 ADVICE: the window engine gave NULL-ts rows a
-    # peer frame of the other NULL-ts rows), grouped and ungrouped
-    for eng in ("kernel", "window"):
-        for by in (["k"], []):
-            out = {r["rid"]: r.asDict() for r in
-                   rolling_agg(df, "ts", "v", by, "1 minutes",
-                               funcs=("sum", "count"),
-                               engine=eng).collect()}
-            tag = (eng, tuple(by))
-            for rid in (1, 3):
-                assert out[rid]["roll_sum"] is None, tag
-                assert out[rid]["roll_count"] is None, tag
-            assert out[0]["roll_sum"] == 5.0 and out[0]["roll_count"] == 1, tag
-            assert out[2]["roll_sum"] == 12.0 and out[2]["roll_count"] == 2, tag
+    pdf = pd.DataFrame(rows, columns=["rid", "k", "ts", "v"])
+    for by in (["k"], []):
+        out = _rolls(df, by, "1 minutes")
+        _assert_rolls_equal(out, _duck_rolling(pdf, by, "1 MINUTE"))
+        # (avg, min, max, sum, count)
+        assert out[1] == out[3] == (None,) * 5, by
+        assert out[0][3:] == (5.0, 1) and out[2][3:] == (12.0, 2), by
 
 
 def test_time_weighted_avg_hand(spark):
