@@ -1,4 +1,4 @@
-"""Skew-mitigation utilities — salting and bucketing.
+"""Skew-mitigation utilities — salting and the skew census.
 
 AQE's skew-join splitting (enabled in the session factory) handles
 most runtime skew; these helpers cover the cases AQE can't:
@@ -7,14 +7,14 @@ most runtime skew; these helpers cover the cases AQE can't:
   key). The hot side gets a random salt in [0, n); the other side is
   exploded n ways; the join key becomes (key, salt), spreading each hot
   key over n reducers.
-- ``write_bucketed`` / ``read_bucketed``: persist a table bucketed by
-  join key so repeated joins on that key shuffle neither side
-  (co-located scan joins).
+
+Bucketed persistence (co-located, shuffle-free joins) lives in
+operators/bucketing.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,30 +36,6 @@ def salted_join(big: DataFrame, small: DataFrame,
     cond = (salted_big[big_key] == salted_small[small_key]) & \
            (salted_big["__salt__"] == salted_small["__salt__"])
     return salted_big.join(salted_small, cond, how).drop("__salt__")
-
-
-def write_bucketed(df: DataFrame, table_name: str, bucket_cols: list[str],
-                   n_buckets: int = 32, sort_cols: list[str] | None = None,
-                   mode: str = "overwrite") -> None:
-    """Persist bucketed by join key: subsequent equi-joins between
-    tables bucketed the same way are shuffle-free (SortMergeJoin reads
-    co-located buckets)."""
-    spark = df.sparkSession
-    if mode == "overwrite":
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        # a fresh metastore may not know the table while its managed
-        # location survives from an earlier session — clear it
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        import shutil
-        shutil.rmtree(f"{wh}/{table_name.lower()}", ignore_errors=True)
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def skew_report(df: DataFrame, key_col: str,

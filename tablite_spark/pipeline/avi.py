@@ -1,8 +1,10 @@
 """Minimal MJPEG-AVI container codec (pure stdlib) — the video leg of
 the multimodal surface.
 
-AVI is Microsoft's public RIFF container (same framing as WAV,
-pipeline/multimodal.py:wav_header): ``RIFF('AVI ' LIST('hdrl' avih
+AVI is Microsoft's public RIFF container, the same framing as WAV:
+``_chunk`` and ``_iter_chunks`` below are the one RIFF chunk writer
+and reader, used by this codec and by the WAV codec in
+pipeline/multimodal.py. ``RIFF('AVI ' LIST('hdrl' avih
 LIST('strl' strh strf)) LIST('movi' 00dc...) idx1)``.  Motion-JPEG
 stores each frame as an independent baseline JPEG in a ``00dc``
 chunk, which pipeline/jpeg.py already decodes — so frame sampling
@@ -24,12 +26,30 @@ _AVIIF_KEYFRAME = 0x10
 
 
 def _chunk(fourcc: bytes, data: bytes) -> bytes:
+    """One RIFF chunk: fourcc, little-endian length, body, pad byte."""
     pad = b"\x00" if len(data) % 2 else b""
     return fourcc + struct.pack("<I", len(data)) + data + pad
 
 
 def _list(list_type: bytes, data: bytes) -> bytes:
     return _chunk(b"LIST", list_type + data)
+
+
+def _iter_chunks(buf: bytes, pos: int, end: int):
+    """Yield (fourcc, body_start, body_len) sub-chunks of a region."""
+    while pos + 8 <= end:
+        fourcc = buf[pos:pos + 4]
+        (size,) = struct.unpack_from("<I", buf, pos + 4)
+        yield fourcc, pos + 8, size
+        pos += 8 + size + (size % 2)
+
+
+def _riff_chunks(data: bytes, form: bytes):
+    """Top-level chunks of a RIFF file of type ``form`` (``b"WAVE"``,
+    ``b"AVI "``); ValueError when ``data`` is not one."""
+    if not data or data[:4] != b"RIFF" or data[8:12] != form:
+        raise ValueError(f"not a RIFF {form.decode().strip()} file")
+    return _iter_chunks(data, 12, len(data))
 
 
 def avi_encode(frames: list, fps: float = 25.0, quality: int = 85,
@@ -73,25 +93,14 @@ def avi_encode(frames: list, fps: float = 25.0, quality: int = 85,
     return _chunk(b"RIFF", b"AVI " + hdrl + movi + idx1)
 
 
-def _iter_chunks(buf: bytes, pos: int, end: int):
-    """Yield (fourcc, body_start, body_len) sub-chunks of a region."""
-    while pos + 8 <= end:
-        fourcc = buf[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", buf, pos + 4)
-        yield fourcc, pos + 8, size
-        pos += 8 + size + (size % 2)
-
-
 def avi_header(data: bytes) -> tuple[int, int, int, float, int]:
     """(width, height, n_frames, fps, duration_ms) from the hdrl
     list.  fps prefers the stream header's dwRate/dwScale rational
     and falls back to the main header's microseconds-per-frame."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not an AVI file")
     width = height = n_frames = 0
     usec = 0
     scale = rate = 0
-    for fourcc, start, size in _iter_chunks(data, 12, len(data)):
+    for fourcc, start, size in _riff_chunks(data, b"AVI "):
         if fourcc != b"LIST" or data[start:start + 4] != b"hdrl":
             continue
         for f2, s2, z2 in _iter_chunks(data, start + 4, start + size):
@@ -119,9 +128,7 @@ def avi_header(data: bytes) -> tuple[int, int, int, float, int]:
 def avi_frames(data: bytes) -> Iterator[bytes]:
     """Yield stream-0 video frame payloads (JPEG bytes for MJPG) by
     walking the movi list directly — no trust in idx1."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not an AVI file")
-    for fourcc, start, size in _iter_chunks(data, 12, len(data)):
+    for fourcc, start, size in _riff_chunks(data, b"AVI "):
         if fourcc == b"LIST" and data[start:start + 4] == b"movi":
             for f2, s2, z2 in _iter_chunks(data, start + 4, start + size):
                 if f2 in (b"00dc", b"00db"):

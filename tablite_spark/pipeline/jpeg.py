@@ -35,6 +35,7 @@ star, built from the public spec like pipeline/png.py.
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import numpy as np
 
@@ -171,6 +172,11 @@ class _BitWriter:
             pad = 8 - self.nbits
             self.write((1 << pad) - 1, pad)  # pad with 1s
 
+    def restart(self, i: int) -> None:
+        """Byte-align, then write restart marker RST(i mod 8)."""
+        self.flush()
+        self.buf += bytes([0xFF, 0xD0 + i % 8])
+
 
 def _quantize_planes(planes, samp, qts, h, w, hmax, vmax,
                      mcux, mcuy):
@@ -220,16 +226,27 @@ def _magnitude(v: int) -> tuple[int, int]:
     return size, amp
 
 
-def jpeg_encode(pixels: np.ndarray, quality: int = 75,
-                subsample: str = "444",
-                restart_interval: int = 0) -> bytes:
-    """Encode an (H, W) or (H, W, 3) uint8 array as baseline JFIF
-    (Annex K tables scaled by ``quality``; ``subsample`` = "444" or
-    "420" — 4:2:0 box-averages chroma 2x2 and interleaves 4 Y + Cb +
-    Cr blocks per 16x16 MCU, the common web-JPEG layout)."""
+class _Frame(NamedTuple):
+    """One image after the encoder front end, before entropy coding."""
+    h: int
+    w: int
+    c: int          # components: 1 (greyscale) or 3 (YCbCr)
+    samp: list      # (h, v) sampling factors per component
+    tsel: list      # quantization/Huffman table id per component
+    qtabs: list     # quantization table per table id
+    coefs: list     # per component, (rows, cols, 64) zigzag blocks
+    nonint: list    # per component, its non-interleaved (bh, bw)
+    mcux: int
+    mcuy: int
+
+
+def _encode_frame(pixels: np.ndarray, quality: int,
+                  subsample: str) -> _Frame:
+    """The front end of both encoders: the Annex K tables scaled by
+    ``quality`` (the public IJG formula), RGB -> YCbCr (JFIF), the
+    sampling factors and MCU grid, and the quantized coefficients."""
     arr = np.asarray(pixels, dtype=np.uint8)
-    grey = arr.ndim == 2
-    if grey:
+    if arr.ndim == 2:
         arr = arr[:, :, None]
     h, w, c = arr.shape
     if c not in (1, 3):
@@ -237,13 +254,12 @@ def jpeg_encode(pixels: np.ndarray, quality: int = 75,
     if subsample not in ("444", "420"):
         raise ValueError(f"subsample must be 444 or 420, got {subsample}")
 
-    # quality scaling (the public IJG formula)
     q = max(1, min(100, int(quality)))
     scale = 5000 // q if q < 50 else 200 - 2 * q
-    qlum = np.clip((_QUANT_LUM * scale + 50) // 100, 1, 255)
-    qchrom = np.clip((_QUANT_CHROM * scale + 50) // 100, 1, 255)
+    qtabs = [np.clip((_QUANT_LUM * scale + 50) // 100, 1, 255),
+             np.clip((_QUANT_CHROM * scale + 50) // 100, 1, 255)]
 
-    if c == 3:  # RGB -> YCbCr (JFIF)
+    if c == 3:
         rgb = arr.astype(np.float64)
         y = 0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]
         cb = 128 - 0.168736 * rgb[:, :, 0] - 0.331264 * rgb[:, :, 1] \
@@ -251,13 +267,11 @@ def jpeg_encode(pixels: np.ndarray, quality: int = 75,
         cr = 128 + 0.5 * rgb[:, :, 0] - 0.418688 * rgb[:, :, 1] \
             - 0.081312 * rgb[:, :, 2]
         planes = [y, cb, cr]
-        qtabs = [qlum, qchrom, qchrom]
-        tsel = [0, 1, 1]  # huffman table selector per component
+        tsel = [0, 1, 1]
         samp = [(2, 2), (1, 1), (1, 1)] if subsample == "420" \
             else [(1, 1)] * 3
     else:
         planes = [arr[:, :, 0].astype(np.float64)]
-        qtabs = [qlum]
         tsel = [0]
         samp = [(1, 1)]
 
@@ -265,84 +279,131 @@ def jpeg_encode(pixels: np.ndarray, quality: int = 75,
     vmax = max(s[1] for s in samp)
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
+    coefs, nonint = _quantize_planes(planes, samp, [qtabs[t] for t in tsel],
+                                     h, w, hmax, vmax, mcux, mcuy)
+    return _Frame(h, w, c, samp, tsel, qtabs, coefs, nonint, mcux, mcuy)
 
-    coefs, _ = _quantize_planes(planes, samp, qtabs, h, w,
-                                hmax, vmax, mcux, mcuy)
 
+def _seg(marker: int, body: bytes) -> bytes:
+    return struct.pack(">HH", marker, len(body) + 2) + body
+
+
+def _head(fr: _Frame, sof: int, restart_interval: int,
+          huffman) -> list[bytes]:
+    """SOI, JFIF APP0, DQT, SOF, DRI and DHT segments. ``huffman``
+    lists (class, table id, (bits, values)); tables no component
+    selects (the chroma ones of a greyscale frame) are left out."""
+    out = [b"\xff\xd8",
+           _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")]
+    for tid in sorted(set(fr.tsel)):
+        out.append(_seg(0xFFDB, bytes([tid])
+                        + bytes(fr.qtabs[tid][_ZIGZAG].astype(np.uint8))))
+    comp = b"".join(struct.pack("BBB", i + 1, sh << 4 | sv, fr.tsel[i])
+                    for i, (sh, sv) in enumerate(fr.samp))
+    out.append(_seg(sof, struct.pack(">BHHB", 8, fr.h, fr.w, fr.c) + comp))
+    if restart_interval:
+        out.append(_seg(0xFFDD, struct.pack(">H", restart_interval)))
+    for cls, tid, (bits, values) in huffman:
+        if tid in fr.tsel:
+            out.append(_seg(0xFFC4, bytes([cls << 4 | tid]) + bytes(bits)
+                            + bytes(values)))
+    return out
+
+
+def _sos(fr: _Frame, comps, ss: int, se: int, ah: int = 0, al: int = 0,
+         ac_table: int | None = None) -> bytes:
+    """SOS segment: each component's own DC table, and ``ac_table``
+    (default: its own) for AC."""
+    body = bytes([len(comps)])
+    for ci in comps:
+        ta = fr.tsel[ci] if ac_table is None else ac_table
+        body += bytes([ci + 1, fr.tsel[ci] << 4 | ta])
+    return _seg(0xFFDA, body + bytes([ss, se, ah << 4 | al]))
+
+
+def _mcus(bw: _BitWriter, fr: _Frame, restart_interval: int):
+    """The interleaved MCU raster. Yields, per MCU, whether a restart
+    marker (written here) precedes it — the caller resets its DC
+    predictors — and its (component, zigzag block) data units."""
+    mcu_i = 0
+    for my in range(fr.mcuy):
+        for mx in range(fr.mcux):
+            restart = bool(restart_interval) and mcu_i > 0 \
+                and mcu_i % restart_interval == 0
+            if restart:
+                bw.restart(mcu_i // restart_interval - 1)
+            mcu_i += 1
+            yield restart, [
+                (ci, fr.coefs[ci][my * sv + vi, mx * sh + hi])
+                for ci, (sh, sv) in enumerate(fr.samp)
+                for vi in range(sv) for hi in range(sh)]
+
+
+def _write_dc(bw: _BitWriter, codes: dict, diff: int) -> None:
+    size, amp = _magnitude(diff)
+    bw.write(*codes[size])
+    if size:
+        bw.write(amp, size)
+
+
+def _write_runs(bw: _BitWriter, codes: dict, vals: list) -> bool:
+    """Run/size symbols (ZRLs included) for ``vals`` up to its last
+    nonzero. True when zeros trail it: the caller codes an EOB."""
+    last = len(vals) - 1
+    while last >= 0 and not vals[last]:
+        last -= 1
+    run = 0
+    for v in vals[:last + 1]:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            bw.write(*codes[0xF0])  # ZRL
+            run -= 16
+        size, amp = _magnitude(v)
+        bw.write(*codes[(run << 4) | size])
+        bw.write(amp, size)
+        run = 0
+    return last < len(vals) - 1
+
+
+def _write_eobrun(bw: _BitWriter, codes: dict, eobrun: int) -> None:
+    """EOBn symbol plus its extra bits for a run of ``eobrun`` blocks."""
+    r = eobrun.bit_length() - 1
+    bw.write(*codes[r << 4])
+    if r:
+        bw.write(eobrun - (1 << r), r)
+
+
+def jpeg_encode(pixels: np.ndarray, quality: int = 75,
+                subsample: str = "444",
+                restart_interval: int = 0) -> bytes:
+    """Encode an (H, W) or (H, W, 3) uint8 array as baseline JFIF
+    (Annex K tables scaled by ``quality``; ``subsample`` = "444" or
+    "420" — 4:2:0 box-averages chroma 2x2 and interleaves 4 Y + Cb +
+    Cr blocks per 16x16 MCU, the common web-JPEG layout)."""
+    fr = _encode_frame(pixels, quality, subsample)
     dc_codes = [_build_huffman_codes(*_DC_LUM), _build_huffman_codes(*_DC_CHROM)]
     ac_codes = [_build_huffman_codes(*_AC_LUM), _build_huffman_codes(*_AC_CHROM)]
 
     bw = _BitWriter()
-    dc_prev = [0] * len(planes)
-    mcu_i = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                bw.flush()
-                bw.buf += bytes([0xFF, 0xD0 + (mcu_i // restart_interval - 1) % 8])
-                dc_prev = [0] * len(planes)
-            mcu_i += 1
-            for ci in range(len(planes)):
-                sh, sv = samp[ci]
-                for v_i in range(sv):
-                    for h_i in range(sh):
-                        zz = coefs[ci][my * sv + v_i, mx * sh + h_i]
-                        # DC
-                        diff = int(zz[0]) - dc_prev[ci]
-                        dc_prev[ci] = int(zz[0])
-                        size, amp = _magnitude(diff)
-                        code, length = dc_codes[tsel[ci]][size]
-                        bw.write(code, length)
-                        if size:
-                            bw.write(amp, size)
-                        # AC
-                        run = 0
-                        for i in range(1, 64):
-                            v = int(zz[i])
-                            if v == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                code, length = ac_codes[tsel[ci]][0xF0]  # ZRL
-                                bw.write(code, length)
-                                run -= 16
-                            size, amp = _magnitude(v)
-                            code, length = ac_codes[tsel[ci]][(run << 4) | size]
-                            bw.write(code, length)
-                            bw.write(amp, size)
-                            run = 0
-                        if run:
-                            code, length = ac_codes[tsel[ci]][0x00]  # EOB
-                            bw.write(code, length)
+    dc_prev = [0] * fr.c
+    for restart, units in _mcus(bw, fr, restart_interval):
+        if restart:
+            dc_prev = [0] * fr.c
+        for ci, zz in units:
+            t = fr.tsel[ci]
+            _write_dc(bw, dc_codes[t], int(zz[0]) - dc_prev[ci])
+            dc_prev[ci] = int(zz[0])
+            if _write_runs(bw, ac_codes[t], zz[1:].tolist()):
+                bw.write(*ac_codes[t][0x00])  # EOB
     bw.flush()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    out = [b"\xff\xd8"]  # SOI
-    out.append(seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"))
-    out.append(seg(0xFFDB, b"\x00" + bytes(qlum[_ZIGZAG].astype(np.uint8))))
-    if c == 3:
-        out.append(seg(0xFFDB, b"\x01" + bytes(qchrom[_ZIGZAG].astype(np.uint8))))
-    comp = b"".join(
-        struct.pack("BBB", i + 1, samp[i][0] << 4 | samp[i][1],
-                    0 if i == 0 else 1)
-        for i in range(c))
-    out.append(seg(0xFFC0, struct.pack(">BHHB", 8, h, w, c) + comp))
-    if restart_interval:
-        out.append(seg(0xFFDD, struct.pack(">H", restart_interval)))
-    for cls, tid, (bits, values) in ((0, 0, _DC_LUM), (1, 0, _AC_LUM),
-                                     (0, 1, _DC_CHROM), (1, 1, _AC_CHROM)):
-        if c == 1 and tid == 1:
-            continue
-        out.append(seg(0xFFC4, bytes([cls << 4 | tid]) + bytes(bits)
-                       + bytes(values)))
-    scomp = b"".join(struct.pack("BB", i + 1, 0 if i == 0 else 0x11)
-                     for i in range(c))
-    out.append(seg(0xFFDA, bytes([c]) + scomp + b"\x00\x3f\x00"))
-    out.append(bytes(bw.buf))
-    out.append(b"\xff\xd9")  # EOI
-    return b"".join(out)
+    head = _head(fr, 0xFFC0, restart_interval,
+                 ((0, 0, _DC_LUM), (1, 0, _AC_LUM),
+                  (0, 1, _DC_CHROM), (1, 1, _AC_CHROM)))
+    return b"".join(head + [_sos(fr, range(fr.c), 0, 63), bytes(bw.buf),
+                            b"\xff\xd9"])  # EOI
 
 
 # ---------------------------------------------------------------- decode
@@ -756,45 +817,8 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
     resetting DC predictors and EOB runs. Refinement correction
     bits are emitted per ZRL segment — exactly the bits the
     decoder's 16-zero-history advance consumes."""
-    arr = np.asarray(pixels, dtype=np.uint8)
-    grey = arr.ndim == 2
-    if grey:
-        arr = arr[:, :, None]
-    h, w, c = arr.shape
-    if c not in (1, 3):
-        raise ValueError(f"unsupported channel count {c}")
-    if subsample not in ("444", "420"):
-        raise ValueError(f"subsample must be 444 or 420, got {subsample}")
-    q = max(1, min(100, int(quality)))
-    scale = 5000 // q if q < 50 else 200 - 2 * q
-    qlum = np.clip((_QUANT_LUM * scale + 50) // 100, 1, 255)
-    qchrom = np.clip((_QUANT_CHROM * scale + 50) // 100, 1, 255)
-    if c == 3:
-        rgb = arr.astype(np.float64)
-        y = 0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]
-        cb = 128 - 0.168736 * rgb[:, :, 0] - 0.331264 * rgb[:, :, 1] \
-            + 0.5 * rgb[:, :, 2]
-        cr = 128 + 0.5 * rgb[:, :, 0] - 0.418688 * rgb[:, :, 1] \
-            - 0.081312 * rgb[:, :, 2]
-        planes = [y, cb, cr]
-        qts = [qlum, qchrom, qchrom]
-        tsel = [0, 1, 1]
-        samp = [(2, 2), (1, 1), (1, 1)] if subsample == "420" \
-            else [(1, 1)] * 3
-    else:
-        planes = [arr[:, :, 0].astype(np.float64)]
-        qts = [qlum]
-        tsel = [0]
-        samp = [(1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-
-    coefs, nonint = _quantize_planes(planes, samp, qts, h, w,
-                                     hmax, vmax, mcux, mcuy)
-
+    fr = _encode_frame(pixels, quality, subsample)
+    c = fr.c
     dc_codes = [_build_huffman_codes(*_DC_LUM),
                 _build_huffman_codes(*_DC_CHROM)]
     acp = _build_huffman_codes(_AC_PROG_BITS, _AC_PROG_VALUES)
@@ -805,54 +829,25 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
         bwr.flush()
         return bytes(bwr.buf)
 
-    def write_rst(bwr, i: int) -> None:
-        bwr.flush()
-        bwr.buf += bytes([0xFF, 0xD0 + i % 8])
-
     def dc_first(bwr):  # Ss=0 Se=0 Ah=0 Al=1 (arithmetic shift)
         prev = [0] * c
-        mcu_i = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart_interval and mcu_i \
-                        and mcu_i % restart_interval == 0:
-                    write_rst(bwr, mcu_i // restart_interval - 1)
-                    prev = [0] * c
-                mcu_i += 1
-                for ci in range(c):
-                    sh, sv = samp[ci]
-                    for vi in range(sv):
-                        for hi in range(sh):
-                            v = int(coefs[ci][my * sv + vi,
-                                              mx * sh + hi, 0]) >> 1
-                            diff = v - prev[ci]
-                            prev[ci] = v
-                            size, amp = _magnitude(diff)
-                            code, ln = dc_codes[tsel[ci]][size]
-                            bwr.write(code, ln)
-                            if size:
-                                bwr.write(amp, size)
+        for restart, units in _mcus(bwr, fr, restart_interval):
+            if restart:
+                prev = [0] * c
+            for ci, zz in units:
+                v = int(zz[0]) >> 1
+                _write_dc(bwr, dc_codes[fr.tsel[ci]], v - prev[ci])
+                prev[ci] = v
 
     def dc_refine(bwr):  # Ah=1 Al=0: one raw bit per block
-        mcu_i = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart_interval and mcu_i \
-                        and mcu_i % restart_interval == 0:
-                    write_rst(bwr, mcu_i // restart_interval - 1)
-                mcu_i += 1
-                for ci in range(c):
-                    sh, sv = samp[ci]
-                    for vi in range(sv):
-                        for hi in range(sh):
-                            bwr.write(int(coefs[ci][my * sv + vi,
-                                                    mx * sh + hi, 0]) & 1,
-                                      1)
+        for _, units in _mcus(bwr, fr, restart_interval):
+            for _, zz in units:
+                bwr.write(int(zz[0]) & 1, 1)
 
     def ac_blocks(ci):
         """Non-interleaved data-unit raster with restart markers —
         the traversal the decoder uses for single-component scans."""
-        bh_i, bw_i = nonint[ci]
+        bh_i, bw_i = fr.nonint[ci]
         return [(by, bx) for by in range(bh_i) for bx in range(bw_i)]
 
     def ac_first(ci, ss, se, al):
@@ -862,44 +857,24 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
             def flush_eob():
                 nonlocal eobrun
                 if eobrun:
-                    r = eobrun.bit_length() - 1
-                    code, ln = acp[r << 4]
-                    bwr.write(code, ln)
-                    if r:
-                        bwr.write(eobrun - (1 << r), r)
+                    _write_eobrun(bwr, acp, eobrun)
                     eobrun = 0
 
             for bi, (by, bx) in enumerate(ac_blocks(ci)):
                 if restart_interval and bi \
                         and bi % restart_interval == 0:
                     flush_eob()
-                    write_rst(bwr, bi // restart_interval - 1)
-                band = coefs[ci][by, bx, ss:se + 1]
+                    bwr.restart(bi // restart_interval - 1)
+                band = fr.coefs[ci][by, bx, ss:se + 1]
                 vals = [(abs(int(v)) >> al) * (1 if v >= 0 else -1)
                         for v in band]
-                nz = [i for i, v in enumerate(vals) if v]
-                if not nz:
+                if not any(vals):
                     eobrun += 1
                     if eobrun == 0x7FFF:
                         flush_eob()
                     continue
                 flush_eob()
-                run = 0
-                for i in range(nz[-1] + 1):
-                    v = vals[i]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, ln = acp[0xF0]  # ZRL
-                        bwr.write(code, ln)
-                        run -= 16
-                    size, amp = _magnitude(v)
-                    code, ln = acp[(run << 4) | size]
-                    bwr.write(code, ln)
-                    bwr.write(amp, size)
-                    run = 0
-                if nz[-1] < len(vals) - 1:
+                if _write_runs(bwr, acp, vals):
                     eobrun = 1
             flush_eob()
         return fn
@@ -912,11 +887,7 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
             def flush_eob():
                 nonlocal eobrun
                 if eobrun:
-                    r = eobrun.bit_length() - 1
-                    code, ln = acp[r << 4]
-                    bwr.write(code, ln)
-                    if r:
-                        bwr.write(eobrun - (1 << r), r)
+                    _write_eobrun(bwr, acp, eobrun)
                     for b in eob_bits:
                         bwr.write(b, 1)
                     eob_bits.clear()
@@ -926,8 +897,8 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
                 if restart_interval and bi \
                         and bi % restart_interval == 0:
                     flush_eob()
-                    write_rst(bwr, bi // restart_interval - 1)
-                band = [int(v) for v in coefs[ci][by, bx, ss:se + 1]]
+                    bwr.restart(bi // restart_interval - 1)
+                band = [int(v) for v in fr.coefs[ci][by, bx, ss:se + 1]]
                 absv = [abs(v) >> al for v in band]
                 newly = [i for i, a in enumerate(absv) if a == 1]
                 if not newly:
@@ -949,8 +920,7 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
                     else:  # newly nonzero: emit ZRLs segment-wise
                         zcount = sum(1 for e in region if e == "z")
                         while zcount > 15:
-                            code, ln = acp[0xF0]
-                            bwr.write(code, ln)
+                            bwr.write(*acp[0xF0])  # ZRL
                             taken = 0
                             while taken < 16:
                                 e = region.pop(0)
@@ -959,8 +929,7 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
                                 else:
                                     bwr.write(e, 1)
                             zcount -= 16
-                        code, ln = acp[(zcount << 4) | 1]
-                        bwr.write(code, ln)
+                        bwr.write(*acp[(zcount << 4) | 1])
                         bwr.write(1 if band[i] > 0 else 0, 1)
                         for e in region:
                             if e != "z":
@@ -977,48 +946,20 @@ def jpeg_encode_progressive(pixels: np.ndarray, quality: int = 75,
             flush_eob()
         return fn
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    def sos(comp_ids, ss, se, ah, al) -> bytes:
-        hdr = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            hdr += struct.pack("BB", ci + 1, (tsel[ci] << 4) | 0)
-        hdr += bytes([ss, se, (ah << 4) | al])
-        return seg(0xFFDA, hdr)
-
-    out = [b"\xff\xd8",
-           seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-           seg(0xFFDB, b"\x00" + bytes(qlum[_ZIGZAG].astype(np.uint8)))]
-    if c == 3:
-        out.append(seg(0xFFDB,
-                       b"\x01" + bytes(qchrom[_ZIGZAG].astype(np.uint8))))
-    comp = b"".join(
-        struct.pack("BBB", i + 1, samp[i][0] << 4 | samp[i][1],
-                    0 if i == 0 else 1)
-        for i in range(c))
-    out.append(seg(0xFFC2, struct.pack(">BHHB", 8, h, w, c) + comp))
-    if restart_interval:
-        out.append(seg(0xFFDD, struct.pack(">H", restart_interval)))
-    for cls, tid, (bits, values) in (
-            (0, 0, _DC_LUM), (0, 1, _DC_CHROM),
-            (1, 0, (_AC_PROG_BITS, _AC_PROG_VALUES))):
-        if c == 1 and tid == 1:
-            continue
-        out.append(seg(0xFFC4, bytes([cls << 4 | tid]) + bytes(bits)
-                       + bytes(values)))
-    all_ids = list(range(c))
-    out.append(sos(all_ids, 0, 0, 0, 1))
-    out.append(scan_bytes(dc_first))
+    head = _head(fr, 0xFFC2, restart_interval,
+                 ((0, 0, _DC_LUM), (0, 1, _DC_CHROM),
+                  (1, 0, (_AC_PROG_BITS, _AC_PROG_VALUES))))
+    bands = ((1, 5), (6, 63))
+    scans = [_sos(fr, range(c), 0, 0, 0, 1, ac_table=0),
+             scan_bytes(dc_first)]
     for ci in range(c):
-        for band in ((1, 5), (6, 63)):
-            out.append(sos([ci], band[0], band[1], 0, 1))
-            out.append(scan_bytes(ac_first(ci, band[0], band[1], 1)))
-    out.append(sos(all_ids, 0, 0, 1, 0))
-    out.append(scan_bytes(dc_refine))
+        for ss, se in bands:
+            scans += [_sos(fr, [ci], ss, se, 0, 1, ac_table=0),
+                      scan_bytes(ac_first(ci, ss, se, 1))]
+    scans += [_sos(fr, range(c), 0, 0, 1, 0, ac_table=0),
+              scan_bytes(dc_refine)]
     for ci in range(c):
-        for band in ((1, 5), (6, 63)):
-            out.append(sos([ci], band[0], band[1], 1, 0))
-            out.append(scan_bytes(ac_refine(ci, band[0], band[1], 0)))
-    out.append(b"\xff\xd9")
-    return b"".join(out)
+        for ss, se in bands:
+            scans += [_sos(fr, [ci], ss, se, 1, 0, ac_table=0),
+                      scan_bytes(ac_refine(ci, ss, se, 0))]
+    return b"".join(head + scans + [b"\xff\xd9"])

@@ -676,35 +676,47 @@ def range_join_prices(spark: SparkSession, sf: str) -> DataFrame:
                  F.sum(F.col("l_orderkey") + F.col("l_linenumber")).alias("key_sum")))
 
 
+def _planted_media(docs: DataFrame, mime: str, make) -> DataFrame:
+    """``docs`` (one ``doc_id`` column) with a ``media`` struct of
+    type ``mime`` whose payload is ``make(doc_id) -> bytes``, built
+    worker-side in one mapInPandas pass."""
+    import pandas as pd
+
+    from tablite_spark.pipeline.multimodal import attach_media
+
+    def encode(batches):
+        for pdf in batches:
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                "raw": [make(int(did)) for did in pdf["doc_id"]]})
+
+    raw = docs.mapInPandas(encode, schema="doc_id long, raw binary")
+    return attach_media(raw, "raw", mime).drop("raw")
+
+
 def png_decode_dims(spark: SparkSession, sf: str) -> DataFrame:
     """REAL image decode (pipeline/png.py stdlib PNG codec +
     multimodal.decode_images): each doc gets a genuine PNG whose
     dimensions derive from doc_id; the decoded IHDR dimensions and the
     true mean-red feature must match the arithmetic oracle."""
     import numpy as np
-    import pandas as pd
 
     from tablite_spark.pipeline.multimodal import (
-        attach_media, decode_images, extract_image_features,
+        decode_images, extract_image_features,
     )
     from tablite_spark.pipeline.png import png_encode
-    d = _t(spark, sf, "documents").select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                w, h = 8 + int(did) % 5, 6 + int(did) % 3
-                # red channel 0 or 255 -> mean_red is exactly 0.0/1.0
-                # in float32, no rounding-boundary ambiguity vs the
-                # double-precision oracle
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = 255 * (int(did) % 2)
-                raws.append(png_encode(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
+    def make(did):
+        w, h = 8 + did % 5, 6 + did % 3
+        # red channel 0 or 255 -> mean_red is exactly 0.0/1.0 in
+        # float32, no rounding-boundary ambiguity vs the
+        # double-precision oracle
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = 255 * (did % 2)
+        return png_encode(px)
 
-    imgs = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(imgs, "raw", "image/png").drop("raw")
+    media = _planted_media(_t(spark, sf, "documents").select("doc_id"),
+                           "image/png", make)
     dims = decode_images(media)
     feats = extract_image_features(media, dim=4).select(
         "doc_id", F.element_at("features", 1).cast("double").alias("mean_red"))
@@ -725,38 +737,26 @@ def jpeg_decode_dims(spark: SparkSession, sf: str) -> DataFrame:
     widths, partial edge blocks) so padding and subsampled
     reconstruction are exercised, not just the header path."""
     import numpy as np
-    import pandas as pd
 
     from tablite_spark.pipeline.jpeg import (
         jpeg_encode, jpeg_encode_progressive,
     )
     from tablite_spark.pipeline.multimodal import (
-        attach_media, decode_images, extract_image_features,
+        decode_images, extract_image_features,
     )
-    d = _t(spark, sf, "documents").select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                w, h = 16 + int(did) % 9, 12 + int(did) % 5
-                # red 0 or 255: after quantization the decoded
-                # mean-red is within a couple of 1/255 steps of exact,
-                # so round() recovers the planted bit losslessly
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = 255 * (int(did) % 2)
-                if int(did) % 3 == 0:
-                    raws.append(jpeg_encode_progressive(
-                        px, quality=90, subsample="420",
-                        restart_interval=2))
-                else:
-                    raws.append(jpeg_encode(px, quality=90,
-                                            subsample="420",
-                                            restart_interval=2))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
+    def make(did):
+        w, h = 16 + did % 9, 12 + did % 5
+        # red 0 or 255: after quantization the decoded mean-red is
+        # within a couple of 1/255 steps of exact, so round()
+        # recovers the planted bit losslessly
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = 255 * (did % 2)
+        enc = jpeg_encode_progressive if did % 3 == 0 else jpeg_encode
+        return enc(px, quality=90, subsample="420", restart_interval=2)
 
-    imgs = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(imgs, "raw", "image/jpeg").drop("raw")
+    media = _planted_media(_t(spark, sf, "documents").select("doc_id"),
+                           "image/jpeg", make)
     dims = decode_images(media)
     feats = extract_image_features(media, dim=4).select(
         "doc_id",
@@ -773,27 +773,20 @@ def gif_decode_dims(spark: SparkSession, sf: str) -> DataFrame:
     bit. Palette decode is LOSSLESS so the mean-red feature recovers
     the bit exactly — no quantization rounding needed."""
     import numpy as np
-    import pandas as pd
 
     from tablite_spark.pipeline.gif import gif_encode
     from tablite_spark.pipeline.multimodal import (
-        attach_media, decode_images, extract_image_features,
+        decode_images, extract_image_features,
     )
-    d = _t(spark, sf, "documents").select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 9, 12 + did % 5
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = 255 * (did % 2)
-                raws.append(gif_encode(px, interlace=(did % 3 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
+    def make(did):
+        w, h = 16 + did % 9, 12 + did % 5
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = 255 * (did % 2)
+        return gif_encode(px, interlace=(did % 3 == 0))
 
-    imgs = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(imgs, "raw", "image/gif").drop("raw")
+    media = _planted_media(_t(spark, sf, "documents").select("doc_id"),
+                           "image/gif", make)
     dims = decode_images(media)
     feats = extract_image_features(media, dim=4).select(
         "doc_id",
@@ -812,28 +805,21 @@ def audio_features_meta(spark: SparkSession, sf: str) -> DataFrame:
     round(rms·32768·√2/8000) = amplitude bit — all integers the
     arithmetic oracle reproduces."""
     import numpy as np
-    import pandas as pd
 
     from tablite_spark.pipeline.multimodal import (
-        attach_media, extract_audio_features, wav_encode,
+        extract_audio_features, wav_encode,
     )
-    d = _t(spark, sf, "documents").select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                f = 500 * (1 + did % 8)
-                amp = 8000 * (1 + did % 2)
-                k = np.arange(3200)
-                x = np.round(amp * np.sin(
-                    2 * np.pi * f * (k + 0.5) / 16000)).astype(np.int16)
-                raws.append(wav_encode(x, sample_rate=16000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
+    def make(did):
+        f = 500 * (1 + did % 8)
+        amp = 8000 * (1 + did % 2)
+        k = np.arange(3200)
+        x = np.round(amp * np.sin(
+            2 * np.pi * f * (k + 0.5) / 16000)).astype(np.int16)
+        return wav_encode(x, sample_rate=16000)
 
-    clips = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(clips, "raw", "audio/wav").drop("raw")
+    media = _planted_media(_t(spark, sf, "documents").select("doc_id"),
+                           "audio/wav", make)
     feats = extract_audio_features(media)
     sqrt2 = 2.0 ** 0.5
     return feats.select(
@@ -858,32 +844,19 @@ def video_frames_meta(spark: SparkSession, sf: str) -> DataFrame:
     quantization-rounded luma bits must match the arithmetic
     oracle."""
     import numpy as np
-    import pandas as pd
 
     from tablite_spark.pipeline.avi import avi_encode
-    from tablite_spark.pipeline.multimodal import (
-        attach_media, sample_video_frames,
-    )
+    from tablite_spark.pipeline.multimodal import sample_video_frames
+
+    def make(did):
+        w, h = 16 + did % 9, 12 + did % 5
+        frames = [np.full((h, w, 3), 255 * ((did + i) % 2), dtype=np.uint8)
+                  for i in range(3 + did % 4)]
+        return avi_encode(frames, fps=10.0, quality=90)
+
     d = (_t(spark, sf, "documents").select("doc_id")
          .where(F.col("doc_id") % 5 == 0))
-
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 9, 12 + did % 5
-                n = 3 + did % 4
-                frames = []
-                for i in range(n):
-                    px = np.full((h, w, 3),
-                                 255 * ((did + i) % 2), dtype=np.uint8)
-                    frames.append(px)
-                raws.append(avi_encode(frames, fps=10.0, quality=90))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
-
-    vids = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(vids, "raw", "video/x-msvideo").drop("raw")
+    media = _planted_media(d, "video/x-msvideo", make)
     sampled = sample_video_frames(media, every_ms=200)
     return (sampled.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_sampled"),
@@ -900,23 +873,15 @@ def wav_decode_meta(spark: SparkSession, sf: str) -> DataFrame:
     derives from doc_id; decoded sample_rate/channels/duration_ms must
     match the arithmetic oracle."""
     import numpy as np
-    import pandas as pd
 
-    from tablite_spark.pipeline.multimodal import (
-        attach_media, decode_audio, wav_encode,
-    )
-    d = _t(spark, sf, "documents").select("doc_id")
+    from tablite_spark.pipeline.multimodal import decode_audio, wav_encode
 
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                n = 800 + (int(did) % 10) * 160  # 50ms + k*10ms @16kHz
-                raws.append(wav_encode(np.zeros(n, dtype="<i2"), 16_000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
+    def make(did):
+        n = 800 + (did % 10) * 160  # 50ms + k*10ms @16kHz
+        return wav_encode(np.zeros(n, dtype="<i2"), 16_000)
 
-    wavs = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(wavs, "raw", "audio/wav").drop("raw")
+    media = _planted_media(_t(spark, sf, "documents").select("doc_id"),
+                           "audio/wav", make)
     return decode_audio(media).select(
         "doc_id", "sample_rate", "channels", "duration_ms")
 
@@ -932,27 +897,21 @@ def resize_images_agg(spark: SparkSession, sf: str) -> DataFrame:
     — a constant-only oracle would not catch a channel swap, a
     stride bug, or resample drift; the per-doc varying level does."""
     import numpy as np
-    import pandas as pd
 
     from tablite_spark.pipeline.multimodal import (
-        attach_media, decode_images, extract_image_features, resize_images,
+        decode_images, extract_image_features, resize_images,
     )
     from tablite_spark.pipeline.png import png_encode
+
+    def make(did):
+        w, h = 9 + did % 5, 7 + did % 3
+        px = np.zeros((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = (did * 37) % 256
+        return png_encode(px)
+
     d = _t(spark, sf, "documents").select("doc_id").filter(
         F.col("doc_id") < 2000)
-
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                w, h = 9 + int(did) % 5, 7 + int(did) % 3
-                px = np.zeros((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = (int(did) * 37) % 256
-                raws.append(png_encode(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
-
-    imgs = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(imgs, "raw", "image/png").drop("raw")
+    media = _planted_media(d, "image/png", make)
     small = resize_images(media, width=4, height=4, out_format="png")
     dims = decode_images(small).select("doc_id", "width", "height")
     red = extract_image_features(small, dim=4).select(
@@ -974,23 +933,18 @@ def resample_audio_meta(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     from tablite_spark.pipeline.multimodal import (
-        attach_media, resample_audio, wav_encode, wav_samples,
+        resample_audio, wav_encode, wav_samples,
     )
+
+    def make(did):
+        n = 160 + (did % 7) * 40  # multiple of 8
+        return wav_encode(np.full(n, (did * 131) % 32768, dtype="<i2"),
+                          8_000)
+
     d = _t(spark, sf, "documents").select("doc_id").filter(
         F.col("doc_id") < 2000)
-
-    def encode(batches):
-        for pdf in batches:
-            raws = []
-            for did in pdf["doc_id"]:
-                n = 160 + (int(did) % 7) * 40  # multiple of 8
-                v = (int(did) * 131) % 32768
-                raws.append(wav_encode(np.full(n, v, dtype="<i2"), 8_000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "raw": raws})
-
-    wavs = d.mapInPandas(encode, schema="doc_id long, raw binary")
-    media = attach_media(wavs, "raw", "audio/wav").drop("raw")
-    out = resample_audio(media, target_rate=16_000)
+    out = resample_audio(_planted_media(d, "audio/wav", make),
+                         target_rate=16_000)
 
     def verify(batches):
         for pdf in batches:

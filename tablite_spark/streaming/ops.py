@@ -279,9 +279,17 @@ def stream_interval_join(left: DataFrame, right: DataFrame,
     return lw.join(rw, on=cond, how=how)
 
 
+def _drain(stream: DataFrame, write_batch, checkpoint: str):
+    """Start ``stream`` into ``foreachBatch(write_batch)`` under
+    ``checkpoint`` on the availableNow trigger: it drains what is
+    there, then stops. The shared tail of the idempotent sinks."""
+    return (stream.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True).start())
+
+
 def exactly_once_parquet_sink(stream: DataFrame, path: str,
-                              checkpoint: str,
-                              trigger_once: bool = True):
+                              checkpoint: str):
     """Exactly-once parquet sink via idempotent ``foreachBatch``.
 
     Structured Streaming's contract is at-least-once delivery of each
@@ -294,26 +302,21 @@ def exactly_once_parquet_sink(stream: DataFrame, path: str,
     reads the directory tree as ordinary partitioned parquet — and
     can partition-prune on ``batch_id`` for incremental consumption.
 
-    Returns the started StreamingQuery; with ``trigger_once`` (the
-    batch-style backfill trigger) the caller can ``awaitTermination``
-    for a drain-and-stop run.
+    Returns the started StreamingQuery; it runs on the availableNow
+    trigger (the batch-style backfill), so the caller can
+    ``awaitTermination`` for a drain-and-stop run.
     """
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         (batch_df.write.mode("overwrite")
          .parquet(f"{path}/batch_id={batch_id}"))
 
-    writer = (stream.writeStream.foreachBatch(_write)
-              .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, _write, checkpoint)
 
 
 def stream_incremental_dedup(stream: DataFrame, text_col: str,
                              id_col: str, index_path: str,
                              out_path: str, checkpoint: str,
-                             threshold: float = 0.8,
-                             trigger_once: bool = True):
+                             threshold: float = 0.8):
     """Streaming ingestion-loop dedup: each micro-batch is NEAR-dup
     deduplicated against the persisted MinHash index
     (``pipeline.dedup.incremental_minhash_dedup``), survivors land in
@@ -344,11 +347,7 @@ def stream_incremental_dedup(stream: DataFrame, text_col: str,
         (kept.write.mode("overwrite")
          .parquet(f"{out_path}/batch_id={batch_id}"))
 
-    writer = (stream.writeStream.foreachBatch(_write)
-              .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, _write, checkpoint)
 
 
 _ATTR_STATE = T.StructType([
@@ -669,8 +668,7 @@ def streaming_session_timeout(events: DataFrame,
 
 def incremental_matview_sink(stream: DataFrame, keys: list[str],
                              value_col: str, base_path: str,
-                             checkpoint: str,
-                             trigger_once: bool = True):
+                             checkpoint: str):
     """Incrementally-maintained aggregate table (the streaming
     materialized view): each micro-batch writes its COMBINABLE
     partial aggregate (count + sum) to its own
@@ -709,8 +707,4 @@ def incremental_matview_sink(stream: DataFrame, keys: list[str],
             shutil.rmtree(final)
         os.rename(tmp, final)
 
-    writer = (stream.writeStream.foreachBatch(_write)
-              .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, _write, checkpoint)

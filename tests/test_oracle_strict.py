@@ -9,14 +9,16 @@ compare mode in tools/check_oracle.py that makes the flake die
 locally, and (b) that no ``-0.0`` survives in the outputs of the
 rounded-float registry queries that can approach zero from below.
 """
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tools"))
 
 from check_oracle import compare  # noqa: E402
 

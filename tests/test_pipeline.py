@@ -2195,11 +2195,12 @@ def test_pq_topk_with_prebuilt_index(spark, tmp_path):
 def test_resize_images_real_pixels(spark):
     """resize_images: REAL decode->box-average->re-encode through the
     pure-python codecs. A 2x2-block image resized to 2x2 recovers the
-    block means (within JPEG quantization); PNG output is lossless-
-    exact; null / non-image payloads yield null media, never a task
-    failure; zero shuffles."""
+    block means (within JPEG quantization); PNG and GIF inputs are
+    lossless, so their output is exact; null / non-image payloads
+    yield null media, never a task failure; zero shuffles."""
     import numpy as np
 
+    from tablite_spark.pipeline.gif import gif_encode
     from tablite_spark.pipeline.jpeg import jpeg_encode
     from tablite_spark.pipeline.multimodal import (
         attach_media, resize_images,
@@ -2211,7 +2212,8 @@ def test_resize_images_real_pixels(spark):
     img[16:, :16] = 100; img[16:, 16:] = 250
     rows = [(0, bytearray(jpeg_encode(img, quality=95))),
             (1, bytearray(png_encode(img))),
-            (2, None), (3, bytearray(b"junk"))]
+            (2, None), (3, bytearray(b"junk")),
+            (4, bytearray(gif_encode(img)))]
     df = spark.createDataFrame(rows, "id long, data binary")
     m = attach_media(df, "data", "image/mixed")
     out = resize_images(m, width=2, height=2, out_format="png")
@@ -2220,8 +2222,9 @@ def test_resize_images_real_pixels(spark):
     assert got[2] is None and got[3] is None
     exp = np.array([[[200] * 3, [50] * 3], [[100] * 3, [250] * 3]],
                    dtype=np.uint8)
-    # png path: box means are exact
+    # png and gif paths: box means are exact
     assert np.array_equal(png_decode(bytes(got[1]["data"])), exp)
+    assert np.array_equal(png_decode(bytes(got[4]["data"])), exp)
     # jpeg input decodes within quantization of the block means
     dec = png_decode(bytes(got[0]["data"])).astype(int)
     assert np.abs(dec - exp.astype(int)).max() <= 12

@@ -1,13 +1,10 @@
-"""Skew mitigation: salted join correctness + bucketed persistence
-(shuffle elimination asserted on the plan)."""
+"""Skew mitigation: salted join correctness and its hot-key fan-out
+(asserted on the plan). Co-bucketed joins are tested in
+test_bucketing.py."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from tablite_spark.operators.skew import (
-    read_bucketed, salted_join, write_bucketed,
-)
-from tablite_spark.plans import shuffle_count
+from tablite_spark.operators.skew import salted_join
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -61,18 +58,3 @@ def test_salted_join_plan_fans_out_hot_key(spark):
     n_buckets = (salted.filter(F.col("k") == 1)
                  .select("__salt__").distinct().count())
     assert n_buckets == 8
-
-
-@pytest.mark.parametrize("n_buckets", [8])
-def test_bucketed_join_no_shuffle(spark, tmp_path, n_buckets):
-    a = spark.range(500).select(F.col("id").alias("k"),
-                                (F.col("id") * 2).alias("va"))
-    b = spark.range(500).select(F.col("id").alias("k"),
-                                (F.col("id") * 3).alias("vb"))
-    write_bucketed(a, "bucketed_a", ["k"], n_buckets, sort_cols=["k"])
-    write_bucketed(b, "bucketed_b", ["k"], n_buckets, sort_cols=["k"])
-    ra, rb = read_bucketed(spark, "bucketed_a"), read_bucketed(spark, "bucketed_b")
-    j = ra.join(rb, "k")
-    # co-located buckets: the join itself requires NO exchange
-    assert shuffle_count(j) == 0
-    assert j.count() == 500
