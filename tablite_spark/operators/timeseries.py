@@ -996,9 +996,13 @@ def interarrival_stats(df: DataFrame, key_col: str, ts_col: str,
                       cv.alias("cv"), b.alias("burstiness"))
 
 
+# active_users switches from the explode plan to the interval plan
+# above this max(windows)
+_EXPLODE_MAX_WINDOW = 32
+
+
 def active_users(df: DataFrame, ts_col: str, user_col: str,
-                 windows: tuple = (1, 7, 28),
-                 engine: str = "auto") -> DataFrame:
+                 windows: tuple = (1, 7, 28)) -> DataFrame:
     """Rolling distinct-active-user counts per day — DAU / WAU / MAU
     and the DAU/MAU stickiness ratio, the product-analytics staple.
     One row per calendar day with ≥1 event: (day, au_1, au_7,
@@ -1006,7 +1010,7 @@ def active_users(df: DataFrame, ts_col: str, user_col: str,
     window ENDING on d..d+w−1 that has begun (days with no events
     emit no row).
 
-    Scale shape, ``engine='explode'`` (best for small max(windows)):
+    Scale shape for max(windows) <= 32, the explode plan:
     the corpus first collapses to DISTINCT (user, day) pairs (one
     combinable distinct; at most users×days rows regardless of event
     volume); each pair then explodes to the w days whose trailing
@@ -1015,8 +1019,8 @@ def active_users(df: DataFrame, ts_col: str, user_col: str,
     distinct-over-sliding-window (unsupported/serializing), never a
     per-day self-join chain.
 
-    ``engine='interval'`` (best for large max(windows), e.g. yearly
-    actives): the ×wmax explode is replaced by interval arithmetic —
+    For larger max(windows) (e.g. yearly actives), the interval plan:
+    the ×wmax explode is replaced by interval arithmetic —
     per (user, window), consecutive active days at gaps ≤ w merge
     into islands (one hash(user) shuffle + a lag over per-user
     bounded frames: ≤ calendar days per user); each island
@@ -1025,16 +1029,10 @@ def active_users(df: DataFrame, ts_col: str, user_col: str,
     span + wmax, never by users or events) recovers the exact
     distinct count per day. Shuffle volume is O(pairs·|windows|)
     instead of O(pairs·wmax) — ~120× less for a 365-day window —
-    at the cost of one extra user-keyed shuffle. ``'auto'`` picks
-    'interval' when max(windows) > 32.
+    at the cost of one extra user-keyed shuffle.
     """
     if not windows or any(w < 1 for w in windows):
         raise ValueError("windows must be positive ints")
-    if engine == "auto":
-        engine = "interval" if max(windows) > 32 else "explode"
-    if engine not in ("explode", "interval"):
-        raise ValueError(f"engine must be 'auto', 'explode' or "
-                         f"'interval', got {engine!r}")
     wmax = max(windows)
     t, u = F.col(ts_col), F.col(user_col)
     pairs = (df.filter(t.isNotNull() & u.isNotNull())
@@ -1042,7 +1040,7 @@ def active_users(df: DataFrame, ts_col: str, user_col: str,
                      F.date_trunc("day", t).alias("__d__"))
              .distinct())
     days = pairs.select(F.col("__d__").alias("day")).distinct()
-    if engine == "explode":
+    if wmax <= _EXPLODE_MAX_WINDOW:
         exploded = pairs.select(
             "__u__", "__d__",
             F.explode(F.sequence(F.lit(0), F.lit(wmax - 1)))

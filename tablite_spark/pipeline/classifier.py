@@ -34,6 +34,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.functions.tokens import nonempty, words
 from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import pinned
 
@@ -117,15 +118,14 @@ def doc_quality_features(df: DataFrame, text_col: str) -> DataFrame:
     # already wide and this no-ops.
     df = respread(df)
     c = F.col(text_col)
-    words = F.filter(F.split(F.trim(c), r"\s+"),
-                     lambda wd: wd != F.lit(""))
+    ws = nonempty(words(c))
     return (df
-            .withColumn("f_words", F.size(words) / F.lit(100.0))
+            .withColumn("f_words", F.size(ws) / F.lit(100.0))
             .withColumn("f_lines",
                         F.size(F.split(c, "\n")) / F.lit(10.0))
             .withColumn("f_chars", F.length(c) / F.lit(1000.0))
             .withColumn("f_vocab",
-                        F.size(F.array_distinct(words)) / F.lit(100.0)))
+                        F.size(F.array_distinct(ws)) / F.lit(100.0)))
 
 
 def train_quality_classifier(docs: DataFrame, text_col: str,

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tablite_spark.config import Config
+from tablite_spark.functions.tokens import (
+    alnum_words, collapsed_words, ngrams, nonempty, windows,
+)
 from tablite_spark.pipeline.graph import _factorized_edges
 from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import pin, release
@@ -72,21 +75,13 @@ def shingle_minhash(df: DataFrame, text_col: str, id_col: str,
     num_perm = num_perm or Config.MINHASH_PERMUTATIONS
     k = shingle_size or Config.SHINGLE_SIZE
     df = respread(df)
-    tokens = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-    n_sh = F.greatest(F.size(tokens) - F.lit(k - 1), F.lit(1))
-    # k-gram windows WITHOUT per-shingle array slicing: zip k shifted
-    # copies of the token array (k array ops per DOC, not per shingle)
-    # and hash the k token fields directly — no string concat, no
-    # array_distinct (min-agg is duplicate-insensitive). ~6x faster
-    # than transform(i -> concat_ws(slice(...))) which churns a sliced
-    # array per shingle in the interpreted HOF path.
-    parts = [tokens.alias("t0")]
-    for i in range(1, k):
-        parts.append(F.slice(tokens, i + 1,
-                             F.greatest(F.size(tokens) - F.lit(i), F.lit(1)))
-                     .alias(f"t{i}"))
-    windows = F.slice(F.arrays_zip(*parts), 1, n_sh)
-    exploded = df.select(F.col(id_col), F.explode(windows).alias("__w__"))
+    # hash the k token fields of each window directly — no string
+    # concat, no array_distinct (min-agg is duplicate-insensitive).
+    # ~6x faster than transform(i -> concat_ws(slice(...))) which
+    # churns a sliced array per shingle in the interpreted HOF path.
+    tokens = collapsed_words(F.lower(F.col(text_col)))
+    exploded = df.select(F.col(id_col),
+                         F.explode(windows(tokens, k)).alias("__w__"))
     hashed = exploded.select(
         id_col, F.xxhash64(*[F.col(f"__w__.t{i}") for i in range(k)]).alias("__h__"))
 
@@ -257,7 +252,7 @@ def minhash_dedup(df: DataFrame, text_col: str, id_col: str,
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFrame:
     """64-bit SimHash over word tokens: sum(+1/-1 per bit weighted by
     token hash sign), sign → bit. Explode + one groupBy — linear."""
-    tokens = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
+    tokens = collapsed_words(F.lower(F.col(text_col)))
     ex = df.select(F.col(id_col), F.explode(tokens).alias("__tok__"))
     h = ex.select(id_col, F.xxhash64("__tok__").alias("__h__"))
     bit_aggs = []
@@ -723,11 +718,7 @@ def ngram_jaccard(df_a: DataFrame, df_b: DataFrame, text_col: str,
     already be restricted — e.g. LSH candidates); array_intersect /
     array_union are JVM built-ins."""
     def grams(c):
-        tokens = F.split(F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")), " ")
-        cnt = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(1))
-        return F.array_distinct(F.transform(
-            F.sequence(F.lit(0), cnt - 1),
-            lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n))))
+        return F.array_distinct(ngrams(collapsed_words(F.lower(c)), n))
     a = df_a.select(F.col(id_col).alias("id_a"), grams(F.col(text_col)).alias("g_a"))
     b = df_b.select(F.col(id_col).alias("id_b"), grams(F.col(text_col)).alias("g_b"))
     pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
@@ -837,29 +828,19 @@ def substring_dedup(df: DataFrame, text_col: str, id_col: str,
     # the k-slice zip + posexplode window build below runs pre-shuffle
     # and would otherwise land in ONE task on a single-row-group file
     df = respread(df)
-    # filter('' ...) drops the [''] that split() yields for empty /
+    # nonempty drops the [''] that split() yields for empty /
     # whitespace-only docs, so they count as 0 tokens, not 1
-    toks = F.filter(F.split(F.trim(F.regexp_replace(
-        F.col(text_col), r"\s+", " ")), " "),
-        lambda w: w != "")
+    toks = nonempty(collapsed_words(F.col(text_col)))
     base = df.select(F.col(id_col), toks.alias("__t__"))
     n = F.size("__t__")
-    n_win = n - F.lit(k - 1)
-    # k shifted copies → arrays_zip → the j-th struct holds tokens
-    # j..j+k-1; slice to the valid window count
-    parts = [F.col("__t__").alias("w0")]
-    for i in range(1, k):
-        parts.append(F.slice(F.col("__t__"), i + 1,
-                             F.greatest(n - F.lit(i), F.lit(1)))
-                     .alias(f"w{i}"))
-    windows = F.slice(F.arrays_zip(*parts), 1, F.greatest(n_win, F.lit(0)))
+    # the j-th window struct holds tokens j..j+k-1
+    wfields = [F.col(f"__w__.t{i}") for i in range(k)]
     wins = (base.filter(n >= k)
-            .select(id_col, F.posexplode(windows).alias("__j__", "__w__"))
+            .select(id_col, F.posexplode(windows(F.col("__t__"), k))
+                    .alias("__j__", "__w__"))
             .select(id_col, "__j__",
-                    F.xxhash64(*[F.col(f"__w__.w{i}") for i in range(k)])
-                    .alias("__h1__"),
-                    F.xxhash64(F.lit(0x9E3779B9),
-                               *[F.col(f"__w__.w{i}") for i in range(k)])
+                    F.xxhash64(*wfields).alias("__h1__"),
+                    F.xxhash64(F.lit(0x9E3779B9), *wfields)
                     .alias("__h2__")))
     shared = (wins.groupBy("__h1__", "__h2__")
               .agg(F.countDistinct(id_col).alias("__nd__"))
@@ -1047,9 +1028,9 @@ def jaccard_join(df: DataFrame, text_col: str, id_col: str,
     ``id_a < id_b`` — the verification-grade companion to the
     MinHash/SimHash probabilistic dedup family (those can miss or
     over-report near the threshold; this one is exact, at the cost
-    of candidate verification). Tokens are the DSIR normalization
-    (lowercased, punct-stripped, whitespace-split), deduplicated
-    per doc; docs with no tokens pair with nothing.
+    of candidate verification). Tokens are ``tokens.alnum_words``
+    (the DSIR tokenizer), deduplicated per doc; docs with no tokens
+    pair with nothing.
 
     Plan (PPJoin-style prefix filtering, Chaudhuri et al. 2006 /
     Xiao et al. 2008 — public recipe): ONE corpus scan feeds a
@@ -1070,10 +1051,7 @@ def jaccard_join(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(f"threshold must be in (0, 1], got "
                          f"{threshold}")
     t = float(threshold)
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9 ]",
-                            " ")
-    toks = F.array_distinct(
-        F.filter(F.split(norm, r" +"), lambda x: x != ""))
+    toks = F.array_distinct(alnum_words(F.col(text_col)))
     base = (df.select(F.col(id_col).alias("__id__"),
                       toks.alias("__tk__"))
             .filter(F.size("__tk__") > 0))

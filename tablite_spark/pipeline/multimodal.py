@@ -192,13 +192,15 @@ def extract_image_features(df: DataFrame, media_col: str = "media",
 
 def wav_header(data: bytes) -> tuple[int, int, int, int]:
     """(sample_rate, channels, bits, duration_ms) from a RIFF/WAVE
-    header — the public WAV container layout, stdlib struct only."""
+    header — the public WAV container layout, stdlib struct only. The
+    duration is that of the first ``data`` chunk, the one
+    :func:`wav_samples` decodes."""
     rate, ch, bits, data_len = None, None, None, None
     for tag, start, length in _riff_chunks(data, b"WAVE"):
         if tag == b"fmt ":
             _, ch, rate, _, _, bits = struct.unpack(
                 "<HHIIHH", data[start:start + 16])
-        elif tag == b"data":
+        elif tag == b"data" and data_len is None:
             data_len = length
     if not rate or not ch or not bits or data_len is None:
         raise ValueError("incomplete WAV header")

@@ -21,19 +21,12 @@ this is a beyond-reference capability).
 from __future__ import annotations
 
 import math
-import re
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tablite_spark.functions.tokens import alnum_words, py_alnum_words
 from tablite_spark.plans.lifecycle import pin
-
-_TOKEN_SPLIT = r"[^a-z0-9]+"
-
-
-def _tokens(col):
-    return F.filter(F.split(F.lower(col), _TOKEN_SPLIT),
-                    lambda t: t != "")
 
 
 def build_postings(docs: DataFrame, text_col: str,
@@ -45,7 +38,7 @@ def build_postings(docs: DataFrame, text_col: str,
     token stream)."""
     toks = docs.select(
         F.col(id_col),
-        F.explode(_tokens(F.col(text_col))).alias("term"))
+        F.explode(alnum_words(F.col(text_col))).alias("term"))
     tf = (toks.groupBy(id_col, "term")
           .agg(F.count(F.lit(1)).alias("tf")))
     # dl via an unordered window over the tf frame — one (small,
@@ -90,7 +83,7 @@ def bm25_search(docs: DataFrame | None, queries: DataFrame,
             [], f"{qid_col} long, {id_col} long, rank int, score double")
     qterms = (queries.select(
         F.col(qid_col),
-        F.explode(F.array_distinct(_tokens(F.col(qtext_col))))
+        F.explode(F.array_distinct(alnum_words(F.col(qtext_col))))
         .alias("term")).distinct())
     qterm_set = qterms.select("term").distinct()
     # df only for QUERY terms: semi-join BEFORE the count so the
@@ -190,7 +183,7 @@ def phrase_search(docs: DataFrame, text_col: str, id_col: str,
     the word occupies (a CASE-built literal index array — phrase
     length is tiny, the expression is row-local).
     """
-    words = [t for t in re.split(_TOKEN_SPLIT, phrase.lower()) if t]
+    words = py_alnum_words(phrase)
     if not words:
         raise ValueError("phrase has no tokens")
     n = len(words)
@@ -203,7 +196,7 @@ def phrase_search(docs: DataFrame, text_col: str, id_col: str,
         expr = F.when(F.col("tok") == w,
                       F.array(*[F.lit(i) for i in idxs])).otherwise(expr)
     posting = (docs.select(F.col(id_col).alias("id_"),
-                           F.posexplode(_tokens(F.col(text_col)))
+                           F.posexplode(alnum_words(F.col(text_col)))
                            .alias("pos", "tok"))
                .filter(F.col("tok").isin(list(idx_of))))
     votes = (posting.select("id_", "pos",

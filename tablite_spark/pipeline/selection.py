@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.functions.tokens import alnum_words, ngrams
 from tablite_spark.plans.lifecycle import pin
 
 __all__ = ["dsir_weights", "dsir_select"]
@@ -42,9 +43,9 @@ __all__ = ["dsir_weights", "dsir_select"]
 
 def _gram_rows(df: DataFrame, text_col: str, keep: list[str]):
     """(keep..., g) — one row per unigram+bigram occurrence over
-    whitespace tokens of the lowercased, punctuation-stripped text
-    (same normalization as vocab_divergence so corpus statistics line
-    up across operators).
+    ``tokens.alnum_words``, the tokenizer ``tfidf_keywords`` and
+    ``jaccard_join`` also use, so corpus statistics line up across
+    operators.
 
     The token array is materialized as a REAL column before the
     bigram ``transform`` references it: inlining the split+filter
@@ -52,16 +53,10 @@ def _gram_rows(df: DataFrame, text_col: str, keep: list[str]):
     text once per bigram element (no common-subexpression elimination
     inside higher-order functions) — measured 20 s for 5k docs at
     sf0.1; bound-attribute form is ~40×."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9 ]", " ")
-    toks = F.filter(F.split(norm, r" +"), lambda t: t != "")
     tk = F.col("__tk__")
-    bi = F.when(
-        F.size(tk) >= 2,
-        F.transform(F.sequence(F.lit(0), F.size(tk) - 2),
-                    lambda i: F.concat_ws(" ", F.element_at(tk, i + 1),
-                                          F.element_at(tk, i + 2)))) \
+    bi = F.when(F.size(tk) >= 2, ngrams(tk, 2)) \
         .otherwise(F.array().cast("array<string>"))
-    return (df.select(*keep, toks.alias("__tk__"))
+    return (df.select(*keep, alnum_words(F.col(text_col)).alias("__tk__"))
             .select(*keep, F.explode(F.concat(tk, bi)).alias("g")))
 
 

@@ -16,6 +16,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.functions.tokens import (
+    alnum_words, collapsed, collapsed_words, ngrams, nonempty, py_words,
+    windows, words,
+)
 from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import is_expensive, pin
 
@@ -31,14 +35,10 @@ LANG_MARKERS = {
 }
 
 
-def _tokens(c):
-    return F.split(F.trim(c), r"\s+")
-
-
 def text_statistics(df: DataFrame, text_col: str) -> DataFrame:
     """chars, tokens, distinct tokens, avg token length — one projection."""
     c = F.col(text_col)
-    toks = _tokens(c)
+    toks = words(c)
     return df.withColumns({
         "n_chars_computed": F.length(c),
         "n_tokens": F.size(toks),
@@ -57,7 +57,7 @@ def token_count(df: DataFrame, text_col: str,
     see pipeline/bpe.py)."""
     c = F.col(text_col)
     if mode == "whitespace":
-        n = F.size(_tokens(c))
+        n = F.size(words(c))
     elif mode == "bpe_ish":
         # word pieces + digits + punctuation as separate tokens —
         # a cheap proxy for BPE token counts
@@ -85,7 +85,7 @@ def quality_scores(df: DataFrame, text_col: str) -> DataFrame:
     """Heuristic quality: token volume + stopword density (a proxy for
     natural-language-ness). Pure arithmetic; thresholds tunable."""
     c = F.col(text_col)
-    toks = F.split(F.lower(F.trim(c)), r"\s+")
+    toks = words(F.lower(c))
     n_tok = F.size(toks).cast("double")
     sw = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))).cast("double")
     stop_ratio = sw / F.greatest(n_tok, F.lit(1.0))
@@ -126,12 +126,11 @@ def _gopher_columns(text_col: str, min_words: int,
     shared by :func:`gopher_rules` and :func:`pretrain_filter`, which
     inlines ``passes`` on its base scan instead of joining."""
     c = F.col(text_col)
-    words = F.filter(F.split(F.trim(c), r"\s+"),
-                     lambda w: w != F.lit(""))
+    ws = nonempty(words(c))
     lines = F.split(c, "\n")
-    n_words = F.size(words).cast("long")
+    n_words = F.size(ws).cast("long")
     n_lines = F.size(lines).cast("long")
-    total_chars = F.aggregate(words, F.lit(0).cast("long"),
+    total_chars = F.aggregate(ws, F.lit(0).cast("long"),
                               lambda a, w: a + F.length(w))
     # replace-based occurrence counts — identical non-overlapping
     # leftmost semantics in Spark and DuckDB
@@ -149,11 +148,11 @@ def _gopher_columns(text_col: str, min_words: int,
         lines, lambda l: F.rtrim(l).endswith("...")
         | F.rtrim(l).endswith("…"))).cast("long")
     alpha = F.size(F.filter(
-        words, lambda w: w.rlike("[A-Za-z]"))).cast("long")
+        ws, lambda w: w.rlike("[A-Za-z]"))).cast("long")
     func_words = ("the", "be", "to", "of", "and", "that", "have",
                   "with")
     n_func = F.size(F.array_distinct(F.filter(
-        words, lambda w: F.lower(w).isin(*func_words)))).cast("long")
+        ws, lambda w: F.lower(w).isin(*func_words)))).cast("long")
     rules = {
         "r_word_count": (n_words >= min_words) & (n_words <= max_words),
         "r_mean_word_len": (3 * n_words <= total_chars)
@@ -249,19 +248,14 @@ def _repetition_columns(text_col: str) -> dict:
 def _top_ngram_census(text_col: str):
     """Arrow-batched per-document top word-{2,3,4}-gram char mass
     (count x gram length of the (count, len)-max gram) — scan-local,
-    zero shuffle; tokenizes on Java's ASCII \\s class, the split the
-    DuckDB oracle uses. Null/short docs report 0."""
-    import re
-
-    ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
-
+    zero shuffle; tokenizes with ``tokens.py_words`` (Java's ASCII \\s
+    class, the split the DuckDB oracle uses). Null/short docs report 0."""
     @F.pandas_udf("struct<top2_chars:long,top3_chars:long,"
                   "top4_chars:long>")
     def _t(s: "pd.Series") -> "pd.DataFrame":
         out = {f"top{n}_chars": [] for n in (2, 3, 4)}
         for text in s:
-            ws = [] if text is None else \
-                [w for w in ws_re.split(text) if w]
+            ws = [] if text is None else py_words(text)
             for n in (2, 3, 4):
                 best = 0
                 if len(ws) >= n:
@@ -320,17 +314,11 @@ def _dup_ngram_columns(text_col: str,
 
 def _dup_ngram_census(text_col: str, n_values: tuple):
     """Arrow-batched per-document duplicated-n-gram census: returns a
-    struct column (word_chars, dup{n}_chars...) computed scan-local."""
+    struct column (word_chars, dup{n}_chars...) computed scan-local
+    over ``tokens.py_words`` (Java's ASCII \\s, as in the oracle)."""
     fields = ", ".join(["word_chars: long"]
                        + [f"dup{n}_chars: long" for n in n_values])
     schema = "struct<" + fields.replace(": ", ":") + ">"
-
-    import re
-
-    # EXACTLY Java's \s class (ASCII) — python str.split() would
-    # also split on unicode whitespace (NBSP etc.) and silently
-    # diverge from the DuckDB oracle
-    ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
 
     @F.pandas_udf(schema)
     def _census(s: "pd.Series") -> "pd.DataFrame":
@@ -344,7 +332,7 @@ def _dup_ngram_census(text_col: str, n_values: tuple):
                 for n in n_values:
                     out[f"dup{n}_chars"].append(0)
                 continue
-            ws = [w for w in ws_re.split(text) if w]
+            ws = py_words(text)
             lens = [len(w) for w in ws]
             out["word_chars"].append(sum(lens))
             nw = len(ws)
@@ -392,9 +380,8 @@ def _c4_columns(text_col: str, min_kept_lines: int) -> dict:
         t = F.rtrim(l)
         endp = (t.endswith(".") | t.endswith("!") | t.endswith("?")
                 | t.endswith('"'))
-        words = F.size(F.filter(F.split(F.trim(l), r"\s+"),
-                                lambda w: w != F.lit("")))
-        return endp & (words >= 3) & ~F.lower(l).contains("javascript")
+        return (endp & (F.size(nonempty(words(l))) >= 3)
+                & ~F.lower(l).contains("javascript"))
 
     kept_lines = F.filter(lines, _kept)
     n_kept = F.size(kept_lines).cast("long")
@@ -452,7 +439,7 @@ def pretrain_filter(df: DataFrame, text_col: str,
 def language_id(df: DataFrame, text_col: str) -> DataFrame:
     """Stopword-marker language heuristic: score = count of language
     markers among tokens; predicted = argmax (ties → language order)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.lower(F.col(text_col)))
 
     def _marker_pred(markers):
         # single-arg lambda: PySpark HOF binds one Column per parameter,
@@ -548,7 +535,7 @@ def normalize_text(df: DataFrame, text_col: str, out_col: str = "text_norm",
     if lower:
         c = F.lower(c)
     if collapse_ws:
-        c = F.trim(F.regexp_replace(c, r"\s+", " "))
+        c = collapsed(c)
     return df.withColumn(out_col, c)
 
 
@@ -571,12 +558,10 @@ def repetition_metrics(df: DataFrame, text_col: str, n: int = 2) -> DataFrame:
     fraction of duplicate tokens and duplicate token n-grams. High
     values flag boilerplate/spam for removal before training. Pure
     array expressions over one projection — no shuffle, no python."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.lower(F.col(text_col)))
     n_tok = F.size(toks).cast("double")
     uniq_tok = F.size(F.array_distinct(toks)).cast("double")
-    cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    grams = F.transform(F.sequence(F.lit(0), cnt - 1),
-                        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+    grams = ngrams(toks, n)
     n_gr = F.size(grams).cast("double")
     uniq_gr = F.size(F.array_distinct(grams)).cast("double")
     return (df.filter(F.length(F.trim(F.col(text_col))) > 0)
@@ -591,13 +576,8 @@ def top_k_ngrams(df: DataFrame, text_col: str, n: int = 1,
     """Corpus vocabulary: top-k token n-grams by document-spanning
     count. Explode → hash-agg (map-side partial) → top-k; the classic
     two-shuffle vocabulary build that scales linearly with tokens."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    if n == 1:
-        grams = toks
-    else:
-        cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-        grams = F.transform(F.sequence(F.lit(0), cnt - 1),
-                            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+    toks = words(F.lower(F.col(text_col)))
+    grams = toks if n == 1 else ngrams(toks, n)
     ex = df.select(F.explode(grams).alias("ngram")).filter(F.col("ngram") != "")
     counts = ex.groupBy("ngram").agg(F.count(F.lit(1)).alias("cnt"))
     return (counts.orderBy(F.col("cnt").desc(), F.col("ngram").asc())
@@ -620,7 +600,7 @@ def chunk_documents(df: DataFrame, text_col: str, id_col: str,
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("overlap must be in [0, chunk_tokens)")
     stride = chunk_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = words(F.col(text_col))
     n = F.size(toks)
     n_chunks = F.greatest(
         F.ceil((n - F.lit(overlap)) / F.lit(stride)).cast("int"), F.lit(1))
@@ -667,20 +647,12 @@ def contamination_check(df: DataFrame, probes: DataFrame, text_col: str,
 
 
 def _gram_hashes(c, n: int):
-    """Distinct 64-bit hashes of the token n-gram windows of ``c`` —
-    zip n shifted copies of the token array and hash the n token
-    fields per window: n array ops per DOC (not per gram), no string
-    concat (same trick as dedup.shingle_minhash)."""
-    toks = F.split(F.lower(F.trim(c)), r"\s+")
-    cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    parts = [toks.alias("t0")]
-    for i in range(1, n):
-        parts.append(F.slice(toks, i + 1,
-                             F.greatest(F.size(toks) - F.lit(i), F.lit(1)))
-                     .alias(f"t{i}"))
-    windows = F.slice(F.arrays_zip(*parts), 1, cnt)
+    """Distinct 64-bit hashes of the lowercased word n-gram windows of
+    ``c``: the n token fields of each window hash directly, with no
+    string concat (same as dedup.shingle_minhash)."""
     return F.array_distinct(F.transform(
-        windows, lambda w: F.xxhash64(*[w[f"t{i}"] for i in range(n)])))
+        windows(words(F.lower(c)), n),
+        lambda w: F.xxhash64(*[w[f"t{i}"] for i in range(n)])))
 
 
 def _confirm_overlap(doc_g: DataFrame, probe_grams: DataFrame,
@@ -951,10 +923,6 @@ def pack_sequences(df: DataFrame, ids_col: str, id_col: str,
     return seqs
 
 
-def _norm_for_lm(c):
-    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-
-
 def _char_ngrams(norm_col, n: int):
     """Overlapping char n-grams in ONE linear regex pass: the
     lookahead captures n chars at every position, the consumed "."
@@ -976,7 +944,7 @@ def char_ngram_model(df: DataFrame, text_col: str, n: int = 3) -> DataFrame:
 
     At 100 TB: train on a clean sample (`df.sample`), score the full
     corpus — exactly the CCNet recipe."""
-    norm = _norm_for_lm(F.col(text_col))
+    norm = collapsed(F.lower(F.col(text_col)))
     grams = (df.select(norm.alias("norm"))
              .filter(F.length("norm") >= n)
              .select(F.explode(_char_ngrams(F.col("norm"), n))
@@ -1045,7 +1013,7 @@ def perplexity_score(df: DataFrame, text_col: str,
             "perplexity_score: model has %d rows (> broadcast_max_rows"
             "=%d); falling back to shuffle joins", n_model_rows,
             broadcast_max_rows)
-    norm = _norm_for_lm(F.col(text_col))
+    norm = collapsed(F.lower(F.col(text_col)))
     grams = (df.select(F.col(id_col), norm.alias("norm"))
              .filter(F.length("norm") >= n)
              .select(id_col, F.explode(_char_ngrams(F.col("norm"), n))
@@ -1084,7 +1052,7 @@ def vocab_divergence(df_a: DataFrame, df_b: DataFrame, text_col: str,
     aggregate. No UDFs, no windows, nothing driver-side but three
     scalars."""
     def counts(df, name):
-        toks = F.split(_norm_for_lm(F.col(text_col)), " ")
+        toks = collapsed_words(F.lower(F.col(text_col)))
         return (df.select(F.explode(toks).alias("tok"))
                 .filter(F.col("tok") != "")
                 .groupBy("tok").agg(F.count(F.lit(1)).alias(name)))
@@ -1125,9 +1093,9 @@ def tfidf_keywords(df: DataFrame, text_col: str, id_col: str,
     quantized to integer micronats once per TERM, so per-doc scores
     are exact integers, order-independent, and replayable by an
     independent SQL engine (the vocab_divergence / DSIR discipline).
-    Terms are whitespace tokens of the lowercased, punct-stripped
-    text (the DSIR normalization); add-1 smoothing keeps corpus-wide
-    terms finite. Rank ties break on the term string.
+    Terms are ``tokens.alnum_words`` (the DSIR tokenizer); add-1
+    smoothing keeps corpus-wide terms finite. Rank ties break on the
+    term string.
 
     Plan shape: one scan → explode → combinable groupBy(doc, term)
     for tf; df(term) AND N (tokenized-doc count) are lazy aggregates
@@ -1152,10 +1120,8 @@ def tfidf_keywords(df: DataFrame, text_col: str, id_col: str,
     normalizes to nothing contributes no tf rows and is likewise
     outside the df() universe, so idf stays self-consistent.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9 ]",
-                            " ")
-    toks = F.filter(F.split(norm, r" +"), lambda t: t != "")
-    tf = (df.select(F.col(id_col), F.explode(toks).alias("term"))
+    tf = (df.select(F.col(id_col),
+                    F.explode(alnum_words(F.col(text_col))).alias("term"))
           .groupBy(id_col, "term")
           .agg(F.count(F.lit(1)).alias("tf")))
     barrier = F.when(F.col("tf") >= 1, F.col(id_col))
@@ -1188,8 +1154,8 @@ def bigram_lm_scores(df: DataFrame, text_col: str, id_col: str,
     perplexity scorer). Returns (id, n_bigrams, avg_logprob); docs
     with <2 tokens drop (no bigram evidence). Beyond-reference.
 
-    Scale shape: bigrams build ROW-LOCALLY (arrays_zip of two
-    slices — no window, no posexplode self-join); the model is two
+    Scale shape: bigrams build ROW-LOCALLY (``tokens.windows`` with
+    k=2 — no analytic window, no posexplode self-join); the model is two
     combinable censuses (bigram counts, unigram counts) + one scalar
     vocab count; scoring joins the exploded corpus bigrams to the
     censuses on their natural keys (corpus-scaling side carries the
@@ -1199,18 +1165,14 @@ def bigram_lm_scores(df: DataFrame, text_col: str, id_col: str,
     """
     if k <= 0:
         raise ValueError("add-k smoothing requires k > 0")
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))),
-                            r"\s+"), lambda t: t != "")
+    toks = nonempty(words(F.lower(F.col(text_col))))
     base = (df.select(F.col(id_col).alias("__id__"),
                       toks.alias("__t__"))
             .filter(F.size("__t__") >= 2))
-    n = F.size("__t__")
-    pairs = F.arrays_zip(F.slice("__t__", 1, n - 1),
-                         F.expr("slice(__t__, 2, size(__t__) - 1)"))
-    big = (base.select("__id__",
-                       F.explode(pairs).alias("__p__"))
-           .select("__id__", F.col("__p__.0").alias("w1"),
-                   F.col("__p__.1").alias("w2")))
+    big = (base.select("__id__", F.explode(windows(F.col("__t__"), 2))
+                       .alias("__p__"))
+           .select("__id__", F.col("__p__.t0").alias("w1"),
+                   F.col("__p__.t1").alias("w2")))
     bg_cnt = big.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("__cbg__"))
     # unigram counts over ALL token positions (the bigram history
@@ -1240,7 +1202,7 @@ def pmi_collocations(df: DataFrame, text_col: str, k: int = 50,
     (PMI DESC, w1, w2) ranking. Returns (w1, w2, pair_count, pmi).
 
     Scale shape: the bigram_lm_scores censuses reused — pairs build
-    ROW-LOCALLY (arrays_zip of two slices), counts are two
+    ROW-LOCALLY (``tokens.windows``), counts are two
     combinable groupBys, N rides a 1-row broadcast; the join keys
     are the vocab-bounded censuses themselves (never the corpus);
     top-k cuts a census-sized frame. PMI's log argument is a ratio
@@ -1248,16 +1210,13 @@ def pmi_collocations(df: DataFrame, text_col: str, k: int = 50,
     """
     if k < 1 or min_count < 1:
         raise ValueError("k and min_count must be >= 1")
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))),
-                            r"\s+"), lambda t: t != "")
+    toks = nonempty(words(F.lower(F.col(text_col))))
     base = (df.select(toks.alias("__t__"))
             .filter(F.size("__t__") >= 2))
-    n = F.size("__t__")
-    pairs = F.arrays_zip(F.slice("__t__", 1, n - 1),
-                         F.expr("slice(__t__, 2, size(__t__) - 1)"))
-    big = (base.select(F.explode(pairs).alias("__p__"))
-           .select(F.col("__p__.0").alias("w1"),
-                   F.col("__p__.1").alias("w2")))
+    big = (base.select(F.explode(windows(F.col("__t__"), 2))
+                       .alias("__p__"))
+           .select(F.col("__p__.t0").alias("w1"),
+                   F.col("__p__.t1").alias("w2")))
     bg = (big.groupBy("w1", "w2")
           .agg(F.count(F.lit(1)).alias("pair_count"))
           .filter(F.col("pair_count") >= min_count))

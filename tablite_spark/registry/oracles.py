@@ -8,6 +8,15 @@ from tablite_spark.registry.pipeline_scale import (  # noqa: F401
     _kmeans_oracle_sql, _logreg_oracle, _pagerank_oracle_sql)
 
 
+# relational._nation_by_region over the source nation table
+_NATION_BY_REGION_SQL = """
+    SELECT n_regionkey, COUNT(*) AS n,
+           CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
+           MIN(n_name) AS first_name
+    FROM nation GROUP BY n_regionkey
+"""
+
+
 def _zorder_oracle(bits: int = 8) -> str:
     """DuckDB twin of operators/layout.zorder_key over events
     (user_id, ts): min/max + shift widths computed in SQL
@@ -677,12 +686,7 @@ def _oracle_sql_base() -> dict[str, str]:
                    COUNT(*) AS n
             FROM lineitem GROUP BY l_returnflag
         """,
-        "xlsx_roundtrip_agg": """
-            SELECT n_regionkey, COUNT(*) AS n,
-                   CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
-                   MIN(n_name) AS first_name
-            FROM nation GROUP BY n_regionkey
-        """,
+        "xlsx_roundtrip_agg": _NATION_BY_REGION_SQL,
         "sql_script_md5": """
             SELECT md5('CREATE TABLE region_x (r_regionkey INTEGER, r_name TEXT);'
                        || chr(10) ||
@@ -726,12 +730,7 @@ def _oracle_sql_base() -> dict[str, str]:
                    MIN(n_name) AS first_name
             FROM nation GROUP BY n_regionkey
         """,
-        "ods_roundtrip_agg": """
-            SELECT n_regionkey, COUNT(*) AS n,
-                   CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
-                   MIN(n_name) AS first_name
-            FROM nation GROUP BY n_regionkey
-        """,
+        "ods_roundtrip_agg": _NATION_BY_REGION_SQL,
         "incremental_minhash_dedup_docs": """
             SELECT doc_id + 30000000 AS doc_id FROM documents
         """,
@@ -1134,12 +1133,7 @@ def _oracle_sql_base() -> dict[str, str]:
                    MIN(n_name) AS first_name
             FROM nation GROUP BY n_regionkey
         """,
-        "hdf5_roundtrip_agg": """
-            SELECT n_regionkey, COUNT(*) AS n,
-                   CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
-                   MIN(n_name) AS first_name
-            FROM nation GROUP BY n_regionkey
-        """,
+        "hdf5_roundtrip_agg": _NATION_BY_REGION_SQL,
         "xls_roundtrip_agg": """
             SELECT CAST(n_regionkey AS BIGINT) AS n_regionkey,
                    COUNT(*) AS n,
@@ -1502,12 +1496,7 @@ def _oracle_sql_base() -> dict[str, str]:
             FROM orders WHERE o_orderkey % 97 = 0
             GROUP BY yr
         """,
-        "html_roundtrip_agg": """
-            SELECT n_regionkey, COUNT(*) AS n,
-                   CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
-                   MIN(n_name) AS first_name
-            FROM nation GROUP BY n_regionkey
-        """,
+        "html_roundtrip_agg": _NATION_BY_REGION_SQL,
         "q6_forecast_revenue": """
             SELECT SUM(ROUND(l_extendedprice * l_discount * 100, 0)) / 100 AS revenue,
                    COUNT(*) AS n
@@ -1637,12 +1626,7 @@ def _oracle_sql_base() -> dict[str, str]:
                    CAST(SUM(n_nationkey) AS BIGINT) AS key_sum
             FROM nation GROUP BY n_regionkey
         """,
-        "json_columnar_roundtrip": """
-            SELECT n_regionkey, COUNT(*) AS n,
-                   CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
-                   MIN(n_name) AS first_name
-            FROM nation GROUP BY n_regionkey
-        """,
+        "json_columnar_roundtrip": _NATION_BY_REGION_SQL,
         "token_count_bpe": """
             SELECT doc_id,
                    LENGTH(regexp_extract_all(text, '[A-Za-z]+|\\d+|[^\\sA-Za-z\\d]')) AS n_tokens

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from tablite_spark.functions.tokens import alnum_words, words
 from tablite_spark.plans.lifecycle import pin
 from tablite_spark.registry._base import SF_SMOKE, _cents, _t  # noqa: F401
 
@@ -385,9 +386,7 @@ def heavy_hitters_docs(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB GROUP BY HAVING over all tokens."""
     from tablite_spark.operators.frequency import heavy_hitters
     docs = _t(spark, sf, "documents")
-    tok = (docs.select(F.explode(F.split(F.lower(F.col("text")),
-                                         "[^a-z0-9]+")).alias("tok"))
-           .filter(F.col("tok") != ""))
+    tok = docs.select(F.explode(alnum_words(F.col("text"))).alias("tok"))
     out = heavy_hitters(tok, "tok", phi=0.01)
     return out.select(F.col("value").alias("token"), "cnt",
                       F.round(F.col("share"), 6).alias("share"))
@@ -1101,11 +1100,9 @@ def zipf_alpha_docs(spark: SparkSession, sf: str) -> DataFrame:
     Oracle: same census + closed form in DuckDB."""
     from tablite_spark.operators.stats import zipf_fit
     d = _t(spark, sf, "documents")
-    toks = (d.select(F.explode(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        .alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok").agg(F.count(F.lit(1)).alias("f")))
+    toks = (d.select(F.explode(words(F.lower(F.col("text")))).alias("tok"))
+            .filter(F.col("tok") != "")
+            .groupBy("tok").agg(F.count(F.lit(1)).alias("f")))
     out = zipf_fit(toks, "f", fmin=5)
     return out.select("n_tail", "fmin", "f_max",
                       F.round(F.col("alpha"), 6).alias("alpha"))
@@ -1113,7 +1110,7 @@ def zipf_alpha_docs(spark: SparkSession, sf: str) -> DataFrame:
 
 def bigram_lm_docs(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-trained add-k bigram LM fluency scores per document:
-    bigrams build ROW-LOCALLY (arrays_zip of two slices, no window),
+    bigrams build ROW-LOCALLY (tokens.windows, no analytic window),
     the model is two combinable censuses + a broadcast vocab scalar,
     scoring is two keyed joins + one per-doc fold. Oracle: the same
     model in DuckDB via list indexing."""

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from tablite_spark.functions.tokens import nonempty, words
 from tablite_spark.plans.lifecycle import pinned, scratch
 from tablite_spark.registry._base import SF_SMOKE, _cents, _t  # noqa: F401
 
@@ -1118,7 +1119,7 @@ def corpus_manifest(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source corpus reporting: docs, chars, tokens, language
     spread — the dataset-card numbers, one partial-agg pass."""
     d = _t(spark, sf, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words(F.col("text"))
     return (d.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(F.length("text")).alias("n_chars"),
@@ -1126,6 +1127,14 @@ def corpus_manifest(spark: SparkSession, sf: str) -> DataFrame:
                  F.count_distinct(F.col("lang")).alias("n_langs"),
                  F.min("doc_id").alias("min_doc_id"),
                  F.max("doc_id").alias("max_doc_id")))
+
+
+def _token_ids(text):
+    """The arithmetic token ids of the pack_sequences queries, one per
+    whitespace word: length * 131 + (1-based position % 127)."""
+    return F.transform(
+        nonempty(words(text)),
+        lambda t, i: (F.length(t) * 131 + (i + 1) % 127).cast("int"))
 
 
 def pack_sequences_docs(spark: SparkSession, sf: str) -> DataFrame:
@@ -1140,12 +1149,7 @@ def pack_sequences_docs(spark: SparkSession, sf: str) -> DataFrame:
     and n_docs pins the boundary-crossing accounting."""
     from tablite_spark.pipeline.text import pack_sequences
     d = _t(spark, sf, "documents")
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"),
-                    lambda t: t != "")
-    ids = F.transform(
-        toks, lambda t, i: (F.length(t) * 131 + (i + 1) % 127)
-        .cast("int"))
-    docs = d.select("doc_id", ids.alias("ids"))
+    docs = d.select("doc_id", _token_ids(F.col("text")).alias("ids"))
     out = pack_sequences(docs, "ids", "doc_id", seq_len=64, eos_id=0)
     # scalarize the array for the driver's value-hash comparator
     return out.select(
@@ -1166,13 +1170,10 @@ def pack_sequences_sft_docs(spark: SparkSession, sf: str) -> DataFrame:
     token, every mask bit, and every boundary of every window."""
     from tablite_spark.pipeline.text import pack_sequences
     d = _t(spark, sf, "documents")
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"),
-                    lambda t: t != "")
-    ids = F.transform(
-        toks, lambda t, i: (F.length(t) * 131 + (i + 1) % 127)
-        .cast("int"))
-    mask = F.transform(toks, lambda t, i: ((i + 1) % 2).cast("int"))
-    docs = d.select("doc_id", ids.alias("ids"), mask.alias("mask"))
+    mask = F.transform(nonempty(words(F.col("text"))),
+                       lambda t, i: ((i + 1) % 2).cast("int"))
+    docs = d.select("doc_id", _token_ids(F.col("text")).alias("ids"),
+                    mask.alias("mask"))
     out = pack_sequences(docs, "ids", "doc_id", seq_len=64, eos_id=0,
                          boundaries=True, mask_col="mask", eos_mask=0)
     s = lambda c: F.md5(F.concat_ws(",", F.transform(  # noqa: E731
@@ -1485,12 +1486,8 @@ def pretrain_e2e_docs(spark: SparkSession, sf: str) -> DataFrame:
               .agg(F.min("doc_id").alias("doc_id")))
     corpus = kept.join(firsts.select("doc_id").hint("merge"),
                        "doc_id", "left_semi")
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"),
-                    lambda t: t != "")
-    ids = F.transform(
-        toks, lambda t, i: (F.length(t) * 131 + (i + 1) % 127)
-        .cast("int"))
-    out = pack_sequences(corpus.select("doc_id", ids.alias("ids")),
+    ids = _token_ids(F.col("text")).alias("ids")
+    out = pack_sequences(corpus.select("doc_id", ids),
                          "ids", "doc_id", seq_len=64, eos_id=0)
     return out.select(
         "seq_id",

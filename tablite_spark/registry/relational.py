@@ -718,6 +718,15 @@ def csv_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
                  F.sum(F.col("l_orderkey") + F.col("l_linenumber")).alias("key_sum")))
 
 
+def _nation_by_region(nation: DataFrame) -> DataFrame:
+    """The aggregate the nation round-trip queries compare to their
+    source: rows, key sum and first name per region."""
+    return (nation.groupBy("n_regionkey")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum("n_nationkey").alias("key_sum"),
+                 F.min("n_name").alias("first_name")))
+
+
 def json_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     """E2E JSON-lines writer→reader proof (tablite from_json/to_json,
     tablite/import_utils.py:112-122): export nation to JSON, re-read,
@@ -727,11 +736,8 @@ def json_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     path = f"{tmp}/nation_json"
     n.write.mode("overwrite").json(path)
     back = spark.read.json(path)
-    return (back.groupBy("n_regionkey")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("n_nationkey").alias("key_sum"),
-                 F.min("n_name").alias("first_name"))
-            .withColumn("n_regionkey", F.col("n_regionkey").cast("long")))
+    return _nation_by_region(back).withColumn(
+        "n_regionkey", F.col("n_regionkey").cast("long"))
 
 
 def parquet_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
@@ -758,10 +764,7 @@ def xlsx_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     path = f"{tmp}/nation.xlsx"
     to_xlsx(n, path)
     back = from_file(spark, path)
-    return (back.groupBy("n_regionkey")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("n_nationkey").alias("key_sum"),
-                 F.min("n_name").alias("first_name")))
+    return _nation_by_region(back)
 
 
 def sql_script_md5(spark: SparkSession, sf: str) -> DataFrame:
@@ -869,10 +872,7 @@ def ods_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     path = f"{tmp}/nation.ods"
     to_ods(n, path)
     back = from_file(spark, path)
-    return (back.groupBy("n_regionkey")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("n_nationkey").alias("key_sum"),
-                 F.min("n_name").alias("first_name")))
+    return _nation_by_region(back)
 
 
 def tpz_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
@@ -999,10 +999,7 @@ def hdf5_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     path = f"{tmp}/nation.h5"
     to_hdf5(n, path)
     back = from_file(spark, path)
-    return (back.groupBy("n_regionkey")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("n_nationkey").alias("key_sum"),
-                 F.min("n_name").alias("first_name")))
+    return _nation_by_region(back)
 
 
 def hdf5_chunked_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
@@ -1062,10 +1059,7 @@ def html_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     path = f"{tmp}/nation.html"
     to_html(n, path)
     back = read_html(spark, path)
-    return (back.groupBy("n_regionkey")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("n_nationkey").alias("key_sum"),
-                 F.min("n_name").alias("first_name")))
+    return _nation_by_region(back)
 
 
 def q6_forecast_revenue(spark: SparkSession, sf: str) -> DataFrame:
@@ -1224,10 +1218,7 @@ def json_columnar_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from tablite_spark.sources.io import read_json_columnar, to_json_columnar
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
     back = read_json_columnar(spark, to_json_columnar(n))
-    return (back.groupBy("n_regionkey")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("n_nationkey").alias("key_sum"),
-                 F.min("n_name").alias("first_name")))
+    return _nation_by_region(back)
 
 
 def merge_upsert_orders(spark: SparkSession, sf: str) -> DataFrame:

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tablite_spark.functions.tokens import words
 from tablite_spark.plans.hints import respread
 from tablite_spark.registry._base import _t
 
@@ -629,10 +630,8 @@ def cms_tokens_docs(spark: SparkSession, sf: str) -> DataFrame:
     # combinable groupBys — partition-invariant exact integers)
     # fills all cores; no-op at corpus scale (r14 optimization round)
     d = respread(d)
-    toks = (d.select(F.explode(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        .alias("tok"))
-        .filter(F.col("tok") != ""))
+    toks = (d.select(F.explode(words(F.lower(F.col("text")))).alias("tok"))
+            .filter(F.col("tok") != ""))
     exact = (toks.groupBy("tok")
              .agg(F.count(F.lit(1)).cast("long").alias("exact_n")))
     top = exact.orderBy(F.col("exact_n").desc(),

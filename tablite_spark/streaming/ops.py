@@ -108,6 +108,20 @@ def stateful_running_total(events: DataFrame) -> DataFrame:
     ))
 
 
+def _ordered(pdfs):
+    """One key's micro-batch rows as one frame in (ts, event_id)
+    order — a stable sort, so equal keys keep arrival order — or None
+    when the batch holds none. Across micro-batches, arrival order is
+    the contract of every sequential state function here: an
+    out-of-order arrival belongs to the watermarked operators."""
+    import pandas as pd
+    parts = [pdf for pdf in pdfs if len(pdf)]
+    if not parts:
+        return None
+    return (pd.concat(parts, ignore_index=True)
+            .sort_values(["ts", "event_id"], kind="mergesort"))
+
+
 _EMA_STATE = T.StructType([T.StructField("ema", T.DoubleType())])
 _EMA_OUT = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -120,11 +134,9 @@ _EMA_ALPHA = 0.25
 def _ema_fn(key, pdfs, state: GroupState):
     import pandas as pd
     e = state.get[0] if state.exists else None
-    parts = [pdf for pdf in pdfs if len(pdf)]
-    if not parts:
+    pdf = _ordered(pdfs)
+    if pdf is None:
         return
-    pdf = (pd.concat(parts, ignore_index=True)
-           .sort_values(["ts", "event_id"], kind="mergesort"))
     ids, emas = [], []
     for eid, v in zip(pdf["event_id"], pdf["value"]):
         if pd.isna(v):
@@ -147,11 +159,7 @@ def streaming_ema(events: DataFrame) -> DataFrame:
     advancing state): per-user EMA continued ACROSS micro-batches via
     ``applyInPandasWithState`` — the state is one double per user, so
     a 100M-user stream carries 800 MB of state, partitioned by key.
-    Rows are ordered (ts, event_id) WITHIN each micro-batch; like
-    every incremental operator here, cross-batch order is the
-    ingestion contract (an out-of-order arrival belongs to the
-    watermarked variants, not an EMA whose algebra is sequential).
-    An availableNow drain over a static directory reproduces the
+    Row order is :func:`_ordered`'s contract. An availableNow drain over a static directory reproduces the
     batch operator exactly (tests/test_streaming.py)."""
     return (events.groupBy("user_id").applyInPandasWithState(
         _ema_fn,
@@ -180,11 +188,9 @@ def _si_fn(key, pdfs, state: GroupState):
     import pandas as pd
     cur, vfrom, nobs = (state.get if state.exists
                         else (None, None, 0))
-    parts = [pdf for pdf in pdfs if len(pdf)]
-    if not parts:
+    pdf = _ordered(pdfs)
+    if pdf is None:
         return
-    pdf = (pd.concat(parts, ignore_index=True)
-           .sort_values(["ts", "event_id"], kind="mergesort"))
     out = []
     for ts, st in zip(pdf["ts"], pdf["event_type"]):
         if cur is None:
@@ -211,9 +217,7 @@ def streaming_state_changes(events: DataFrame) -> DataFrame:
     lives only in state; an availableNow drain over a static
     directory therefore reproduces the batch operator's CLOSED rows
     (valid_to IS NOT NULL) exactly, which the StreamingQuery test
-    asserts. Rows are ordered (ts, event_id) within each micro-batch;
-    cross-batch order is the ingestion contract, as with every
-    sequential-algebra incremental operator here."""
+    asserts. Row order is :func:`_ordered`'s contract."""
     return (events.groupBy("user_id").applyInPandasWithState(
         _si_fn,
         outputStructType=_SI_OUT,
@@ -376,20 +380,16 @@ def streaming_attribution(events: DataFrame,
     are emitted (append mode) so any downstream aggregation —
     channel totals, windowed conversion rates — composes; an
     availableNow drain over a static directory aggregates to exactly
-    the batch operator's totals (StreamingQuery-tested). Rows order
-    (ts, event_id) within each micro-batch; cross-batch order is the
-    ingestion contract, as with every sequential-algebra incremental
-    operator here."""
+    the batch operator's totals (StreamingQuery-tested). Row order
+    is :func:`_ordered`'s contract."""
     touches = tuple(touches)
 
     def fn(key, pdfs, state: GroupState):
         import pandas as pd
         carry = state.get[0] if state.exists else None
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
+        pdf = _ordered(pdfs)
+        if pdf is None:
             return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"], kind="mergesort"))
         out = []
         for eid, et, v in zip(pdf["event_id"], pdf["event_type"],
                               pdf["value"]):
@@ -429,11 +429,9 @@ _ZS_OUT = T.StructType([
 def _zscore_fn(key, pdfs, state: GroupState):
     import pandas as pd
     n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-    parts = [pdf for pdf in pdfs if len(pdf)]
-    if not parts:
+    pdf = _ordered(pdfs)
+    if pdf is None:
         return
-    pdf = (pd.concat(parts, ignore_index=True)
-           .sort_values(["ts", "event_id"], kind="mergesort"))
     ids, priors, zs = [], [], []
     for eid, v in zip(pdf["event_id"], pdf["value"]):
         if pd.isna(v):

@@ -16,9 +16,6 @@ ALLOWED = {
         "two package callers (functions/sketches.py) pass different "
         "values: the window sort for bounded groups, the salted form "
         "for a hot key",
-    ("operators/timeseries.py", "active_users", "engine"):
-        "'auto' picks the path from the input (max window); the "
-        "explicit values let one test compare both sides on one input",
     ("pipeline/similarity.py", "hard_negatives", "batched"):
         "the two paths win at different sizes and the benchmark has no "
         "workload on either side to choose between them",

@@ -998,14 +998,26 @@ def test_slice_rows_rejects_order_by_with_index_col(spark):
 
 
 def test_decode_audio_real_wav(spark):
+    import struct
+
     import numpy as np
 
     from tablite_spark.pipeline.multimodal import (
-        attach_media, decode_audio, wav_encode, wav_header,
+        attach_media, decode_audio, wav_encode, wav_header, wav_samples,
     )
     data = wav_encode(np.zeros(8000, dtype="<i2"), 16_000)
     assert wav_header(data) == (16_000, 1, 16, 500)
-    rows = [(1, bytearray(data)), (2, bytearray(b"notawav")), (3, None)]
+    # two data chunks (800 then 80 samples at 8 kHz): the header's
+    # duration is the first chunk's, the one wav_samples decodes
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    body = (b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
+            + b"data" + struct.pack("<I", 1600) + bytes(1600)
+            + b"data" + struct.pack("<I", 160) + bytes(160))
+    two = b"RIFF" + struct.pack("<I", len(body)) + body
+    assert wav_header(two) == (8000, 1, 16, 100)
+    assert len(wav_samples(two)[1]) == 800
+    rows = [(1, bytearray(data)), (2, bytearray(b"notawav")), (3, None),
+            (4, bytearray(two))]
     df = spark.createDataFrame(rows, "id int, raw binary")
     media = attach_media(df, "raw", "audio/wav").drop("raw")
     got = {r["id"]: (r["sample_rate"], r["channels"], r["duration_ms"])
@@ -1013,6 +1025,7 @@ def test_decode_audio_real_wav(spark):
     assert got[1] == (16_000, 1, 500)
     assert got[2] == (None, None, None)
     assert got[3] == (None, None, None)
+    assert got[4] == (8000, 1, 100)
 
 
 def test_deterministic_shuffle(spark):

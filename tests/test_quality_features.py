@@ -882,37 +882,29 @@ def test_quantile_discretize_balanced_and_nulls(spark):
     assert "Join" not in ex                 # row-local cut, no join
 
 
-def test_active_users_interval_engine_equals_explode(spark):
-    """The interval engine (island deltas + day-census prefix sum)
-    must equal the explode engine exactly, including gap days,
-    adjacent-island merges, and the stickiness column; 'auto' picks
-    interval for large windows."""
+def test_active_users_interval_engine_equals_explode(spark, monkeypatch):
+    """The interval plan (island deltas + day-census prefix sum)
+    must equal the explode plan exactly, including gap days,
+    adjacent-island merges, and the stickiness column. The window
+    size that picks the plan is moved to run both on one input."""
     import random
     from datetime import datetime as dt, timedelta
 
-    from tablite_spark.operators.timeseries import active_users
+    from tablite_spark.operators import timeseries
     rnd = random.Random(5)
     rows = [(rnd.randint(0, 40),
              dt(2024, 1, 1) + timedelta(days=rnd.randint(0, 120),
                                         hours=rnd.randint(0, 23)))
             for _ in range(800)]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
+
+    def run(wins, explode_max):
+        monkeypatch.setattr(timeseries, "_EXPLODE_MAX_WINDOW", explode_max)
+        return {r["day"]: r.asDict() for r in timeseries.active_users(
+            df, "ts", "user_id", windows=wins).collect()}
+
     for wins in ((1, 7, 28), (1, 45), (2,)):
-        a = {r["day"]: r.asDict() for r in
-             active_users(df, "ts", "user_id", windows=wins,
-                          engine="explode").collect()}
-        b = {r["day"]: r.asDict() for r in
-             active_users(df, "ts", "user_id", windows=wins,
-                          engine="interval").collect()}
-        assert a == b, wins
-    auto = {r["day"]: r.asDict() for r in
-            active_users(df, "ts", "user_id", windows=(1, 45),
-                         engine="auto").collect()}
-    assert auto == {r["day"]: r.asDict() for r in
-                    active_users(df, "ts", "user_id", windows=(1, 45),
-                                 engine="interval").collect()}
-    with pytest.raises(ValueError, match="engine"):
-        active_users(df, "ts", "user_id", engine="nope")
+        assert run(wins, 10**6) == run(wins, 0), wins
 
 
 def test_association_rules_max_basket_valve(spark):
