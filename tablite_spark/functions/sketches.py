@@ -165,15 +165,15 @@ def kmv_sketch(df: DataFrame, entity_col: str,
                group_col: str, k: int = KMV_K) -> DataFrame:
     """Per-group KMV sketch: the ``k`` smallest DISTINCT 60-bit
     hashes of ``entity_col`` — rows (group, h). The k-smallest runs
-    on the salted ``top_k_per_group`` engine (the skew valve: a
-    group owning half the corpus still sketches through n_salts
-    parallel slices, never one window task)."""
+    on the salted ``top_k_per_group`` (a group owning half the
+    corpus still sketches in one slice per input partition, never
+    one window task)."""
     from tablite_spark.operators.groupby import top_k_per_group
     hs = (df.filter(F.col(entity_col).isNotNull())
           .select(group_col, hll_hash(F.col(entity_col)).alias("h"))
           .distinct())
-    return (top_k_per_group(hs, [group_col], "h", k,
-                            ascending=True, engine="salted")
+    return (top_k_per_group(hs, [group_col], [F.col("h").asc()], k,
+                            engine="salted")
             .select(group_col, "h"))
 
 
@@ -204,11 +204,13 @@ def kmv_jaccard_pairs(sketch: DataFrame, group_col: str,
     sketch relations are bounded at |groups| x k rows, so every join
     here is broadcast-sized by construction."""
     from tablite_spark.operators.groupby import top_k_per_group
+    # "h" passes through un-aliased on both sides: the (ga, h) and
+    # (gb, h) broadcasts then plan alike and run as one reused exchange
     a = (sketch.select(F.col(group_col).alias("ga"),
-                       F.col("h").alias("h"),
+                       "h",
                        F.lit(1).alias("in_a")))
     b = (sketch.select(F.col(group_col).alias("gb"),
-                       F.col("h").alias("h"),
+                       "h",
                        F.lit(1).alias("in_b")))
     ta = sketch.select(F.col(group_col).alias("ga")).distinct()
     tb = sketch.select(F.col(group_col).alias("gb")).distinct()
@@ -224,8 +226,7 @@ def kmv_jaccard_pairs(sketch: DataFrame, group_col: str,
           .groupBy("ga", "gb", "h")
           .agg(F.max("in_a").alias("in_a"),
                F.max("in_b").alias("in_b")))
-    top = top_k_per_group(un, ["ga", "gb"], "h", k,
-                          ascending=True, engine="window")
+    top = top_k_per_group(un, ["ga", "gb"], [F.col("h").asc()], k)
     return (top.groupBy("ga", "gb")
             .agg(F.count(F.lit(1)).cast("long")
                  .alias("n_union_sketch"),

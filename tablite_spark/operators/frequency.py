@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from tablite_spark.operators.groupby import top_k_per_group
 from tablite_spark.plans.lifecycle import pin, pinned
 
 
@@ -110,6 +111,54 @@ def heavy_hitters(df: DataFrame, col: str, phi: float,
                     (F.col("cnt") / F.lit(float(n))).alias("share")))
 
 
+def _basket_pairs(df: DataFrame, basket_col: str, item_col: str,
+                  min_support: int, max_basket_size: int | None):
+    """The basket-pair census of :func:`association_rules` and
+    :func:`item_cosine`: returns ``(base, pairs)``, where ``base`` is
+    the pinned distinct non-null (``__b__``, ``__i__``) incidence
+    (baskets over ``max_basket_size`` distinct items dropped by a
+    semi-join) and ``pairs`` holds each ordered item pair (a, b),
+    a != b, co-occurring in ``co`` >= ``min_support`` baskets, with
+    the item supports ``__sa__`` and ``__sb__`` joined back."""
+    if max_basket_size is not None and max_basket_size < 2:
+        raise ValueError("max_basket_size must be >= 2")
+    b, i = F.col(basket_col), F.col(item_col)
+    base = (df.filter(b.isNotNull() & i.isNotNull())
+            .select(b.alias("__b__"), i.alias("__i__")).distinct())
+    if max_basket_size is not None:
+        small = (base.groupBy("__b__")
+                 .agg(F.count(F.lit(1)).alias("__sz__"))
+                 .filter(F.col("__sz__") <= max_basket_size)
+                 .select("__b__"))
+        base = base.join(small, "__b__", "left_semi")
+    # r14 optimization round (guide §2.1): base feeds the support
+    # census, the basket count and BOTH self-join sides — unpinned,
+    # the scan + distinct (+ cap semi-join) re-ran per reference.
+    # One pin, the size class the self-join shuffles anyway. r15:
+    # persist (lazy) instead of localCheckpoint — the eager
+    # checkpoint job cost MORE than it saved at fixture scale where
+    # AQE turns the replays into cheap broadcasts (r14 VERDICT item
+    # 4); persist fills the cache inside the first job that needs
+    # the frame, keeps the at-scale pin, and leaves the lineage
+    # visible to the plan audit (the q2 discipline).
+    base = pin(base, eager=False)
+    supp = base.groupBy(F.col("__i__").alias("item")).agg(
+        F.count(F.lit(1)).alias("s"))
+    l = base.select("__b__", F.col("__i__").alias("a"))
+    r = base.select(F.col("__b__").alias("__b2__"),
+                    F.col("__i__").alias("b"))
+    pairs = (l.join(r, (F.col("__b__") == F.col("__b2__"))
+                    & (F.col("a") != F.col("b")))
+             .groupBy("a", "b")
+             .agg(F.count(F.lit(1)).alias("co"))
+             .filter(F.col("co") >= min_support)
+             .join(supp.select(F.col("item").alias("a"),
+                               F.col("s").alias("__sa__")), "a")
+             .join(supp.select(F.col("item").alias("b"),
+                               F.col("s").alias("__sb__")), "b"))
+    return base, pairs
+
+
 def association_rules(df: DataFrame, basket_col: str, item_col: str,
                       min_support: int = 5,
                       k: int = 50,
@@ -144,50 +193,15 @@ def association_rules(df: DataFrame, basket_col: str, item_col: str,
     """
     if min_support < 1 or k < 1:
         raise ValueError("min_support and k must be >= 1")
-    if max_basket_size is not None and max_basket_size < 2:
-        raise ValueError("max_basket_size must be >= 2")
-    b, i = F.col(basket_col), F.col(item_col)
-    base = (df.filter(b.isNotNull() & i.isNotNull())
-            .select(b.alias("__b__"), i.alias("__i__")).distinct())
-    if max_basket_size is not None:
-        small = (base.groupBy("__b__")
-                 .agg(F.count(F.lit(1)).alias("__sz__"))
-                 .filter(F.col("__sz__") <= max_basket_size)
-                 .select("__b__"))
-        base = base.join(small, "__b__", "left_semi")
-    # r14 optimization round (guide §2.1): base feeds the support
-    # census, the basket count and BOTH self-join sides — unpinned,
-    # the scan + distinct (+ cap semi-join) re-ran per reference.
-    # One pin, the size class the self-join shuffles anyway. r15:
-    # persist (lazy) instead of localCheckpoint — the eager
-    # checkpoint job cost MORE than it saved at fixture scale where
-    # AQE turns the replays into cheap broadcasts (r14 VERDICT item
-    # 4); persist fills the cache inside the first job that needs
-    # the frame, keeps the at-scale pin, and leaves the lineage
-    # visible to the plan audit (the q2 discipline).
-    base = pin(base, eager=False)
-    supp = base.groupBy(F.col("__i__").alias("item")).agg(
-        F.count(F.lit(1)).alias("s"))
+    base, pairs = _basket_pairs(df, basket_col, item_col, min_support,
+                                max_basket_size)
     nb = base.agg(F.countDistinct("__b__").alias("n_baskets"))
-    l = base.select("__b__", F.col("__i__").alias("a"))
-    r = base.select(F.col("__b__").alias("__b2__"),
-                    F.col("__i__").alias("b"))
-    pairs = (l.join(r, (F.col("__b__") == F.col("__b2__"))
-                    & (F.col("a") != F.col("b")))
-             .groupBy("a", "b")
-             .agg(F.count(F.lit(1)).alias("support"))
-             .filter(F.col("support") >= min_support))
-    out = (pairs
-           .join(supp.select(F.col("item").alias("a"),
-                             F.col("s").alias("__sa__")), "a")
-           .join(supp.select(F.col("item").alias("b"),
-                             F.col("s").alias("__sb__")), "b")
-           .crossJoin(F.broadcast(nb)))
-    conf = F.col("support").cast("double") / F.col("__sa__")
-    lift = (F.col("n_baskets").cast("double") * F.col("support")
+    out = pairs.crossJoin(F.broadcast(nb))
+    conf = F.col("co").cast("double") / F.col("__sa__")
+    lift = (F.col("n_baskets").cast("double") * F.col("co")
             / (F.col("__sa__").cast("double") * F.col("__sb__")))
-    return (out.select("a", "b", "support", conf.alias("confidence"),
-                       lift.alias("lift"))
+    return (out.select("a", "b", F.col("co").alias("support"),
+                       conf.alias("confidence"), lift.alias("lift"))
             .orderBy(F.col("lift").desc(), "a", "b")
             .limit(k))
 
@@ -207,9 +221,9 @@ def item_cosine(df: DataFrame, basket_col: str, item_col: str,
     Scale shape — the association_rules discipline: ONE combinable
     distinct, the pair table via a basket-keyed self-join
     (|basket|²-bounded fan-out, never corpus²), item supports as a
-    vocab-bounded census joined back, and the per-item top-k as a
-    min-support-filtered window over the PAIR frame (bounded by
-    pairs ≥ min_support, not the corpus). Cosine is one
+    vocab-bounded census joined back, and the per-item top-k as the
+    window ``top_k_per_group`` over the min-support PAIR frame
+    (bounded by pairs ≥ min_support, not the corpus). Cosine is one
     deterministic expression of exact integers — sqrt of an integer
     product — so results are cross-engine exact unrounded except
     for the sqrt itself (IEEE-correctly-rounded, identical
@@ -217,44 +231,14 @@ def item_cosine(df: DataFrame, basket_col: str, item_col: str,
     valve as association_rules (a 10k-item bot cart is 10⁸ pairs
     through one join task).
     """
-    from pyspark.sql import Window
     if min_support < 1 or top_k < 1:
         raise ValueError("min_support and top_k must be >= 1")
-    if max_basket_size is not None and max_basket_size < 2:
-        raise ValueError("max_basket_size must be >= 2")
-    b, i = F.col(basket_col), F.col(item_col)
-    base = (df.filter(b.isNotNull() & i.isNotNull())
-            .select(b.alias("__b__"), i.alias("__i__")).distinct())
-    if max_basket_size is not None:
-        small = (base.groupBy("__b__")
-                 .agg(F.count(F.lit(1)).alias("__sz__"))
-                 .filter(F.col("__sz__") <= max_basket_size)
-                 .select("__b__"))
-        base = base.join(small, "__b__", "left_semi")
-    # pinned (lazily) for the same reason as association_rules above
-    base = pin(base, eager=False)
-    supp = base.groupBy(F.col("__i__").alias("item")).agg(
-        F.count(F.lit(1)).alias("s"))
-    l = base.select("__b__", F.col("__i__").alias("a"))
-    r = base.select(F.col("__b__").alias("__b2__"),
-                    F.col("__i__").alias("b"))
-    pairs = (l.join(r, (F.col("__b__") == F.col("__b2__"))
-                    & (F.col("a") != F.col("b")))
-             .groupBy("a", "b")
-             .agg(F.count(F.lit(1)).alias("co"))
-             .filter(F.col("co") >= min_support))
-    scored = (pairs
-              .join(supp.select(F.col("item").alias("a"),
-                                F.col("s").alias("__sa__")), "a")
-              .join(supp.select(F.col("item").alias("b"),
-                                F.col("s").alias("__sb__")), "b")
-              .withColumn("cosine",
-                          F.col("co") / F.sqrt(
-                              (F.col("__sa__") * F.col("__sb__"))
-                              .cast("double"))))
-    w = Window.partitionBy("a").orderBy(F.col("cosine").desc(),
-                                        F.col("b").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= top_k)
+    _, pairs = _basket_pairs(df, basket_col, item_col, min_support,
+                             max_basket_size)
+    scored = pairs.withColumn(
+        "cosine", F.col("co") / F.sqrt(
+            (F.col("__sa__") * F.col("__sb__")).cast("double")))
+    return (top_k_per_group(scored, ["a"], [F.col("cosine").desc(),
+                                            F.col("b").asc()], top_k)
             .select("a", "b", "co", "cosine",
                     F.col("rank").cast("int").alias("rank")))

@@ -165,88 +165,53 @@ def transpose(df: DataFrame) -> DataFrame:
     return spark.createDataFrame(out_rows, schema=[str(c) for c in new_cols])
 
 
-def top_k_per_group(df, keys: list[str], order_col: str, k: int,
-                    ascending: bool = False,
-                    tiebreak: list[str] | None = None,
-                    engine: str = "window",
-                    n_salts: int = 64):
-    """Exact top-``k`` rows per group, with a skew valve.
+def top_k_per_group(df: DataFrame, keys: list[str], order: list[Column],
+                    k: int, engine: str = "window",
+                    rank: str = "rank") -> DataFrame:
+    """The first ``k`` rows of each ``keys`` group under ``order``:
+    ``df``'s columns plus their 1-based ``row_number``, named
+    ``rank``. This is the package's one ranked cut; every top-k
+    calls it.
 
-    ``engine='window'`` (default): ``row_number() OVER (PARTITION BY
-    keys ORDER BY ...)`` + filter — ONE corpus shuffle into
-    Tungsten's radix sort, the fastest plan whenever every group
-    fits a task (measured 4-8x faster than the salted form on 50M
-    rows at every key distribution tried, because a JVM sort beats
-    any per-group object aggregation at single-task-viable sizes).
+    ``order`` is the full sort, direction, NULL placement and
+    tiebreak included; make it total within a group when the rows
+    kept must not depend on partitioning. ``keys=[]`` cuts the whole
+    frame (the window runs over ``partitionBy(lit(1))``).
 
-    ``engine='salted'``: the formulation for the group the window
-    CANNOT survive — a power-law key where one group is 10% of a
-    100 TB corpus makes the window's single task sort terabytes (or
-    OOM). Rows salt into ``n_salts`` deterministic slices per group;
-    a combinable ``sort_array ∘ collect_list`` keeps each slice's
-    top-k in n_salts PARALLEL tasks (the ObjectHashAggregate falls
-    back to sort-based and spills, no OOM cliff); the ≤ k·n_salts
-    survivors per group then merge into the exact answer
-    (pigeonhole: a true top-k row is top-k within its slice). Pay
-    the object-aggregation toll ONLY when the skew demands it —
-    the same philosophy as AQE's skew-join split, which cannot help
-    here because window partitions don't split.
+    The two forms return the same rows under a total order:
 
-    Mixed sort directions ride one lexicographic struct sort by
-    negating the numeric ``order_col`` when descending. ``tiebreak``
-    columns (always ascending) make selection and the emitted
-    ``rank`` deterministic under ties — REQUIRED when ``order_col``
-    repeats. Both engines return the input columns + ``rank``
-    (1-based) and are tested equal.
+    * ``engine='window'``: one ``row_number() OVER (PARTITION BY keys
+      ORDER BY order)`` + filter. One shuffle into Tungsten's sort;
+      the plan to use whenever each group fits one task.
+    * ``engine='salted'``: the local-top-k-then-merge form for a
+      group one task cannot sort (a hot key, a probe term that
+      matches the whole corpus, or a global cut). Phase 1 ranks
+      within (keys, input partition), ``spark_partition_id()`` being
+      the salt, and keeps ``k`` per slice in many balanced tasks;
+      phase 2 ranks the ≤ k × partitions survivors per group. A row
+      of the group's true top-k is in the top-k of its own slice
+      (pigeonhole), so phase 2 sees every row it must keep. Two
+      exchanges, both sorts spillable.
 
     Ref parity: the reference sorts then slices
     (``tablite/sortation.py`` + slicing); this is the grouped,
     bounded-memory form of that idiom.
     """
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
     if k < 1:
         raise ValueError("k must be >= 1")
-    if not keys:
-        raise ValueError("top_k_per_group needs grouping keys")
-    if n_salts < 1:
-        raise ValueError("n_salts must be >= 1")
-    tb = list(tiebreak or [])
-    ocol = F.col(order_col)
-    if engine == "window":
-        w = (Window.partitionBy(*[F.col(c) for c in keys])
-             .orderBy(ocol.asc() if ascending else ocol.desc(),
-                      *[F.col(c).asc() for c in tb]))
-        return (df.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k))
-    if engine != "salted":
+    if engine not in ("window", "salted"):
         raise ValueError(f"engine must be 'window' or 'salted', "
                          f"got {engine!r}")
-    payload = [c for c in df.columns if c not in keys]
-    skey = ocol if ascending else -ocol
-    # NULL placement must match the window engine's asc()/desc()
-    # defaults (asc -> nulls FIRST, desc -> nulls LAST). A bare NULL
-    # skey sorts lowest in struct compare, which is wrong for
-    # descending — so encode the placement explicitly as the first
-    # struct field: 0 sorts before 1.
-    nflag = (ocol.isNull() != F.lit(bool(ascending))).cast("int")
-    item = F.struct(nflag.alias("__n__"),
-                    skey.alias("__o__"),
-                    *[F.col(c) for c in tb],
-                    F.struct(*[F.col(c) for c in payload])
-                    .alias("__p__"))
-    topk = lambda col: F.slice(F.sort_array(col), 1, k)
-    salt = F.pmod(F.xxhash64(*(tb or [order_col])),
-                  F.lit(n_salts))
-    s1 = (df.withColumn("__salt__", salt)
-          .groupBy(*keys, "__salt__")
-          .agg(topk(F.collect_list(item)).alias("__c__")))
-    s2 = (s1.select(*keys, F.explode("__c__").alias("__e__"))
-          .groupBy(*keys)
-          .agg(topk(F.collect_list("__e__")).alias("__c__")))
-    out = s2.select(*keys, F.posexplode("__c__")
-                    .alias("__pos__", "__e__"))
-    return out.select(
-        *keys,
-        *[F.col(f"__e__.__p__.{c}").alias(c) for c in payload],
-        (F.col("__pos__") + 1).cast("int").alias("rank"))
+
+    def cut(frame, by, name):
+        w = Window.partitionBy(*by).orderBy(*order)
+        return (frame.withColumn(name, F.row_number().over(w))
+                .filter(F.col(name) <= k))
+
+    by = [F.col(c) for c in keys]
+    if engine == "window":
+        return cut(df, by or [F.lit(1)], rank)
+    s1 = cut(df.withColumn("__salt__", F.spark_partition_id()),
+             [*by, F.col("__salt__")], "__rn1__")
+    return cut(s1, by or [F.lit(1)], rank).drop("__salt__", "__rn1__")

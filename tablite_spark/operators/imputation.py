@@ -25,6 +25,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tablite_spark.operators.groupby import top_k_per_group
 from tablite_spark.plans.lifecycle import pin
 
 
@@ -126,10 +127,9 @@ def nearest_neighbour(df: DataFrame, targets: list[str],
         tb_cols = ([F.col(f"__d_{s}__" if s in sources else f"__tb_{s}__").asc()
                     for s in tb_src]
                    if tb_src else [F.col("__donor_rid__").asc()])
-        w = Window.partitionBy(rid).orderBy(dist.asc(), *tb_cols)
-        best = (nulls.join(donors, on=F.lit(True), how="left")
-                .withColumn("__rn__", F.row_number().over(w))
-                .filter(F.col("__rn__") == 1)
+        best = (top_k_per_group(
+                    nulls.join(donors, on=F.lit(True), how="left"), [rid],
+                    [dist.asc(), *tb_cols], 1, rank="__rn__")
                 .select(rid, F.col("__donor_val__").alias(f"__fill_{t}__")))
         out = (out.join(best, on=rid, how="left")
                .withColumn(t, F.coalesce(F.col(t), F.col(f"__fill_{t}__")))
@@ -211,10 +211,9 @@ def nearest_neighbour_lsh(df: DataFrame, targets: list[str],
         dist = reduce(Column.__add__, [
             F.abs(F.col(s) - F.col(f"__d_{s}__")) / F.lit(float(ranges[s] or 1))
             for s in sources])
-        w = Window.partitionBy(rid).orderBy(
-            dist.asc(), F.col("__donor_rid__").asc())
-        best = (cand.withColumn("__rn__", F.row_number().over(w))
-                .filter(F.col("__rn__") == 1)
+        best = (top_k_per_group(
+                    cand, [rid], [dist.asc(), F.col("__donor_rid__").asc()],
+                    1, rank="__rn__")
                 .select(rid, F.col("__donor_val__").alias(f"__fill_{t}__")))
         out = (out.join(best, on=rid, how="left")
                .withColumn(t, F.coalesce(F.col(t), F.col(f"__fill_{t}__")))

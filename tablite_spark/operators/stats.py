@@ -674,6 +674,39 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.sparkSession.createDataFrame(data, schema)
 
 
+def _two_group_census(df: DataFrame, group_col: str, val_col: str,
+                      group_a, group_b, name: str):
+    """The per-value census of :func:`ks_test_2sample` and
+    :func:`mann_whitney_u`: one row per distinct non-null ``val_col``
+    of the two groups (``__v__``) with each group's count
+    (``__ca__``, ``__cb__``), their sum ``__ct__`` and the three
+    inclusive prefix counts over value order (``__cuma__``,
+    ``__cumb__``, ``__cumt__``). Returns ``(census, n_a, n_b)``;
+    raises when a group has no non-null value."""
+    from tablite_spark.functions.buckets import (
+        prefix_sums, with_range_bucket,
+    )
+    g, v = F.col(group_col), F.col(val_col)
+    cens = (df.filter(v.isNotNull() & g.isin([group_a, group_b]))
+            .groupBy(v.alias("__v__"))
+            .agg(F.count(F.when(g == F.lit(group_a), 1))
+                 .alias("__ca__"),
+                 F.count(F.when(g == F.lit(group_b), 1))
+                 .alias("__cb__"))
+            .withColumn("__ct__", F.col("__ca__") + F.col("__cb__")))
+    cens, totals = prefix_sums(
+        with_range_bucket(pin(cens, eager=True), "__v__", "__p__"),
+        "__p__", ["__v__"], {"__cuma__": F.col("__ca__"),
+                             "__cumb__": F.col("__cb__"),
+                             "__cumt__": F.col("__ct__")})
+    na, nb = int(totals["__cuma__"]), int(totals["__cumb__"])
+    if na == 0 or nb == 0:
+        raise ValueError(
+            f"{name}: group {'a' if na == 0 else 'b'} has "
+            f"no non-null values")
+    return cens, na, nb
+
+
 def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
                     group_a, group_b, terms: int = 100) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov test between the ``val_col``
@@ -699,25 +732,8 @@ def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
     never as a cum_a·n_b - cum_b·n_a integer product, which would
     ARITHMETIC_OVERFLOW under ANSI once n_a·n_b exceeds 2^63.
     """
-    from tablite_spark.functions.buckets import (
-        prefix_sums, with_range_bucket,
-    )
-    g, v = F.col(group_col), F.col(val_col)
-    base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
-    cens = (base.groupBy(v.alias("__v__"))
-            .agg(F.count(F.when(g == F.lit(group_a), 1))
-                 .alias("__ca__"),
-                 F.count(F.when(g == F.lit(group_b), 1))
-                 .alias("__cb__")))
-    cens, totals = prefix_sums(
-        with_range_bucket(pin(cens, eager=True), "__v__", "__p__"),
-        "__p__", ["__v__"], {"__cuma__": F.col("__ca__"),
-                             "__cumb__": F.col("__cb__")})
-    na, nb = totals["__cuma__"], totals["__cumb__"]
-    if na == 0 or nb == 0:
-        raise ValueError(
-            f"ks_test_2sample: group {'a' if na == 0 else 'b'} has "
-            f"no non-null values")
+    cens, na, nb = _two_group_census(df, group_col, val_col, group_a,
+                                     group_b, "ks_test_2sample")
     fa = F.col("__cuma__") / F.lit(float(na))
     fb = F.col("__cumb__") / F.lit(float(nb))
     one = cens.agg(F.max(F.abs(fa - fb)).alias("__d__"))
@@ -892,6 +908,40 @@ def group_ols(df: DataFrame, keys: list[str], x_col: str,
     return out
 
 
+def _survival_census(df: DataFrame, duration_col: str, observed_col,
+                     term) -> DataFrame:
+    """The per-duration census of :func:`km_curve` and
+    :func:`nelson_aalen`: rows with a NULL duration or flag are
+    dropped, each distinct duration counts its events and censored
+    rows, one pinned bounds pass serves two census prefixes — the
+    at-risk count, then the running sum ``__tcum__`` of
+    ``term(d, n_at_risk)`` — and one row per event time comes back
+    as (duration, n_at_risk, n_events, __tcum__)."""
+    from tablite_spark.functions.buckets import (
+        prefix_sums, with_range_bucket,
+    )
+    t = F.col(duration_col)
+    obs = (F.col(observed_col) if isinstance(observed_col, str)
+           else observed_col).cast("boolean")
+    cens = (df.filter(t.isNotNull() & obs.isNotNull())
+            .groupBy(t.alias("__t__"))
+            .agg(F.count(F.when(obs, 1)).alias("__d__"),
+                 F.count(F.when(~obs, 1)).alias("__c__")))
+    # one bounds pass serves both prefixes below
+    cens = with_range_bucket(pin(cens, eager=True), "__t__", "__b__")
+    both = F.col("__d__") + F.col("__c__")
+    cens, totals = prefix_sums(cens, "__b__", ["__t__"],
+                               {"__cum__": both})
+    n_risk = F.lit(totals["__cum__"]) - F.col("__cum__") + both
+    cens, _ = prefix_sums(cens.withColumn("__nr__", n_risk), "__b__",
+                          ["__t__"],
+                          {"__tcum__": term(F.col("__d__"), n_risk)})
+    return (cens.filter(F.col("__d__") > 0)
+            .select(F.col("__t__").alias("duration"),
+                    F.col("__nr__").cast("long").alias("n_at_risk"),
+                    F.col("__d__").alias("n_events"), "__tcum__"))
+
+
 def km_curve(df: DataFrame, duration_col: str,
              observed_col) -> DataFrame:
     """Kaplan-Meier survival estimator with right-censoring: one row
@@ -914,40 +964,20 @@ def km_curve(df: DataFrame, duration_col: str,
     task; survival values round at the oracle boundary (float
     addition groups differ across engines by construction).
     """
-    from tablite_spark.functions.buckets import (
-        prefix_sums, with_range_bucket,
-    )
-    t = F.col(duration_col)
-    obs = (F.col(observed_col) if isinstance(observed_col, str)
-           else observed_col).cast("boolean")
-    cens = (df.filter(t.isNotNull() & obs.isNotNull())
-            .groupBy(t.alias("__t__"))
-            .agg(F.count(F.when(obs, 1)).alias("__d__"),
-                 F.count(F.when(~obs, 1)).alias("__c__")))
-    # one bounds pass serves both prefixes below
-    cens = with_range_bucket(pin(cens, eager=True), "__t__", "__b__")
-    both = F.col("__d__") + F.col("__c__")
-    cens, totals = prefix_sums(cens, "__b__", ["__t__"],
-                               {"__cum__": both})
-    n_risk = F.lit(totals["__cum__"]) - F.col("__cum__") + both
     # d == n_risk (everyone remaining dies at the last event time)
     # would be ln(0): Spark's log yields NULL, DuckDB ERRORS — both
     # sides use a finite sentinel whose exp is exactly 0.0 instead
     # (it can only occur at the final event time, so it never
     # poisons a later prefix)
-    d_ = F.col("__d__")
-    term = (F.when((d_ > 0) & (d_ < n_risk),
-                   F.log(1.0 - d_ / n_risk.cast("double")))
-            .when(d_ > 0, F.lit(-1.0e6))
-            .otherwise(0.0))
-    cens, _ = prefix_sums(cens.withColumn("__nr__", n_risk), "__b__",
-                          ["__t__"], {"__lcum__": term})
-    surv = F.exp(F.col("__lcum__"))
-    return (cens.filter(F.col("__d__") > 0)
-            .select(F.col("__t__").alias("duration"),
-                    F.col("__nr__").cast("long").alias("n_at_risk"),
-                    F.col("__d__").alias("n_events"),
-                    surv.alias("survival")))
+    def log_term(d_, n_risk):
+        return (F.when((d_ > 0) & (d_ < n_risk),
+                       F.log(1.0 - d_ / n_risk.cast("double")))
+                .when(d_ > 0, F.lit(-1.0e6))
+                .otherwise(0.0))
+
+    return (_survival_census(df, duration_col, observed_col, log_term)
+            .select("duration", "n_at_risk", "n_events",
+                    F.exp(F.col("__tcum__")).alias("survival")))
 
 
 def nelson_aalen(df: DataFrame, duration_col: str,
@@ -969,30 +999,10 @@ def nelson_aalen(df: DataFrame, duration_col: str,
     so the only cross-engine float drift is summation grouping —
     round at the oracle boundary.
     """
-    from tablite_spark.functions.buckets import (
-        prefix_sums, with_range_bucket,
-    )
-    t = F.col(duration_col)
-    obs = (F.col(observed_col) if isinstance(observed_col, str)
-           else observed_col).cast("boolean")
-    cens = (df.filter(t.isNotNull() & obs.isNotNull())
-            .groupBy(t.alias("__t__"))
-            .agg(F.count(F.when(obs, 1)).alias("__d__"),
-                 F.count(F.when(~obs, 1)).alias("__c__")))
-    # one bounds pass serves both prefixes below
-    cens = with_range_bucket(pin(cens, eager=True), "__t__", "__b__")
-    both = F.col("__d__") + F.col("__c__")
-    cens, totals = prefix_sums(cens, "__b__", ["__t__"],
-                               {"__cum__": both})
-    n_risk = F.lit(totals["__cum__"]) - F.col("__cum__") + both
-    term = F.col("__d__") / n_risk.cast("double")
-    cens, _ = prefix_sums(cens.withColumn("__nr__", n_risk), "__b__",
-                          ["__t__"], {"__hcum__": term})
-    return (cens.filter(F.col("__d__") > 0)
-            .select(F.col("__t__").alias("duration"),
-                    F.col("__nr__").cast("long").alias("n_at_risk"),
-                    F.col("__d__").alias("n_events"),
-                    F.col("__hcum__").alias("cumhaz")))
+    return (_survival_census(df, duration_col, observed_col,
+                             lambda d_, n_risk: d_ / n_risk.cast("double"))
+            .select("duration", "n_at_risk", "n_events",
+                    F.col("__tcum__").alias("cumhaz")))
 
 
 def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
@@ -1431,27 +1441,8 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
     tests); the distribution-shift screen an ingest pipeline runs
     next to PSI/KS when the metric is ordinal.
     """
-    from tablite_spark.functions.buckets import (
-        prefix_sums, with_range_bucket,
-    )
-    g, v = F.col(group_col), F.col(val_col)
-    base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
-    cens = (base.groupBy(v.alias("__v__"))
-            .agg(F.count(F.when(g == F.lit(group_a), 1))
-                 .alias("__ca__"),
-                 F.count(F.when(g == F.lit(group_b), 1))
-                 .alias("__cb__")))
-    cens = cens.withColumn("__ct__", F.col("__ca__") + F.col("__cb__"))
-    cens, totals = prefix_sums(
-        with_range_bucket(pin(cens, eager=True), "__v__", "__p__"),
-        "__p__", ["__v__"], {"__cuma__": F.col("__ca__"),
-                             "__cumb__": F.col("__cb__"),
-                             "__cumt__": F.col("__ct__")})
-    na, nb = int(totals["__cuma__"]), int(totals["__cumb__"])
-    if na == 0 or nb == 0:
-        raise ValueError(
-            f"mann_whitney_u: group {'a' if na == 0 else 'b'} has "
-            f"no non-null values")
+    cens, na, nb = _two_group_census(df, group_col, val_col, group_a,
+                                     group_b, "mann_whitney_u")
     n = na + nb
     # exclusive prefix: pooled count strictly BELOW this value
     less = F.col("__cumt__") - F.col("__ct__")

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tablite_spark.functions.tokens import alnum_words, py_alnum_words
+from tablite_spark.operators.groupby import top_k_per_group
 from tablite_spark.plans.lifecycle import pin
 
 
@@ -101,22 +102,11 @@ def bm25_search(docs: DataFrame | None, queries: DataFrame,
               .join(F.broadcast(df_t), "term")
               .groupBy(qid_col, id_col)
               .agg(F.round(F.sum(contrib), 6).alias("score")))
-    # two-phase top-k (the similarity-module pattern): a bare
-    # row_number over (partition by qid) ranks each query's ENTIRE
-    # scored set in one task — a stopword-like probe term matches the
-    # whole corpus and funnels it into ≤|queries| tasks. Phase 1
-    # keeps k per (qid, input partition) — balanced; phase 2 ranks
-    # the ≤ k·n_partitions survivors. A per-salt top-k under an
-    # ordering always contains the global top-k, so the result is
-    # identical to the single-window form.
-    order = [F.col("score").desc(), F.col(id_col).asc()]
-    w1 = Window.partitionBy(qid_col, "__salt__").orderBy(*order)
-    w2 = Window.partitionBy(qid_col).orderBy(*order)
-    return (scored.withColumn("__salt__", F.spark_partition_id())
-            .withColumn("__rn1__", F.row_number().over(w1))
-            .filter(F.col("__rn1__") <= k)
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
+    # salted top-k: a stopword-like probe term matches the whole
+    # corpus, which one window task per query would have to sort
+    return (top_k_per_group(scored, [qid_col],
+                            [F.col("score").desc(), F.col(id_col).asc()],
+                            k, engine="salted")
             .select(qid_col, id_col, "rank", "score"))
 
 
@@ -139,8 +129,8 @@ def rrf_fuse(rankings: list[DataFrame], qid_col: str = "qid",
 
     Returns (qid, id, rank, rrf_score, n_sources). Plan shape: one
     union (no shuffle) → ONE combinable groupBy on (qid, id) → the
-    salted two-phase top-k that survives adversarial probes matching
-    the whole corpus (the ``bm25_search`` pattern)."""
+    salted ``top_k_per_group``, which survives adversarial probes
+    matching the whole corpus."""
     from functools import reduce
 
     contrib = F.floor(F.lit(float(unit))
@@ -151,14 +141,9 @@ def rrf_fuse(rankings: list[DataFrame], qid_col: str = "qid",
     fused = (u.groupBy(qid_col, id_col)
              .agg(F.sum("__c__").alias("rrf_score"),
                   F.count(F.lit(1)).alias("n_sources")))
-    order = [F.col("rrf_score").desc(), F.col(id_col).asc()]
-    w1 = Window.partitionBy(qid_col, "__salt__").orderBy(*order)
-    w2 = Window.partitionBy(qid_col).orderBy(*order)
-    return (fused.withColumn("__salt__", F.spark_partition_id())
-            .withColumn("__rn1__", F.row_number().over(w1))
-            .filter(F.col("__rn1__") <= k)
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
+    return (top_k_per_group(fused, [qid_col],
+                            [F.col("rrf_score").desc(), F.col(id_col).asc()],
+                            k, engine="salted")
             .select(qid_col, id_col, "rank", "rrf_score", "n_sources"))
 
 

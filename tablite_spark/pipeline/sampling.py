@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tablite_spark.operators.groupby import top_k_per_group
+
 
 def _unit_hash(key: Column) -> Column:
     """Uniform [0, 1) from the first 15 hex digits of md5(key) — 60
@@ -103,14 +105,9 @@ def quota_cap(df: DataFrame, key_col: str, group_col: str,
     order, so the cap is a uniform subsample of each group rather than
     "first N by ingest time".
 
-    Scale: TWO-PHASE rank, because AQE's skew mitigation does not
-    apply to window functions — a single hot domain would otherwise
-    rank all its rows in one task. Phase 1 ranks within (group,
-    input-partition) — many balanced tasks — and keeps at most
-    ``quota`` per partition; phase 2 ranks the ≤ quota×n_partitions
-    survivors exactly. A per-partition top-``quota`` under a total
-    order always contains the global top-``quota``, so the result is
-    identical to the single-window form; only the plan changes.
+    Scale: the salted ``top_k_per_group``, because AQE's skew
+    mitigation does not apply to window functions — a single hot
+    domain would otherwise rank all its rows in one task.
 
     Duplicate (group, key) pairs: the sort tuple is (hash(salt+key),
     key, xxhash64(full row)) — the third element breaks ties between
@@ -122,17 +119,11 @@ def quota_cap(df: DataFrame, key_col: str, group_col: str,
     """
     if quota < 1:
         raise ValueError(f"quota must be >= 1, got {quota}")
-    from pyspark.sql import Window
     key = F.concat(F.lit(salt), F.col(key_col).cast("string"))
     order = [_unit_hash(key), F.col(key_col), _row_tiebreak(df)]
-    w1 = Window.partitionBy(group_col, "__qsalt__").orderBy(*order)
-    w2 = Window.partitionBy(group_col).orderBy(*order)
-    return (df.withColumn("__qsalt__", F.spark_partition_id())
-            .withColumn("__qr1__", F.row_number().over(w1))
-            .filter(F.col("__qr1__") <= quota)
-            .withColumn("__qrank__", F.row_number().over(w2))
-            .filter(F.col("__qrank__") <= quota)
-            .drop("__qsalt__", "__qr1__", "__qrank__"))
+    return (top_k_per_group(df, [group_col], order, quota,
+                            engine="salted", rank="__qrank__")
+            .drop("__qrank__"))
 
 
 def mixture_sample(df: DataFrame, key_col: str, group_col: str,
@@ -195,7 +186,9 @@ def token_budget_cap(df: DataFrame, key_col: str, group_col: str,
     overflow is kept; a best-fit repack would trade determinism
     complexity for at most one document's worth of tokens.
 
-    Scale: TWO-PHASE, like ``quota_cap`` — AQE's skew mitigation does
+    Scale: TWO-PHASE, the running-sum twin of the salted
+    ``top_k_per_group`` that ``quota_cap`` runs (a budget, not a row
+    count, bounds each slice) — AQE's skew mitigation does
     not apply to window functions, so a single hot group must not push
     all its rows through one task. Phase 1 runs the prefix-sum within
     (group, input-partition) — many balanced tasks — keeping each

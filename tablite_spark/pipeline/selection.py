@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tablite_spark.functions.tokens import alnum_words, ngrams
+from tablite_spark.operators.groupby import top_k_per_group
 from tablite_spark.plans.lifecycle import pin
 
 __all__ = ["dsir_weights", "dsir_select"]
@@ -134,17 +135,11 @@ def dsir_select(raw: DataFrame, target: DataFrame, text_col: str,
     """The ``k`` most target-like raw docs by DSIR weight
     (deterministic rank: weight desc, id asc — the paper's Gumbel
     noise is for statistical de-duplication of the selection, not
-    needed for a reproducible top-k). Salted two-phase top-k, same
-    plan discipline as ``_topk_per_qid``: no global single-task sort.
+    needed for a reproducible top-k). A global cut on the salted
+    ``top_k_per_group``: no single-task sort of the corpus.
     """
-    from pyspark.sql import Window
     w = dsir_weights(raw, target, text_col, id_col, buckets)
-    order = [F.col("dsir_micro").desc(), F.col(id_col).asc()]
-    w1 = Window.partitionBy("__salt__").orderBy(*order)
-    w2 = Window.partitionBy(F.lit(1)).orderBy(*order)
-    return (w.withColumn("__salt__", F.spark_partition_id())
-            .withColumn("__r1__", F.row_number().over(w1))
-            .filter(F.col("__r1__") <= k)
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
+    return (top_k_per_group(w, [], [F.col("dsir_micro").desc(),
+                                    F.col(id_col).asc()],
+                            k, engine="salted")
             .select(id_col, "n_grams", "dsir_micro", "rank"))

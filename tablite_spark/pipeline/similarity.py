@@ -12,8 +12,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tablite_spark.operators.groupby import top_k_per_group
 
 
 def _norm2(vec):
@@ -60,17 +62,10 @@ def _unit(vec):
 
 
 def _topk_per_qid(scored: DataFrame, k: int, keep: tuple = ()) -> DataFrame:
-    """Two-phase per-query top-k over a (qid, nid, cos) frame.
-
-    A single ``row_number() over (partition by qid)`` ranks each
-    query's ENTIRE scored set in one task — with few queries that is a
-    handful of tasks ranking the whole corpus (the scale funnel). Phase
-    1 ranks within (qid, input-partition) — many balanced tasks — and
-    keeps k per salt; phase 2 ranks the ≤ k×n_partitions survivors
-    globally per qid. The ordering (cos desc, nid asc) is identical in
-    both phases, and a per-salt top-k under an ordering always contains
-    the global top-k, so the result is byte-identical to the
-    single-window form — only the plan changes.
+    """Per-query top-k over a (qid, nid, cos) frame, ranked by
+    (cos desc, nid asc): the salted form of
+    ``operators.groupby.top_k_per_group``, since few queries would
+    otherwise rank the whole corpus in a handful of tasks.
 
     Zero-norm semantics (uniform across the catalyst and BLAS paths):
     a zero-norm vector has no direction, so its cosine against
@@ -80,20 +75,15 @@ def _topk_per_qid(scored: DataFrame, k: int, keep: tuple = ()) -> DataFrame:
     row is never a neighbor. The batched kernel enforces the same
     contract by mapping NaN scores to -inf before candidate selection.
     """
-    order = [F.col("cos").desc(), F.col("nid").asc()]
-    w1 = Window.partitionBy("qid", "__salt__").orderBy(*order)
-    w2 = Window.partitionBy("qid").orderBy(*order)
     # NULL = zero-norm pair (see _unit); NaN only from pre-normalized
     # caller input — both are "undefined cosine", both excluded
     c = F.col("cos").cast("double")
     scored = scored.filter(c.isNotNull() & ~F.isnan(c))
-    return (scored.withColumn("__salt__", F.spark_partition_id())
-            .withColumn("__rn1__", F.row_number().over(w1))
-            .filter(F.col("__rn1__") <= k)
-            .withColumn("rn", F.row_number().over(w2))
-            .filter(F.col("rn") <= k)
-            .select("qid", "nid", F.round(F.col("cos"), 4).alias("cos"), "rn",
-                    *keep))
+    return (top_k_per_group(scored, ["qid"],
+                            [F.col("cos").desc(), F.col("nid").asc()], k,
+                            engine="salted", rank="rn")
+            .select("qid", "nid", F.round(F.col("cos"), 4).alias("cos"),
+                    "rn", *keep))
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int,
@@ -251,7 +241,7 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int,
 
     Plan shape at 100 TB: queries broadcast into ONE corpus scan
     (exclusion predicates evaluate inline — excluded rows never
-    materialize), then the salted two-phase top-k. Returns
+    materialize), then the salted ``top_k_per_group``. Returns
     (qid, nid, cos, rn[, nlabel]).
 
     ``batched=True`` routes scoring through the BLAS kernel
@@ -811,7 +801,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int,
 
     Plan shape: codebooks train on a driver-side sample; encoding and
     ADC scoring are scan-local Arrow batches (zero shuffles before
-    ranking); ranking reuses the salted two-phase top-k. The query
+    ranking); ranking is the salted ``top_k_per_group``. The query
     set is collected and shipped in the UDF closure — the same
     small-query contract as brute_force_topk's broadcast.
 
@@ -849,7 +839,7 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int,
     survivors — the canonical billion-vector recipe, composed from
     the building blocks this module already oracles separately
     (``_kmeans_sample_train``/``assign_cells``, ``pq_train``/ADC,
-    salted two-phase rank).
+    the salted ``top_k_per_group``).
 
     At 100 TB: persist (cell, pq_code) as columns — cell as a
     PARTITION column so probing is partition pruning at the file

@@ -20,6 +20,7 @@ from tablite_spark.functions.tokens import (
     alnum_words, collapsed, collapsed_words, ngrams, nonempty, py_words,
     windows, words,
 )
+from tablite_spark.operators.groupby import top_k_per_group
 from tablite_spark.plans.hints import respread
 from tablite_spark.plans.lifecycle import is_expensive, pin
 
@@ -1112,8 +1113,8 @@ def tfidf_keywords(df: DataFrame, text_col: str, id_col: str,
     keys on (verified: 0 extra Generate materializations, plan-gated
     in tests). The idf join is term-keyed (merge-hinted on the
     corpus-scaling tf side — the explode-fan-out broadcast trap);
-    the final top-k is a row_number window partitioned by DOC —
-    millions of small partitions, no hot key, payload
+    the final top-k is the window ``top_k_per_group`` partitioned by
+    DOC — millions of small partitions, no hot key, payload
     (doc, term, score) only.
 
     N counts TOKENIZED documents (≥ 1 term); a doc whose text
@@ -1137,11 +1138,9 @@ def tfidf_keywords(df: DataFrame, text_col: str, id_col: str,
               .select(id_col, "term",
                       (F.col("tf") * F.col("idf_micro"))
                       .alias("score_micro")))
-    from pyspark.sql import Window
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score_micro").desc(), F.col("term").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+    return (top_k_per_group(scored, [id_col],
+                            [F.col("score_micro").desc(),
+                             F.col("term").asc()], k)
             .select(id_col, "term", "score_micro", "rank"))
 
 

@@ -118,8 +118,8 @@ def dsir_weights_docs(spark: SparkSession, sf: str) -> DataFrame:
 
 def dsir_select_docs(spark: SparkSession, sf: str) -> DataFrame:
     """Top-50 most-target-like docs by DSIR weight (deterministic
-    rank: weight desc, doc_id asc; salted two-phase top-k — no global
-    single-task sort)."""
+    rank: weight desc, doc_id asc; a global cut on the salted
+    ``top_k_per_group`` — no single-task sort)."""
     from tablite_spark.pipeline.selection import dsir_select
     d = _t(spark, sf, "documents")
     return dsir_select(d, d.filter(F.col("lang") == "fr"),
@@ -142,21 +142,15 @@ def winnow_matches_docs(spark: SparkSession, sf: str) -> DataFrame:
     fingerprints (k=12, window=6, boilerplate fingerprints in >25
     docs dropped before pairing — the MOSS too-common cut, so a hot
     fingerprint can never fan out quadratically). Deterministic rank
-    (shared desc, id_a, id_b) via the salted two-phase top-k."""
-    from pyspark.sql import Window
-
+    (shared desc, id_a, id_b): a global cut on the salted
+    ``top_k_per_group``."""
+    from tablite_spark.operators.groupby import top_k_per_group
     from tablite_spark.pipeline.dedup import winnow_matches
     m = winnow_matches(_t(spark, sf, "documents"), "text", "doc_id",
                        k=12, window=6, max_df=25)
     order = [F.col("shared_fps").desc(), F.col("id_a").asc(),
              F.col("id_b").asc()]
-    w1 = Window.partitionBy("__salt__").orderBy(*order)
-    w2 = Window.partitionBy(F.lit(1)).orderBy(*order)
-    return (m.withColumn("__salt__", F.spark_partition_id())
-            .withColumn("__r1__", F.row_number().over(w1))
-            .filter(F.col("__r1__") <= 100)
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= 100)
+    return (top_k_per_group(m, [], order, 100, engine="salted")
             .select("id_a", "id_b", "shared_fps", "rank"))
 
 
@@ -1490,7 +1484,7 @@ def batched_topk_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     """Exact cosine top-k via the BLAS-batched kernel
     (`similarity.batched_topk`): one numpy matmul per (arrow batch,
     query block) + boundary-tie-complete per-batch candidate cut +
-    the salted two-phase rank — byte-identical contract to
+    the salted ``top_k_per_group`` — byte-identical contract to
     brute_force_topk but ~100x past 10^8 query-corpus pairs, where
     the pair-materializing catalyst join hits its quadratic wall.
     Distinct query set / k from embedding_topk so the two rows verify

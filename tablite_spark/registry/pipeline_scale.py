@@ -1255,8 +1255,8 @@ def hard_negatives_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     reference, DPR recipe): per probe vector, the 5 most-similar
     corpus vectors with a DIFFERENT label (same-label = positive,
     null-distinct semantics). Exclusion evaluates inline in the one
-    broadcast-join corpus scan; ranking is the salted two-phase
-    top-k. The oracle recomputes the full cross-label ranking."""
+    broadcast-join corpus scan; ranking is the salted
+    ``top_k_per_group``. The oracle recomputes the full cross-label ranking."""
     from tablite_spark.pipeline.similarity import hard_negatives
     emb = _t(spark, sf, "embeddings")
     probes = emb.filter(F.col("vec_id") < 3)

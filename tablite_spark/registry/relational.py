@@ -269,11 +269,11 @@ def melt_long(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def window_topn(spark: SparkSession, sf: str) -> DataFrame:
+    from tablite_spark.operators.groupby import top_k_per_group
     c = _t(spark, sf, "customer")
-    w = W.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey").asc())
-    return (c.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
+    return (top_k_per_group(c, ["c_mktsegment"],
+                            [F.col("c_acctbal").desc(),
+                             F.col("c_custkey").asc()], 3, rank="rn")
             .select("c_mktsegment", "rn", "c_custkey", "c_acctbal"))
 
 

@@ -102,16 +102,16 @@ ORACLES["skew_report_lineitem"] = """
 def top_k_per_group_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     """Top-3 lineitems by extended price per supplier —
     deterministic under price ties via the (orderkey, linenumber)
-    tiebreak. Runs the default window engine (supplier groups are
-    uniform); the salted skew engine is pytest-verified equal and
-    burn-in-documented as the valve for groups a single window task
-    cannot sort. Oracle: the row_number window formulation in
-    DuckDB."""
+    tiebreak. Runs the window form (supplier groups are uniform); the
+    salted form is pytest-verified equal. Oracle: the row_number
+    window formulation in DuckDB."""
     from tablite_spark.operators.groupby import top_k_per_group
     li = _t(spark, sf, "lineitem").select(
         "l_suppkey", "l_orderkey", "l_linenumber", "l_extendedprice")
-    out = top_k_per_group(li, ["l_suppkey"], "l_extendedprice", 3,
-                          tiebreak=["l_orderkey", "l_linenumber"])
+    out = top_k_per_group(li, ["l_suppkey"],
+                          [F.col("l_extendedprice").desc(),
+                           F.col("l_orderkey").asc(),
+                           F.col("l_linenumber").asc()], 3)
     return out.select("l_suppkey", "rank", "l_orderkey",
                       "l_linenumber", "l_extendedprice")
 
@@ -342,14 +342,14 @@ def kmv_jaccard_events(spark: SparkSession, sf: str) -> DataFrame:
     """Pairwise audience overlap between event types over USER-DAY
     entities, estimated from KMV sketches (``functions/sketches.py``:
     k smallest 60-bit md5 hashes per type, k-smallest computed on
-    the SALTED top-k engine — the skew valve) with the exact Jaccard
-    beside it — the sketch-accuracy audit for set-overlap questions
-    a pipeline answers from sketches at corpus scale (audience
-    overlap, day-over-day retention of distinct keys). Post-sketch
-    relations are bounded at |types| x k rows; the |types|^2 pair
-    frame is the documented 1-row-broadcast-class cross join. The
-    oracle replays sketch construction, union ranking and both
-    ratio boundaries verbatim."""
+    the salted ``top_k_per_group`` — the skew valve) with the exact
+    Jaccard beside it — the sketch-accuracy audit for set-overlap
+    questions a pipeline answers from sketches at corpus scale
+    (audience overlap, day-over-day retention of distinct keys).
+    Post-sketch relations are bounded at |types| x k rows; the
+    |types|^2 pair frame is the documented 1-row-broadcast-class
+    cross join. The oracle replays sketch construction, union
+    ranking and both ratio boundaries verbatim."""
     from tablite_spark.functions.sketches import (kmv_estimate,
                                                   kmv_jaccard_pairs,
                                                   kmv_sketch)

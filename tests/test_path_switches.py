@@ -13,9 +13,15 @@ SWITCHES = {"impl", "engine", "single_scan", "single_pass", "batched",
 # (module, function, parameter) -> why the choice stays with the caller
 ALLOWED = {
     ("operators/groupby.py", "top_k_per_group", "engine"):
-        "two package callers (functions/sketches.py) pass different "
-        "values: the window sort for bounded groups, the salted form "
-        "for a hot key",
+        "the package's one ranked cut; its callers pick the form: "
+        "the window for bounded groups (frequency.item_cosine, "
+        "text.tfidf_keywords, imputation's two donor picks, "
+        "sketches.kmv_jaccard_pairs, relational.window_topn, "
+        "sketches.top_k_per_group_lineitem), the salted form for a "
+        "hot key or a global cut (similarity._topk_per_qid, "
+        "retrieval.bm25_search and rrf_fuse, selection.dsir_select, "
+        "sampling.quota_cap, sketches.kmv_sketch, "
+        "pipeline_docs.winnow_matches_docs)",
     ("pipeline/similarity.py", "hard_negatives", "batched"):
         "the two paths win at different sizes and the benchmark has no "
         "workload on either side to choose between them",

@@ -1030,21 +1030,18 @@ def test_skew_report_hand(spark):
 
 
 def test_top_k_per_group_engines_match(spark):
-    """Both engines must equal the reference row_number formulation
-    exactly (same deterministic tiebreak), including groups smaller
-    than k, NULL keys, and ascending order. Plan gates: the salted
-    engine has NO Window and exactly two hash exchanges ((keys,
-    salt) + the survivor merge); the window engine is the plain
-    one-exchange window plan."""
+    """Both forms equal the reference row_number window exactly,
+    ascending and descending, with NULL order values, a group smaller
+    than k, a NULL key and a global cut (keys=[]). Plan gate: the
+    salted form is two Window operators over two hash exchanges
+    ((keys, partition id), then keys) and no object aggregate."""
     import random
+    import re
 
     from pyspark.sql import Window
     from tablite_spark.operators.groupby import top_k_per_group
     rnd = random.Random(9)
-    # ~10% NULL order values: window asc() puts nulls FIRST and
-    # desc() puts them LAST — the salted engine must agree (the r12
-    # ADVICE repro: bare NULL skey sorted lowest, so descending
-    # salted returned the NULL rows as "top")
+    # ~10% NULL order values: asc() puts nulls FIRST, desc() LAST
     rows = [(i, rnd.choice(["a", "b", "c", None]),
              None if rnd.random() < 0.1
              else float(rnd.randint(0, 20))) for i in range(500)]
@@ -1053,28 +1050,30 @@ def test_top_k_per_group_engines_match(spark):
     df = spark.createDataFrame(
         rows, "rid long, g string, v double").repartition(7)
     for asc in (False, True):
-        w = Window.partitionBy("g").orderBy(
-            F.col("v").asc() if asc else F.col("v").desc(),
-            F.col("rid").asc())
-        want = {(r["g"], r["rid"]): r["rank"] for r in
-                df.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= 3).collect()}
-        for eng in ("window", "salted"):
-            got = {(r["g"], r["rid"]): r["rank"] for r in
-                   top_k_per_group(df, ["g"], "v", 3, ascending=asc,
-                                   tiebreak=["rid"],
-                                   engine=eng).collect()}
-            assert got == want, (asc, eng)
-    plan = top_k_per_group(df, ["g"], "v", 3, tiebreak=["rid"],
-                           engine="salted")         ._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert plan.lower().count("hashpartitioning") == 2
+        order = [F.col("v").asc() if asc else F.col("v").desc(),
+                 F.col("rid").asc()]
+        for keys in (["g"], []):
+            w = Window.partitionBy(*keys or [F.lit(1)]).orderBy(*order)
+            want = {(r["g"], r["rid"]): r["rank"] for r in
+                    df.withColumn("rank", F.row_number().over(w))
+                    .filter(F.col("rank") <= 3).collect()}
+            assert len(want) == (3 * 4 + 1 + 2 if keys else 3)
+            for eng in ("window", "salted"):
+                got = top_k_per_group(df, keys, order, 3, engine=eng)
+                assert got.columns == df.columns + ["rank"]
+                got = {(r["g"], r["rid"]): r["rank"]
+                       for r in got.collect()}
+                assert got == want, (asc, keys, eng)
+    plan = (top_k_per_group(df, ["g"], [F.col("v").desc()], 3,
+                            engine="salted")
+            ._jdf.queryExecution().executedPlan().toString())
+    assert len(re.findall(r"\bWindow \[", plan)) == 2, plan
+    assert plan.lower().count("hashpartitioning") == 2, plan
+    assert "ObjectHashAggregate" not in plan, plan
     with pytest.raises(ValueError, match="k must"):
-        top_k_per_group(df, ["g"], "v", 0)
-    with pytest.raises(ValueError, match="grouping keys"):
-        top_k_per_group(df, [], "v", 3)
+        top_k_per_group(df, ["g"], [F.col("v")], 0)
     with pytest.raises(ValueError, match="engine"):
-        top_k_per_group(df, ["g"], "v", 3, engine="nope")
+        top_k_per_group(df, ["g"], [F.col("v")], 3, engine="nope")
 
 
 def test_char_entropy_hand(spark):
