@@ -19,29 +19,38 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, NumericType
+from pyspark.sql.types import ArrayType, DataType, LongType, NumericType
 
 
-def range_bucket_bounds(df: DataFrame, key: str,
-                        n_buckets: int) -> list:
-    """Driver-computed ascending split points for ``key`` (one
-    approxQuantile pass for numeric keys, a seeded sample otherwise).
-    Duplicates collapse — heavy hitters simply merge buckets, which
-    costs balance, never correctness. One bucket needs no bounds."""
+def range_bucket_bounds(df: DataFrame, keys: list[str],
+                        n_buckets: int | None = None) -> list[list]:
+    """Driver-computed ascending split points, one list per key in
+    ``keys``. All numeric keys share one multi-column approxQuantile
+    pass; the others share one count and one seeded sample. Default
+    bucket count = ``spark.sql.shuffle.partitions``. Duplicates
+    collapse — heavy hitters simply merge buckets, which costs
+    balance, never correctness. One bucket needs no bounds."""
+    if n_buckets is None:
+        n_buckets = int(df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", "200"))
     if n_buckets < 2:
-        return []
-    if isinstance(df.schema[key].dataType, NumericType):
+        return [[] for _ in keys]
+    distinct = list(dict.fromkeys(keys))
+    num = [k for k in distinct
+           if isinstance(df.schema[k].dataType, NumericType)]
+    other = [k for k in distinct if k not in num]
+    found = {}
+    if num:
         qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = df.stat.approxQuantile(key, qs, 0.01)
-    else:
-        cnt = df.select(key).count()
-        frac = min(1.0, (n_buckets * 200) / max(cnt, 1))
-        samp = sorted(r[0] for r in df.select(key)
-                      .sample(False, frac, seed=13).collect()
-                      if r[0] is not None)
-        bounds = [samp[int(len(samp) * i / n_buckets)]
-                  for i in range(1, n_buckets)] if samp else []
-    return sorted(set(bounds))
+        found.update(zip(num, df.stat.approxQuantile(num, qs, 0.01)))
+    if other:
+        frac = min(1.0, (n_buckets * 200) / max(df.count(), 1))
+        rows = df.select(*other).sample(False, frac, seed=13).collect()
+        for j, k in enumerate(other):
+            samp = sorted(r[j] for r in rows if r[j] is not None)
+            found[k] = [samp[int(len(samp) * i / n_buckets)]
+                        for i in range(1, n_buckets)] if samp else []
+    return [sorted(set(found[k])) for k in keys]
 
 
 def bucket_expr(key: str, bounds: list) -> Column:
@@ -81,10 +90,7 @@ def with_range_bucket(df: DataFrame, key: str, pid_col: str,
     monotone in ``key``). Default bucket count =
     ``spark.sql.shuffle.partitions``. Null keys land in bucket 0 with
     the smallest values (``>=`` against a null is never true)."""
-    if n_buckets is None:
-        n_buckets = int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "200"))
-    bounds = range_bucket_bounds(df, key, n_buckets)
+    bounds, = range_bucket_bounds(df, [key], n_buckets)
     return df.withColumn(pid_col, bucket_expr(key, bounds))
 
 
@@ -97,6 +103,18 @@ def bucket_lookup(values: list, dtype: DataType,
     is null instead of an error. O(1) per row."""
     arr = F.array(*[F.lit(v) for v in values]).cast(ArrayType(dtype))
     return F.get(arr, F.col(bucket_col))
+
+
+def _running(per_bucket: dict) -> tuple[list, object]:
+    """Exclusive running offsets of ``{bucket id: total}`` over the
+    dense ids 0..max (a missing bucket adds nothing), and the grand
+    total: the one offset loop of the census-prefix engine."""
+    offsets, run = [], 0
+    for b in range(max(per_bucket, default=-1) + 1):
+        offsets.append(run)
+        if b in per_bucket:
+            run = run + per_bucket[b]
+    return offsets, run
 
 
 def prefix_sums(bucketed: DataFrame, bucket_col: str,
@@ -120,39 +138,52 @@ def prefix_sums(bucketed: DataFrame, bucket_col: str,
     per_bucket = bucketed.groupBy(bucket_col).agg(
         *[F.sum(c).alias(n) for n, c in sums.items()])
     types = {f.name: f.dataType for f in per_bucket.schema.fields}
-    rows = {r[bucket_col]: r for r in per_bucket.collect()}
+    rows = per_bucket.collect()
     win = (Window.partitionBy(bucket_col).orderBy(*order_cols)
            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cols, totals = {}, {}
     for n, c in sums.items():
-        offsets, run = [], 0
-        for b in range(max(rows, default=-1) + 1):
-            offsets.append(run)
-            if b in rows:
-                run = run + rows[b][n]
+        offsets, totals[n] = _running({r[bucket_col]: r[n] for r in rows})
         cols[n] = (bucket_lookup(offsets, types[n], bucket_col)
                    + F.sum(c).over(win))
-        totals[n] = run
     return bucketed.withColumns(cols), totals
 
 
-def distributed_row_number(df: DataFrame, order_cols: list[str],
-                           out_col: str = "rank",
+def distributed_row_number(df: DataFrame, orders: dict,
                            n_buckets: int | None = None
                            ) -> tuple[DataFrame, int]:
-    """Global 1-based ``row_number`` over ``order_cols`` WITHOUT a
-    single-task global sort: deterministic range buckets on the FIRST
-    order column (monotone, so bucket order == key order) and a
-    :func:`prefix_sums` running count.
+    """Global 1-based ``row_number`` of every row under each ordering
+    in ``orders`` ({output column: order column NAMES, ascending}),
+    WITHOUT a single-task global sort. Returns ``(df + one column per
+    ordering, total_rows)``. Make each order unique (append a key
+    column) or ties break arbitrarily within a bucket; for descending
+    order materialize a negated column (exact for integer keys).
 
-    ``order_cols`` are column NAMES, ascending; make the combination
-    unique (append a key column) or ties break arbitrarily within a
-    bucket. For descending order materialize a negated column first
-    (exact for integer keys). Returns ``(df + out_col, total_rows)``.
+    All orderings share one bounds pass on their first columns and
+    one offsets collect of the (ordering, bucket) row counts. Each
+    then ranks in its own per-bucket window over range buckets of its
+    first column, plus its bucket's offset: buckets are monotone in
+    that column, so every rank is exact whatever the bounds are.
     """
-    if not order_cols:
+    if not orders or not all(orders.values()):
         raise ValueError("distributed_row_number needs order columns")
-    b = with_range_bucket(df, order_cols[0], "__rnb__", n_buckets)
-    b, totals = prefix_sums(b, "__rnb__", order_cols,
-                            {out_col: F.lit(1)})
-    return b.drop("__rnb__"), int(totals[out_col])
+    outs = list(orders)
+    bounds = range_bucket_bounds(df, [orders[o][0] for o in outs],
+                                 n_buckets)
+    bcols = [f"__rnb{i}__" for i in range(len(outs))]
+    b = df.withColumns({bc: bucket_expr(orders[o][0], bs)
+                        for bc, o, bs in zip(bcols, outs, bounds)})
+    census = b.select(F.inline(F.array(*[
+        F.struct(F.lit(i).alias("o"), F.col(bc).alias("b"))
+        for i, bc in enumerate(bcols)]))).groupBy("o", "b").count()
+    counts = [{} for _ in outs]
+    for r in census.collect():
+        counts[r["o"]][r["b"]] = r["count"]
+    ranks, n = {}, 0
+    for o, bc, per_bucket in zip(outs, bcols, counts):
+        offsets, n = _running(per_bucket)
+        win = (Window.partitionBy(bc).orderBy(*orders[o])
+               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        ranks[o] = (bucket_lookup(offsets, LongType(), bc)
+                    + F.sum(F.lit(1)).over(win))
+    return b.withColumns(ranks).drop(*bcols), int(n)

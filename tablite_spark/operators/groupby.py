@@ -165,6 +165,13 @@ def transpose(df: DataFrame) -> DataFrame:
     return spark.createDataFrame(out_rows, schema=[str(c) for c in new_cols])
 
 
+def check_k(k: int) -> None:
+    """The ranked cut's ``k >= 1`` check. A top-k that runs jobs
+    before it reaches :func:`top_k_per_group` calls it on entry."""
+    if k < 1:
+        raise ValueError("k must be >= 1")
+
+
 def top_k_per_group(df: DataFrame, keys: list[str], order: list[Column],
                     k: int, engine: str = "window",
                     rank: str = "rank") -> DataFrame:
@@ -198,8 +205,7 @@ def top_k_per_group(df: DataFrame, keys: list[str], order: list[Column],
     bounded-memory form of that idiom.
     """
     from pyspark.sql import Window
-    if k < 1:
-        raise ValueError("k must be >= 1")
+    check_k(k)
     if engine not in ("window", "salted"):
         raise ValueError(f"engine must be 'window' or 'salted', "
                          f"got {engine!r}")

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tablite_spark.functions.tokens import alnum_words, py_alnum_words
-from tablite_spark.operators.groupby import top_k_per_group
+from tablite_spark.operators.groupby import check_k, top_k_per_group
 from tablite_spark.plans.lifecycle import pin
 
 
@@ -67,6 +67,7 @@ def bm25_search(docs: DataFrame | None, queries: DataFrame,
     Pass a prebuilt ``postings`` frame (from :func:`build_postings`)
     to amortize the index across query batches; else it is built
     from ``docs``."""
+    check_k(k)
     if postings is None:
         # r14 optimization round (guide §2.1): postings feed the
         # doc-length stats, the query-term df census AND the scoring

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tablite_spark.functions.tokens import alnum_words, ngrams
-from tablite_spark.operators.groupby import top_k_per_group
+from tablite_spark.operators.groupby import check_k, top_k_per_group
 from tablite_spark.plans.lifecycle import pin
 
 __all__ = ["dsir_weights", "dsir_select"]
@@ -138,6 +138,7 @@ def dsir_select(raw: DataFrame, target: DataFrame, text_col: str,
     needed for a reproducible top-k). A global cut on the salted
     ``top_k_per_group``: no single-task sort of the corpus.
     """
+    check_k(k)
     w = dsir_weights(raw, target, text_col, id_col, buckets)
     return (top_k_per_group(w, [], [F.col("dsir_micro").desc(),
                                     F.col(id_col).asc()],

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tablite_spark.operators.groupby import top_k_per_group
+from tablite_spark.operators.groupby import check_k, top_k_per_group
 
 
 def _norm2(vec):
@@ -219,6 +219,7 @@ def batched_topk(corpus: DataFrame, queries: DataFrame, k: int,
     crosses ~10⁸ pairs, where the pair-materializing join hits its
     quadratic wall. See ``_batched_candidates`` for the exactness
     argument."""
+    check_k(k)
     return _topk_per_qid(
         _batched_candidates(corpus, queries, k, id_col, vec_col), k)
 
@@ -251,6 +252,7 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int,
     exactly: each batch keeps top-(k + max-exclusions-per-query)
     candidates so the post-anti-join top-k survives from every batch.
     """
+    check_k(k)
     if batched:
         e_max = 0
         if exclude is not None:
@@ -415,6 +417,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int,
     generation is an equi join on `ivf_list`; exact cosine only within
     probed cells (~n_probe/n_lists of the corpus per query).
     """
+    check_k(k)
     assigned, centroids = ivf_index(corpus, id_col, vec_col, n_lists, seed)
 
     q = queries.select(F.col(id_col).alias("qid"),
@@ -816,6 +819,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int,
     the exact re-rank to recover the true ordering (measured at 200k
     vectors / 100-member clusters: refine=4 → recall@10 ≈ 0.4,
     refine=12 → 1.0)."""
+    check_k(k)
     if books is None:
         books = pq_train(corpus, id_col, vec_col, m=m,
                          n_codes=n_codes, seed=seed)
@@ -852,6 +856,7 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int,
     """
     import numpy as np
 
+    check_k(k)
     if cents is None:
         cents = _kmeans_sample_train(corpus, id_col, vec_col,
                                      n_lists, seed, normalize=True)

@@ -454,11 +454,12 @@ ORACLES["fit_apply_scale_events"] = """
 
 def rfm_segments_orders(spark: SparkSession, sf: str) -> DataFrame:
     """Per-customer RFM (recency / frequency / monetary) quintile
-    scores — the classic CRM segmentation. Each metric ranks ALL
-    customers via the distributed row-number engine
-    (``functions/buckets.py:distributed_row_number``: deterministic
-    range buckets + per-bucket windows + one |buckets|-row offset
-    collect — never a single-task global sort), then quintile
+    scores — the classic CRM segmentation. One call of the
+    distributed row-number engine
+    (``functions/buckets.py:distributed_row_number``) ranks ALL
+    customers on each metric: one bounds pass and one offsets
+    collect serve the three orderings, each then ranked by
+    per-bucket windows — never a single-task global sort. Quintile
     q = 1 + ((rank-1)*5) DIV N in exact integer arithmetic (no ntile
     remainder-rule dependence). Monetary accumulates exact cents;
     recency counts days from the corpus max order date. Higher
@@ -480,33 +481,13 @@ def rfm_segments_orders(spark: SparkSession, sf: str) -> DataFrame:
                        F.datediff(F.col("__maxd__"), F.col("__last__"))
                        .cast("long"))
            .drop("__maxd__", "__last__"))
-    # r14 optimization round (guide §2.1): each distributed_row_number
-    # call evaluates its input three times (bounds pass, offsets
-    # collect, output plan) — pin the customer census so every pass
-    # reads a checkpoint. r15 (guide §2.6 overlap independent jobs;
-    # r14 VERDICT item 7): the three metric rank chains are
-    # INDEPENDENT given the pinned census — each is a pure function
-    # of (metric, custkey) over the same row set — so they run
-    # concurrently from a thread pool (the spearman discipline)
-    # instead of a ~13-job serial cascade, and the per-metric
-    # (custkey, rank) slivers join back on custkey. Ranks are
-    # bit-identical to the chained form: a rank depends only on its
-    # own order columns and the row set, never on the other ranks.
-    cen = pin(cen, eager=True)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _rank(metric: str, out: str):
-        r, n = distributed_row_number(cen, [metric, "custkey"], out)
-        return pin(r.select("custkey", out), eager=True), n
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_r = pool.submit(_rank, "recency_days", "__rr__")
-        f_f = pool.submit(_rank, "n_orders", "__rf__")
-        f_m = pool.submit(_rank, "__mc__", "__rm__")
-        (rr, n), (rf, _), (rm, _) = (f_r.result(), f_f.result(),
-                                     f_m.result())
-    ranked = cen.join(rr, "custkey").join(rf, "custkey") \
-                .join(rm, "custkey")
+    # the three rankings share one bounds pass and one offsets
+    # collect (distributed_row_number); the pin makes those two
+    # passes and the output plan read the census, not the orders scan
+    ranked, n = distributed_row_number(pin(cen, eager=True), {
+        "__rr__": ["recency_days", "custkey"],
+        "__rf__": ["n_orders", "custkey"],
+        "__rm__": ["__mc__", "custkey"]})
     # integer DIV via expr keeps the arithmetic exact end to end
     return ranked.select(
         "custkey", "recency_days",
@@ -605,12 +586,13 @@ def revenue_concentration_orders(spark: SparkSession,
     """Revenue concentration: customers ranked by revenue DESC into
     deciles (1 = top spenders), with each decile's customer count,
     exact-cents revenue, share, and cumulative share — the Lorenz /
-    Pareto "top 10% drive X%" table. The global rank runs on the
-    distributed row-number engine over the per-customer census
+    Pareto "top 10% drive X%" table. The global rank is one ordering
+    of the distributed row-number engine (one bounds pass, one
+    offsets collect, per-bucket windows) over the per-customer census
     (revenue negated to a long so DESC is an exact ascending rank);
-    the only window is the cumulative share over the ≤10-row decile
-    frame, and it cumulates INTEGER cents (one final division), so
-    every share is a single exact-operand float op."""
+    the only other window is the cumulative share over the ≤10-row
+    decile frame, and it cumulates INTEGER cents (one final
+    division), so every share is a single exact-operand float op."""
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import distributed_row_number
@@ -619,11 +601,10 @@ def revenue_concentration_orders(spark: SparkSession,
            .agg(F.sum(F.round(F.col("o_totalprice") * 100, 0))
                 .cast("long").alias("__mc__"))
            .withColumn("__neg__", -F.col("__mc__")))
-    # pinned: the row-number engine evaluates its input three times
-    # (bounds, offsets, output) — see rfm_segments_orders
-    cen = pin(cen, eager=True)
+    # pinned: the row-number engine reads its input three times
+    # (bounds, offsets, output)
     ranked, n = distributed_row_number(
-        cen, ["__neg__", "custkey"], "__rank__")
+        pin(cen, eager=True), {"__rank__": ["__neg__", "custkey"]})
     dec = (ranked
            .withColumn("decile",
                        (F.lit(1)

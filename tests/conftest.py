@@ -13,6 +13,14 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def jobs(spark):
+    """``jobs()`` is the number of jobs the scheduler has submitted so
+    far; the difference of two calls counts the jobs run between."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    return lambda: scheduler.nextJobId()
+
+
 def held_blocks():
     """(persistent RDD ids, CacheManager holds frames) of the live
     session; nothing before one exists."""

@@ -63,7 +63,7 @@ def test_bucket_expr_heavy_hitter_merges_not_splits(spark):
     df = spark.range(10_000).select(
         F.when(F.col("id") % 2 == 0, 42).otherwise(F.col("id"))
         .alias("k"))
-    bounds = range_bucket_bounds(df, "k", 8)
+    bounds, = range_bucket_bounds(df, ["k"], 8)
     assert bounds == sorted(set(bounds))
     b = df.withColumn("pid", bucket_expr("k", bounds))
     hot = b.filter(F.col("k") == 42).select("pid").distinct().count()
@@ -169,12 +169,8 @@ def test_census_prefix_operator_plan_reads_checkpoint(spark, tmp_path):
     assert math.isclose(row["cusum"], best[3], rel_tol=0, abs_tol=1e-9)
 
 
-def jobs_submitted(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-
 @pytest.mark.parametrize("n_buckets", [1, 3, 32])
-def test_prefix_sums_matches_global_window(spark, n_buckets):
+def test_prefix_sums_matches_global_window(spark, jobs, n_buckets):
     """with_range_bucket + prefix_sums equals a global
     ``Window.orderBy`` running sum row for row: a long count, a long
     column and a double (log-domain) sum, over a two-column order on
@@ -190,10 +186,10 @@ def test_prefix_sums_matches_global_window(spark, n_buckets):
         (F.col("id") % 11 + 1).alias("w")), eager=True)
     sums = {"n": F.lit(1), "sw": F.col("w"),
             "lw": F.log(F.col("w") / 12.0)}
-    jobs0 = jobs_submitted(spark)
+    jobs0 = jobs()
     out, totals = prefix_sums(with_range_bucket(df, "k", "b", n_buckets),
                               "b", ["k", "id"], sums)
-    assert jobs_submitted(spark) - jobs0 == (2 if n_buckets == 1 else 4)
+    assert jobs() - jobs0 == (2 if n_buckets == 1 else 4)
     assert dict(out.dtypes)["n"] == "bigint"
     assert dict(out.dtypes)["lw"] == "double"
     w = (Window.orderBy("k", "id")
@@ -211,6 +207,67 @@ def test_prefix_sums_matches_global_window(spark, n_buckets):
     last = max(want.values(), key=lambda r: r["n"])
     assert totals["n"] == 3_000 and totals["sw"] == last["sw"]
     assert math.isclose(totals["lw"], last["lw"], rel_tol=1e-12)
+
+
+@pytest.mark.parametrize("n_buckets", [1, 8])
+def test_row_number_orderings_match_global(spark, n_buckets):
+    """Three orderings ranked by one call: each rank equals a plain
+    global ``row_number`` over its own order, on a repartitioned
+    input with a heavy-hitter key (ties broken by id), a string key
+    (the sampled bounds) and a double key."""
+    from tablite_spark.functions.buckets import distributed_row_number
+    df = spark.createDataFrame(
+        [(500 if i % 3 == 0 else (i * 37) % 1_000, i,
+          f"s{(i * 13) % 17:03d}", float(i % 7)) for i in range(2_000)],
+        "k long, id long, s string, d double")
+    orders = {"a": ["k", "id"], "b": ["s", "id"], "c": ["d", "k", "id"]}
+    got, n = distributed_row_number(df.repartition(5), orders,
+                                    n_buckets=n_buckets)
+    assert n == 2_000
+    assert got.columns == df.columns + ["a", "b", "c"]
+    truth = df.select("id", *[
+        F.row_number().over(Window.orderBy(*cols)).alias(f"t_{o}")
+        for o, cols in orders.items()])
+    j = got.join(truth, "id").collect()
+    assert len(j) == 2_000
+    for o in orders:
+        assert all(r[o] == r[f"t_{o}"] for r in j), o
+
+
+@pytest.mark.parametrize("n_buckets", [1, 8])
+def test_row_number_orderings_share_passes(spark, jobs, n_buckets):
+    """Over a pinned frame, ranking three orderings submits exactly as
+    many jobs as ranking one: one bounds pass (none for one bucket)
+    and one offsets collect, two jobs each under adaptive execution."""
+    from tablite_spark.functions.buckets import distributed_row_number
+    from tablite_spark.plans.lifecycle import pin
+    df = pin(spark.range(3_000).select(
+        F.col("id"), (F.col("id") * 7 % 1_000).alias("k"),
+        (F.col("id") % 11).cast("double").alias("d")), eager=True)
+    counts = []
+    for orders in ({"a": ["k", "id"]},
+                   {"a": ["k", "id"], "b": ["d", "id"], "c": ["id"]}):
+        jobs0 = jobs()
+        distributed_row_number(df, orders, n_buckets=n_buckets)
+        counts.append(jobs() - jobs0)
+    assert counts == [2 if n_buckets == 1 else 4] * 2
+
+
+def test_rfm_query_jobs_and_pins(spark, jobs):
+    """``rfm_segments_orders`` at the smoke scale: one call ranks its
+    three metrics, so the query (call plus collect) runs 13 jobs, not
+    a bounds and offsets cascade per metric, and its scope frees the
+    one census pin."""
+    import __spark_entry__ as entry
+    from tablite_spark.plans.lifecycle import scope
+    held = spark.sparkContext._jsc.getPersistentRDDs().keySet
+    rdds0 = set(held())
+    jobs0 = jobs()
+    with scope():
+        assert entry.queries()["rfm_segments_orders"](
+            spark, entry.SF_SMOKE).collect()
+    assert jobs() - jobs0 == 13
+    assert set(held()) <= rdds0
 
 
 @pytest.mark.parametrize("all_null", [False, True],
@@ -231,7 +288,7 @@ def test_empty_census_keeps_schema(spark, fn, all_null):
     df = spark.createDataFrame([(None, None, None)] * 5 if all_null
                                else [], "t double, o boolean, w long")
     if fn == "distributed_row_number":
-        out, n = distributed_row_number(df, ["t"], "r")
+        out, n = distributed_row_number(df, {"r": ["t"]})
         assert out.columns == ["t", "o", "w", "r"]
         assert dict(out.dtypes)["r"] == "bigint"
         assert n == len(df.collect())

@@ -92,6 +92,8 @@ CALLS = {
         _vecs(s), _vecs(s).limit(2), k, dim=8),
     "hard_negatives": lambda s, k: similarity.hard_negatives(
         _vecs(s), _vecs(s).limit(2), k),
+    "hard_negatives_batched": lambda s, k: similarity.hard_negatives(
+        _vecs(s), _vecs(s).limit(2), k, batched=True),
     "bm25_search": lambda s, k: retrieval.bm25_search(
         _docs(s), _queries(s), k=k),
     "rrf_fuse": lambda s, k: retrieval.rrf_fuse(
@@ -104,7 +106,11 @@ CALLS = {
 
 
 @pytest.mark.parametrize("name", sorted(CALLS))
-def test_k_below_one_raises(spark, name):
+def test_k_below_one_raises(spark, jobs, name):
+    """``k < 1`` raises on entry: no pin, collect or training job runs
+    before the error."""
     assert CALLS[name](spark, 1).count() > 0
+    jobs0 = jobs()
     with pytest.raises(ValueError, match="k must be >= 1"):
         CALLS[name](spark, 0).collect()
+    assert jobs() == jobs0

@@ -22,7 +22,7 @@ def test_distributed_row_number_matches_global(spark):
     rows = [((i * 37) % 101, i) for i in range(500)]
     df = spark.createDataFrame(rows, "k long, id long")
     got, n = distributed_row_number(df.repartition(7),
-                                    ["k", "id"], "r", n_buckets=8)
+                                    {"r": ["k", "id"]}, n_buckets=8)
     assert n == 500
     truth = df.withColumn(
         "t", F.row_number().over(Window.orderBy("k", "id")))
@@ -33,19 +33,21 @@ def test_distributed_row_number_matches_global(spark):
 
 def test_distributed_row_number_ties_and_validation(spark):
     """Heavy ties on the bucket key must still rank deterministically
-    through the tiebreak column; empty order list raises."""
+    through the tiebreak column; no ordering, or an ordering without
+    columns, raises."""
     from tablite_spark.functions.buckets import distributed_row_number
     df = spark.createDataFrame([(1, i) for i in range(50)]
                                + [(2, i) for i in range(5)],
                                "k long, id long")
-    got, n = distributed_row_number(df, ["k", "id"], "r",
+    got, n = distributed_row_number(df, {"r": ["k", "id"]},
                                     n_buckets=4)
     assert n == 55
     by_id = {(r["k"], r["id"]): r["r"] for r in got.collect()}
     assert by_id[(1, 0)] == 1 and by_id[(1, 49)] == 50
     assert by_id[(2, 0)] == 51 and by_id[(2, 4)] == 55
-    with pytest.raises(ValueError, match="order columns"):
-        distributed_row_number(df, [], "r")
+    for orders in ({}, {"r": []}, {"r": ["k"], "s": []}):
+        with pytest.raises(ValueError, match="order columns"):
+            distributed_row_number(df, orders)
 
 
 # ------------------------------------------------------------------
